@@ -5,14 +5,15 @@ import graft.output.Sinks
 import graft.pipeline.{AnalysisRunner, TransformRegistry}
 import graft.registry.AnalysisRegistry
 import graft.run.RunObservability
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths}
 
 /** The `cosmap run <config.json>` entry point
   * (/root/reference/src/cosmap/entrypoint.py:46-60 →
   * /root/reference/src/cosmap/api/cmds.py:20-47), end to end:
-  * registry lookup of `base-analysis`, config merge, sampler, cone
-  * join, compiled DAG, append sink, progress + count accounting.
+  * registry lookup of `base-analysis`, config merge, sampler, band
+  * cone join, compiled DAG, append sink, progress + count accounting.
   *
   * Usage: RunAnalysis <runConfig.json> <catalogParquet> [registryDir]
   * The run config's "output" key names the sink path; "write_format"
@@ -22,7 +23,13 @@ object RunAnalysis {
 
   /** Testable core: returns (output DataFrame, rows written).
     * Accepts `.json` or `.toml` run configs (cmds.py:21-29 parity —
-    * dispatch in ConfigTree.parseFile). */
+    * dispatch in ConfigTree.parseFile).
+    *
+    * One pass: with an `output`, the row count is observed while the
+    * sink writes (an unnamed [[Observation]], so concurrent runs in
+    * one session cannot collide) — it counts exactly the rows written,
+    * and the analysis plan runs once, with nothing cached. Without an
+    * `output`, one count job runs the plan. */
   def execute(spark: SparkSession, runConfigPath: String,
               catalogPath: String, registryDir: String,
               registry: TransformRegistry): (DataFrame, Long) = {
@@ -43,25 +50,21 @@ object RunAnalysis {
       val catalog = spark.read.parquet(catalogPath)
       val out = AnalysisRunner.runParsed(spark, runConfig,
         ConfigTree.parse(defaults), transformations, registry, catalog,
-        useBandJoin = false, plugins = graft.pipeline.PluginManager.empty)
+        plugins = graft.pipeline.PluginManager.empty)
       val expected = AnalysisRunner.parseSampling(
         AnalysisRunner.effectiveConfig(runConfig, ConfigTree.parse(defaults)))
         .nSamples
-      // cache before write + count: otherwise the whole analysis plan
-      // executes twice, and the counted result is a recomputation that
-      // could diverge from what was written (round-1 advice)
-      out.persist()
-      try {
-        runConfig.get("output").map(_.toString) match {
-          case Some(path) =>
-            val fmt = ConfigTree.getPath(runConfig, "output_parameters.write_format")
-              .map(_.toString).getOrElse("csv")
-            Sinks.write(out, path, fmt)
-          case None => ()
-        }
-        val n = RunObservability.expectCount(out, expected)
-        (out, n)
-      } finally out.unpersist()
+      val n = runConfig.get("output").map(_.toString) match {
+        case Some(path) =>
+          val fmt = ConfigTree.getPath(runConfig, "output_parameters.write_format")
+            .map(_.toString).getOrElse("csv")
+          val written = Observation()
+          Sinks.write(out.observe(written, count(lit(1)).as("rows")), path, fmt)
+          RunObservability.checkCount(
+            written.get("rows").asInstanceOf[Long], expected)
+        case None => RunObservability.expectCount(out, expected)
+      }
+      (out, n)
     } finally spark.sparkContext.removeSparkListener(progress)
   }
 

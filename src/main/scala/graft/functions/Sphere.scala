@@ -54,13 +54,15 @@ object Sphere {
 
   /** Safe half-width of the RA interval covered by a cone of
     * `radiusDeg` centered at declination `decDeg`: the linear bound
-    * r / cos(|dec|+r), clamped to 180° near the poles. Always ≥ the
-    * true extent asin(sin r / cos dec) — soundness is property-tested
-    * (the reference's version at
+    * r / cos(|dec|+r), clamped to 180°. A cone that reaches a pole
+    * (|dec| + r ≥ 90°) contains every RA, so its pad is 180° outright.
+    * Always ≥ the true extent asin(sin r / cos dec) — soundness is
+    * property-tested (the reference's version at
     * /root/reference/src/cosmap/dataset/opencosmo.py:42-50 is both
     * unwidened and sign-buggy at line 48; fixed here, not replicated). */
   def raPad(decDeg: Column, radiusDeg: Column): Column = {
-    val edge = least(lit(89.9), abs(decDeg) + radiusDeg)
-    least(lit(180.0), radiusDeg / cos(radians(edge)))
+    val edge = abs(decDeg) + radiusDeg
+    when(edge >= 90.0, lit(180.0))
+      .otherwise(least(lit(180.0), radiusDeg / cos(radians(edge))))
   }
 }

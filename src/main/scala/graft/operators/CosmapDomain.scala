@@ -113,11 +113,10 @@ object CosmapDomain {
     * proves the declared config+DAG pipeline equals THIS raw form row
     * for row, so the parity check stays bit-strength.
     *
-    * Band plan: the broadcast nested-loop plan evaluates
-    * |catalog| x |samples| separations and is bound by the scan's
-    * partition count; the 0.25-degree band equi-join prunes pairs and
-    * parallelizes on the shuffle key (band==broadcast equivalence is
-    * property-tested in ConeJoinSpec). */
+    * Band plan: a nested-loop plan would evaluate |catalog| x
+    * |samples| separations; the 0.25-degree band equi-join prunes
+    * pairs and parallelizes on the shuffle key (its equivalence to the
+    * nested-loop reference is tested in ConeJoinSpec). */
   def quickstartRaw(s: SparkSession, dir: String): DataFrame = {
     val catalog = quickstartCatalog(s, dir)
     val samples = SphereSampler.uniformCircles(s, 1000, QuickstartBounds,

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.config.ConfigTree
 import graft.config.ConfigTree.Tree
 import graft.domain.{SkyBounds, SphereSampler}
-import graft.plans.ConeJoin
+import graft.plans.{ConeJoin, RectJoin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The `cosmap run <config.json>` equivalent: one entry point that
@@ -20,9 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  4. sampler draws N circles (sampler.py:127-144) — here a
   *     `spark.range` source, no driver materialization
   *  5. the per-sample cone search + per-sample transformation loop
-  *     (task.py:125-188) becomes: cone join (broadcast or band plan)
-  *     + the Main-block DAG compiled over the joined DataFrame —
-  *     transformations see the data kind "catalog" with a
+  *     (task.py:125-188) becomes: the dec-band equi-join
+  *     ([[ConeJoin.bandJoin]] for circles, [[RectJoin.bandJoin]] for
+  *     rectangles) + the Main-block DAG compiled over the joined
+  *     DataFrame — transformations see the data kind "catalog" with a
   *     `sample_id` column and aggregate per sample instead of
   *     looping, so the whole analysis is one distributed plan.
   */
@@ -96,15 +97,16 @@ object AnalysisRunner {
             s"Rectangle sample_dimensions must be [width, height], got $other")
         }
     }
-    val n = sp.get("n_samples") match {
-      case Some(l: Long) => l
-      case Some(d: Double) => d.toLong
-      case other => throw DagCompiler.PipelineError(s"bad n_samples: $other")
+    // n_samples and seed take the same number forms; an absent seed
+    // defaults to 42, a present one of any other type is an error
+    def whole(key: String): Option[Long] = sp.get(key).map {
+      case l: Long => l
+      case d: Double => d.toLong
+      case other => throw DagCompiler.PipelineError(s"bad $key: $other")
     }
-    val seed = sp.get("seed") match {
-      case Some(l: Long) => l
-      case _ => 42L
-    }
+    val n = whole("n_samples").getOrElse(
+      throw DagCompiler.PipelineError("sampling_parameters.n_samples missing"))
+    val seed = whole("seed").getOrElse(42L)
     // region_bounds order is [raMin, decMin, raMax, decMax]
     // (README.md:146-150: [31.0, -11.0, 38, -4])
     SamplingParams(
@@ -139,18 +141,17 @@ object AnalysisRunner {
   def run(spark: SparkSession, runConfigJson: String,
           analysisDefaultsJson: String, transformationsJson: String,
           registry: TransformRegistry, catalog: DataFrame,
-          useBandJoin: Boolean = false,
           plugins: PluginManager = PluginManager.empty): DataFrame =
     runParsed(spark, ConfigTree.parse(runConfigJson),
       ConfigTree.parse(analysisDefaultsJson), transformationsJson,
-      registry, catalog, useBandJoin, plugins)
+      registry, catalog, plugins)
 
   /** Tree-based entry (JSON and TOML configs both land here — see
     * ConfigTree.parseFile). */
   def runParsed(spark: SparkSession, runConfig: Tree,
                 analysisDefaults: Tree, transformationsJson: String,
                 registry: TransformRegistry, catalog: DataFrame,
-                useBandJoin: Boolean, plugins: PluginManager): DataFrame = {
+                plugins: PluginManager): DataFrame = {
     val cfg = effectiveConfig(runConfig, analysisDefaults)
     val blocks = PipelineSpec.fromJson(transformationsJson)
 
@@ -193,12 +194,8 @@ object AnalysisRunner {
       val joined = plugins.get(PluginSlots.GenerateTasks)
         .map(f => f(catalog, samples, sampling))
         .getOrElse(sampling.shape match {
-          case SampleShape.Circle(_) =>
-            if (useBandJoin) ConeJoin.bandJoin(catalog, samples)
-            else ConeJoin.broadcastJoin(catalog, samples)
-          case SampleShape.Rect(_, _) =>
-            if (useBandJoin) graft.plans.RectJoin.bandJoin(catalog, samples)
-            else graft.plans.RectJoin.broadcastJoin(catalog, samples)
+          case SampleShape.Circle(_) => ConeJoin.bandJoin(catalog, samples)
+          case SampleShape.Rect(_, _) => RectJoin.bandJoin(catalog, samples)
         })
       data += ("catalog" -> joined)
     }

@@ -11,23 +11,17 @@ import org.apache.spark.sql.functions._
   * as a per-sample spatial-index probe loop
   * (/root/reference/src/cosmap/dataset/opencosmo.py:38-54 driven by
   * /root/reference/src/cosmap/analysis/task.py:149-154). Re-expressed
-  * here as two declarative Spark plans (SURVEY.md §2.3):
-  *
-  *  - [[broadcastJoin]]: catalog ⋈ broadcast(samples) under the raw
-  *    theta predicate. Right for the cosmap regime (10³ samples vs
-  *    10⁶⁺ objects): one pass over the catalog, no shuffle of the big
-  *    side, predicate evaluated in codegen. At 100 TB the catalog
-  *    side streams; only the sample table must fit in memory.
-  *
-  *  - [[bandJoin]]: rewrite of the theta-join into an *equi-join* on a
-  *    declination-band key (the generalization of the reference's
-  *    bbox prefilter, opencosmo.py:42-50, with its RA-shrink sign bug
-  *    at line 48 fixed): samples are exploded to every band their
-  *    circle overlaps, the catalog is banded by floor(dec/band), the
-  *    join runs as a hash/sort-merge equi-join with the cheap bbox
-  *    conjuncts first and the exact separation as residual. Right when
-  *    BOTH sides are large (samples no longer broadcastable) — the
-  *    shuffle is keyed and partial, never a cross product.
+  * here as one declarative Spark plan (SURVEY.md §2.3), [[bandJoin]]:
+  * the theta-join rewritten into an *equi-join* on a declination-band key
+  * (the generalization of the reference's bbox prefilter,
+  * opencosmo.py:42-50, with its RA-shrink sign bug at line 48 fixed).
+  * Samples are exploded to every band their circle overlaps, the
+  * catalog is banded by floor(dec/band), and the join runs as a
+  * hash/sort-merge equi-join with the cheap bbox conjuncts first and
+  * the exact separation as residual. Only pairs that share a band are
+  * ever examined — never the |catalog| × |samples| cross product a
+  * nested-loop plan evaluates — and the plan shape does not change
+  * when the sample table outgrows a broadcast.
   *
   * Contract: `catalog` has columns `ra`, `dec` (degrees); `samples`
   * has `sample_id`, `ra`, `dec`, `radius_deg`. Output: catalog columns
@@ -41,10 +35,6 @@ object ConeJoin {
 
   private val sep: Column =
     Sphere.angularSepDeg(col("ra"), col("dec"), col("s_ra"), col("s_dec"))
-
-  def broadcastJoin(catalog: DataFrame, samples: DataFrame): DataFrame =
-    catalog.join(broadcast(prepSamples(samples)), sep <= col("radius_deg"))
-      .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
                bandDeg: Double = 1.0): DataFrame = {
@@ -72,7 +62,9 @@ object ConeJoin {
     * the surviving-object count and inv the summed separations in
     * arcsec. Samples whose cone is empty still emit a row (n=0) —
     * matching the reference, where every sample returns a result dict.
-    * Sum is decimal-accumulated: exact and partition-order-free. */
+    * Sum is decimal-accumulated: exact and partition-order-free.
+    * `samples` needs only `sample_id`, `ra`, `dec`, so rectangle
+    * samples aggregate the same way. */
   def quickstartAggregate(joined: DataFrame, samples: DataFrame,
                           minSepArcsec: Double): DataFrame = {
     val agg = joined
@@ -88,9 +80,9 @@ object ConeJoin {
         // in the reference's regime
         sum(round(col("sep_deg") * 3600.0, 3).cast("decimal(28,3)"))
           .cast("double").as("inv"))
-    prepSamples(samples)
+    samples.select(col("sample_id"), col("ra"), col("dec"))
       .join(agg, Seq("sample_id"), "left")
-      .select(col("sample_id"), col("s_ra").as("ra"), col("s_dec").as("dec"),
+      .select(col("sample_id"), col("ra"), col("dec"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("inv"), lit(0.0)).as("inv"))
   }

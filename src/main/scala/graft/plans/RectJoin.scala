@@ -19,12 +19,9 @@ import org.apache.spark.sql.functions._
   * safe in RA). Both predicates are cheap column algebra — no
   * iterative math — so they run entirely inside codegen.
   *
-  * Plans mirror the cone join exactly:
-  *  - [[broadcastJoin]]: catalog ⋈ broadcast(samples) under the raw
-  *    predicate — the 10³-samples-vs-10⁶⁺-objects regime.
-  *  - [[bandJoin]]: dec-band equi-join rewrite for when both sides
-  *    are large; bbox conjuncts first, keyed shuffle, never a cross
-  *    product.
+  * The plan mirrors the cone join: [[bandJoin]] is the dec-band
+  * equi-join rewrite of this predicate — keyed shuffle, never a cross
+  * product.
   *
   * Output: catalog columns + `sample_id`, `s_ra`, `s_dec`,
   * `width_deg`, `height_deg`, `sep_deg` (angular separation to the
@@ -45,10 +42,6 @@ object RectJoin {
     abs(col("dec") - col("s_dec")) <= col("height_deg") / 2 &&
       Sphere.raDelta(col("ra"), col("s_ra")) * cos(radians(col("s_dec"))) <=
         col("width_deg") / 2
-
-  def broadcastJoin(catalog: DataFrame, samples: DataFrame): DataFrame =
-    catalog.join(broadcast(prepSamples(samples)), inside)
-      .withColumn("sep_deg", sep)
 
   def bandJoin(catalog: DataFrame, samples: DataFrame,
                bandDeg: Double = 1.0): DataFrame = {

@@ -52,11 +52,17 @@ object RunObservability {
     (df.filter(v), df.filter(!v))
   }
 
-  /** Processed-vs-expected accounting: warn (never fail) when counts
-    * disagree — returns the processed count. */
+  /** Processed-vs-expected accounting: count `df`, then [[checkCount]]
+    * — returns the processed count. */
   def expectCount(df: DataFrame, expected: Long,
-                  warn: String => Unit = m => Console.err.println(m)): Long = {
-    val n = df.count()
+                  warn: String => Unit = m => Console.err.println(m)): Long =
+    checkCount(df.count(), expected, warn)
+
+  /** Warn (never fail) when a processed count `n` — from a count job,
+    * or observed while the rows were written — disagrees with the
+    * expected one; returns `n`. */
+  def checkCount(n: Long, expected: Long,
+                 warn: String => Unit = m => Console.err.println(m)): Long = {
     if (n != expected)
       warn(s"[graft.progress] WARNING: processed $n rows, expected $expected " +
         "(continuing — bad samples are skipped, not fatal)")

@@ -1,8 +1,11 @@
 package graft
 
 import graft.config.ConfigTree
+import graft.domain.SphereSampler
+import graft.operators.CosmapDomain
 import graft.output.Sinks
 import graft.pipeline._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end parity: the README quickstart
@@ -96,13 +99,20 @@ class AnalysisRunnerSpec extends SparkSpec {
     assert(declared.sameElements(native))
   }
 
-  test("band-join execution of the same analysis gives identical results") {
-    val broadcastPlan = AnalysisRunner.run(spark, runConfig, analysisDefaults,
-      transformations, registry, catalog).orderBy("sample_id").collect()
-    val bandPlan = AnalysisRunner.run(spark, runConfig, analysisDefaults,
-      transformations, registry, catalog, useBandJoin = true)
+  /** The quickstart reduction over a nested-loop reference join of
+    * the runner's own samples: what the band-joined run must equal. */
+  private def quickstartOver(joined: DataFrame, samples: DataFrame) =
+    graft.plans.ConeJoin.quickstartAggregate(joined, samples, minSepArcsec = 5.0)
       .orderBy("sample_id").collect()
-    assert(bandPlan.sameElements(broadcastPlan))
+
+  test("band-join execution of the same analysis gives identical results") {
+    val bandPlan = AnalysisRunner.run(spark, runConfig, analysisDefaults,
+      transformations, registry, catalog).orderBy("sample_id").collect()
+    val samples = SphereSampler.uniformCircles(spark, 1000,
+      CosmapDomain.QuickstartBounds, 2.0 / 60.0, seed = 42L)
+    val reference = quickstartOver(NestedLoopJoins.cone(catalog, samples), samples)
+    assert(reference.map(_.getLong(3)).sum > 0)
+    assert(bandPlan.sameElements(reference))
   }
 
   test("non-Circle/Rectangle sample shape is a hard error (task.py:76-77)") {
@@ -125,11 +135,22 @@ class AnalysisRunnerSpec extends SparkSpec {
     // per-sample aggregation ran on rectangle contents: some samples
     // see objects, every sample emits a row
     assert(out.map(_.getLong(3)).sum > 0)
-    // band plan ≡ broadcast plan for rectangles too
-    val band = AnalysisRunner.run(spark, rectConfig, rectDefaults,
-      transformations, registry, catalog, useBandJoin = true)
-      .orderBy("sample_id").collect()
-    assert(band.sameElements(out))
+    // the band plan equals the nested-loop reference for rectangles too
+    val samples = SphereSampler.uniformRects(spark, 1000,
+      CosmapDomain.QuickstartBounds, 4.0 / 60.0, 2.0 / 60.0, seed = 42L)
+    assert(out.sameElements(quickstartOver(NestedLoopJoins.rect(catalog, samples), samples)))
+  }
+
+  test("seed takes the forms n_samples takes; another type is an error, absence is 42") {
+    def seedOf(seedJson: String): Long = AnalysisRunner.parseSampling(
+      AnalysisRunner.effectiveConfig(
+        ConfigTree.parse(runConfig.replace("\"seed\": 42", seedJson)),
+        ConfigTree.parse(analysisDefaults))).seed
+    assert(seedOf("\"seed\": 7") === 7L)
+    assert(seedOf("\"seed\": 7.0") === 7L)
+    assert(seedOf("\"sample_seed\": 7") === 42L)
+    val e = intercept[DagCompiler.PipelineError](seedOf("\"seed\": \"7\""))
+    assert(e.getMessage.contains("seed"))
   }
 
   test("run config overrides analysis defaults right-biased") {

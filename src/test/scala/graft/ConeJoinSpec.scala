@@ -1,18 +1,58 @@
 package graft
 
 import graft.domain.{SkyBounds, SphereSampler}
-import graft.plans.ConeJoin
-import org.apache.spark.sql.DataFrame
+import graft.functions.Sphere
+import graft.plans.{ConeJoin, RectJoin}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+/** The nested-loop forms of the cone and rectangle joins: the raw
+  * theta predicate over catalog × broadcast(samples), no band key.
+  * They examine every pair, so they are the reference the band
+  * equi-joins are checked against; the program itself only plans the
+  * band joins. Output columns match [[ConeJoin.bandJoin]] and
+  * [[RectJoin.bandJoin]]. */
+object NestedLoopJoins {
+  private val sep: Column =
+    Sphere.angularSepDeg(col("ra"), col("dec"), col("s_ra"), col("s_dec"))
+
+  def cone(catalog: DataFrame, samples: DataFrame): DataFrame =
+    catalog.join(broadcast(samples.select(col("sample_id"), col("ra").as("s_ra"),
+        col("dec").as("s_dec"), col("radius_deg"))),
+      sep <= col("radius_deg"))
+      .withColumn("sep_deg", sep)
+
+  def rect(catalog: DataFrame, samples: DataFrame): DataFrame =
+    catalog.join(broadcast(samples.select(col("sample_id"), col("ra").as("s_ra"),
+        col("dec").as("s_dec"), col("width_deg"), col("height_deg"))),
+      abs(col("dec") - col("s_dec")) <= col("height_deg") / 2 &&
+        Sphere.raDelta(col("ra"), col("s_ra")) * cos(radians(col("s_dec"))) <=
+          col("width_deg") / 2)
+      .withColumn("sep_deg", sep)
+}
 
 class ConeJoinSpec extends SparkSpec {
 
-  /** Deterministic pseudo-catalog across the whole sphere. */
-  private lazy val catalog: DataFrame =
+  /** Deterministic pseudo-catalog across the whole sphere: a lattice
+    * up to ±85°, plus rows at both poles for samples 5 and 6. */
+  private lazy val catalog: DataFrame = {
+    import spark.implicits._
+    val polar = Seq(
+      (20001L, 10.0, 89.9),    // same RA as sample 5, 0.05° away
+      (20002L, 190.0, 89.96),  // across the pole: 0.05° + 0.04°
+      (20003L, 100.0, 89.99),  // a quarter turn round the pole
+      (20004L, 190.0, 89.8),   // across the pole, 0.25° away: outside
+      (20005L, 10.0, 89.8),    // same RA, 0.15° away: outside
+      (20006L, 300.0, -89.98), // across the south pole from sample 6
+      (20007L, 30.0, -89.99),
+      (20008L, 300.0, -89.7))  // outside
+      .toDF("object_id", "ra", "dec")
     spark.range(20000).select(
       col("id").as("object_id"),
       ((col("id") * 7919) % 36000).cast("double").divide(100.0).as("ra"),
       (((col("id") * 104729) % 17000).cast("double") / 100.0 - 85.0).as("dec"))
+      .unionByName(polar)
+  }
 
   private lazy val samples: DataFrame = {
     // centers spread over the sphere incl. high-dec and RA-wraparound
@@ -21,7 +61,9 @@ class ConeJoinSpec extends SparkSpec {
       (1L, 359.5, 10.0, 2.0),   // wraparound other side
       (2L, 180.0, -80.0, 5.0),  // near south pole
       (3L, 90.0, 45.0, 1.0),
-      (4L, 270.0, 80.0, 4.0))   // near north pole
+      (4L, 270.0, 80.0, 4.0),   // near north pole
+      (5L, 10.0, 89.95, 0.1),   // |dec| + r > 90: contains the north pole
+      (6L, 120.0, -89.98, 0.05)) // contains the south pole
     import spark.implicits._
     rows.toDF("sample_id", "ra", "dec", "radius_deg")
   }
@@ -31,8 +73,11 @@ class ConeJoinSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("band-join rewrite ≡ broadcast theta-join (several band widths)") {
-    val reference = key(ConeJoin.broadcastJoin(catalog, samples))
+    val reference = key(NestedLoopJoins.cone(catalog, samples))
     assert(reference.nonEmpty)
+    // the cones that contain a pole reach across it
+    assert(reference.filter(_._1 >= 5L) ===
+      Set((5L, 20001L), (5L, 20002L), (5L, 20003L), (6L, 20006L), (6L, 20007L)))
     for (band <- Seq(0.5, 1.0, 2.0, 7.0)) {
       val banded = key(ConeJoin.bandJoin(catalog, samples, band))
       assert(banded === reference, s"bandDeg=$band")
@@ -65,7 +110,7 @@ class ConeJoinSpec extends SparkSpec {
     val far = spark.range(100).select(col("id").as("object_id"),
       lit(200.0).as("ra"), lit(50.0).as("dec"))
     val out = ConeJoin.quickstartAggregate(
-      ConeJoin.broadcastJoin(far, smp), smp, minSepArcsec = 5.0)
+      ConeJoin.bandJoin(far, smp), smp, minSepArcsec = 5.0)
     assert(out.count() === 50)
     assert(out.filter(col("n") === 0 && col("inv") === 0.0).count() === 50)
   }
@@ -133,8 +178,7 @@ class ConeJoinSpec extends SparkSpec {
   }
 
   test("rect band-join rewrite ≡ broadcast join ≡ per-row brute force") {
-    import graft.plans.RectJoin
-    val reference = key(RectJoin.broadcastJoin(catalog, rectSamples))
+    val reference = key(NestedLoopJoins.rect(catalog, rectSamples))
     assert(reference.nonEmpty)
     for (band <- Seq(0.5, 1.0, 2.0, 7.0)) {
       val banded = key(RectJoin.bandJoin(catalog, rectSamples, band))

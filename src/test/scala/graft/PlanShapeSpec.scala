@@ -64,6 +64,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("cosmap run: the quickstart cone join is the band equi-join; the run caches nothing") {
+    val quickstart = new QuickstartRun(spark, sf0001)
+    val p = graft.pipeline.AnalysisRunner.run(spark,
+        QuickstartRun.runConfig(200, None), QuickstartRun.parameters,
+        QuickstartRun.transformations, graft.cli.StandardTransforms.registry,
+        spark.read.parquet(quickstart.catalogPath))
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
+      p.contains("BroadcastHashJoin"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+
+    // RunAnalysis.execute writes straight from the plan: no action
+    // reads a cached relation, and the cache is empty afterwards
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.catalog.clearCache()
+    spark.listenerManager.register(listener)
+    try {
+      quickstart.execute(quickstart.config(200, Some(quickstart.outPath())))
+      // listener events arrive asynchronously: wait for the write's
+      def wrote = plans.stream().anyMatch(_.contains("InsertIntoHadoopFsRelation"))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!wrote && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(wrote, plans)
+    } finally spark.listenerManager.unregister(listener)
+    plans.forEach(plan => assert(!plan.contains("InMemoryTableScan") &&
+      !plan.contains("TableCacheQueryStage"), plan))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("q44: shingles via the codegen'd kernel; candidate join is an equi-join") {
     val p = executedPlan("q44_ngram_jaccard")
     // the custom WordNGrams expression, not interpreted HOF lambdas

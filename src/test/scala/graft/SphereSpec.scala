@@ -44,18 +44,21 @@ class SphereSpec extends SparkSpec {
 
   test("raPad bound is sound: covers the true RA extent of the cone") {
     // true max RA deviation of a circle radius r centered at dec d:
-    // asin(sin r / cos d) (valid while the cone avoids the pole)
-    val cases = for {
+    // asin(sin r / cos d) while the cone avoids the pole, 180° once
+    // it contains one (the last cases: |d| + r > 90)
+    val cases = (for {
       d <- Seq(-80.0, -60.0, -30.0, 0.0, 30.0, 60.0, 80.0)
       r <- Seq(0.05, 1.0, 5.0, 9.0)
-    } yield (d, r)
+    } yield (d, r)) ++ Seq((89.95, 0.1), (-89.98, 0.05), (85.0, 5.5), (-80.0, 10.5))
     val df = cases.toDF("dec", "r")
       .select(col("dec"), col("r"),
         Sphere.raPad(col("dec"), col("r")).as("pad"))
     df.collect().foreach { row =>
       val (d, r, pad) = (row.getDouble(0), row.getDouble(1), row.getDouble(2))
-      val trueExtent = math.toDegrees(math.asin(
-        math.sin(math.toRadians(r)) / math.cos(math.toRadians(d))))
+      val sinR = math.sin(math.toRadians(r))
+      val cosD = math.cos(math.toRadians(d))
+      val trueExtent =
+        if (sinR >= cosD) 180.0 else math.toDegrees(math.asin(sinR / cosD))
       assert(pad >= trueExtent, s"dec=$d r=$r pad=$pad true=$trueExtent")
     }
   }

@@ -79,7 +79,7 @@ object SphereSampler {
     * non-Circle shapes): (sample_id, ra, dec, width_deg, height_deg).
     * A rectangle is the set of points with |Δdec| ≤ height/2 and
     * RA-distance·cos(dec_center) ≤ width/2 (physical width measured
-    * at the sample's declination) — see graft.plans.RectJoin. */
+    * at the sample's declination) — see graft.plans.SkyJoin. */
   def uniformRects(spark: SparkSession, n: Long, bounds: SkyBounds,
                    widthDeg: Double, heightDeg: Double,
                    seed: Long = 42L): DataFrame =

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    length.
   *  - range join: broadcast the (tiny) interval table and filter —
   *    the classic dimension-banding shape. For two LARGE interval
-  *    sides the band-key trick from ConeJoin.bandJoin applies
+  *    sides the band-key trick from SkyJoin.bandJoin applies
   *    unchanged (bucket intervals by floor(value/width)).
   */
 object AdvancedJoins {

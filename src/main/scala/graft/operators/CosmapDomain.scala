@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.domain.{SkyBounds, SphereSampler}
-import graft.plans.{ConeJoin, RectJoin}
+import graft.plans.SkyJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   * DuckDB-oracle-checked — the radius (19.97°) is chosen off the 0.1°
   * coordinate lattice so no pair lands within float-ulp distance of
   * the predicate boundary (Java vs libm trig differ in the last ulp).
+  * q31/q68 (cones), q75 (rectangles) and the quickstart all join
+  * through the one [[SkyJoin.bandJoin]].
   *
   * q32/q33 exercise the seeded sampler and the full quickstart
-  * pipeline (sampler → cone join → per-sample aggregate,
+  * pipeline (sampler → cone join → [[quickstartAggregate]],
   * /root/reference/README.md:55-174). Their oracles are
   * CODE-GENERATED (the q83 playbook): the sampler's splitmix64 draw
   * is replayed in pure 64-bit DuckDB arithmetic
@@ -56,7 +58,7 @@ object CosmapDomain {
     //    sample aggregate. The oracle states the same query as a raw
     //    theta-join: band rewrite ≡ theta join is thereby gate-checked.
     "q31_cone_join_agg" -> { (s, dir) =>
-      val joined = ConeJoin.bandJoin(
+      val joined = SkyJoin.bandJoin(
         derivedCatalog(s, dir), derivedSamples(s, dir), bandDeg = 5.0)
       joined.groupBy(col("sample_id"))
         .agg(count(lit(1)).as("n_objects"),
@@ -99,7 +101,7 @@ object CosmapDomain {
         (col("r_regionkey").cast("double") * 25.0 - 50.0).as("dec"),
         lit(39.94).as("width_deg"),
         lit(19.94).as("height_deg"))
-      RectJoin.bandJoin(derivedCatalog(s, dir), samples, bandDeg = 5.0)
+      SkyJoin.bandJoin(derivedCatalog(s, dir), samples, bandDeg = 5.0)
         .groupBy(col("sample_id"))
         .agg(count(lit(1)).as("n_objects"),
           sum((col("dec") - col("s_dec")).cast("decimal(18,6)"))
@@ -121,8 +123,39 @@ object CosmapDomain {
     val catalog = quickstartCatalog(s, dir)
     val samples = SphereSampler.uniformCircles(s, 1000, QuickstartBounds,
       QuickstartRadiusDeg, seed = 42L)
-    val joined = ConeJoin.bandJoin(catalog, samples, bandDeg = 0.25)
-    ConeJoin.quickstartAggregate(joined, samples, minSepArcsec = 5.0)
+    val joined = SkyJoin.bandJoin(catalog, samples, bandDeg = 0.25)
+    quickstartAggregate(joined, samples, minSepArcsec = 5.0)
+  }
+
+  /** The reference quickstart's per-sample reduction (cosmap's
+    * README.md:55-174): drop objects closer than
+    * `minSepArcsec`, then per sample emit (ra, dec, n, inv) where n is
+    * the surviving-object count and inv the summed separations in
+    * arcsec. Samples whose cone is empty still emit a row (n=0) —
+    * matching the reference, where every sample returns a result dict.
+    * Sum is decimal-accumulated: exact and partition-order-free.
+    * `samples` needs only `sample_id`, `ra`, `dec`, so rectangle
+    * samples aggregate the same way. */
+  def quickstartAggregate(joined: DataFrame, samples: DataFrame,
+                          minSepArcsec: Double): DataFrame = {
+    val agg = joined
+      .filter(col("sep_deg") * 3600.0 > minSepArcsec)
+      .groupBy(col("sample_id"))
+      .agg(count(lit(1)).as("n"),
+        // summand quantized to milli-arcsec before the exact decimal
+        // sum: each per-pair separation is transcendental, so Java vs
+        // libm divergence is ~1e-13 absolute — against a 1e-6 decimal
+        // quantum a sum over 1e4+ pairs hits a rounding boundary with
+        // near-certainty (observed at sf0.01), against 1e-3 the rate
+        // is ~1e-10/pair; milli-arcsec is far below physical meaning
+        // in the reference's regime
+        sum(round(col("sep_deg") * 3600.0, 3).cast("decimal(28,3)"))
+          .cast("double").as("inv"))
+    samples.select(col("sample_id"), col("ra"), col("dec"))
+      .join(agg, Seq("sample_id"), "left")
+      .select(col("sample_id"), col("ra"), col("dec"),
+        coalesce(col("n"), lit(0L)).as("n"),
+        coalesce(col("inv"), lit(0.0)).as("inv"))
   }
 
   /** The quickstart pseudo-catalog (lineitem keys → a 0.001° lattice
@@ -146,7 +179,7 @@ object CosmapDomain {
     * centroid directly with unit-vector sums. */
   private def coneCentroid: Q = { (s, dir) =>
     import graft.functions.CentroidAgg
-    val joined = ConeJoin.bandJoin(
+    val joined = SkyJoin.bandJoin(
       derivedCatalog(s, dir), derivedSamples(s, dir), bandDeg = 5.0)
     joined.select(col("sample_id"), col("ra"), col("dec"))
       .groupBy(col("sample_id"))

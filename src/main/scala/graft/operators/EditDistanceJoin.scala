@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** The unified fuzzy-join surface: all edit-distance joins go through
   * [[EditDistanceJoin.apply]], which picks the blocking strategy by
-  * `k` — the engine's job, like the cone join's broadcast/band choice
-  * (graft.plans.ConeJoin), rather than two user-facing entry points
+  * `k` — the engine's job, like the sky join's cone/rectangle choice
+  * (graft.plans.SkyJoin), rather than two user-facing entry points
   * (round-3 verdict #6; q65 and q84 are both routed through here).
   *
   * Strategies:

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.config.ConfigTree
 import graft.config.ConfigTree.Tree
 import graft.domain.{SkyBounds, SphereSampler}
-import graft.plans.{ConeJoin, RectJoin}
+import graft.plans.SkyJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The `cosmap run <config.json>` equivalent: one entry point that
@@ -14,18 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Lifecycle parity with the reference:
   *  1. parse config, resolve `@`-references, merge analysis defaults
   *     (right-biased, run config wins) — cmds.py:20-30, block.py:10-69
-  *  2. validate sample shape (Circle only — task.py:76-77)
+  *  2. validate sample shape (the reference takes Circle only,
+  *     task.py:76-77; Rectangle is supported beyond it)
   *  3. Setup block (if any) runs driver-side; sinks → parameters —
   *     setup.py:12-55
-  *  4. sampler draws N circles (sampler.py:127-144) — here a
+  *  4. sampler draws N footprints (sampler.py:127-144) — here a
   *     `spark.range` source, no driver materialization
   *  5. the per-sample cone search + per-sample transformation loop
   *     (task.py:125-188) becomes: the dec-band equi-join
-  *     ([[ConeJoin.bandJoin]] for circles, [[RectJoin.bandJoin]] for
-  *     rectangles) + the Main-block DAG compiled over the joined
-  *     DataFrame — transformations see the data kind "catalog" with a
-  *     `sample_id` column and aggregate per sample instead of
-  *     looping, so the whole analysis is one distributed plan.
+  *     [[SkyJoin.bandJoin]] (it reads the circle or rectangle
+  *     footprint off the sample columns) + the Main-block DAG
+  *     compiled over the joined DataFrame — transformations see
+  *     the data kind "catalog" with a `sample_id` column and
+  *     aggregate per sample instead of looping, so the whole
+  *     analysis is one distributed plan.
   */
 object AnalysisRunner {
 
@@ -48,6 +50,26 @@ object AnalysisRunner {
     }
   }
 
+  /** A quantity list in degrees: `{"value": [...], "units": u}`, a
+    * bare list of quantities, or one quantity (a one-element list).
+    * Any malformed entry is a [[DagCompiler.PipelineError]] naming
+    * `key`. */
+  private def quantitiesDeg(sp: Tree, key: String): Seq[Double] = {
+    def deg(q: Any): Double =
+      try ConfigTree.parseQuantityDeg(q)
+      catch { case e: IllegalArgumentException =>
+        throw DagCompiler.PipelineError(s"bad $key: ${e.getMessage}") }
+    sp.getOrElse(key, throw DagCompiler.PipelineError(
+        s"sampling_parameters.$key missing")) match {
+      case m: Map[_, _] if m.asInstanceOf[Tree].contains("value") =>
+        val t = m.asInstanceOf[Tree]
+        val values = t("value") match { case xs: Seq[_] => xs; case v => Seq(v) }
+        values.map(v => deg(t.updated("value", v)))
+      case xs: Seq[_] => xs.map(deg)
+      case other => Seq(deg(other))
+    }
+  }
+
   def parseSampling(cfg: Tree): SamplingParams = {
     val sp = ConfigTree.getPath(cfg, "sampling_parameters") match {
       case Some(m: Map[_, _]) => m.asInstanceOf[Tree]
@@ -60,37 +82,16 @@ object AnalysisRunner {
     if (shapeName != "Circle" && shapeName != "Rectangle")
       throw DagCompiler.PipelineError(
         s"unsupported sample shape '$shapeName' (only Circle and Rectangle)")
-    val boundsVals = sp.get("region_bounds") match {
-      case Some(m: Map[_, _]) =>
-        val t = m.asInstanceOf[Tree]
-        val unit = t.getOrElse("units", "deg")
-        t("value").asInstanceOf[Seq[Any]]
-          .map(v => ConfigTree.parseQuantityDeg(Map("value" -> v, "units" -> unit)))
-      case Some(xs: Seq[_]) => xs.map(ConfigTree.parseQuantityDeg)
-      case other => throw DagCompiler.PipelineError(s"bad region_bounds: $other")
-    }
-    require(boundsVals.length == 4, s"region_bounds must be [raMin, decMin, raMax, decMax]")
-    val dims = sp.getOrElse("sample_dimensions",
-      throw DagCompiler.PipelineError("sampling_parameters.sample_dimensions missing"))
+    val boundsVals = quantitiesDeg(sp, "region_bounds")
+    if (boundsVals.length != 4) throw DagCompiler.PipelineError(
+      s"region_bounds must be [raMin, decMin, raMax, decMax], got $boundsVals")
     val shape = shapeName match {
-      case "Circle" => SampleShape.Circle(ConfigTree.parseQuantityDeg(dims))
+      case "Circle" => SampleShape.Circle(ConfigTree.parseQuantityDeg(
+        sp.getOrElse("sample_dimensions", throw DagCompiler.PipelineError(
+          "sampling_parameters.sample_dimensions missing"))))
       case "Rectangle" =>
-        // dimensions: [width, height] (one value → square); accepts the
-        // same quantity forms as region_bounds ({"value": [...],
-        // "units": u} or a bare list of quantities)
-        val vals = dims match {
-          case m: Map[_, _] if m.asInstanceOf[Tree].contains("value") =>
-            val t = m.asInstanceOf[Tree]
-            val unit = t.getOrElse("units", "deg")
-            t("value") match {
-              case xs: Seq[_] =>
-                xs.map(v => ConfigTree.parseQuantityDeg(Map("value" -> v, "units" -> unit)))
-              case v => Seq(ConfigTree.parseQuantityDeg(Map("value" -> v, "units" -> unit)))
-            }
-          case xs: Seq[_] => xs.map(ConfigTree.parseQuantityDeg)
-          case other => Seq(ConfigTree.parseQuantityDeg(other))
-        }
-        vals match {
+        // dimensions: [width, height] (one value → square)
+        quantitiesDeg(sp, "sample_dimensions") match {
           case Seq(s)    => SampleShape.Rect(s, s)
           case Seq(w, h) => SampleShape.Rect(w, h)
           case other => throw DagCompiler.PipelineError(
@@ -193,10 +194,7 @@ object AnalysisRunner {
     if (demanded.contains("catalog")) {
       val joined = plugins.get(PluginSlots.GenerateTasks)
         .map(f => f(catalog, samples, sampling))
-        .getOrElse(sampling.shape match {
-          case SampleShape.Circle(_) => ConeJoin.bandJoin(catalog, samples)
-          case SampleShape.Rect(_, _) => RectJoin.bandJoin(catalog, samples)
-        })
+        .getOrElse(SkyJoin.bandJoin(catalog, samples))
       data += ("catalog" -> joined)
     }
     DagCompiler.runPipeline(main, registry,

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end parity: the README quickstart
   * (/root/reference/README.md:55-174) expressed as run-config JSON +
-  * transformations JSON + two registered transforms, executed by
-  * AnalysisRunner — and required to equal the hand-built native
+  * transformations JSON + the two shipped transforms
+  * (`StandardTransforms.registry`), executed by AnalysisRunner — and required to equal the hand-built native
   * pipeline (q33) row for row. */
 class AnalysisRunnerSpec extends SparkSpec {
 
@@ -57,29 +57,7 @@ class AnalysisRunnerSpec extends SparkSpec {
       |  }
       |}""".stripMargin
 
-  private val registry = TransformRegistry(
-    "compute_distances" -> Transform { args =>
-      args("catalog").asInstanceOf[org.apache.spark.sql.DataFrame]
-        .withColumn("distances_arcsec", col("sep_deg") * 3600.0)
-    },
-    "compute_result" -> Transform { args =>
-      val catalog = args("catalog").asInstanceOf[org.apache.spark.sql.DataFrame]
-      val samples = args("samples").asInstanceOf[org.apache.spark.sql.DataFrame]
-      val minRadiusArcsec =
-        ConfigTree.parseQuantityDeg(args("min_radius")) * 3600.0
-      val agg = catalog
-        .filter(col("distances_arcsec") > minRadiusArcsec)
-        .groupBy(col("sample_id"))
-        .agg(count(lit(1)).as("n"),
-          // milli-arcsec quantization matches quickstartAggregate
-          sum(round(col("distances_arcsec"), 3).cast("decimal(28,3)"))
-            .cast("double").as("inv"))
-      samples.select(col("sample_id"), col("ra"), col("dec"))
-        .join(agg, Seq("sample_id"), "left")
-        .select(col("sample_id"), col("ra"), col("dec"),
-          coalesce(col("n"), lit(0L)).as("n"),
-          coalesce(col("inv"), lit(0.0)).as("inv"))
-    })
+  private val registry = graft.cli.StandardTransforms.registry
 
   private def catalog = Tables.load(spark, sf0001, "lineitem").select(
     col("l_orderkey").as("object_id"),
@@ -93,7 +71,7 @@ class AnalysisRunnerSpec extends SparkSpec {
     // compare against the RAW pipeline (no display rounding) so the
     // parity check stays bit-strength; the q33 gate query is this
     // plus round-6 on dec for cross-engine oracle determinism
-    val native = graft.operators.CosmapDomain.quickstartRaw(spark, sf0001)
+    val native = CosmapDomain.quickstartRaw(spark, sf0001)
       .orderBy("sample_id").collect()
     assert(declared.length === 1000)
     assert(declared.sameElements(native))
@@ -102,7 +80,7 @@ class AnalysisRunnerSpec extends SparkSpec {
   /** The quickstart reduction over a nested-loop reference join of
     * the runner's own samples: what the band-joined run must equal. */
   private def quickstartOver(joined: DataFrame, samples: DataFrame) =
-    graft.plans.ConeJoin.quickstartAggregate(joined, samples, minSepArcsec = 5.0)
+    CosmapDomain.quickstartAggregate(joined, samples, minSepArcsec = 5.0)
       .orderBy("sample_id").collect()
 
   test("band-join execution of the same analysis gives identical results") {
@@ -151,6 +129,21 @@ class AnalysisRunnerSpec extends SparkSpec {
     assert(seedOf("\"sample_seed\": 7") === 42L)
     val e = intercept[DagCompiler.PipelineError](seedOf("\"seed\": \"7\""))
     assert(e.getMessage.contains("seed"))
+  }
+
+  test("region_bounds: a scalar or a list of the wrong length is a PipelineError") {
+    def boundsOf(boundsJson: String) = AnalysisRunner.parseSampling(
+      AnalysisRunner.effectiveConfig(
+        ConfigTree.parse(runConfig.replace(
+          """{"value": [31.0, -11.0, 38, -4], "units": "degree"}""", boundsJson)),
+        ConfigTree.parse(analysisDefaults))).bounds
+    assert(boundsOf("[31.0, -11.0, 38, -4]") === CosmapDomain.QuickstartBounds)
+    for (bad <- Seq("""{"value": 5, "units": "deg"}""",
+                    """{"value": [31.0, -11.0, 38], "units": "deg"}""",
+                    "[31.0, -11.0, 38, -4, 0]", """"north"""")) {
+      val e = intercept[DagCompiler.PipelineError](boundsOf(bad))
+      assert(e.getMessage.contains("region_bounds"), e.getMessage)
+    }
   }
 
   test("run config overrides analysis defaults right-biased") {

@@ -2,16 +2,17 @@ package graft
 
 import graft.domain.{SkyBounds, SphereSampler}
 import graft.functions.Sphere
-import graft.plans.{ConeJoin, RectJoin}
+import graft.operators.CosmapDomain
+import graft.plans.SkyJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The nested-loop forms of the cone and rectangle joins: the raw
   * theta predicate over catalog × broadcast(samples), no band key.
   * They examine every pair, so they are the reference the band
-  * equi-joins are checked against; the program itself only plans the
-  * band joins. Output columns match [[ConeJoin.bandJoin]] and
-  * [[RectJoin.bandJoin]]. */
+  * equi-join is checked against; the program itself only plans the
+  * band join. Output columns match [[SkyJoin.bandJoin]] for each
+  * shape. */
 object NestedLoopJoins {
   private val sep: Column =
     Sphere.angularSepDeg(col("ra"), col("dec"), col("s_ra"), col("s_dec"))
@@ -79,13 +80,13 @@ class ConeJoinSpec extends SparkSpec {
     assert(reference.filter(_._1 >= 5L) ===
       Set((5L, 20001L), (5L, 20002L), (5L, 20003L), (6L, 20006L), (6L, 20007L)))
     for (band <- Seq(0.5, 1.0, 2.0, 7.0)) {
-      val banded = key(ConeJoin.bandJoin(catalog, samples, band))
+      val banded = key(SkyJoin.bandJoin(catalog, samples, band))
       assert(banded === reference, s"bandDeg=$band")
     }
   }
 
   test("band join matches per-pair brute force") {
-    val got = key(ConeJoin.bandJoin(catalog, samples, 1.0))
+    val got = key(SkyJoin.bandJoin(catalog, samples, 1.0))
     // brute force on the driver (20k × 5 pairs)
     val cat = catalog.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val smp = samples.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -103,20 +104,54 @@ class ConeJoinSpec extends SparkSpec {
     assert(got === want)
   }
 
+  /** A photometric catalog: survey catalogs often carry a `band`. */
+  private lazy val photo: DataFrame = {
+    import spark.implicits._
+    Seq((1L, 90.0, 45.0, "g"), (2L, 90.2, 45.1, "r"), (3L, 0.0, 0.0, "i"))
+      .toDF("object_id", "ra", "dec", "band")
+  }
+
+  test("a catalog band column passes through the join") {
+    import spark.implicits._
+    val joined = SkyJoin.bandJoin(photo, samples)
+    assert(joined.columns.toSeq === Seq("object_id", "ra", "dec", "band",
+      "sample_id", "s_ra", "s_dec", "radius_deg", "sep_deg"))
+    assert(joined.select("object_id", "band").as[(Long, String)].collect().toSet ===
+      Set((1L, "g"), (2L, "r"), (3L, "i")))
+  }
+
+  test("a catalog column with one of the join's output names is rejected") {
+    for (name <- Seq("sep_deg", "sample_id", "s_dec", "width_deg", "SEP_DEG")) {
+      val e = intercept[IllegalArgumentException](
+        SkyJoin.bandJoin(photo.withColumn(name, lit(99.0)), samples))
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
+  test("the footprint is read from the sample columns; no footprint or two is an error") {
+    val both = samples.withColumn("width_deg", lit(1.0)).withColumn("height_deg", lit(1.0))
+    val half = samples.drop("radius_deg").withColumn("width_deg", lit(1.0))
+    for (bad <- Seq(both, half, samples.drop("radius_deg"))) {
+      val e = intercept[IllegalArgumentException](SkyJoin.bandJoin(catalog, bad))
+      assert(e.getMessage.contains("radius_deg") &&
+        e.getMessage.contains(bad.columns.mkString(", ")), e.getMessage)
+    }
+  }
+
   test("quickstart aggregate preserves empty samples with n=0") {
     val bounds = SkyBounds(31, 38, -11, -4)
     val smp = SphereSampler.uniformCircles(spark, 50, bounds, 0.001, seed = 3)
     // catalog far away from the region → every cone is empty
     val far = spark.range(100).select(col("id").as("object_id"),
       lit(200.0).as("ra"), lit(50.0).as("dec"))
-    val out = ConeJoin.quickstartAggregate(
-      ConeJoin.bandJoin(far, smp), smp, minSepArcsec = 5.0)
+    val out = CosmapDomain.quickstartAggregate(
+      SkyJoin.bandJoin(far, smp), smp, minSepArcsec = 5.0)
     assert(out.count() === 50)
     assert(out.filter(col("n") === 0 && col("inv") === 0.0).count() === 50)
   }
 
   test("quickstart pipeline end-to-end is reproducible (golden invariants)") {
-    val q = graft.operators.CosmapDomain.queries("q33_quickstart_pipeline")
+    val q = CosmapDomain.queries("q33_quickstart_pipeline")
     val out1 = q(spark, sf0001).orderBy("sample_id").collect()
     val out2 = q(spark, sf0001).orderBy("sample_id").collect()
     assert(out1.sameElements(out2))
@@ -135,7 +170,6 @@ class ConeJoinSpec extends SparkSpec {
     * all three gate scales — a data refresh that lands near a boundary
     * fails here loudly instead of failing the gate mysteriously. */
   test("cone gate boundary margins far above float noise (tri-scale)") {
-    import graft.operators.CosmapDomain
     val scales = Seq(sf0001, "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     for (dir <- scales) {
       // q33: pad the radius 2× so candidates on BOTH sides of the true
@@ -144,7 +178,7 @@ class ConeJoinSpec extends SparkSpec {
       val smp = SphereSampler.uniformCircles(
           spark, 1000, CosmapDomain.QuickstartBounds, r, seed = 42L)
         .withColumn("radius_deg", col("radius_deg") * 2)
-      val cand = ConeJoin.bandJoin(
+      val cand = SkyJoin.bandJoin(
         CosmapDomain.quickstartCatalog(spark, dir), smp, bandDeg = 0.25)
       val m33 = cand.agg(
         min(abs(col("sep_deg") - lit(r))).as("mJoin"),
@@ -157,7 +191,7 @@ class ConeJoinSpec extends SparkSpec {
       // q31/q68: same probe on the derived lattice geometry
       val padded = CosmapDomain.derivedSamplesFor(spark, dir)
         .withColumn("radius_deg", col("radius_deg") * 1.5)
-      val m31 = ConeJoin.bandJoin(
+      val m31 = SkyJoin.bandJoin(
           CosmapDomain.derivedCatalogFor(spark, dir), padded, bandDeg = 5.0)
         .agg(min(abs(col("sep_deg") - lit(19.97)))).head.getDouble(0)
       assert(m31 > 1e-9, s"$dir q31 join-boundary margin $m31 too thin")
@@ -181,7 +215,7 @@ class ConeJoinSpec extends SparkSpec {
     val reference = key(NestedLoopJoins.rect(catalog, rectSamples))
     assert(reference.nonEmpty)
     for (band <- Seq(0.5, 1.0, 2.0, 7.0)) {
-      val banded = key(RectJoin.bandJoin(catalog, rectSamples, band))
+      val banded = key(SkyJoin.bandJoin(catalog, rectSamples, band))
       assert(banded === reference, s"bandDeg=$band")
     }
     // brute-force check of the membership definition

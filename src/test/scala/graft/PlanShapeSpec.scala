@@ -57,11 +57,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
+  // every SkyJoin gate: the cones (q31, q68) and the rectangles (q75)
   test("q31: cone join is an equi-join on the band key, not a nested loop") {
-    val p = executedPlan("q31_cone_join_agg")
-    assert(p.contains("BroadcastHashJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("SortMergeJoin"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    for (q <- Seq("q31_cone_join_agg", "q68_cone_centroid", "q75_rect_join_agg")) {
+      val p = executedPlan(q)
+      assert(p.contains("BroadcastHashJoin") || p.contains("ShuffledHashJoin") ||
+        p.contains("SortMergeJoin"), s"$q\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$q\n$p")
+    }
   }
 
   test("cosmap run: the quickstart cone join is the band equi-join; the run caches nothing") {

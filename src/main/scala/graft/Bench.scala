@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query on
   * SPARK_GRAFT_SF_DIR, forcing full plan execution through the noop
@@ -31,7 +32,7 @@ object Bench {
     try {
       """"(q[0-9][^"]*)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
   /** Names whose best-of MINIMUM exceeds its pin — the queries where
     * every interleaved pass hit external load. Failed queries (-1)
@@ -63,7 +64,7 @@ object Bench {
       try SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           return -1.0
       }
@@ -129,7 +130,7 @@ object Bench {
         val src = sys.env.getOrElse("SPARK_GRAFT_PINS", "BENCH_PINS.json")
         parsePins(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(src)), "UTF-8"))
-      } catch { case _: Throwable => Map.empty }
+      } catch { case NonFatal(_) => Map.empty }
     val suspect = suspects(best, pins)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // Key order is load-bearing: the record keeper stores only the TAIL
@@ -157,7 +158,7 @@ object Bench {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] result file write failed: ${e.getMessage}")
     }
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${names.size},"pass_loads":$loadsJson,"suspect":$suspect,"total_best":${fmt(total)},"result_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json")}"}""")

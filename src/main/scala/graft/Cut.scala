@@ -1,0 +1,26 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+
+/** The one way to materialize an intermediate:
+  * `df.cut("Dedup.incrementalDedup: verified pairs")` checkpoints `df`
+  * eagerly and node-locally — computed once, lineage truncated — and
+  * its jobs carry the label (`<Object>.<function>: <intermediate>`) as
+  * their job description. The caller's description is restored even
+  * when the cut throws: `Tables.inParallel` reuses pooled driver
+  * threads, so a label left behind would name unrelated later jobs.
+  * Plan guards read a cut's plan from the `localCheckpoint` action it
+  * reports to `QueryExecutionListener`s (PlanShapeSpec `shipped`). */
+object Cut {
+  private[graft] val Description = "spark.job.description"
+
+  implicit final class CutOps(private val df: DataFrame) extends AnyVal {
+    def cut(label: String): DataFrame = {
+      val sc = df.sparkSession.sparkContext
+      val previous = sc.getLocalProperty(Description)
+      sc.setJobDescription(label)
+      try df.localCheckpoint(true)
+      finally sc.setLocalProperty(Description, previous)
+    }
+  }
+}

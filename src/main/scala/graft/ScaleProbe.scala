@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.dedup.MinHashLSH
 import graft.functions.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -189,7 +190,8 @@ object ScaleProbe {
           .repartition(spark.sparkContext.defaultParallelism).cache()
         docs.count()
         val vecs = graft.operators.HashedVectors.hashedVectors(
-          docs.select(col("doc_id"), col("text"))).localCheckpoint(true)
+            docs.select(col("doc_id"), col("text")))
+          .cut("ScaleProbe.main: q147 doc vectors")
         val nvr = vecs.count()
         val panel = vecs.filter(
           col("doc_id").isin(graft.operators.HashedVectors.Panel: _*))
@@ -236,14 +238,14 @@ object ScaleProbe {
         li0.select((col("l_orderkey") + lit(r * 100000000L)).as("l_orderkey"),
           (col("l_suppkey") + lit(r * 10000000L)).as("l_suppkey"))
       }.reduce(_ unionByName _)
-      val ec = graft.operators.Motifs.edges(ord, li).localCheckpoint(true)
+      val ec = graft.operators.Motifs.edges(ord, li).cut("ScaleProbe.main: q133 edges")
       def wedgesOf(e: DataFrame): Long = e.groupBy(col("c"))
         .agg(count(lit(1)).as("d"))
         .agg(sum(expr("CAST(d AS DECIMAL(38,0)) * (d - 1) div 2"))
           .cast("long").as("w"))
         .head.getLong(0)
       val wEx = wedgesOf(ec)
-      val samp = graft.operators.Motifs.sample(ec).localCheckpoint(true)
+      val samp = graft.operators.Motifs.sample(ec).cut("ScaleProbe.main: q134 edge sample")
       val wSa = wedgesOf(samp)
       val (r133, t133) = timed(
         graft.operators.Motifs.census(ec, est = false).head)
@@ -278,13 +280,13 @@ object ScaleProbe {
         (col("s") + lit(2000000000L)).as("b"))
       val hub = ec.select(col("c")).distinct()
         .select(lit(0L).as("a"), col("c").as("b"))
-      val und = base.unionByName(hub).distinct().localCheckpoint(true)
-      val deg = graft.operators.Motifs.degrees(und).localCheckpoint(true)
+      val und = base.unionByName(hub).distinct().cut("ScaleProbe.main: q139 undirected edges")
+      val deg = graft.operators.Motifs.degrees(und).cut("ScaleProbe.main: q139 degrees")
       val wUnor = deg
         .agg(sum(expr("CAST(d AS DECIMAL(38,0)) * (d - 1) div 2"))
           .cast("long").as("w"))
         .head.getLong(0)
-      val dir = graft.operators.Motifs.orient(und, deg).localCheckpoint(true)
+      val dir = graft.operators.Motifs.orient(und, deg).cut("ScaleProbe.main: q139 oriented edges")
       val wOr = dir.groupBy(col("u")).agg(count(lit(1)).as("od"))
         .agg(sum(expr("CAST(od AS DECIMAL(38,0)) * (od - 1) div 2"))
           .cast("long").as("w"))
@@ -337,7 +339,7 @@ object ScaleProbe {
         val nD = docs.count()
         val (rows149, t149) = timed {
           val up = graft.operators.Dedup.dedupUpweight(docs)
-            .localCheckpoint(true)
+            .cut("ScaleProbe.main: q149 upweights")
           val n = up.count()
           val tot = up.agg(sum(col("multiplicity")).as("s")).head.getLong(0)
           assert(tot == nD, s"q149 census broke under replication: " +
@@ -365,7 +367,7 @@ object ScaleProbe {
           val (o, st) = graft.operators.CorpusPipeline.buildPipeline(
             spark, sfDir, graft.operators.CorpusPipeline.specJsonV3,
             docsOverride = Some(docs), embOverride = Some(emb))
-          val out = o.localCheckpoint(true)
+          val out = o.cut("ScaleProbe.main: q143 pipeline output")
           // registry cache order = DAG execution order:
           // scrub, clean, head_keep, semdedup_keep
           val counts = st.map(_.count())
@@ -441,7 +443,7 @@ object ScaleProbe {
               s"WHEN d = $from THEN $to" }.mkString(" ")
             base.withColumn("d", expr(s"CASE $mapExpr END").cast("int"))
           }
-        }.reduce(_ unionByName _).localCheckpoint(true)
+        }.reduce(_ unionByName _).cut("ScaleProbe.main: q156 features")
         val nImg = f.select(col("id")).distinct().count()
         val (nPairs, t156) = timed(
           graft.operators.ImageDedup.featurePairs(f).count())
@@ -485,13 +487,13 @@ object ScaleProbe {
         val nSample = graft.operators.Perceptron.sampleDocs(docs).count()
         val (w, tTrain) = timed {
           val p = graft.operators.Perceptron.trainPocketSampled(docs)
-            .localCheckpoint(true)
+            .cut("ScaleProbe.main: q163 pocket weights")
           p.count(); p
         }
         val (nKept, tKeep) = timed(
           graft.operators.Perceptron.classifierKeep(docs, w).count())
         val scored = graft.operators.Perceptron.scoreDocs(docs, w)
-          .localCheckpoint(true)
+          .cut("ScaleProbe.main: q153 scores")
         val ext = scored.agg(min(col("score")).as("lo"),
           max(col("score")).as("hi"))
         val nBins = scored.crossJoin(broadcast(ext))
@@ -556,7 +558,7 @@ object ScaleProbe {
             .map { case (d, v) => (id, d, v) })
           .toDF("id", "d", "v")
           .repartition(spark.sparkContext.defaultParallelism)
-          .localCheckpoint(true)
+          .cut("ScaleProbe.main: q164 features")
         val (nPairs, t164) = timed(
           graft.operators.ImageDedup.featurePairs(f).count())
         val planted = n / 8 // groups g%4==0 → one pair per 8 ids
@@ -638,7 +640,7 @@ object ScaleProbe {
               feat(id).map { case (d, v) => (id, d, v) })
             .toDF("id", "d", "v")
             .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(true)
+            .cut("ScaleProbe.main: modality features")
           val (nPairs, t) = timed(graft.operators.ImageDedup
             .signLshPairs(f, planeCoef, center, l1Max).count())
           val planted = n / 8
@@ -690,7 +692,7 @@ object ScaleProbe {
         val sigs = toks.select(col("doc_id"),
             graft.functions.MinHashSig.minhashSignature(col("toks"), 64, 3)
               .as("sig"))
-          .localCheckpoint(true)
+          .cut("ScaleProbe.main: q180 signatures")
         val counts = grid.map { bands =>
           val r = 64 / bands
           val bandCols = (0 until bands).map(b =>

@@ -1,14 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [query ...]
+  *
+  * Named queries restrict the sweep, and oracle_sql.json then lists
+  * only those: a named query that fails leaves no parquet, so
+  * check_oracle.py reports it as NO_SPARK_OUTPUT. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args(2+) (dev only): restrict the sweep to the named queries —
-    // the driver always calls with exactly (sfDir, outDir)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
+    def runs(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,11 +25,11 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => runs(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally
@@ -44,7 +50,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (name, _) => runs(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Cut._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,13 +37,13 @@ object ConnectedComponents {
     // ONCE: the symmetric union below references `pairs` twice, and
     // without the cut both branches recompute the whole upstream plan
     // (for q69 that is the entire prefix-filtered Jaccard join)
-    val p = pairs.localCheckpoint(true)
+    val p = pairs.cut("ConnectedComponents.clusterLabels: pairs")
     // symmetric edge list
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
       .persist()
-    // localCheckpoint truncates the logical plan each round —
+    // the cut truncates the logical plan each round —
     // self-joining an unpersisted iterate doubles the plan tree per
     // round (exponential analysis blowup; OOMs the driver around
     // round 6). At cluster scale swap for reliable checkpoint() with
@@ -56,7 +57,7 @@ object ConnectedComponents {
       .groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
       .select(col("src").as("doc_id"), col("cluster_id"))
-      .localCheckpoint(true)
+      .cut("ConnectedComponents.clusterLabels: initial labels")
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -82,7 +83,7 @@ object ConnectedComponents {
             lit(null).cast("long").as("own")))
       val propagated = contrib.groupBy(col("doc_id"))
         .agg(min(col("cluster_id")).as("cluster_id"), max(col("own")).as("prev"))
-        .localCheckpoint(true)
+        .cut("ConnectedComponents.clusterLabels: propagated labels")
       // pointer doubling: cluster_id := label(cluster_id). Labels are
       // always vertex ids of the same component with label(v) <= v,
       // so the lookup stays within the component and only decreases.
@@ -94,7 +95,7 @@ object ConnectedComponents {
           least(col("x.cluster_id"),
             coalesce(col("ylbl"), col("x.cluster_id"))).as("cluster_id"),
           col("x.prev"))
-        .localCheckpoint(true)
+        .cut("ConnectedComponents.clusterLabels: jumped labels")
       val changed = updated
         .filter(col("cluster_id") =!= col("prev"))
         .count()

@@ -32,19 +32,26 @@ object SphereSampler {
 
   /** Shrink `bounds` so a sample footprint with the given half-extents
     * (RA half-width measured as physical angle, Dec half-height)
-    * centered anywhere in the result lies fully inside `bounds`. */
+    * centered anywhere in the result lies fully inside `bounds`. The
+    * RA pad follows [[Sphere.raPad]] at the region's most polar edge:
+    * a footprint that can reach a pole spans every RA, so no frame
+    * exists and the region is rejected. */
   def frameRect(bounds: SkyBounds, halfWidthDeg: Double,
                 halfHeightDeg: Double): SkyBounds = {
     val maxAbsDec = math.max(math.abs(bounds.decMin), math.abs(bounds.decMax))
-    val edge = math.min(89.9, maxAbsDec + halfHeightDeg)
-    val raPad = halfWidthDeg / math.cos(math.toRadians(edge))
+    val edge = maxAbsDec + halfHeightDeg
+    val reachesPole = edge >= 90.0
+    val raPad =
+      if (reachesPole) 180.0
+      else math.min(180.0, halfWidthDeg / math.cos(math.toRadians(edge)))
     if (bounds.raMax - bounds.raMin <= 2 * raPad ||
         bounds.decMax - bounds.decMin <= 2 * halfHeightDeg)
       throw new IllegalArgumentException(
         s"sampling region $bounds is too small for sample half-extents " +
           s"($halfWidthDeg°, $halfHeightDeg°) (needs > ${2 * raPad}° of RA " +
-          s"and ${2 * halfHeightDeg}° of Dec); the reference would silently " +
-          "produce an inverted frame here")
+          s"and ${2 * halfHeightDeg}° of Dec" +
+          (if (reachesPole) "; a sample at its Dec edge reaches the pole" else "") +
+          "); the reference would silently produce an inverted frame here")
     SkyBounds(bounds.raMin + raPad, bounds.raMax - raPad,
       bounds.decMin + halfHeightDeg, bounds.decMax - halfHeightDeg)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{HllSketch, Sketches, SplitMix64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -172,11 +173,11 @@ object ApproxAggs {
     val exact = d.select(explode(Text.tokens(col("text"))).as("token"))
       .filter(col("token").isin(CmProbes: _*))
       .groupBy(col("token")).agg(count(lit(1)).as("exact"))
-      .localCheckpoint(true) // joined once per width row set
+      .cut("ApproxAggs.cmsWidthFrontier: exact counts") // joined once per width row set
     val rows = CmWidthGrid.map { w =>
       val sk = toks
         .agg(Sketches.countMin(col("t"), CmSalt, CmDepth, w, CmProbes).as("s"))
-        .localCheckpoint(true) // read once per probe row
+        .cut("ApproxAggs.cmsWidthFrontier: sketch") // read once per probe row
       CmProbes.zipWithIndex.map { case (t, i) =>
         sk.select(lit(w.toLong).as("width"),
           lit(CmDepth.toLong * w).as("counters"),
@@ -263,18 +264,19 @@ object ApproxAggs {
     * the sketch's one-bucket guarantee, measured. */
   private[graft] def histWidthFrontier(d: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cents = d.select(expr(CentsSql).as("cents")).localCheckpoint(true)
+    val cents = d.select(expr(CentsSql).as("cents")).cut("ApproxAggs.histWidthFrontier: cents")
     val hc = cents.groupBy(col("cents")).agg(count(lit(1)).as("c"))
     val wOrd = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val hn = hc.withColumn("cs", sum(col("c")).over(wOrd))
       .crossJoin(broadcast(cents.agg(count(lit(1)).as("n"))))
-      .localCheckpoint(true) // read by both exact-quantile filters
+      // read by both exact-quantile filters
+      .cut("ApproxAggs.histWidthFrontier: cumulative counts")
     val ex = hn.filter(col("cs") >= expr("(n + 1) div 2"))
       .agg(min(col("cents")).as("exact_p50"))
       .crossJoin(hn.filter(col("cs") >= expr("(9 * n + 9) div 10"))
         .agg(min(col("cents")).as("exact_p90")))
-      .localCheckpoint(true)
+      .cut("ApproxAggs.histWidthFrontier: exact quantiles")
     val rows = HistWidthGrid.map { w =>
       val b = histBucketsFor(w)
       cents.agg(Sketches.histQuantiles(col("cents"), w, b).as("q"))

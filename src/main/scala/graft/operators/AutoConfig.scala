@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -263,7 +264,7 @@ object AutoConfig {
     * family whose accepts cannot be wrong. */
   private[graft] def dedupFamilyFrontier(d: DataFrame): DataFrame = {
     import graft.dedup.MinHashLSH
-    val corpus = DedupQuality.plantedVariants(d).localCheckpoint(true)
+    val corpus = DedupQuality.plantedVariants(d).cut("AutoConfig.dedupFamilyFrontier: corpus")
     def row(family: String, config: String, pref: Int, cand: DataFrame,
         pairs: DataFrame): DataFrame =
       DedupQuality.familyRow(family, corpus, pairs)
@@ -276,7 +277,8 @@ object AutoConfig {
     // from driver threads; inParallel preserves row order.
     Tables.inParallel[DataFrame](Seq(
       () => {
-        val exCand = Dedup.jaccardCandidates(corpus).localCheckpoint(true)
+        val exCand = Dedup.jaccardCandidates(corpus)
+          .cut("AutoConfig.dedupFamilyFrontier: exact candidates")
         row("exact", "exact", 0, exCand,
           MinHashLSH.verify(corpus, exCand, "doc_id", "text", 3, 0.5)
             .select(col("doc_a"), col("doc_b")))
@@ -284,13 +286,14 @@ object AutoConfig {
       () => {
         val mhCand = MinHashLSH.candidatePairs(
           MinHashLSH.bandBuckets(corpus, "doc_id", "text", 64, 16, 3))
-          .localCheckpoint(true)
+          .cut("AutoConfig.dedupFamilyFrontier: minhash candidates")
         row("minhash", "b16r4", 1, mhCand,
           MinHashLSH.verify(corpus, mhCand, "doc_id", "text", 3, 0.5)
             .select(col("doc_a"), col("doc_b")))
       },
       () => {
-        val shCand = Dedup.simhashPairsWide(corpus).localCheckpoint(true)
+        val shCand = Dedup.simhashPairsWide(corpus)
+          .cut("AutoConfig.dedupFamilyFrontier: simhash candidates")
         row("simhash128", "sim128_h3", 2, shCand,
           shCand.filter(col("hamming") <= 3)
             .select(col("doc_a"), col("doc_b")))
@@ -670,7 +673,7 @@ object AutoConfig {
     val cms = docs.select(Text.tokens(col("text")).as("t"))
       .agg(Sketches.countMin(col("t"), ApproxAggs.CmSalt,
         ApproxAggs.CmDepth, cmsW.toInt, ApproxAggs.CmProbes).as("s"))
-      .localCheckpoint(true)
+      .cut("AutoConfig.autoSizedSketchEval: count-min sketch")
     val cmsRows = ApproxAggs.CmProbes.zipWithIndex.map { case (t, i) =>
       cms.select(lit("cms_width").as("sketch"), lit(cmsW).as("selected"),
         lit(s"est_$t").as("item"),
@@ -682,7 +685,7 @@ object AutoConfig {
     // the documented Setup-block exception), corpus probes map-side.
     val grams = docs.select(col("doc_id"),
         Text.wordNGrams(col("text"), 5).as("g5"))
-      .localCheckpoint(true) // build + probe read it
+      .cut("AutoConfig.autoSizedSketchEval: grams") // build + probe read it
     val words = grams.filter(col("doc_id") % 97 === 0)
       .agg(Sketches.bloom(col("g5"), TextAnalysis.BloomSalt,
         bloomBits.toInt, TextAnalysis.BloomK).as("w"))
@@ -700,7 +703,7 @@ object AutoConfig {
     val hist = li.select(expr(ApproxAggs.CentsSql).as("cents"))
       .agg(Sketches.histQuantiles(col("cents"), histW,
         histBuckets.toInt).as("q"))
-      .localCheckpoint(true) // read by the three item rows
+      .cut("AutoConfig.autoSizedSketchEval: histogram") // read by the three item rows
     val histRows = Seq("n_rows" -> col("q.n"),
         "p50_cents" -> col("q.p50_cents"),
         "p90_cents" -> col("q.p90_cents"))
@@ -794,7 +797,7 @@ object AutoConfig {
     //    ONCE (checkpointed) and feeds both scenario selections. --
     "q200_radius_select" -> { (s, dir) =>
       val fr = Dedup.simhashFrontier(Tables.load(s, dir, "documents"))
-        .localCheckpoint(true)
+        .cut("AutoConfig.q200_radius_select: frontier")
       radiusChoice(fr, RadiusPrecisionFloorPpm, CandidateBudgetMax)
         .select(lit("strict").as("scenario"), col("*"))
         .unionByName(
@@ -834,9 +837,9 @@ object AutoConfig {
       // r15 (guide §2.6): the full and slice frontier measurements are
       // independent deterministic chains — build them concurrently
       val Seq(fresh, stale) = Tables.inParallel[DataFrame](Seq(
-        () => stampedIvfFrontier(e).localCheckpoint(true),
+        () => stampedIvfFrontier(e).cut("AutoConfig.q204_persisted_frontier: full frontier"),
         () => stampedIvfFrontier(e.filter(col("vec_id") % 8 === 0))
-          .localCheckpoint(true)))
+          .cut("AutoConfig.q204_persisted_frontier: slice frontier")))
       // r15: ONE serving-corpus fingerprint scan shared by both
       // checks (was one per check), and the stale scenario's
       // re-measure branch reads the already-checkpointed fresh

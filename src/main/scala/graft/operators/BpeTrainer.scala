@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,7 +43,7 @@ import org.apache.spark.sql.functions._
   * counts), a 1-row argmax broadcast, and one w-keyed shuffle whose
   * single exchange feeds all three windows AND the rebuild groupBy
   * ({w} ⊆ {w, island} / {w, c} — the q107 clustered-distribution
-  * argument). The iterate is localCheckpoint'd every round (house
+  * argument). The iterate is cut every round (house
   * rule: lineage cut). Driver state: one 1-row argmax per round, K
   * fixed.
   */
@@ -132,7 +133,7 @@ object BpeTrainer {
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     var seqs = words.select(col("w"), col("c"),
       expr("filter(split(w, ''), x -> x <> '')").as("sym"))
-      .localCheckpoint(true)
+      .cut("BpeTrainer.trainTrajectory: symbol sequences")
     val trajectory = Seq.newBuilder[DataFrame]
     trajectory += seqs
     val steps = (1 to k).map { r =>
@@ -141,9 +142,9 @@ object BpeTrainer {
         .orderBy(col("cnt").desc, col("pair").asc).limit(1)
         .select(lit(r.toLong).as("step"), col("pair"),
           expr("replace(pair, ' ', '')").as("merged"), col("cnt"))
-        .localCheckpoint(true)
-      // localCheckpoint each round: lineage cut (the CC house rule)
-      seqs = mergeRound(seqs, best).localCheckpoint(true)
+        .cut("BpeTrainer.trainTrajectory: best pair")
+      // cut each round: lineage truncation (the CC house rule)
+      seqs = mergeRound(seqs, best).cut("BpeTrainer.trainTrajectory: merged sequences")
       trajectory += seqs
       best
     }
@@ -213,7 +214,7 @@ object BpeTrainer {
     val aggs = count(lit(1)).as("n_words") +: sum(col("nchar")).as("n_chars") +:
       (0 to k).map(i => sum(col(s"nseg$i")).as(s"sym$i"))
     val one = occ.join(vocab.hint("shuffle_merge"), "w")
-      .agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+      .agg(aggs.head, aggs.tail: _*).cut("BpeTrainer.bpeFrontier: segment counts")
     (0 to k).map { i =>
       one.select(lit(i.toLong).as("merges"), col("n_words"),
         col(s"sym$i").as("n_symbols"), col("n_chars"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.pipeline.{DagCompiler, PipelineSpec, Transform, TransformRegistry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -510,7 +511,7 @@ object CorpusPipeline {
     (out, persisted.toSeq)
   }
 
-  /** Materialize ONCE (eager localCheckpoint — also cuts the lineage
+  /** Materialize ONCE (an eager cut — also truncates the lineage
     * so downstream actions never re-enter the stage plans), then
     * release the stage caches: cached blocks no longer outlive the
     * query, and the caller's action reads the checkpointed blocks,
@@ -520,7 +521,7 @@ object CorpusPipeline {
   private def materialized(s: SparkSession, dir: String, spec: String)
       : DataFrame = {
     val (out, persisted) = buildPipeline(s, dir, spec)
-    val result = out.localCheckpoint(true)
+    val result = out.cut("CorpusPipeline.materialized: pipeline output")
     persisted.foreach(_.unpersist(false))
     result
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +57,7 @@ object CrossModal {
     // read it
     val docs = Tables.load(s, dir, "documents")
     val srcIds = docs.select(col("doc_id").as("id"), col("source"))
-      .localCheckpoint(true)
+      .cut("CrossModal.crossModalManifest: source ids")
     val textMan = Dedup.dedupUpweight(docs)
       .select(col("doc_id").as("id"), col("multiplicity"))
     val imgMan = ImageDedup.manifestFrom(srcIds.select(col("id")),
@@ -89,7 +90,7 @@ object CrossModal {
       dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
     val srcIds = docs.select(col("doc_id").as("id"), col("source"))
-      .localCheckpoint(true)
+      .cut("CrossModal.crossModalManifestScaled: source ids")
     val ids = srcIds.select(col("id"))
     val textMan = Dedup.dedupUpweight(docs)
       .select(col("doc_id").as("id"), col("multiplicity"))
@@ -114,10 +115,10 @@ object CrossModal {
   private[graft] def mergeCensus(docs: DataFrame, textMan: DataFrame,
       imgMan: DataFrame): DataFrame = {
     val srcIds = docs.select(col("doc_id").as("id"), col("source"))
-      .localCheckpoint(true)
+      .cut("CrossModal.mergeCensus: source ids")
     census(srcIds, textMan, "text")
       .unionByName(census(srcIds, imgMan, "image"))
-      .localCheckpoint(true)
+      .cut("CrossModal.mergeCensus: census")
   }
 
   /** Four-modality census merge for the q183 QUAD-modal compiled
@@ -128,12 +129,12 @@ object CrossModal {
   private[graft] def mergeCensusQuad(docs: DataFrame, textMan: DataFrame,
       imgMan: DataFrame, audMan: DataFrame, vidMan: DataFrame): DataFrame = {
     val srcIds = docs.select(col("doc_id").as("id"), col("source"))
-      .localCheckpoint(true)
+      .cut("CrossModal.mergeCensusQuad: source ids")
     census(srcIds, textMan, "text")
       .unionByName(census(srcIds, imgMan, "image"))
       .unionByName(census(srcIds, audMan, "audio"))
       .unionByName(census(srcIds, vidMan, "video"))
-      .localCheckpoint(true)
+      .cut("CrossModal.mergeCensusQuad: census")
   }
 
   /** The q170 temperature rule cross-modally, for the q176 pipeline's

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{NGrams, SplitMix64, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -139,7 +140,7 @@ object Curation {
   private[graft] def perplexityBuckets(d: DataFrame): DataFrame = {
     val per = bigramSurprisal(d)
       .select(col("doc_id"), col("mean_surprisal_unats").as("su"))
-      .localCheckpoint(true)
+      .cut("Curation.perplexityBuckets: surprisal")
     val bins = per.groupBy(expr(s"su div $PplBinUnats").as("b"))
       .agg(count(lit(1)).as("nb"))
     val thr = bins

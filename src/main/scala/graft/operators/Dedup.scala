@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.dedup.MinHashLSH
 import graft.functions.{SimHash, Text}
@@ -406,9 +407,9 @@ object Dedup {
     val sigs = toks.select(col("doc_id"),
         graft.functions.MinHashSig.minhashSignature(col("toks"), 64, 3)
           .as("sig"))
-      .localCheckpoint(true)
+      .cut("Dedup.minhashFrontier: signatures")
     val truth = jaccardPairs(wide).select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
+      .cut("Dedup.minhashFrontier: truth pairs")
     val tc = truth.count() // scalar: |truth| (the recall denominator)
     // r15 (guide §2.6): the four banding chains are independent,
     // deterministic passes over the shared CHECKPOINTED signatures —
@@ -420,7 +421,7 @@ object Dedup {
       val buckets = sigs.select(col("doc_id"), posexplode(array(bandCols: _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       val cand = graft.dedup.MinHashLSH.candidatePairs(buckets)
-        .localCheckpoint(true) // read by the count AND the recall join
+        .cut("Dedup.minhashFrontier: candidates") // read by the count AND the recall join
       val candN = cand.agg(count(lit(1)).as("candidates"))
       val hits = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
         .agg(count(lit(1)).as("hits"))
@@ -461,7 +462,7 @@ object Dedup {
   private[graft] def simhashFrontier(d: DataFrame): DataFrame = {
     val wide = widen(d)
     val truth = jaccardPairs(wide).select(col("doc_a"), col("doc_b"))
-      .withColumn("it", lit(1)).localCheckpoint(true)
+      .withColumn("it", lit(1)).cut("Dedup.simhashFrontier: truth pairs")
     val tc = truth.count() // scalar: |truth| (the recall denominator)
     val fams = Seq("sim64" -> simhashPairs(wide),
       "sim128" -> simhashPairsWide(wide))
@@ -478,7 +479,7 @@ object Dedup {
           count(when(col("hamming") <= h, lit(1))).as(s"acc$h"),
           count(when(col("hamming") <= h && col("it") === 1, lit(1)))
             .as(s"hit$h")))
-      val one = flagged.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+      val one = flagged.agg(aggs.head, aggs.tail: _*).cut("Dedup.simhashFrontier: radius census")
       RadiusGrid.map { h =>
         one.select(lit(s"${fam}_h$h").as("config"), lit(fam).as("family"),
           lit(h.toLong).as("radius"), col("candidates"),
@@ -501,7 +502,7 @@ object Dedup {
     * (doc-keyed merge — both sides corpus-scale, hinted off
     * broadcast); output ≤ |sources| rows. */
   private[graft] def upweightBudget(d: DataFrame): DataFrame = {
-    val up = dedupUpweight(d).localCheckpoint(true)
+    val up = dedupUpweight(d).cut("Dedup.upweightBudget: upweights")
     val toks = d.select(col("doc_id"), col("source"),
       size(Text.tokens(col("text"))).cast("long").as("nt"))
     val raw = toks.groupBy(col("source"))
@@ -536,7 +537,7 @@ object Dedup {
     * formula runs on a ≤|sources|-row table with a broadcast 1-row
     * min dim. */
   private[graft] def effectiveMixRates(d: DataFrame): DataFrame = {
-    val up = dedupUpweight(d).localCheckpoint(true)
+    val up = dedupUpweight(d).cut("Dedup.effectiveMixRates: upweights")
     val toks = d.select(col("doc_id"), col("source"),
       size(Text.tokens(col("text"))).cast("long").as("nt"))
     val raw = toks.groupBy(col("source")).agg(sum(col("nt")).as("t_raw"))
@@ -598,7 +599,7 @@ object Dedup {
     * min dim — the frontier costs one dedup pass regardless of grid
     * size. */
   private[graft] def temperatureFrontier(d: DataFrame): DataFrame = {
-    val up = dedupUpweight(d).localCheckpoint(true)
+    val up = dedupUpweight(d).cut("Dedup.temperatureFrontier: upweights")
     val toks = d.select(col("doc_id"), col("source"),
       size(Text.tokens(col("text"))).cast("long").as("nt"))
     val raw = toks.groupBy(col("source")).agg(sum(col("nt")).as("t_raw"))
@@ -610,7 +611,7 @@ object Dedup {
     val j = raw.join(eff, Seq("source"), "left")
       .select(col("source"),
         coalesce(col("t_eff"), lit(0L)).as("t_eff"))
-      .localCheckpoint(true) // read once per τ row set
+      .cut("Dedup.temperatureFrontier: effective tokens") // read once per τ row set
     val mins = j.agg(
       coalesce(min(when(col("t_eff") > 0, col("t_eff"))), lit(0L))
         .as("e_min"))
@@ -642,7 +643,7 @@ object Dedup {
     * (band+bucket equi-joins, index sides hinted off broadcast); the
     * merge itself is an append-only union — the standing side keeps
     * its cached partitioning, only the survivor side is new map
-    * work; both reports are localCheckpoint'd inside the query so
+    * work; both reports are cut inside the query so
     * the index caches release before the caller's action. */
   private[graft] def indexMaintenance(d: DataFrame): DataFrame = {
     import graft.streaming.DocStreams
@@ -651,13 +652,13 @@ object Dedup {
     val day1 = widen(d.filter(h >= "aaaaaaaa" && h < "dddddddd"))
     val day2 = widen(d.filter(h >= "dddddddd"))
     val idx = DocStreams.buildIndex(widen(corpus))
-    val f1 = DocStreams.flagBatch(day1, idx).localCheckpoint(true)
+    val f1 = DocStreams.flagBatch(day1, idx).cut("Dedup.indexMaintenance: day-1 flags")
     val survivors = day1.join(
       f1.filter(col("is_dup") === 0L).select(col("doc_id"))
         .hint("shuffle_merge"),
       Seq("doc_id"), "left_semi")
     val merged = DocStreams.mergeIndex(idx, survivors) // swaps out idx
-    val f2 = DocStreams.flagBatch(day2, merged).localCheckpoint(true)
+    val f2 = DocStreams.flagBatch(day2, merged).cut("Dedup.indexMaintenance: day-2 flags")
     merged.unpersist()
     f1.select(lit(1L).as("day"), col("*"))
       .unionByName(f2.select(lit(2L).as("day"), col("*")))
@@ -676,7 +677,7 @@ object Dedup {
     // widen, like dedupKeep: a narrow-file input would otherwise
     // serialize the gram/pair stage (round-8 advice #4)
     val labels = graft.dedup.ConnectedComponents
-      .clusterLabels(jaccardPairs(widen(d))).localCheckpoint(true)
+      .clusterLabels(jaccardPairs(widen(d))).cut("Dedup.dedupUpweight: cluster labels")
     val csize = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("m"))
     val reps = labels.filter(col("doc_id") === col("cluster_id"))
       .join(csize.hint("shuffle_merge"), "cluster_id")
@@ -695,13 +696,12 @@ object Dedup {
     * off broadcast (at real scale the corpus index side is the big
     * one — broadcasting it is exactly the failure the round-brief
     * names); the verify joins are candidate-sized; the verified pair
-    * set is localCheckpoint'd (read by the match count, the best-id
+    * set is cut (read by the match count, the best-id
     * resolution and nothing else); the final left joins are
     * increment-keyed merges. Docs with < 3 tokens have no shingles
     * and surface with zero matches — they cannot be LSH-deduped,
     * identically in the oracle. */
-  private[graft] def incrementalDedup(d: DataFrame,
-      materialize: Boolean = true): DataFrame = {
+  private[graft] def incrementalDedup(d: DataFrame): DataFrame = {
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
     val corpus = d.filter(h < "cccccccc")
     val inc = d.filter(h >= "cccccccc")
@@ -713,12 +713,10 @@ object Dedup {
       .join(cb.hint("shuffle_merge"), Seq("band", "bucket"))
       .select(col("inc_id").as("doc_a"), col("corp_id").as("doc_b"))
       .distinct()
-    val verifiedRaw = MinHashLSH.verify(d, cand, "doc_id", "text",
-      shingleN = 3, threshold = 0.5)
-    // checkpointed (it feeds the count agg AND the best-id resolve);
-    // materialize = false leaves the full plan visible for the audit
-    val verified =
-      if (materialize) verifiedRaw.localCheckpoint(true) else verifiedRaw
+    // cut: it feeds the count agg AND the best-id resolve
+    val verified = MinHashLSH.verify(d, cand, "doc_id", "text",
+        shingleN = 3, threshold = 0.5)
+      .cut("Dedup.incrementalDedup: verified pairs")
     incrementReport(inc.select(col("doc_id")), verified)
   }
 

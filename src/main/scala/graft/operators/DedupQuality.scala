@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -83,7 +84,7 @@ object DedupQuality {
         i.cast("string")))
     // widen (r14 optimization): the construction is map-side over the
     // single-split documents scan, so the frame (and the
-    // localCheckpoint consumers take of it) would otherwise carry ONE
+    // cuts consumers take of it) would otherwise carry ONE
     // partition — serializing every family's shingle/signature/
     // fingerprint pass in q193/q197/q201 on one core. Dedup.widen is
     // gated on the scan's file count: a no-op at real scale and on
@@ -120,7 +121,7 @@ object DedupQuality {
     // of their cells' m; correct pairs read the cells directly.
     val cells = lab.groupBy(col("cid"), col("pid"))
       .agg(count(lit(1)).as("m"))
-      .localCheckpoint(true)
+      .cut("DedupQuality.familyRow: cells")
     val nd = cells.agg(coalesce(sum(col("m")), lit(0L)).as("n_docs"))
     val planted = pairSum(cells.groupBy(col("pid"))
       .agg(sum(col("m")).as("m")))
@@ -144,7 +145,7 @@ object DedupQuality {
       sepDen: Int = SepDen): DataFrame = {
     // one corpus build shared by all families (checkpointed: three
     // candidate stages + three census joins read it)
-    val corpus = plantedVariants(d, sepDen).localCheckpoint(true)
+    val corpus = plantedVariants(d, sepDen).cut("DedupQuality.qualityTable: corpus")
     val exact = Dedup.jaccardPairs(corpus)
       .select(col("doc_a"), col("doc_b"))
     val minhash = graft.dedup.MinHashLSH

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.NormQuant
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,7 +72,7 @@ object DriftAudit {
   private[graft] def driftMatrix(e: DataFrame): DataFrame = {
       // materialize the tiny centroid table once: a self-join of the
       // un-cut frame would re-run the corpus aggregation per side
-      val ct = centroids(e).localCheckpoint(true)
+      val ct = centroids(e).cut("DriftAudit.driftMatrix: centroids")
       val a = ct.select(col("label").as("label_a"), col("pos"),
         col("c").as("ca"), col("n").as("n_a"))
       val b = ct.select(col("label").as("label_b"), col("pos"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -48,7 +49,7 @@ import org.apache.spark.sql.functions._
   * the full edge list, and E ≈ 25·N for this bipartite trade graph
   * at every SF. REJECTED; the two-join step stands (PLANS.md).
   *
-  * The iterate is localCheckpoint'd each round (house rule: lineage
+  * The iterate is cut each round (house rule: lineage
   * cut, the CC lesson) and the final top-N compiles to
   * TakeOrderedAndProject, so driver state is N rows at any graph
   * size.
@@ -143,11 +144,11 @@ object GraphRank {
       .agg(count(lit(1)).as("d"))
       .persist()
     var ranks = deg.select(col("node"), col("d"), lit(PrUnit).as("r"))
-      .localCheckpoint(true)
+      .cut("GraphRank.centrality: initial ranks")
     for (_ <- 1 to PrIters)
-      // localCheckpoint each round: lineage cut (the CC house rule —
+      // cut each round: lineage truncation (the CC house rule —
       // an un-cut iterate re-derives the whole chain per reference)
-      ranks = step(edges, deg, ranks).localCheckpoint(true)
+      ranks = step(edges, deg, ranks).cut("GraphRank.centrality: ranks")
     edges.unpersist()
     deg.unpersist()
     ranks.select(col("node").as("node_id"),
@@ -184,7 +185,7 @@ object GraphRank {
     * O(E) per round. The per-step max is a 1-row broadcast dim; both
     * role tops compile to TakeOrderedAndProject (driver state 2·N
     * rows bounded at 2·HitsTop). The RAW half-step sums are
-    * localCheckpoint'd (house rule: cut the iterate's lineage) and
+    * cut (house rule: truncate the iterate's lineage) and
     * the max-normalization is derived off the checkpoint — the max
     * is a node-sized scan, not a second run of the edge join. */
   private[graft] def hits(orders: DataFrame, lineitem: DataFrame): DataFrame = {
@@ -196,7 +197,7 @@ object GraphRank {
     val eByS = e0.repartition(col("s")).persist()
     var hubs = eByC.select(col("c")).distinct()
       .select(col("c"), lit(PrUnit).as("h"))
-      .localCheckpoint(true)
+      .cut("GraphRank.hits: initial hubs")
     var auths: DataFrame = null
     for (_ <- 1 to HitsIters) {
       // checkpoint the RAW sums, then normalize off the checkpoint:
@@ -205,12 +206,12 @@ object GraphRank {
       // TWICE per half-step (measured: 9.3 s → 5 s at sf0.1)
       val ar = eByC.join(hubs.hint("shuffle_merge"), "c")
         .groupBy(col("s")).agg(sum(col("h")).as("ar"))
-        .localCheckpoint(true)
+        .cut("GraphRank.hits: authority sums")
       auths = ar.crossJoin(broadcast(ar.agg(max(col("ar")).as("amax"))))
         .selectExpr("s", s"(ar * $PrUnit) div amax AS a")
       val hr = eByS.join(auths.hint("shuffle_merge"), "s")
         .groupBy(col("c")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint(true)
+        .cut("GraphRank.hits: hub sums")
       hubs = hr.crossJoin(broadcast(hr.agg(max(col("hr")).as("hmax"))))
         .selectExpr("c", s"(hr * $PrUnit) div hmax AS h")
     }
@@ -241,7 +242,7 @@ object GraphRank {
     * subset-clustering ({s} ⊆ {s, lbl} — the q118 trick, so the vote
     * costs ONE edge-sized shuffle, not two). Votes are integer
     * counts with ties to the smallest label — bit-stable on any
-    * partitioning. Labels are localCheckpoint'd per half-step; the
+    * partitioning. Labels are cut per half-step; the
     * census is two label-keyed groupBys + a full outer join of
     * community-sized tables, top-LpTop = TakeOrderedAndProject. */
   private[graft] def labelProp(orders: DataFrame, lineitem: DataFrame): DataFrame = {
@@ -253,7 +254,7 @@ object GraphRank {
     val eByS = e0.repartition(col("s")).persist()
     var labC = eByC.select(col("c")).distinct()
       .select(col("c"), col("c").as("lbl"))
-      .localCheckpoint(true)
+      .cut("GraphRank.labelProp: initial labels")
     var labS: DataFrame = null
     def vote(half: DataFrame, key: String): DataFrame = half
       .repartition(col(key))
@@ -264,9 +265,9 @@ object GraphRank {
       .select(col(key), col("lbl"))
     for (_ <- 1 to LpIters) {
       labS = vote(eByC.join(labC.hint("shuffle_merge"), "c"), "s")
-        .localCheckpoint(true)
+        .cut("GraphRank.labelProp: source labels")
       labC = vote(eByS.join(labS.hint("shuffle_merge"), "s"), "c")
-        .localCheckpoint(true)
+        .cut("GraphRank.labelProp: target labels")
     }
     eByC.unpersist()
     eByS.unpersist()

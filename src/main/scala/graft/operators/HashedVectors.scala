@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{SplitMix64, Text}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,7 +60,7 @@ object HashedVectors {
     // checkpointed: referenced by BOTH the df/idf chain and the
     // scoring join (the CLAUDE.md reused-input rule)
     val tf = occ.groupBy(col("doc_id"), col("t"))
-      .agg(count(lit(1)).as("tf")).localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")).cut("HashedVectors.hashedVectors: term frequencies")
     val dfTab = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
     val nd = d.agg(count(lit(1)).as("n"))
     val idf = dfTab.crossJoin(broadcast(nd))
@@ -145,7 +146,8 @@ object HashedVectors {
     },
     "q147_hashed_vector_topk" -> { (s, dir) =>
       panelTopK(
-        hashedVectors(Tables.load(s, dir, "documents")).localCheckpoint(true),
+        hashedVectors(Tables.load(s, dir, "documents"))
+          .cut("HashedVectors.q147_hashed_vector_topk: doc vectors"),
         k = 5)
     },
 
@@ -158,7 +160,7 @@ object HashedVectors {
     //    assignment, top-6 probe cells, round-6 re-rank). --
     "q151_hashed_vector_ivf" -> { (s, dir) =>
       val e0 = denseVectors(Tables.load(s, dir, "documents"))
-        .localCheckpoint(true)
+        .cut("HashedVectors.q151_hashed_vector_ivf: dense vectors")
       // spread (r15): AQE coalesces the tiny dense-vector aggregate to
       // very few partitions and the checkpoint freezes that, so the
       // per-row 64-cosine assignment + candidate join ran nearly

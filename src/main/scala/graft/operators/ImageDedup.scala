@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.functions.SplitMix64Kernel
 import graft.multimodal.{ImageGen, Media, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -89,35 +90,8 @@ object ImageDedup {
     * frame — the spec feeds it planted vectors, and the audio family
     * (q161/q162, graft.operators.AudioDedup) rides it with its own
     * plane/center literals. */
-  private[graft] def featurePairs(f: DataFrame,
-      materialize: Boolean = true): DataFrame =
-    signLshPairs(f, PlaneCoef, Center, L1Max, materialize)
-
-  /** The shared centered-sign-LSH near-dup kernel over an exploded
-    * integer feature frame (id, d, v): broadcast plane/center
-    * literals → per-(id, plane) integer dots → 16-bit chunk values →
-    * chunk-collision candidates → Hamming + exact L1 verify. */
-  /** The fingerprint-chunk stage of the kernel alone: (id, d, v) →
-    * (id, chunk_id, chunk). 16-bit chunk values directly (no 64-bit
-    * fingerprint fold needed: Hamming sums over chunks) — each chunk
-    * ≤ 65535, BIGINT-safe on both engines. The query paths now ride
-    * the array-form [[fpOf]] (r14); kept for the test-scope
-    * graft.tools.MediaProfile stage timer. */
-  private[graft] def chunksOf(f: DataFrame,
-      planeCoef: Seq[(Int, Int, Long)], center: Seq[Long]): DataFrame =
-    // r14 optimization (the 374s→4s house lesson): the dots run in
-    // the MediaChunks codegen kernel over the gathered feature array
-    // — the old broadcast-join formulation planned a |features|·planes
-    // intermediate (6.08M rows per 5 000 images) plus two keyed
-    // exchanges per kernel execution (~3.5 s of the q164 wall,
-    // measured by graft.tools.MediaProfile). Identical integers: the
-    // dot is an exact 64-bit sum (order-independent), the chunk the
-    // same bit-OR the relational sum(shiftleft) computed.
-    vecOf(f)
-      .select(col("id"), posexplode(
-        graft.functions.MediaChunks(col("vec"), planeCoef, center)))
-      .select(col("id"), col("pos").cast("long").as("chunk_id"),
-        col("col").as("chunk"))
+  private[graft] def featurePairs(f: DataFrame): DataFrame =
+    signLshPairs(f, PlaneCoef, Center, L1Max)
 
   /** (id, d, v) → (id, vec) with vec the d-ordered integer feature
     * array — the gather feeding the codegen kernels. collect_list is
@@ -133,15 +107,18 @@ object ImageDedup {
     * feeds the exact-L1 verify ([[graft.functions.ArrL1]]), `arr` the
     * chunk-collision join + row-local Hamming
     * ([[graft.functions.ChunkHamming]]). ONE kernel pass per corpus;
-    * callers checkpoint/persist. */
+    * callers cut/persist. */
   private[graft] def fpOf(f: DataFrame, planeCoef: Seq[(Int, Int, Long)],
       center: Seq[Long]): DataFrame =
     vecOf(f).select(col("id"), col("vec"),
       graft.functions.MediaChunks(col("vec"), planeCoef, center).as("arr"))
 
+  /** The shared centered-sign-LSH near-dup kernel over an exploded
+    * integer feature frame (id, d, v): per-id fingerprint arrays →
+    * chunk-collision candidates → Hamming + exact L1 verify. */
   private[graft] def signLshPairs(f0: DataFrame,
       planeCoef: Seq[(Int, Int, Long)], center: Seq[Long],
-      l1Max: Long, materialize: Boolean = true): DataFrame = {
+      l1Max: Long): DataFrame = {
     // r14 optimization (guide §2.4/§5): the feature frame feeds the
     // chunk stage AND both sides of the exact-L1 verify; the chunk
     // frame feeds both sides of the candidate self-join AND both
@@ -151,15 +128,12 @@ object ImageDedup {
     // ReusedExchange) — for the synthesized-media corpora that is up
     // to six draw+decode passes per query. One eager cut each makes
     // the decode run exactly once; the candidate set is cut too (it
-    // is read by the Hamming AND the L1 legs). materialize=false
-    // keeps the composed plan visible for PlanShapeSpec (the
-    // q93/q144 builder-variant pattern).
-    def cut(df: DataFrame) = if (materialize) df.localCheckpoint(true) else df
+    // is read by the Hamming AND the L1 legs).
     // the per-id fingerprint frame: feature array + chunk array in
     // one row — computed ONCE (decode runs inside this cut), read by
     // both sides of the collision join and both sides of the L1
     // verify
-    val fp = cut(fpOf(f0, planeCoef, center))
+    val fp = fpOf(f0, planeCoef, center).cut("ImageDedup.signLshPairs: fingerprints")
     val ex = fp.select(col("id"), col("arr"), posexplode(col("arr")))
       .select(col("id"), col("arr"),
         col("pos").cast("long").as("chunk_id"), col("col").as("chunk"))
@@ -174,7 +148,7 @@ object ImageDedup {
     // 900,693 at sf0.1 — the 16-bit chunk keyspace saturates on
     // structured features, the documented q46 birthday floor) to
     // |Hamming ≤ 3| pairs (~n/8 planted + ~0 organic).
-    val hamOk = cut(ex.as("a").join(ex.as("b"),
+    val hamOk = ex.as("a").join(ex.as("b"),
         col("a.chunk_id") === col("b.chunk_id") &&
           col("a.chunk") === col("b.chunk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -182,7 +156,8 @@ object ImageDedup {
           .as("hamming"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("hamming")).as("hamming"))
-      .filter(col("hamming") <= HammingMax))
+      .filter(col("hamming") <= HammingMax)
+      .cut("ImageDedup.signLshPairs: Hamming candidates")
     hamOk
       .join(fp.select(col("id").as("id_a"), col("vec").as("va")), Seq("id_a"))
       .join(fp.select(col("id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
@@ -194,8 +169,7 @@ object ImageDedup {
 
   /** The live engine path: decode the PNG fixture corpus, extract the
     * integer features, fingerprint, pair. */
-  private[graft] def imageNearDups(s: SparkSession,
-      materialize: Boolean = true): DataFrame = {
+  private[graft] def imageNearDups(s: SparkSession): DataFrame = {
     import s.implicits._
     // spread: the one-file fixture scan is a single split — decode
     // would otherwise run on one core (no-op at real scale)
@@ -203,7 +177,7 @@ object ImageDedup {
       .select(col("id"), lit("image/png").as("media_type"),
         col("payload"), map().cast("map<string,string>").as("meta"))
       .as[Media]
-    featurePairs(Multimodal.imageIntFeatures(media).toDF(), materialize)
+    featurePairs(Multimodal.imageIntFeatures(media).toDF())
   }
 
   /** q164 — the SCALE-TIED image corpus (round-9 verdict #2): one
@@ -246,13 +220,11 @@ object ImageDedup {
   }
 
   private[graft] def scaledImageNearDups(s: SparkSession,
-      dir: String, materialize: Boolean = true): DataFrame =
-    scaledNearDupsFrom(graft.Tables.load(s, dir, "documents"), materialize)
+      dir: String): DataFrame =
+    scaledNearDupsFrom(graft.Tables.load(s, dir, "documents"))
 
-  private[graft] def scaledNearDupsFrom(docs: DataFrame,
-      materialize: Boolean = true): DataFrame =
-    featurePairs(Multimodal.imageIntFeatures(scaledImagesFrom(docs)).toDF(),
-      materialize)
+  private[graft] def scaledNearDupsFrom(docs: DataFrame): DataFrame =
+    featurePairs(Multimodal.imageIntFeatures(scaledImagesFrom(docs)).toDF())
 
   /** q178 — incremental MEDIA ingest (round 12): the q145/q154
     * production pattern applied to the multimodal kernel — new media
@@ -272,12 +244,11 @@ object ImageDedup {
     * modality-generic (the audio/video literals drop in unchanged);
     * the gate runs the image instantiation. */
   private[graft] def imageIncremental(s: SparkSession,
-      dir: String, materialize: Boolean = true): DataFrame = {
+      dir: String): DataFrame = {
     val docs = graft.Tables.load(s, dir, "documents")
     incrementalIngest(
       Multimodal.imageIntFeatures(scaledImagesFrom(docs)).toDF(),
-      docs.select(col("doc_id").as("id")), PlaneCoef, Center, L1Max,
-      materialize)
+      docs.select(col("doc_id").as("id")), PlaneCoef, Center, L1Max)
   }
 
   /** The modality-GENERIC incremental ingest (q178 image / q179
@@ -287,23 +258,19 @@ object ImageDedup {
     * comment for the shape. */
   private[graft] def incrementalIngest(features: DataFrame,
       ids: DataFrame, planeCoef: Seq[(Int, Int, Long)],
-      center: Seq[Long], l1Max: Long,
-      materialize: Boolean = true): DataFrame = {
+      center: Seq[Long], l1Max: Long): DataFrame = {
     // r14 optimization (array form — the signLshPairs batch-4 shape
     // applied to the ingest side): ONE fingerprint pass builds the
-    // per-id (vec, arr) frame, checkpointed where the old form cut
-    // TWO exploded frames (features + chunks) and re-joined them
+    // per-id (vec, arr) frame, cut where the old form cut TWO
+    // exploded frames (features + chunks) and re-joined them
     // per-chunk / per-dim in the verify legs. Decode still runs
-    // exactly once (inside this cut). materialize=false keeps the
-    // composed plan visible for PlanShapeSpec (the q93/q144 builder-
-    // variant pattern).
-    val fp0 = fpOf(features, planeCoef, center)
-    val fp = if (materialize) fp0.localCheckpoint(true) else fp0
+    // exactly once (inside this cut).
+    val fp = fpOf(features, planeCoef, center).cut("ImageDedup.incrementalIngest: fingerprints")
     def h(c: org.apache.spark.sql.Column) =
       substring(md5(c.cast("string")), 1, 8)
     val std = h(col("id")) < "cccccccc"
     ingestFlags(ids.filter(h(col("id")) >= "cccccccc"),
-      fp.filter(!std), fp.filter(std), l1Max, materialize)
+      fp.filter(!std), fp.filter(std), l1Max)
   }
 
   /** The two-sided ingest core shared by the batch gates (q178/q179)
@@ -324,8 +291,7 @@ object ImageDedup {
     * 19-rows-per-side exploded features. Identical integers — the
     * oracle SQL is untouched. */
   private[graft] def ingestFlags(incIds: DataFrame,
-      fpInc: DataFrame, fpStd: DataFrame, l1Max: Long,
-      materialize: Boolean = true): DataFrame = {
+      fpInc: DataFrame, fpStd: DataFrame, l1Max: Long): DataFrame = {
     // both join sides corpus-scale → hinted off broadcast (q145 lesson)
     val hamOk = fpInc.select(col("id").as("inc_id"), col("arr").as("aa"),
         posexplode(col("arr")))
@@ -342,8 +308,8 @@ object ImageDedup {
       .groupBy(col("inc_id"), col("std_id"))
       .agg(min(col("hamming")).as("hamming"))
       .filter(col("hamming") <= HammingMax)
-    // checkpointed: read by the count agg AND the argmax resolve
-    val verified0 = hamOk
+    // cut: read by the count agg AND the argmax resolve
+    val verified = hamOk
       .join(fpInc.select(col("id").as("inc_id"), col("vec").as("va")),
         Seq("inc_id"))
       .join(fpStd.select(col("id").as("std_id"), col("vec").as("vb")),
@@ -351,8 +317,7 @@ object ImageDedup {
       .select(col("inc_id"), col("std_id"),
         graft.functions.ArrL1(col("va"), col("vb")).as("l1_dist"))
       .filter(col("l1_dist") <= l1Max)
-    val verified =
-      if (materialize) verified0.localCheckpoint(true) else verified0
+      .cut("ImageDedup.ingestFlags: verified pairs")
     val agg = verified.groupBy(col("inc_id"))
       .agg(count(lit(1)).as("n_matches"), min(col("l1_dist")).as("best_l1"))
     val bestId = verified
@@ -402,7 +367,7 @@ object ImageDedup {
   /** q160: q156 pairs → q69-style CC labels → q149-style canonical +
     * multiplicity manifest over the image ids. Scale shape: rides
     * [[featurePairs]] (candidate-bounded) + the established
-    * pointer-doubling CC (per-round localCheckpoint); the additions
+    * pointer-doubling CC (per-round cut); the additions
     * are one cluster-keyed groupBy, one cluster-keyed join, one
     * id-keyed anti-join — linear keyed work. */
   private[graft] def imageManifest(s: SparkSession): DataFrame =
@@ -416,7 +381,7 @@ object ImageDedup {
     val pairs = nearDups
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val labels = graft.dedup.ConnectedComponents.clusterLabels(pairs)
-      .localCheckpoint(true)
+      .cut("ImageDedup.manifestFrom: cluster labels")
     val csize = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("m"))
     val reps = labels.filter(col("doc_id") === col("cluster_id"))
       .join(csize, "cluster_id")
@@ -443,12 +408,10 @@ object ImageDedup {
        |  SELECT id, d, v FROM read_parquet('$featPath/*.parquet')),
        |${signLshChainSql(planeCoef, center, l1Max)}""".stripMargin
 
-  /** The kernel chain from `f(id, d, v)` (assumed in an enclosing
-    * scope — a fixture read for q156/q161, the closed-form ImageGen
-    * CTEs for q164) to `pairs(id_a, id_b, hamming, l1_dist)`. */
   /** The chunk stage's CTEs alone (`planes`/`ctr`/`dot`/`chunks`
-    * from `f(id, d, v)`) — the SQL mirror of [[chunksOf]], shared by
-    * the full pair chain and the q178 incremental oracle. */
+    * from `f(id, d, v)`) — the SQL mirror of the `arr` chunk array
+    * [[fpOf]] computes, shared by the full pair chain and the q178
+    * incremental oracle. */
   private[operators] def chunkCtesSql(
       planeCoef: Seq[(Int, Int, Long)], center: Seq[Long]): String = {
     val planeVals = planeCoef
@@ -468,6 +431,9 @@ object ImageDedup {
        |  FROM dot GROUP BY 1, 2)""".stripMargin
   }
 
+  /** The kernel chain from `f(id, d, v)` (assumed in an enclosing
+    * scope — a fixture read for q156/q161, the closed-form ImageGen
+    * CTEs for q164) to `pairs(id_a, id_b, hamming, l1_dist)`. */
   private[operators] def signLshChainSql(
       planeCoef: Seq[(Int, Int, Long)], center: Seq[Long],
       l1Max: Long): String = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.NormQuant
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -40,7 +41,7 @@ import org.apache.spark.sql.functions._
   * clustered-distribution argument, so the window adds NO exchange);
   * the centroid update is one (cluster, pos) groupBy whose map-side
   * partials reduce the shuffle to K·d rows per partition. Per-round
-  * localCheckpoint cuts the iterate's lineage (the CC house rule).
+  * a cut truncates the iterate's lineage (the CC house rule).
   */
 object KMeansTrain {
   type Q = (SparkSession, String) => DataFrame
@@ -125,9 +126,9 @@ object KMeansTrain {
     var cent = qv.join(broadcast(ids), "vec_id")
       .select(col("cluster"), col("pos"), col("q").as("c"),
         lit(0L).as("n"))
-      .localCheckpoint(true)
+      .cut("KMeansTrain.train: initial centroids")
     for (_ <- 1 to KmIters)
-      cent = round(qv, cent).localCheckpoint(true)
+      cent = round(qv, cent).cut("KMeansTrain.train: centroids")
     qv.unpersist()
     cent
   }
@@ -174,7 +175,7 @@ object KMeansTrain {
         sum(col("dist").cast("decimal(38,0)")).as("sd"))
       .select(col("sub"), col("code"), col("n"),
         expr("CAST(sd div n AS BIGINT)").as("mean_dist"))
-      .localCheckpoint(true)
+      .cut("KMeansTrain.pq: distortion census")
     qv.unpersist()
     census
   }
@@ -195,9 +196,9 @@ object KMeansTrain {
         (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
     var cent = qv.join(broadcast(ids), "vec_id")
       .select(col("sub"), col("code"), col("spos"), col("q").as("c"))
-      .localCheckpoint(true)
+      .cut("KMeansTrain.pqModel: initial codebooks")
     for (_ <- 1 to PqIters)
-      cent = pqRound(qv, cent).localCheckpoint(true)
+      cent = pqRound(qv, cent).cut("KMeansTrain.pqModel: codebooks")
     (qv, cent)
   }
 
@@ -209,7 +210,7 @@ object KMeansTrain {
     * (subset-clustering: {vec_id} ⊆ {vec_id, sub} and {vec_id} ⊆
     * {q_id, vec_id}); model state only ever broadcasts — the 512-row
     * codebook into the encode, the M·PqK·|panel|-row LUT (128 rows,
-    * localCheckpoint'd so the gate plan sees a materialized dim)
+    * cut so the gate plan sees a materialized dim)
     * into the code stream. The ONE new exchange is the per-query
     * top-k window on q_id (the established q94/q106 shape; the panel
     * is a FIXED 4-query dim — a growing query set takes the q94b
@@ -218,7 +219,7 @@ object KMeansTrain {
     * ADC distance adds M of them. */
   private[graft] def adc(e: DataFrame): DataFrame = {
     val (qv, cent) = pqModel(e)
-    val top = adcRank(qv, cent, adcLut(qv, cent)).localCheckpoint(true)
+    val top = adcRank(qv, cent, adcLut(qv, cent)).cut("KMeansTrain.adc: top candidates")
     qv.unpersist()
     top
   }
@@ -260,7 +261,7 @@ object KMeansTrain {
           expr(s"(1000000L * hits) div ${math.max(tc, 1L)}L")
             .as("recall_ppm"))
     }
-    val out = rows.reduce(_.unionByName(_)).localCheckpoint(true)
+    val out = rows.reduce(_.unionByName(_)).cut("KMeansTrain.pqFrontier: frontier")
     qv0.unpersist()
     out
   }
@@ -287,7 +288,7 @@ object KMeansTrain {
         Window.partitionBy(col("q_id")).orderBy(col("ed"), col("vec_id"))))
       .where(col("rk") <= AdcTop)
       .select(col("q_id"), col("vec_id"))
-      .localCheckpoint(true)
+      .cut("KMeansTrain.pqFrontierDetail: truth top-k")
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
       .withColumn("code",
         (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
@@ -308,13 +309,13 @@ object KMeansTrain {
         expr(s"CAST(pos % $subDim AS INT)").as("spos"), col("q"))
       var cent = qv.join(broadcast(ids), "vec_id")
         .select(col("sub"), col("code"), col("spos"), col("q").as("c"))
-        .localCheckpoint(true)
+        .cut("KMeansTrain.pqFrontierDetail: initial codebooks")
       for (_ <- 1 to PqIters)
-        cent = pqRound(qv, cent).localCheckpoint(true)
+        cent = pqRound(qv, cent).cut("KMeansTrain.pqFrontierDetail: codebooks")
       // the assignment feeds BOTH the distortion census and the ADC
-      val asg = pqAssign(qv, cent).localCheckpoint(true)
+      val asg = pqAssign(qv, cent).cut("KMeansTrain.pqFrontierDetail: assignments")
       val top = adcRankOver(asg.select(col("vec_id"), col("sub"),
-        col("code")), adcLut(qv, cent)).localCheckpoint(true)
+        col("code")), adcLut(qv, cent)).cut("KMeansTrain.pqFrontierDetail: top candidates")
       (m, asg, top)
     } })
     (parts, truth, qv0)
@@ -329,7 +330,7 @@ object KMeansTrain {
       .join(broadcast(cent), Seq("sub", "spos"))
       .groupBy(col("q_id"), col("sub"), col("code"))
       .agg(sum((col("qq") - col("c")) * (col("qq") - col("c"))).as("lut"))
-      .localCheckpoint(true)
+      .cut("KMeansTrain.adcLut: lookup table")
 
   /** Encode + compressed-domain top-k, un-checkpointed
     * (plan-shape-testable): M lookups and an M-term integer add per

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{NGrams, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -143,7 +144,7 @@ object LexicalStats {
     * vocabulary scale, the q126 argument), symmetrized, repartitioned
     * by src and persisted ONCE — each of the K iterations shuffles
     * only node-sized rank tables (hinted off broadcast: the
-    * vocabulary scales with the corpus); per-round localCheckpoint
+    * vocabulary scales with the corpus); per-round cut
     * cuts the iterate's lineage (the CC house rule); the final top-50
     * is TakeOrderedAndProject — bounded driver state at any corpus
     * size. All arithmetic is integer micro-units, bit-stable on any
@@ -175,9 +176,9 @@ object LexicalStats {
       .agg(sum(col("w")).as("wd"))
       .persist()
     var ranks = wdeg.select(col("node"), col("wd"), lit(TrUnit).as("r"))
-      .localCheckpoint(true)
+      .cut("LexicalStats.textrank: initial ranks")
     for (_ <- 1 to TrIters)
-      ranks = trStep(edges, wdeg, ranks).localCheckpoint(true)
+      ranks = trStep(edges, wdeg, ranks).cut("LexicalStats.textrank: ranks")
     edges.unpersist()
     wdeg.unpersist()
     ranks.orderBy(col("r").desc, col("node")).limit(TrTop)
@@ -318,7 +319,7 @@ object LexicalStats {
       // expensive lineage)
       val joined = nj.join(vj, col("j") === col("j2"))
         .filter(col("n") > 0 && col("v") > 0)
-        .localCheckpoint(true)
+        .cut("LexicalStats.heaps: joined prefixes")
       val pts = joined.selectExpr(
         "CAST(round(ln(CAST(n AS DOUBLE)) * 1000000) AS BIGINT) AS x",
         "CAST(round(ln(CAST(v AS DOUBLE)) * 1000000) AS BIGINT) AS y")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.SplitMix64
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -45,7 +46,7 @@ import org.apache.spark.sql.functions._
   * supplier side's 172M — a structural 14× (suppliers are the
   * high-degree side; the published vertex-priority rule, §4 of
   * Sanei-Mehri 2018). The edge list is built once (eager
-  * localCheckpoint feeding its three references); the self-join is
+  * cut feeding its three references); the self-join is
   * hinted off broadcast (both sides corpus-scale) and pays two
   * E-sized customer-keyed exchanges — linear, keyed — and the pair
   * groupBy's map-side partials reduce the wedge stream to the
@@ -105,19 +106,19 @@ object Motifs {
       .select(col("c"), col("s"))
 
   /** The one-row butterfly census over any (c, s) edge frame. The
-    * edge list is localCheckpoint'd (eager) so the orders⋈lineitem
+    * edge list is cut (eager) so the orders⋈lineitem
     * build runs ONCE for its three references (edge count + both
     * self-join sides). A pre-partitioning cannot be carried into the
     * self-join on this Spark: a cached AQE plan hides its output
     * partitioning from the outer planner (InMemoryRelation wraps an
-    * AdaptiveSparkPlan) and an eager localCheckpoint of an adaptive
+    * AdaptiveSparkPlan) and an eager cut of an adaptive
     * plan lands as UnknownPartitioning — both re-exchange anyway
     * (measured, not guessed) — so the census accepts the join's own
     * two E-sized customer-keyed exchanges: linear, keyed, the
     * natural distributed shape. */
   private[graft] def census(e: DataFrame, est: Boolean): DataFrame = {
-    val ec = e.localCheckpoint(true)
-    censusPlan(ec, est).localCheckpoint(true)
+    val ec = e.cut("Motifs.census: edges")
+    censusPlan(ec, est).cut("Motifs.census: census")
   }
 
   /** The census plan, un-checkpointed (plan-shape-testable): the
@@ -179,10 +180,10 @@ object Motifs {
     * DECIMAL(38,0)/HUGEINT (a 1e9-degree hub alone is ~5e17).
     * Driver state: ONE row. */
   private[graft] def triangles(und: DataFrame): DataFrame = {
-    val e = und.select(col("a"), col("b")).localCheckpoint(true)
-    val deg = degrees(e).localCheckpoint(true)
-    val dir = orient(e, deg).localCheckpoint(true)
-    triPlan(e, deg, dir).localCheckpoint(true)
+    val e = und.select(col("a"), col("b")).cut("Motifs.triangles: edges")
+    val deg = degrees(e).cut("Motifs.triangles: degrees")
+    val dir = orient(e, deg).cut("Motifs.triangles: oriented edges")
+    triPlan(e, deg, dir).cut("Motifs.triangles: triangles")
   }
 
   /** Vertex degrees of an (a, b) a<b edge frame: one keyed groupBy

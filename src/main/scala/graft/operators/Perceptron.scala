@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{NGrams, SplitMix64, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -60,7 +61,7 @@ import org.apache.spark.sql.functions._
   * class ratio are dims that only ever BROADCAST, and the single
   * per-epoch keyed exchange is the update groupBy(b) whose map-side
   * partials compress the corpus to ≤B rows per task. Per-epoch
-  * weights are localCheckpoint'd (the CLAUDE.md iterative-loop rule
+  * weights are cut (the CLAUDE.md iterative-loop rule
   * — persist does not cut the logical plan). Driver-side state is K
   * mistake-count integers — bounded. K is a constant: training is K
   * linear passes, exactly like q114/q118. At true 100 TB the only
@@ -135,7 +136,7 @@ object Perceptron {
     // w¹ = Σ_d y_d·c_d·x_d — no join needed
     var w = feats.crossJoin(broadcast(ratio))
       .groupBy(col("b")).agg(sum(col("y") * cost).as("w"))
-      .localCheckpoint(true)
+      .cut("Perceptron.trainOn: epoch-1 weights")
     val snaps = scala.collection.mutable.Buffer(w)
     val mcounts = scala.collection.mutable.Buffer.empty[Long]
     (2 to epochs).foreach { _ =>
@@ -161,7 +162,7 @@ object Perceptron {
         .select(col("b"),
           (coalesce(col("w"), lit(0L)) + coalesce(col("du"), lit(0L))).as("w"),
           col("mb"))
-        .localCheckpoint(true)
+        .cut("Perceptron.trainOn: weights")
       // |M| = the bias row's update count (0 when M was empty — the
       // bias WEIGHT row still exists from epoch 1, mb null)
       mcounts += merged.filter(col("b") === Buckets.toLong)
@@ -176,28 +177,24 @@ object Perceptron {
   }
 
   /** Train K epochs, pick the pocket snapshot, score every doc.
-    * Returns (doc_id, y, score, pred); `materialize = false` leaves
-    * the scorer plan visible for PlanShapeSpec — and INTENTIONALLY
-    * keeps the feature cache alive, because the returned plan reads
-    * it (unpersisting would silently turn the audited broadcast-over-
-    * cache shape into a recompute; round-8 advice #2, documented
-    * option). Exposed for the spec's planted separable-corpus
-    * proof. */
-  private[graft] def trainScore(d: DataFrame, epochs: Int = Epochs,
-      materialize: Boolean = true): DataFrame = {
+    * Returns (doc_id, y, score, pred). Exposed for the spec's planted
+    * separable-corpus proof. */
+  private[graft] def trainScore(d: DataFrame,
+      epochs: Int = Epochs): DataFrame = {
     val (feats, pocket) = trainOn(d, epochs)
     val out = feats.join(broadcast(pocket), "b")
       .groupBy(col("doc_id"), col("y"))
       .agg(sum(col("w")).as("s"))
       .select(col("doc_id"), col("y"), col("s").as("score"),
         when(col("s") > 0, 1L).otherwise(-1L).as("pred"))
-    if (!materialize) out
-    else { val r = out.localCheckpoint(true); feats.unpersist(false); r }
+    val r = out.cut("Perceptron.trainScore: scores")
+    feats.unpersist(false)
+    r
   }
 
   /** Train on the labeled corpus and return only the POCKET WEIGHT
     * table (b, w) — the trained state the q153 pipeline carries
-    * between DAG nodes. Weight snapshots are localCheckpoint'd by the
+    * between DAG nodes. Weight snapshots are cut by the
     * train loop, so the feature cache is released before returning
     * (nothing downstream reads it). */
   private[graft] def trainPocket(d: DataFrame,
@@ -276,12 +273,10 @@ object Perceptron {
     * toward zero, DuckDB `//` floors — they only agree on
     * nonnegative operands). */
   private[graft] val ScoreBins = 16384L
-  private[graft] def classifierKeep(docs: DataFrame, weights: DataFrame,
-      materialize: Boolean = true): DataFrame = {
-    // checkpointed: read by the bin census AND the keep filter
-    val scoredRaw = scoreDocs(docs, weights)
-    val scored =
-      if (materialize) scoredRaw.localCheckpoint(true) else scoredRaw
+  private[graft] def classifierKeep(docs: DataFrame,
+      weights: DataFrame): DataFrame = {
+    // cut: read by the bin census AND the keep filter
+    val scored = scoreDocs(docs, weights).cut("Perceptron.classifierKeep: scores")
     val ext = scored.agg(min(col("score")).as("lo"), max(col("score")).as("hi"))
     val binned = scored.crossJoin(broadcast(ext))
       .select(col("doc_id"),
@@ -327,7 +322,7 @@ object Perceptron {
     * broadcasts. */
   private[graft] val CalBins = 16L
   private[graft] def calibration(d: DataFrame): DataFrame = {
-    val scored = trainScore(d) // localCheckpoint'd by trainScore
+    val scored = trainScore(d) // cut by trainScore
     val ext = scored.agg(min(col("score")).as("lo"), max(col("score")).as("hi"))
     scored.crossJoin(broadcast(ext))
       .select(
@@ -349,7 +344,7 @@ object Perceptron {
   private[graft] def calibrationOf(d: DataFrame, w: DataFrame): DataFrame = {
     val labels = d.select(col("doc_id"),
       when(col("source") === Curation.DsirTarget, 1L).otherwise(-1L).as("y"))
-    val scored = scoreDocs(d, w).join(labels, "doc_id").localCheckpoint(true)
+    val scored = scoreDocs(d, w).join(labels, "doc_id").cut("Perceptron.calibrationOf: scores")
     val ext = scored.agg(min(col("score")).as("lo"), max(col("score")).as("hi"))
     scored.crossJoin(broadcast(ext))
       .select(
@@ -372,7 +367,7 @@ object Perceptron {
     * inlines CTEs by default, and each of the ~2K references would
     * otherwise re-derive the whole upstream chain (measured: the
     * inlined form never finishes at sf0.01; the materialized form
-    * runs in seconds — the engine's persist + localCheckpoint,
+    * runs in seconds — the engine's persist + cut,
     * mirrored). Pure integer relational algebra: bit-exact replay by
     * construction. */
   /** CTE chain (no leading WITH) training the pocket weights on the

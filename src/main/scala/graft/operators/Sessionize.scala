@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -113,20 +114,6 @@ object Sessionize {
     * come from a single conditional aggregate (map-side combined) —
     * the sweep never re-sorts the event stream per config. */
   private[graft] def sessionGapFrontier(ev: DataFrame): DataFrame = {
-    val one = sessionGapAgg(ev).localCheckpoint(true)
-    GapGrid.map { g =>
-      one.select(lit(g).as("gap_minutes"), col("n_events"),
-        col(s"ns$g").as("n_sessions"),
-        col(s"dwell$g").as("intra_session_us"),
-        expr(s"(1000000L * n_events) div ns$g").as("events_per_session_ppm"))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** The frontier's single pass, UN-checkpointed so PlanShapeSpec can
-    * audit the composed plan (the q144 materialize-false builder
-    * pattern): one user-keyed window + one 1-row conditional
-    * aggregate carrying every gap config. */
-  private[graft] def sessionGapAgg(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val d = ev.select(col("user_id"), col("ts"), col("event_id"))
@@ -140,7 +127,13 @@ object Sessionize {
         sum(when(col("diff") < gUs, col("diff")).otherwise(lit(0L)))
           .as(s"dwell$g"))
     }
-    d.agg(aggs.head, aggs.tail: _*)
+    val one = d.agg(aggs.head, aggs.tail: _*).cut("Sessionize.sessionGapFrontier: gap census")
+    GapGrid.map { g =>
+      one.select(lit(g).as("gap_minutes"), col("n_events"),
+        col(s"ns$g").as("n_sessions"),
+        col(s"dwell$g").as("intra_session_us"),
+        expr(s"(1000000L * n_events) div ns$g").as("events_per_session_ppm"))
+    }.reduce(_.unionByName(_))
   }
 
   private[graft] def retentionCohorts(ev: DataFrame): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{SignBands, VectorExprs, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -477,7 +478,7 @@ object Similarity {
     // per row (guide §4.4); the cut evaluates it exactly once.
     Tables.spread(e, col("vec_id")).select(col("vec_id"), col("embedding"),
       (array_position(sims, array_max(sims)) - 1).cast("int").as("cell"))
-      .localCheckpoint(true)
+      .cut("Similarity.assignCells: cell assignments")
   }
 
   /** Within-cell candidate pairs (vec_a < vec_b, embeddings aboard)
@@ -637,7 +638,7 @@ object Similarity {
     // stops the planner broadcasting the expensive assignment subtree.
     val assigned = e.select(col("vec_id"), col("label"), col("embedding"),
       (array_position(sims, array_max(sims)) - 1).cast("int").as("cell"))
-      .localCheckpoint(true)
+      .cut("Similarity.knnJoinQuery: cell assignments")
     val qc = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         sims.as("sims"))
@@ -647,7 +648,7 @@ object Similarity {
         s"""transform(slice(array_sort(transform(sequence(0, ${cents.length - 1}),
            |  i -> struct(-element_at(sims, i + 1) AS s, i AS i))), 1, $nprobe),
            |  x -> x.i)""".stripMargin)).as("qcell"))
-      .localCheckpoint(true)
+      .cut("Similarity.knnJoinQuery: probe cells")
     val cand = assigned.as("a")
       .join(qc.as("q"),
         col("a.cell") === col("q.qcell") && col("a.vec_id") =!= col("q.q_id"))
@@ -714,7 +715,7 @@ object Similarity {
           .as("cos_sim"))
       .withColumn("rank", row_number().over(bfW))
       .filter(col("rank") <= 5).select(col("q_id"), col("vec_id"))
-      .localCheckpoint(true)
+      .cut("Similarity.frontierBase: brute-force top-5")
     (q, nq, bf)
   }
 
@@ -758,7 +759,7 @@ object Similarity {
       val assigned = Tables.spread(e, col("vec_id"))
         .select(col("vec_id"), col("embedding"),
           (array_position(sims, array_max(sims)) - 1).cast("int").as("cell"))
-        .localCheckpoint(true)
+        .cut("Similarity.recallFrontier: cell assignments")
       val qsims = array(cents.map(c =>
         VectorExprs.cosineFast(col("q_emb"), typedlit(c))): _*)
       val prW = Window.partitionBy(col("q_id"))
@@ -767,7 +768,7 @@ object Similarity {
         .withColumnRenamed("pos", "cid").withColumnRenamed("col", "qc")
         .withColumn("pr", row_number().over(prW))
         .select(col("q_id"), col("q_emb"), col("cid"), col("pr"))
-        .localCheckpoint(true)
+        .cut("Similarity.recallFrontier: probe ranks")
       (assigned, qrank)
     }
     // r15 (guide §1.2 fewer passes): the nprobe ladder is NESTED —
@@ -784,7 +785,8 @@ object Similarity {
         .select(col("p.q_id"), col("a.vec_id"), col("p.pr"),
           round(VectorExprs.cosineFast(col("a.embedding"), col("p.q_emb")), 6)
             .as("cos_sim"))
-        .localCheckpoint(true) // read by every config's count + top-5
+        // read by every config's count + top-5
+        .cut("Similarity.recallFrontier: candidates")
     def cfgRow(label: String, all: DataFrame, ncells: Int,
         np: Int): DataFrame =
       frontierRow(all.filter(col("pr") <= np).drop("pr"), bf, nq, label,
@@ -834,9 +836,9 @@ object Similarity {
       val bucketed = Tables.spread(e, col("vec_id"))
         .select(col("vec_id"), col("embedding"),
           Vectors.lshBucket(col("embedding"), planes).as("bucket"))
-        .localCheckpoint(true)
+        .cut("Similarity.lshFrontier: buckets")
       val qb = q.withColumn("bucket",
-        Vectors.lshBucket(col("q_emb"), planes)).localCheckpoint(true)
+        Vectors.lshBucket(col("q_emb"), planes)).cut("Similarity.lshFrontier: query buckets")
       // r15 (guide §1.2): probe rings NEST — depth d's probe set is
       // the bitcount ≤ d slice of depth 2's (XOR with distinct masks
       // hits distinct buckets, so no (q, probe) duplicates) — so the
@@ -857,7 +859,7 @@ object Similarity {
         .select(col("p.q_id"), col("a.vec_id"), col("bc"),
           round(VectorExprs.cosineFast(col("a.embedding"), col("p.q_emb")), 6)
             .as("cos_sim"))
-        .localCheckpoint(true) // read by every depth's count + top-5
+        .cut("Similarity.lshFrontier: candidates") // read by every depth's count + top-5
       Seq(0, 1, 2).map { d =>
         frontierRow(all.filter(col("bc") <= d).drop("bc"), bf, nq,
           s"${label}_h$d",

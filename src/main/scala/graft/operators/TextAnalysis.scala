@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -173,7 +174,8 @@ object TextAnalysis {
     //    the schema. --
     "q148_filter_attribution" -> { (s, dir) =>
       filterAttribution(
-        cleanFlags(Tables.load(s, dir, "documents")).localCheckpoint(true))
+        cleanFlags(Tables.load(s, dir, "documents"))
+          .cut("TextAnalysis.q148_filter_attribution: clean flags"))
     },
 
     // -- Bloom-filter decontamination: the 100 TB shape of q78. The
@@ -588,7 +590,7 @@ object TextAnalysis {
   private[graft] def bloomFrontier(s: SparkSession, dir: String): DataFrame = {
     val grams = Tables.load(s, dir, "documents")
       .select(col("doc_id"), Text.wordNGrams(col("text"), 5).as("g5"))
-      .localCheckpoint(true) // 3 builds + 3 probes + the truth read it
+      .cut("TextAnalysis.bloomFrontier: grams") // 3 builds + 3 probes + the truth read it
     val bench = grams.filter(col("doc_id") % 97 === 0)
     val corpus = grams.filter(col("doc_id") % 97 =!= 0)
     // the exact truth, ONE inverted-index join (the q78 shape)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{Text, UnigramViterbi}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   *    q111 quantized-transcendental contract (the division is one
   *    exact IEEE op on bit-identical integers; the single ln is
   *    absorbed by the micro quantization);
-  *  - [[Rounds]] fixed EM rounds, per-round localCheckpoint (the CC
+  *  - [[Rounds]] fixed EM rounds, per-round cut (the CC
   *    house rule); pieces chosen by no word and not single chars
   *    drop out naturally (count 0 ⇒ no row) — the per-round prune.
   *
@@ -103,21 +104,21 @@ object UnigramLM {
     * checks. */
   private[graft] def train(d: DataFrame,
       rounds: Int = Rounds): (DataFrame, DataFrame) = {
-    val wt = words(d).localCheckpoint(true)
-    val sp = subOcc(wt).localCheckpoint(true)
+    val wt = words(d).cut("UnigramLM.train: words")
+    val sp = subOcc(wt).cut("UnigramLM.train: substring occurrences")
     val chars = wt
       .select(explode(expr("filter(split(w, ''), x -> x <> '')")).as("piece"))
-      .distinct().localCheckpoint(true)
+      .distinct().cut("UnigramLM.train: characters")
     var voc = vocabFrom(
       sp.groupBy(col("p").as("piece")).agg(sum(col("c")).as("cnt")))
-      .localCheckpoint(true)
+      .cut("UnigramLM.train: initial vocabulary")
     (1 to rounds).foreach { _ =>
       val pcnt = segmentWith(sp, voc)
         .groupBy(col("piece")).agg(sum(col("c")).as("cnt"))
       val cnts = pcnt
         .unionByName(chars.select(col("piece"), lit(1L).as("cnt")))
         .groupBy(col("piece")).agg(sum(col("cnt")).as("cnt"))
-      voc = vocabFrom(cnts).localCheckpoint(true)
+      voc = vocabFrom(cnts).cut("UnigramLM.train: vocabulary")
     }
     (sp, voc)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.VectorExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -178,13 +179,14 @@ object VectorQuality {
     * is one map pass; candidates ride cell-keyed equi-joins exactly
     * like the q102 family; censuses are the q193 size-table reads. */
   private[graft] def top2QualityTable(e: DataFrame): DataFrame = {
-    val corpus = plantedVecVariants(e).localCheckpoint(true)
+    val corpus = plantedVecVariants(e).cut("VectorQuality.top2QualityTable: corpus")
     val cents = Centroids94.table.take(
       Similarity.adaptiveCells(corpus.count()))
-    val assigned = assignTop2(corpus, cents).localCheckpoint(true)
+    val assigned = assignTop2(corpus, cents).cut("VectorQuality.top2QualityTable: assignments")
     val c1 = cellCands(assigned.select(col("vec_id"),
-      col("c1").as("cell"))).localCheckpoint(true)
-    val c2 = cellCands(top2Exploded(assigned)).localCheckpoint(true)
+      col("c1").as("cell"))).cut("VectorQuality.top2QualityTable: top-1 candidates")
+    val c2 = cellCands(top2Exploded(assigned))
+      .cut("VectorQuality.top2QualityTable: top-2 candidates")
     val ea = corpus.select(col("vec_id").as("vec_a"),
       col("embedding").as("emb_a"))
     val eb = corpus.select(col("vec_id").as("vec_b"),
@@ -202,7 +204,7 @@ object VectorQuality {
 
   /** The three-family quality table — exposed for VectorQualitySpec. */
   private[graft] def vectorQualityTable(e: DataFrame): DataFrame = {
-    val corpus = plantedVecVariants(e).localCheckpoint(true)
+    val corpus = plantedVecVariants(e).cut("VectorQuality.vectorQualityTable: corpus")
     val brute = brutePairs(corpus)
     val sign = Similarity.adaptiveEdges(
       corpus.select(col("vec_id"), col("embedding")), CosThreshold)

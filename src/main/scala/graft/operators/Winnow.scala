@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.SplitMix64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -102,7 +103,7 @@ object Winnow {
     // once (referenced by the per-doc sizes and BOTH pair-join sides)
     val sdw = selected(d).select(col("doc_id"), col("fp")).distinct()
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("fp"))))
-      .localCheckpoint(true)
+      .cut("Winnow.clonePairs: fingerprint sets")
     val perDoc = sdw.groupBy(col("doc_id")).agg(count(lit(1)).as("nd"))
     val keep = sdw.where(col("df") <= DfCap)
     val pairs = keep.select(col("fp"), col("doc_id").as("doc_a"))
@@ -186,10 +187,10 @@ object Winnow {
     * each w adds only its window pass over the SAME doc-keyed
     * exchange; every frontier row reads a 1-row aggregate. */
   private[graft] def winnowFrontier(d: DataFrame): DataFrame = {
-    val grams = gramFps(d).localCheckpoint(true)
-    val tot = grams.agg(count(lit(1)).as("n_grams")).localCheckpoint(true)
+    val grams = gramFps(d).cut("Winnow.winnowFrontier: grams")
+    val tot = grams.agg(count(lit(1)).as("n_grams")).cut("Winnow.winnowFrontier: gram total")
     val rows = WinnowGrid.map { ww =>
-      val sel = selectedOver(grams, ww).localCheckpoint(true)
+      val sel = selectedOver(grams, ww).cut("Winnow.winnowFrontier: selected fingerprints")
       val agg = sel.agg(count(lit(1)).as("n_selected"),
         countDistinct(col("fp")).as("n_distinct_fp"))
       agg.crossJoin(tot)
@@ -209,7 +210,7 @@ object Winnow {
   private[graft] def fingerprintProfile(d: DataFrame): DataFrame = {
     // the winnow selection feeds two aggregations — materialize once
     // (the house rule for inputs referenced more than once)
-    val sel = selected(d).localCheckpoint(true)
+    val sel = selected(d).cut("Winnow.fingerprintProfile: selected fingerprints")
     val perDoc = sel.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_fp"))
     // distinct fingerprint set per doc; document frequency rides an

@@ -77,24 +77,17 @@ object DocStreams {
     * reshuffle (PlanShapeSpec pins it). The old index is released
     * after the merged one materializes (persist swap, the standard
     * reference-data refresh). */
-  def mergeIndex(idx: CorpusIndex, survivors: DataFrame,
-                 materialize: Boolean = true): CorpusIndex = {
+  def mergeIndex(idx: CorpusIndex, survivors: DataFrame): CorpusIndex = {
     val b = idx.buckets.unionByName(
       MinHashLSH.bandBuckets(survivors, "doc_id", "text",
           numHashes = 64, bands = 16, shingleN = 3)
         .select(col("band"), col("bucket"), col("doc_id").as("corp_id")))
     val g = idx.grams.unionByName(
       MinHashLSH.gramSide(survivors, "doc_id", "text", 3, "b"))
-    // materialize = false: the un-persisted union frames, so
-    // PlanShapeSpec can see the merge shape (persist would collapse
-    // the visible plan to an in-memory scan — the q145 audit pattern)
-    if (!materialize) CorpusIndex(b, g)
-    else {
-      b.persist(); g.persist()
-      b.count(); g.count()
-      idx.unpersist()
-      CorpusIndex(b, g)
-    }
+    b.persist(); g.persist()
+    b.count(); g.count()
+    idx.unpersist()
+    CorpusIndex(b, g)
   }
 
   /** Run the stream: every trigger's docs are flagged and handed to

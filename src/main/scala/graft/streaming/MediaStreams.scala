@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cut._
 import graft.multimodal.{Media, Multimodal}
 import graft.operators.ImageDedup
 import org.apache.spark.sql.DataFrame
@@ -48,7 +49,7 @@ object MediaStreams {
     * index — the per-trigger unit (exposed for the spec). */
   def flagBatch(batchFeatures: DataFrame, idx: MediaIndex): DataFrame = {
     val fpInc = ImageDedup.fpOf(batchFeatures, idx.planeCoef, idx.center)
-      .localCheckpoint(true)
+      .cut("MediaStreams.flagBatch: increment fingerprints")
     // fp is one row per id — the id column IS the increment universe
     ImageDedup.ingestFlags(fpInc.select("id"),
       fpInc, idx.fp, idx.l1Max)

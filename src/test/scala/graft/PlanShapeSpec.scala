@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainUtils, FormattedMode,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.Cut._
+
 /** Physical-plan regression guards: the shapes PLANS.md documents
   * must survive refactors — pushdown reaching the scan, dimension
   * broadcasts, top-k without a global sort, band join staying an
@@ -11,14 +17,66 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf0001).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
 
+  /** `body`'s value and every action it runs, as (action name,
+    * QueryExecution), in run order. Listener events arrive
+    * asynchronously but in order on one queue, so a marked sentinel
+    * action run after `body` flushes them. */
+  private def actions[A](body: => A): (A, Seq[(String, QueryExecution)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = java.util.UUID.randomUUID().toString
+    def flushed = seen.stream().anyMatch(_._2.logical.toString.contains(marker))
+    spark.listenerManager.register(listener)
+    val value = try {
+      val v = body
+      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(flushed, "listener events did not arrive")
+      v
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    (value, seen.asScala.toSeq.filterNot(_._2.logical.toString.contains(marker)))
+  }
+
+  /** The plan `explain` prints before `plan` runs. An executed
+    * adaptive plan prints its final stages too; a fresh copy of the
+    * adaptive root holds only the initial plan. */
+  private def initialPlan(plan: SparkPlan): String = {
+    val sb = new StringBuilder("== Physical Plan ==\n")
+    ExplainUtils.processPlan[SparkPlan](plan match {
+      case a: AdaptiveSparkPlanExec => a.copy()
+      case p => p
+    }, s => sb.append(s))
+    sb.append("\n").toString
+  }
+
+  /** The plans a shipped builder runs: every cut's segment (its
+    * initial physical plan, in run order) and the returned frame's.
+    * A cut reports its segment as a `localCheckpoint` action. */
+  private case class Shipped(cuts: Seq[String], result: String) {
+    def all: String = (cuts :+ result).mkString("\n")
+  }
+  private def shipped(build: => DataFrame): Shipped = {
+    val (out, run) = actions(build)
+    Shipped(run.collect {
+      case ("localCheckpoint", qe) => initialPlan(qe.executedPlan)
+    }, out.queryExecution.explainString(FormattedMode))
+  }
+
   /** FormattedMode prints the operator tree, a blank line, then a
     * per-node details section that REPEATS every operator name — a
     * substring count over the full string counts each node twice
     * (round-6 lesson: three guards shipped with thresholds calibrated
     * against PlanDump's deduplicated tree and failed at 2×). All
-    * operator counts must run on the tree section only. */
+    * operator counts must run on the tree section only — of each
+    * plan, when several are joined. */
   private def tree(p: String): String =
-    p.linesIterator.takeWhile(_.nonEmpty).mkString("\n")
+    p.split("(?m)^(?=== Physical Plan ==)").map(
+      _.linesIterator.takeWhile(_.nonEmpty).mkString("\n")).mkString("\n")
 
   private def count(p: String, pattern: String): Int =
     pattern.r.findAllIn(tree(p)).length
@@ -80,24 +138,12 @@ class PlanShapeSpec extends SparkSpec {
 
     // RunAnalysis.execute writes straight from the plan: no action
     // reads a cached relation, and the cache is empty afterwards
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit = plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
-    }
     spark.catalog.clearCache()
-    spark.listenerManager.register(listener)
-    try {
+    val plans = actions {
       quickstart.execute(quickstart.config(200, Some(quickstart.outPath())))
-      // listener events arrive asynchronously: wait for the write's
-      def wrote = plans.stream().anyMatch(_.contains("InsertIntoHadoopFsRelation"))
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!wrote && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(wrote, plans)
-    } finally spark.listenerManager.unregister(listener)
-    plans.forEach(plan => assert(!plan.contains("InMemoryTableScan") &&
+    }._2.map(_._2.executedPlan.toString)
+    assert(plans.exists(_.contains("InsertIntoHadoopFsRelation")), plans)
+    plans.foreach(plan => assert(!plan.contains("InMemoryTableScan") &&
       !plan.contains("TableCacheQueryStage"), plan))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
@@ -375,13 +421,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q153: classifier-keep — trained weights broadcast into the features, scale-growing keep set merge-joined, threshold dims broadcast") {
-    // materialize = false: the shipped stage checkpoints the scored
-    // table, which hides the scorer — audit the full un-cut plan
+    // the scorer runs in the scored-table cut; the keep in the frame
     val d = Tables.load(spark, sf0001, "documents")
     val w = graft.operators.Perceptron.trainPocket(d)
-    val p = graft.operators.Perceptron.classifierKeep(d, w,
-      materialize = false).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    val p = shipped(graft.operators.Perceptron.classifierKeep(d, w)).all
     assert(!p.contains("CartesianProduct"), p)
     // the ≤(B+1)-row weight table broadcasts into the feature stream
     assert(p.contains("BroadcastHashJoin"), p)
@@ -395,13 +438,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q145: increment×corpus candidate join is a band-keyed merge join; the corpus index never broadcasts") {
-    // materialize = false: the shipped query checkpoints the verified
-    // pair set, which hides the candidate-generation stage — audit
-    // the full un-cut plan
-    val p = graft.operators.Dedup.incrementalDedup(
-      Tables.load(spark, sf0001, "documents"), materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // candidate generation runs in the verified-pair cut
+    val p = shipped(graft.operators.Dedup.incrementalDedup(
+      Tables.load(spark, sf0001, "documents"))).all
     assert(!p.contains("CartesianProduct"), p)
     // the band+bucket collision join: both sides corpus-scale, hinted
     // to a shuffled merge join on the band key
@@ -414,14 +453,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q156: plane/center literals broadcast; candidates are a chunk-keyed equi-join; verify joins candidate-sized — no cartesian") {
-    // materialize=false: the shipped query checkpoints the feature/
-    // chunk/candidate frames (decode runs once, r14 optimization),
-    // which would collapse the visible plan — audit the composed one
-    // (the q93/q144 builder-variant pattern)
-    val p = graft.operators.ImageDedup
-      .imageNearDups(spark, materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // the shipped query cuts the fingerprint and candidate frames
+    // (decode runs once, r14 optimization): audit every segment
+    val p = shipped(graft.operators.ImageDedup.imageNearDups(spark)).all
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // the fingerprint runs in the MediaChunks codegen kernel over the
@@ -453,11 +487,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q164: draw+decode is map-side over the documents scan; kernel shape inherited from q156 — no cartesian, chunk-keyed candidates") {
-    // materialize=false (see q156 above): audit the composed plan
-    val p = graft.operators.ImageDedup
-      .scaledImageNearDups(spark, sf0001, materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // every segment, as for q156 above
+    val p = shipped(graft.operators.ImageDedup
+      .scaledImageNearDups(spark, sf0001)).all
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // the synthetic corpus is one MapPartitions over the (spread)
@@ -471,12 +503,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q178: ingest probe is a chunk-keyed equi-join carrying both fingerprints — Hamming/L1 in the codegen kernels, no cartesian") {
-    // materialize=false (see q156 above): audit the composed plan —
-    // the shipped query checkpoints the fp frame and the verified set
-    val p = graft.operators.ImageDedup
-      .imageIncremental(spark, sf0001, materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // every segment, as for q156 above — the shipped query cuts the
+    // fp frame and the verified set
+    val p = shipped(graft.operators.ImageDedup
+      .imageIncremental(spark, sf0001)).all
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // r14 array form: ONE fingerprint pass (MediaChunks), Hamming
@@ -521,13 +551,17 @@ class PlanShapeSpec extends SparkSpec {
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
     val idx = graft.streaming.DocStreams.buildIndex(d.filter(h < "aaaaaaaa"))
     val survivors = d.filter(h >= "aaaaaaaa" && h < "dddddddd")
-      .localCheckpoint(true)
-    val merged = graft.streaming.DocStreams.mergeIndex(idx, survivors,
-      materialize = false)
-    val pb = merged.buckets.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    val pg = merged.grams.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+      .cut("PlanShapeSpec: survivors")
+    // the merge is a persist swap: audit the plans the merged index
+    // is cached from
+    val merged = graft.streaming.DocStreams.mergeIndex(idx, survivors)
+    def cachedPlan(df: DataFrame): String = initialPlan(
+      df.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          r.cacheBuilder.cachedPlan
+      }.get)
+    val pb = cachedPlan(merged.buckets)
+    val pg = cachedPlan(merged.grams)
     // union over the CACHED standing side + map-side survivor keys:
     // the merge repartitions nothing — no Exchange anywhere
     assert(count(pb, "Union") >= 1, pb)
@@ -536,7 +570,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(count(pb, "Exchange") === 0, pb)
     assert(count(pg, "Union") >= 1, pg)
     assert(count(pg, "Exchange") === 0, pg)
-    idx.unpersist()
+    merged.unpersist()
   }
 
   test("q150: retention rides ONE user-keyed merge join; the day-0 census broadcasts back") {
@@ -569,10 +603,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q144: perceptron scorer rides the cached doc_id partitioning — weights broadcast, zero new doc-keyed exchanges") {
-    val p = graft.operators.Perceptron.trainScore(
-      Tables.load(spark, sf0001, "documents"), materialize = false)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // the scorer is trainScore's last cut (the epochs' weight cuts
+    // run before it)
+    val p = shipped(graft.operators.Perceptron.trainScore(
+      Tables.load(spark, sf0001, "documents"))).cuts.last
     assert(!p.contains("CartesianProduct"), p)
     // the ≤B-row pocket weight dim broadcasts into the cached features
     assert(p.contains("BroadcastHashJoin"), p)
@@ -1136,10 +1170,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q186: the gap sweep is ONE user-keyed window pass + a 1-row aggregate — no joins, no per-config re-sort") {
-    val p = graft.operators.Sessionize.sessionGapAgg(
-      Tables.load(spark, sf0001, "events"))
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // the frontier's one cut is the pass; its rows are 1-row selects
+    val p = shipped(graft.operators.Sessionize.sessionGapFrontier(
+      Tables.load(spark, sf0001, "events"))).cuts.head
     // exactly one shuffle keyed by the window partitioning plus the
     // final single-partition gather for the global aggregate
     assert(keyedExchanges(p, "user_id") === 1, p)

@@ -11,14 +11,37 @@ class SamplerSpec extends SparkSpec {
 
   test("no sample circle crosses the region boundary (frame invariant)") {
     // spec: /root/reference/src/cosmap/analysis/sampler.py:48-85
-    val s = SphereSampler.uniformCircles(spark, 2000, bounds, r, seed = 1)
-    val viol = s.filter(
-      col("dec") - col("radius_deg") < bounds.decMin ||
-        col("dec") + col("radius_deg") > bounds.decMax ||
-        col("ra") - Sphere.raPad(col("dec"), col("radius_deg")) < bounds.raMin ||
-        col("ra") + Sphere.raPad(col("dec"), col("radius_deg")) > bounds.raMax)
-      .count()
-    assert(viol === 0)
+    // near the pole: a centre at the frame's top needs raPad 38.2° in
+    // the first region (Dec to 89.95°); circles in the second can
+    // reach the pole; the third is wide enough to keep a frame
+    val nearPole = SkyBounds(0, 100, 80, 89.95)
+    val polar = SkyBounds(0, 100, 80, 90)
+    val wideNearPole = SkyBounds(0, 360, 80, 89.95)
+    def raPadAt(dec: Double): Double =
+      spark.range(1).select(Sphere.raPad(lit(dec), lit(r))).head.getDouble(0)
+    for (b <- Seq(bounds, nearPole, polar, wideNearPole)) {
+      val framed = scala.util.Try(SphereSampler.frame(b, r))
+      assert(framed.isSuccess || framed.failed.get
+        .isInstanceOf[IllegalArgumentException], framed)
+      framed.foreach { f =>
+        // the frame itself: a circle centred on its most polar edge
+        // still fits in RA
+        val pad = raPadAt(math.max(math.abs(f.decMin), math.abs(f.decMax)))
+        assert(f.raMin - pad >= b.raMin && f.raMax + pad <= b.raMax,
+          s"$b: frame $f, pad $pad")
+        val s = SphereSampler.uniformCircles(spark, 2000, b, r, seed = 1)
+        val viol = s.filter(
+          col("dec") - col("radius_deg") < b.decMin ||
+            col("dec") + col("radius_deg") > b.decMax ||
+            col("ra") - Sphere.raPad(col("dec"), col("radius_deg")) < b.raMin ||
+            col("ra") + Sphere.raPad(col("dec"), col("radius_deg")) > b.raMax)
+          .count()
+        assert(viol === 0, b)
+      }
+    }
+    assert(SphereSampler.frame(wideNearPole, r).raMin > 100)
+    val e = intercept[IllegalArgumentException](SphereSampler.frame(polar, r))
+    assert(e.getMessage.contains("pole"), e.getMessage)
   }
 
   test("sampling is deterministic and partitioning-independent") {

@@ -87,7 +87,7 @@ object SimHashWideKernel {
   * the 100 TB scale path for chunk-collision candidate generation:
   * with 4 chunks over 128 bits each chunk key has 2³² values, so the
   * birthday-collision candidate floor drops from ~4·C(n,2)/2¹⁶ (the
-  * 64-bit / 16-bit-chunk variant, measured α=1.24 in the ScaleProbe)
+  * 64-bit / 16-bit-chunk variant, measured α=1.24 in round 2)
   * to ~4·C(n,2)/2³² — negligible up to billions of documents — while
   * the pigeonhole completeness guarantee for Hamming ≤ 3 over 4
   * chunks is unchanged. Word 0 equals the 64-bit fingerprint. */

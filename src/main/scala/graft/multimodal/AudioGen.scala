@@ -37,9 +37,9 @@ import graft.functions.SplitMix64Kernel
   * Composition space: 16 independent amplitudes × 16001 values plus
   * 32 periods (~10⁶⁷ compositions) — organic near-dup collisions need
   * every energy share within the verify bound simultaneously, so the
-  * gate output tracks the ~n planted pairs (ScaleProbe measures the
-  * pair growth; the round-10 advice-#3 saturation concern designed
-  * out from the start).
+  * gate output tracks the ~n planted pairs (round 11 measured exactly
+  * n/8 pairs, zero organic, at 1–10× the sf0.1 size; the round-10
+  * advice-#3 saturation concern designed out from the start).
   */
 object AudioGen {
   val Segments = 16

@@ -68,7 +68,7 @@ object AudioDedup {
 
   /** Exact-verify bound for the SCALED corpus, MEASURED both ways
     * (round-11 advice #4 — the all-pairs closed-form L1 census at
-    * n = 5000, ScaleProbe r11 + MultimodalSpec): planted pairs max
+    * n = 5000, round 11 + MultimodalSpec): planted pairs max
     * 2,402 (the ~1% segment-3 amplitude nudge), nearest independent
     * composition 139,991 — the bound sits 4.2× above every planted
     * pair and 14× below the nearest organic one, both asserted. */

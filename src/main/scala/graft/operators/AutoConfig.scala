@@ -309,7 +309,7 @@ object AutoConfig {
     * YOUR corpus, never the whole of it — and the q192 total order
     * picks the family at the house cluster-recall floor. Measured at
     * the gate corpora: b16r4 at every sf, meets_floor = 1 with
-    * 37k–84k ppm of margin (FamilyChoiceProbe). */
+    * 37k–84k ppm of margin (measured in round 14). */
   private[graft] def sampledFamilyChoice(d: DataFrame): DataFrame =
     selectConfig(
       dedupFamilyFrontier(d.filter(col("doc_id") % CalibSampleMod === 0)),

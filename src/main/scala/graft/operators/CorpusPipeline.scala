@@ -503,8 +503,8 @@ object CorpusPipeline {
     val out = DagCompiler.runPipeline(
       blocks("Main"), registry(persisted),
       data = Map(
-        // overrides: the scale probe feeds replicated frames through
-        // the identical compiled DAG (gate queries never pass them)
+        // overrides feed other frames through the identical compiled
+        // DAG (gate queries never pass them)
         "documents" -> docsOverride.getOrElse(Tables.load(s, dir, "documents")),
         "embeddings" -> embOverride.getOrElse(Tables.load(s, dir, "embeddings"))),
       params = Map.empty, spark = Some(s)).asInstanceOf[DataFrame]

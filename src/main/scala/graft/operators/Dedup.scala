@@ -65,7 +65,8 @@ object Dedup {
 
   /** Deterministic 1-in-[[HotSampleMod]] document sample for the
     * hot-gram estimate: the setup job (the q44 family's one serial
-    * plan-time job — round-4 A/B in BENCH_LOCAL.md) shingles and
+    * plan-time job — ~1.6 s of fixed overhead at sf0.1 in the round-4
+    * A/B; sampling cut it from 5.2 s to 1.0 s in round 6) shingles and
     * aggregates only sampled docs instead of the whole corpus.
     * Correctness needs NOTHING from the df values: prefix-filter
     * completeness holds under ANY consistent global (df, gram) total
@@ -82,9 +83,9 @@ object Dedup {
   private[graft] def hotGramSample(d: DataFrame): DataFrame =
     gramTable(d.filter(pmod(col("doc_id"), lit(HotSampleMod)) === 0))
 
-  /** Prefix-filtered candidate pairs (doc_a < doc_b) for J ≥ 0.5 —
-    * exposed for the scale probe (graft.ScaleProbe), which measures
-    * candidate growth vs corpus growth.
+  /** Prefix-filtered candidate pairs (doc_a < doc_b) for J ≥ 0.5.
+    * Candidate growth under corpus replication: α = 1.04 at 1–10×
+    * sf0.1 (round 4); ScalePostureSpec guards it.
     *
     * The per-doc prefix (the ⌊ng/2⌋+1 rarest grams under a global
     * (df, gram) total order) is computed MAP-SIDE by the codegen'd
@@ -202,7 +203,9 @@ object Dedup {
 
   /** SimHash chunk-collision candidate pairs with Hamming distance
     * (complete for distance ≤ 3 by pigeonhole over 4 chunks) — the
-    * q46 body, exposed for the scale probe. */
+    * q46 body. Candidate growth under corpus replication: α = 0.70 at
+    * 1–10× sf0.1 (round 4, the 16-bit birthday floor already
+    * saturated at 1×); ScalePostureSpec guards it. */
   def simhashPairs(d: DataFrame): DataFrame = {
     val fp = d.select(col("doc_id"),
       SimHash.simhash64(Text.tokens(col("text"))).as("fp"))
@@ -224,8 +227,10 @@ object Dedup {
   /** Wide-fingerprint (128-bit, 4×32-bit chunks) SimHash candidate
     * pairs — the 100 TB scale path: same pigeonhole completeness for
     * Hamming ≤ 3, but the chunk-key space grows from 2¹⁶ to 2³² so
-    * the birthday-collision candidate floor (ScaleProbe α=1.24 on the
-    * 64-bit variant) disappears. */
+    * the birthday-collision candidate floor (α = 1.24 on the 64-bit
+    * variant in round 2) disappears: α = 0.90 and ~74× fewer
+    * candidates than q46 at 10× sf0.1 (round 4). ScalePostureSpec
+    * guards its growth. */
   def simhashPairsWide(d: DataFrame): DataFrame = {
     val fp = d.select(col("doc_id"),
       SimHash.simhashWide(Text.tokens(col("text")), 128).as("fp"))

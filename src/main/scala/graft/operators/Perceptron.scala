@@ -215,7 +215,7 @@ object Perceptron {
     * The rate is corpus-ADAPTIVE (the q153 bin-width lesson applied
     * prospectively) — a fixed FRACTION would still scan corpus/K per
     * epoch at 100 TB, a fixed TARGET makes the training wall ~flat
-    * in corpus size (ScaleProbe r10) with scoring the only linear
+    * in corpus size (measured in round 10) with scoring the only linear
     * pass. T/n is one integer-by-integer IEEE division, exact on
     * both engines (the division-needs-no-quantization contract), and
     * at tiny scales rate ≥ 1 degrades gracefully to full-corpus

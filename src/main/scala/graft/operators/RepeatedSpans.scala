@@ -128,8 +128,8 @@ object RepeatedSpans {
     * (the group has no kept rows). Whitespace is normalized by the
     * token round-trip, identically on both sides.
     *
-    * Scale shape: the span table is a per-doc dim (ScaleProbe: span
-    * rows α = 1.00, a few spans per thousand docs), but it arrives
+    * Scale shape: the span table is a per-doc dim (round 6 measured
+    * span rows α = 1.00, a few spans per thousand docs), but it arrives
     * doc-keyed like the token table, so the anti-join is the SAME
     * doc-keyed shuffle family as the final groupBy — no new join
     * geometry; the interval predicate rides the equi-key. */

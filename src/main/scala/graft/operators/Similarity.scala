@@ -34,8 +34,10 @@ object Similarity {
     * information-theoretic price of t=0.4, not a design defect; at
     * realistic semantic-dedup thresholds (t≥0.9, ρ≈0.22) the SAME
     * operator is sublinear with recall 1, which SemanticClusterSpec
-    * demonstrates on a planted high-similarity corpus and ScaleProbe
-    * measures under corpus replication. */
+    * demonstrates on a planted high-similarity corpus. Under corpus
+    * replication this configuration's candidates grow with α = 2.00;
+    * ScalePostureSpec runs it as the quadratic control of its
+    * candidate-growth guard. */
   val Bits83 = 8
   val Bands83 = 16
   val Planes83: Seq[Seq[Double]] =
@@ -68,7 +70,9 @@ object Similarity {
 
   /** Adaptive-width sign-LSH candidates: the full MaxBitsA-bit keys
     * masked to the low `bits` bits (≡ using only planes j < bits),
-    * Hamming-1 multi-probe over the active bits only. */
+    * Hamming-1 multi-probe over the active bits only. Candidate growth
+    * under corpus replication: α = 1.04 at 1–10× sf0.1 (round 4);
+    * ScalePostureSpec guards it. */
   def adaptiveCandidates(e: DataFrame, bits: Int): DataFrame = {
     val mask = (1 << bits) - 1
     val banded = e.select(col("vec_id"),
@@ -101,8 +105,8 @@ object Similarity {
   }
 
   /** Sign-LSH candidate pairs (vec_a < vec_b): band-key equi-join
-    * with Hamming-1 multi-probe on the probe side. Exposed for the
-    * scale probe and the spec. */
+    * with Hamming-1 multi-probe on the probe side. Exposed for
+    * SemanticClusterSpec and ScalePostureSpec. */
   def lshCandidates(e: DataFrame, planes: Seq[Seq[Double]],
       bands: Int, bits: Int): DataFrame = {
     val banded = e.select(col("vec_id"),
@@ -463,7 +467,7 @@ object Similarity {
   /** Adaptive-cell assignment over any embeddings-shaped frame: every
     * vector with its argmax-cosine cell from the [[adaptiveCells]]
     * prefix of Centroids94 — the map-side stage shared by q94b/q94c
-    * and q102 (exposed for ScaleProbe's skew measurement). */
+    * and q102. */
   private[graft] def assignCells(e: DataFrame): DataFrame = {
     val cents = Centroids94.table.take(adaptiveCells(e.count()))
     val sims = array(cents.map(c =>
@@ -496,7 +500,7 @@ object Similarity {
   /** SemDeDup over any embeddings-shaped frame (needs `vec_id`,
     * `embedding`): adaptive-cell assignment, within-cell pair scan,
     * higher vec_id of any ≥-threshold pair dropped. Exposed for the
-    * hand-corpus spec and ScaleProbe; q102 is this at t = 0.4. */
+    * hand-corpus spec; q102 is this at t = 0.4. */
   private[graft] def semDedup(e: DataFrame, threshold: Double): DataFrame = {
     val assigned = assignCells(e)
     val removed = cellPairs(assigned)

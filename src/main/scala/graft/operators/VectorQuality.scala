@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     engines (zeros and copies introduce no rounding), and with
   *     nested zero-tails the intra-cluster cosine has the closed form
   *     cos(v_a, v_b) = sqrt(S_b / S_a) (S_m = Σ of the first 64 − 4m
-  *     coordinates squared). Probed on this corpus (VectorMarginProbe):
+  *     coordinates squared). Probed on this corpus (round 13):
   *     planted cosines span [0.743, 0.9995] while the maximum ORGANIC
   *     cross-base cosine is 0.562 at every scale — the 0.70 operating
   *     threshold sits in a ≥ 0.14-wide empty gap on BOTH sides, so
@@ -36,9 +36,9 @@ import org.apache.spark.sql.functions._
   * same left-to-right double accumulation on both engines (round-6 at
   * the threshold); the sign-LSH band keys and the cell argmax are
   * stable because the VARIANT corpus's margins are probed and
-  * spec-pinned like the base corpus's (VectorQualitySpec /
-  * graft.tools.CalibProbe — a zeroed tail changes every dot, so the
-  * base-corpus margin assertions do not transfer automatically). */
+  * spec-pinned like the base corpus's (VectorQualitySpec — a zeroed
+  * tail changes every dot, so the base-corpus margin assertions do
+  * not transfer automatically). */
 object VectorQuality {
   type Q = (SparkSession, String) => DataFrame
 
@@ -149,8 +149,7 @@ object VectorQuality {
   }
 
   /** Distinct candidate pairs sharing any cell of a (vec_id, cell)
-    * frame — cell-keyed equi-join, the q102 family's scale shape.
-    * Exposed (with [[top2Exploded]]) for ScaleProbe's r14 section. */
+    * frame — cell-keyed equi-join, the q102 family's scale shape. */
   private[graft] def cellCands(t: DataFrame): DataFrame =
     t.as("a").hint("shuffle_merge")
       .join(t.as("b").hint("shuffle_merge"),
@@ -174,8 +173,9 @@ object VectorQuality {
     * boundary is reachable through either endpoint's second cell, so
     * recall must sit at-or-above the single-cell row at a bounded
     * candidate increase (per-vector fan-out ×2 ⇒ ≤ 4× pair bound;
-    * measured well under — ScaleProbe r14 runs the generator under
-    * the signed-permutation null model). Scale shape: the assignment
+    * measured well under — round 14 ran the generator under the
+    * signed-permutation null model: top-2 α equal to the single-cell
+    * α, fan-out ratio flat). Scale shape: the assignment
     * is one map pass; candidates ride cell-keyed equi-joins exactly
     * like the q102 family; censuses are the q193 size-table reads. */
   private[graft] def top2QualityTable(e: DataFrame): DataFrame = {

@@ -83,7 +83,7 @@ object VideoDedup {
 
   /** Exact-verify bound for the SCALED corpus, MEASURED both ways
     * (round-11 advice #4 — the all-pairs closed-form L1 census at
-    * n = 5000, ScaleProbe r11 + MultimodalSpec): planted pairs max
+    * n = 5000, round 11 + MultimodalSpec): planted pairs max
     * 14,983 (the 1-px rectangle grow pooled over its 2-frame
     * segment), nearest independent composition 1,178,189 — the bound
     * sits 2.7× above every planted pair and 29× below the nearest

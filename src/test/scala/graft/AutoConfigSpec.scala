@@ -212,7 +212,7 @@ class AutoConfigSpec extends SparkSpec {
 
   test("q201: the consumed family selection dispatches to the selected family's dedup") {
     // at the spec corpus the mod-2 sampled frontier selects b16r4
-    // with meets_floor = 1 (FamilyChoiceProbe: recall 975000 vs the
+    // with meets_floor = 1 (measured in round 14: recall 975000 vs the
     // 900000 floor), so the kept set must BE dedupKeepLsh(16)'s, the
     // config column carrying the decision — the q195 verbatim-rows
     // property applied to the family selection

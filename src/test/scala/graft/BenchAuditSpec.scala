@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The bench record's pinned-threshold self-audit (round-5 verdict
   * #1): pins parsing and suspect flagging, including the real
-  * checked-in BENCH_PINS.json. */
+  * checked-in BENCH_PINS.json. Also keeps the docs' `runMain` lines
+  * in step with the mains that exist. */
 class BenchAuditSpec extends AnyFunSuite {
 
   test("parsePins reads the real checked-in BENCH_PINS.json") {
@@ -33,5 +36,31 @@ class BenchAuditSpec extends AnyFunSuite {
     assert(Bench.parsePins("not json at all") === Map.empty)
     assert(Bench.parsePins("") === Map.empty)
     assert(Bench.suspects(Seq("q44" -> 23.97), Map.empty) === Seq.empty)
+  }
+
+  test("every runMain named in the docs resolves to an object with a main under src/") {
+    def read(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val docs = Seq("README.md", "USAGE.md", "CLAUDE.md",
+      ".claude/skills/verify/SKILL.md")
+    val named = for {
+      d <- docs
+      m <- raw"runMain\s+([A-Za-z_][\w.]*\w)".r.findAllMatchIn(read(Paths.get(d)))
+    } yield d -> m.group(1)
+    assert(named.nonEmpty)
+    val topLevel = raw"(?m)^(?:object|class|trait|case class)\s+(\w+)".r
+    val mains = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = read(f)
+        val pkg = raw"(?m)^package\s+([\w.]+)".r.findFirstMatchIn(src)
+          .fold("")(_.group(1) + ".")
+        val decls = topLevel.findAllMatchIn(src).toSeq
+        decls.zipWithIndex.collect {
+          case (m, i) if m.matched.startsWith("object") &&
+              src.substring(m.start, decls.lift(i + 1).fold(src.length)(_.start))
+                .contains("def main(") => pkg + m.group(1)
+        }
+      }.toSet
+    val missing = named.filterNot { case (_, cls) => mains(cls) }
+    assert(missing.isEmpty, s"docs name mains that do not exist: $missing")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.streaming.DocStreams
 import org.apache.spark.sql.functions._
 
@@ -61,10 +62,10 @@ class DocStreamsSpec extends SparkSpec {
     val day1 = d.filter(h >= "aaaaaaaa" && h < "dddddddd")
 
     val idx = DocStreams.buildIndex(corpus)
-    val f1 = DocStreams.flagBatch(day1, idx).localCheckpoint(true)
+    val f1 = DocStreams.flagBatch(day1, idx).cut("DocStreamsSpec: day-1 flags")
     val survivors = day1.join(
       f1.filter(col("is_dup") === 0L).select("doc_id"), Seq("doc_id"),
-      "left_semi").localCheckpoint(true)
+      "left_semi").cut("DocStreamsSpec: day-1 survivors")
     assert(survivors.count() > 0 && survivors.count() < day1.count(),
       "split must produce both dups and survivors for the merge to matter")
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.functions.SplitMix64Kernel
 import graft.operators.HashedVectors
 import org.apache.spark.sql.functions.col
@@ -65,7 +66,7 @@ class HashedVectorsSpec extends SparkSpec {
     val dup = d.filter(col("doc_id") === 0)
       .select((col("doc_id") + 9999L).as("doc_id"), col("text"))
     val vecs = HashedVectors.hashedVectors(d.unionByName(dup))
-      .localCheckpoint(true)
+      .cut("HashedVectorsSpec: doc vectors")
     val top = HashedVectors.panelTopK(vecs, k = 5)
       .filter(col("q_id") === 0).orderBy(col("rank"))
       .collect().map(r => (r.getLong(1), r.getDouble(2), r.getLong(3)))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.multimodal.Multimodal
 import graft.operators.ImageDedup
 import graft.streaming.MediaStreams
@@ -30,7 +31,7 @@ class MediaStreamsSpec extends SparkSpec {
 
     // the increment arrives as TWO micro-batches of RAW media rows
     val inc = ImageDedup.scaledImagesFrom(docs.filter(h >= "cccccccc"))
-      .toDF().localCheckpoint(true)
+      .toDF().cut("MediaStreamsSpec: raw increment")
     val ids = inc.select("id").collect().map(_.getLong(0)).sorted
     val cut = ids(ids.length / 2)
     val tmp = java.nio.file.Files.createTempDirectory("graftmediastream")

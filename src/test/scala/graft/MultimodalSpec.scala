@@ -455,8 +455,8 @@ class MultimodalSpec extends SparkSpec {
     // sf0.001/sf0.01 universe) from the closed-form features: every
     // planted pair's L1 must sit within the verify bound, and the
     // NEAREST pair of independent compositions must clear it by >10x,
-    // so the bound can never admit an organic pair (ScaleProbe's r11
-    // section asserts the same census at n = 5000, the sf0.1 size).
+    // so the bound can never admit an organic pair (round 11 measured
+    // the same census at n = 5000, the sf0.1 size).
     def sweep(name: String, feat: Long => Array[Long], bound: Long)
         : (Long, Long) = {
       val n = 500

@@ -745,7 +745,7 @@ class PlanShapeSpec extends SparkSpec {
         .cast("int"))
     val cent = qv.join(broadcast(ids), "vec_id")
       .select(col("cluster"), col("pos"), col("q").as("c"), lit(0L).as("n"))
-      .localCheckpoint(true)
+      .cut("PlanShapeSpec q118: codebook")
     val p = graft.operators.KMeansTrain.round(qv, cent)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -782,7 +782,7 @@ class PlanShapeSpec extends SparkSpec {
         .cast("int"))
     val cent = qv.join(broadcast(ids), "vec_id")
       .select(col("sub"), col("code"), col("spos"), col("q").as("c"))
-      .localCheckpoint(true)
+      .cut("PlanShapeSpec q129: codebook")
     val p = graft.operators.KMeansTrain.pqRound(qv, cent)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -815,7 +815,7 @@ class PlanShapeSpec extends SparkSpec {
         .cast("int"))
     val cent = qv.join(broadcast(ids), "vec_id")
       .select(col("sub"), col("code"), col("spos"), col("q").as("c"))
-      .localCheckpoint(true)
+      .cut("PlanShapeSpec q132: codebook")
     val lut = graft.operators.KMeansTrain.adcLut(qv, cent)
     val p = graft.operators.KMeansTrain.adcRank(qv, cent, lut)
       .queryExecution.explainString(
@@ -846,7 +846,7 @@ class PlanShapeSpec extends SparkSpec {
     val e = graft.operators.Motifs.edges(
       Tables.load(spark, sf0001, "orders"),
       Tables.load(spark, sf0001, "lineitem"))
-    val ec = e.localCheckpoint(true)
+    val ec = e.cut("PlanShapeSpec q133: edges")
     val p = graft.operators.Motifs.censusPlan(ec, est = false)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -875,15 +875,15 @@ class PlanShapeSpec extends SparkSpec {
       Tables.load(spark, sf0001, "documents"), 3L)
     val e = und.select(
       org.apache.spark.sql.functions.col("a"),
-      org.apache.spark.sql.functions.col("b")).localCheckpoint(true)
-    val deg = graft.operators.Motifs.degrees(e).localCheckpoint(true)
+      org.apache.spark.sql.functions.col("b")).cut("PlanShapeSpec q139: undirected edges")
+    val deg = graft.operators.Motifs.degrees(e).cut("PlanShapeSpec q139: degrees")
     // the orientation: two vocab-scale keyed joins, never broadcast
     val po = graft.operators.Motifs.orient(e, deg)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
     assert(count(po, "SortMergeJoin Inner") === 2, po)
     assert(count(po, "BroadcastHashJoin") === 0, po)
-    val dir = graft.operators.Motifs.orient(e, deg).localCheckpoint(true)
+    val dir = graft.operators.Motifs.orient(e, deg).cut("PlanShapeSpec q139: oriented edges")
     val p = graft.operators.Motifs.triPlan(e, deg, dir)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -953,7 +953,7 @@ class PlanShapeSpec extends SparkSpec {
     val wdeg = edges.groupBy(col("src").as("node"))
       .agg(ssum(col("w")).as("wd")).persist()
     val ranks = wdeg.select(col("node"), col("wd"), lit(1000000L).as("r"))
-      .localCheckpoint(true)
+      .cut("PlanShapeSpec q136: initial ranks")
     val p = graft.operators.LexicalStats.trStep(edges, wdeg, ranks)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.functions.VectorExprs
 import graft.operators.{Centroids94, Similarity, VectorQuality}
 import org.apache.spark.sql.functions._
@@ -14,7 +15,7 @@ class VectorQualitySpec extends SparkSpec {
 
   private def variants(dir: String) =
     VectorQuality.plantedVecVariants(Tables.load(spark, dir, "embeddings"))
-      .localCheckpoint(true)
+      .cut("VectorQualitySpec: planted variants")
 
   test("q196: brute and sign-LSH recover perfectly; the cell restriction measurably loses") {
     val m = VectorQuality.vectorQualityTable(
@@ -74,7 +75,7 @@ class VectorQualitySpec extends SparkSpec {
 
   test("q196: variant-corpus sign and argmax margins dwarf cross-engine float noise") {
     // cross-engine double-accumulation noise is ~1e-13; the probed
-    // margins (VectorMarginProbe) are 2.0e-6 / 6.1e-6 / 8.4e-8 for
+    // margins (measured in round 13) are 2.0e-6 / 6.1e-6 / 8.4e-8 for
     // planes and ≥ 8.9e-5 for the cell argmax across the three
     // scales — the sf0.1 plane margin is the tightest in the repo
     // (vs the base corpus's 1e-6 bar) and still five orders above

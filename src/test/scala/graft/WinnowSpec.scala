@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.functions.SplitMix64Kernel
 import graft.operators.Winnow
 import org.apache.spark.unsafe.types.UTF8String
@@ -164,7 +165,7 @@ class WinnowSpec extends SparkSpec {
     assert(out.find(_._1 == 4L).get._4 === q117)
     // SIGMOD'03 coverage at EVERY w: each w-window of gram positions
     // contains a selected position (brute-checked per document)
-    val grams = graft.operators.Winnow.gramFps(d).localCheckpoint(true)
+    val grams = graft.operators.Winnow.gramFps(d).cut("WinnowSpec: gram fingerprints")
     Seq(2, 4, 8).foreach { ww =>
       val selByDoc = graft.operators.Winnow.selectedOver(grams, ww)
         .collect().map(r => (r.getLong(0), r.getInt(2)))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Cut._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -72,8 +73,8 @@ object KnnProfile {
       t("full q94b (join+window)")(noop(top))
       // isolate: join from pre-materialized sides
       val aCk = t("assigned checkpoint")(
-        assigned.localCheckpoint(true))
-      val qCk = t("qc checkpoint")(qc.localCheckpoint(true))
+        assigned.cut("KnnProfile: assigned"))
+      val qCk = t("qc checkpoint")(qc.cut("KnnProfile: query cells"))
       val candCk = aCk.as("a")
         .join(qCk.as("q"),
           col("a.cell") === col("q.qcell") && col("a.vec_id") =!= col("q.q_id"))

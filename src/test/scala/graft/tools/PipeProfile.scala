@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Cut._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -55,19 +56,19 @@ object PipeProfile {
 
     // --- pipeline stages, chained as q104 runs them ---
     val scrubbed = t("stage: scrubKeep (chkpt)") {
-      RepeatedSpans.scrubKeep(docs).localCheckpoint(true)
+      RepeatedSpans.scrubKeep(docs).cut("PipeProfile: scrubbed")
     }
     val cleaned = t("stage: cleanKeep (chkpt)") {
-      TextAnalysis.cleanKeep(scrubbed).localCheckpoint(true)
+      TextAnalysis.cleanKeep(scrubbed).cut("PipeProfile: cleaned")
     }
     val deduped = t("stage: dedupKeep (chkpt)") {
-      Dedup.dedupKeep(cleaned).localCheckpoint(true)
+      Dedup.dedupKeep(cleaned).cut("PipeProfile: deduped")
     }
     val mixed = t("stage: temperatureKeep (chkpt)") {
-      Mixing.temperatureKeep(deduped).localCheckpoint(true)
+      Mixing.temperatureKeep(deduped).cut("PipeProfile: mixed")
     }
     val packed = t("stage: shardPack (chkpt)") {
-      Mixing.shardPack(mixed).localCheckpoint(true)
+      Mixing.shardPack(mixed).cut("PipeProfile: packed")
     }
     t("stage: chunk tail (noop)") {
       noop(packed

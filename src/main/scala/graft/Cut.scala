@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
   * eagerly and node-locally — computed once, lineage truncated — and
   * its jobs carry the label (`<Object>.<function>: <intermediate>`) as
   * their job description. The caller's description is restored even
-  * when the cut throws: `Tables.inParallel` reuses pooled driver
-  * threads, so a label left behind would name unrelated later jobs.
+  * when the cut throws, so a label never names the caller's later
+  * jobs.
   * Plan guards read a cut's plan from the `localCheckpoint` action it
   * reports to `QueryExecutionListener`s (PlanShapeSpec `shipped`). */
 object Cut {

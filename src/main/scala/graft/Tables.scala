@@ -15,51 +15,72 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Run independent, deterministic builders from driver threads
-    * (r15, guide §2.6 "overlap independent jobs"): Spark's scheduler
-    * runs several jobs at once inside one application — actions are
-    * only sequential because driver code calls them sequentially.
-    * Frontier/benchmark operators that measure K independent configs
-    * each build a chain of SMALL sequential stages (candidate pass →
-    * checkpoint → census); run the chains concurrently so one chain's
-    * stage tail back-fills the cores the others leave idle. Callers
-    * must materialize any SHARED persisted input before forking (all
-    * call sites fork after the shared checkpoint), and every builder
-    * must be deterministic and independent — results are unchanged by
-    * scheduling, only wall-clock. */
-  def inParallel[A](fs: Seq[() => A]): Seq[A] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.sequence(fs.map(f => Future(f()))), Duration.Inf)
+  /** The one way to fork: run `label`'s named branches concurrently
+    * and return their results in input order. Spark runs several jobs
+    * at once inside one application; driver code that calls actions
+    * one after another is what makes them sequential. A frontier that
+    * measures K independent configs builds K chains of small stages
+    * (candidate pass → cut → census); run side by side, one chain's
+    * stage tail back-fills the cores the others leave idle.
+    *
+    * Contract:
+    *  - every branch is deterministic and independent of the others,
+    *    so results are unchanged by scheduling; only wall-clock moves.
+    *    A shared input is cut before the fork, never inside a branch;
+    *  - each call starts one thread per branch and ends them all before
+    *    it returns or rethrows. A nested call starts its own threads,
+    *    so it never waits on a thread its parent holds, and the thread
+    *    count is bounded by the grid sizes (at most 4 branches today);
+    *  - a branch thread inherits the caller's Spark local properties
+    *    (job group included) and its jobs carry
+    *    `<label>: <branch>` as their job description — `label` is
+    *    `<Object>.<function>`, the `Cut` label convention;
+    *  - if branches fail, the first failed branch in input order
+    *    rethrows its own exception, after every branch has ended. */
+  def inParallel[A](label: String, branches: Seq[(String, () => A)]): Seq[A] = {
+    val sc = SparkSession.active.sparkContext
+    val outcomes = new Array[Either[Throwable, A]](branches.size)
+    val threads = branches.zipWithIndex.map { case ((branch, f), i) =>
+      val t = new Thread(() => {
+        sc.setJobDescription(s"$label: $branch")
+        outcomes(i) = try Right(f()) catch { case e: Throwable => Left(e) }
+      }, s"$label: $branch")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    outcomes.toSeq.map(_.fold(e => throw e, identity))
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, sfDir)
     else spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Spread a frame across the session's cores when its scan
-    * under-parallelizes (r14 optimization, guide §2.5 input skew /
-    * §6 split size). The driver-generated corpora are ONE parquet
-    * file with ONE row group, so every scan is a single input split —
-    * a per-row CPU-heavy stage planned directly over it (media
-    * synthesis + codec decode at ~1 ms/row) runs on ONE core of
-    * local[N] while the other N−1 idle. The repartition is keyed
-    * (deterministic hash — never derived from rand(), SPARK-38388)
-    * and CONDITIONAL on the observed scan parallelism: it only fires
-    * when the frame has fewer partitions than the session's default
-    * parallelism, so at 100 TB — where a corpus scan is thousands of
-    * splits — it is a structural no-op, never an added full-corpus
-    * shuffle. Results are partition-independent; only wall-clock
-    * changes. */
+  /** The one widening rule: spread a frame across the session's
+    * cores when its scan under-parallelizes. The test corpora are ONE
+    * parquet file with ONE row group, so every scan is a single input
+    * split, and a per-row CPU-heavy stage planned directly over it
+    * (shingling, fingerprints, media synthesis + decode) runs on one
+    * core of local[N] while the other N−1 idle. The repartition is
+    * keyed on `key` (a deterministic hash — never derived from rand(),
+    * SPARK-38388) with an explicit count, which AQE does not coalesce.
+    * It fires only when the frame reads fewer files than the session's
+    * default parallelism, so at 100 TB, where a corpus scan is
+    * thousands of splits, it is a no-op rather than an added
+    * full-corpus shuffle. The file count is the planner's own lower
+    * bound on scan parallelism, and reading it never turns the plan
+    * into an RDD (`df.rdd.getNumPartitions` would). A frame with no
+    * input files (in memory, or read from a cut) has a parallelism
+    * that cannot be read cheaply; it is left alone. Results are
+    * partition-independent; only wall-clock changes. */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // file count is the planner's own lower bound on scan parallelism
-    // and reading it never converts the plan to an RDD (the round-2
-    // lesson behind Dedup.widen — df.rdd.getNumPartitions would
-    // materialize the RDD lineage just to read a number). files == 0
-    // means a non-file-backed plan whose parallelism we can't read
-    // cheaply — leave it alone rather than force a shuffle.
     val files = df.inputFiles.length
     if (files == 0 || files >= target) df
     else df.repartition(target, key)

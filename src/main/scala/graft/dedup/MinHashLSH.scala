@@ -100,20 +100,8 @@ object MinHashLSH {
                    textCol: String = "text", numHashes: Int = 64,
                    bands: Int = 16, shingleN: Int = 3,
                    threshold: Double = 0.5): DataFrame = {
-    // widen single-file inputs before the compute-heavy sketch stage;
-    // gated on the file count (the planner's own lower bound on scan
-    // parallelism) so an already-wide source pays no unconditional
-    // shuffle — and, unlike .rdd.getNumPartitions, reading it never
-    // materializes the RDD lineage (same fix as Dedup.widen)
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    val files = docs.inputFiles.length
-    // files == 0 means a non-file-backed plan (in-memory frame, post-
-    // transform view): partitioning is unreadable without materializing,
-    // so leave it alone rather than force a full shuffle (round-4
-    // advice #4, same fix as Dedup.widen)
-    val wide =
-      if (files == 0 || files >= target) docs
-      else docs.repartition(target)
+    // spread single-file inputs before the compute-heavy sketch stage
+    val wide = graft.Tables.spread(docs, col(idCol))
     val buckets = bandBuckets(wide, idCol, textCol, numHashes, bands, shingleN)
     verify(wide, candidatePairs(buckets), idCol, textCol, shingleN, threshold)
   }

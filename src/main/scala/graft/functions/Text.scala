@@ -15,13 +15,6 @@ object Text {
   /** Whitespace tokenization. */
   def tokens(c: Column): Column = split(c, "\\s+")
 
-  def tokenCount(c: Column): Column = size(tokens(c))
-
-  /** BPE-ish pre-tokenization: word pieces OR single non-space
-    * punctuation — the classic `\w+|[^\w\s]` splitter. */
-  def bpeTokens(c: Column): Column =
-    regexp_extract_all(c, lit("\\w+|[^\\w\\s]"), lit(0))
-
   /** Distinct word n-grams as an array column (shingles), via the
     * codegen'd [[NGrams]] kernel — the HOF formulation's interpreted
     * per-element lambdas were the q44 bottleneck (see NGrams.scala).
@@ -39,16 +32,6 @@ object Text {
         sequence(lit(1), length(c) - lit(n - 1)),
         i => c.substr(i, lit(n)))))
       .otherwise(array().cast("array<string>"))
-
-  /** Ratio of punctuation characters to all characters. */
-  def punctRatio(c: Column): Column =
-    (length(c) - length(regexp_replace(c, "[\\p{Punct}]", "")))
-      .cast("double") / greatest(length(c), lit(1)).cast("double")
-
-  /** Type-token ratio (lexical diversity). */
-  def typeTokenRatio(c: Column): Column =
-    size(array_distinct(tokens(c))).cast("double") /
-      greatest(tokenCount(c), lit(1)).cast("double")
 
   /** Count of tokens that appear in `words`. */
   def wordSetCount(c: Column, words: Seq[String]): Column =

@@ -38,15 +38,6 @@ object Vectors {
     bits.reduce(_ + _)
   }
 
-  /** Deterministic pseudo-random hyperplanes (driver-side constants —
-    * the Spark-era analog of the reference's Setup block computing
-    * values once pre-distribution,
-    * /root/reference/src/cosmap/analysis/setup.py:24-31). */
-  def randomPlanes(nPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian()))
-  }
-
   /** All bucket ids within Hamming distance 1 of `bucket` (multi-probe
     * LSH: probing neighbor buckets trades a little compute for much
     * higher recall at the same bucket granularity). */

@@ -163,30 +163,6 @@ object ImageGen {
     means ++ shares
   }
 
-  /** Exact region census of the 3-fill drawing: (area, r, g, b) for
-    * the three visible regions — stripe (drawn last, full width,
-    * height min(2, H−ys)), rectangle minus its stripe overlap,
-    * background = rest. */
-  private def regions(key: Long, base: Long, shift: Int)
-      : Seq[(Long, Int, Int, Int)] = {
-    def q(salt: Long, mod: Int): Int = p(key, base, salt, mod)
-    // x0 plays no role in the census: x0 ≤ 17 and w ≤ 13, so the
-    // rectangle never clips horizontally (nor vertically: y0 ≤ 13,
-    // h ≤ 9) — only the stripe can clip, at the bottom edge
-    val y0 = 2 + q(8, H / 2)
-    val w = 4 + q(9, W / 4) + shift; val h = 4 + q(10, H / 4)
-    val ys = q(14, H)
-    val rs = math.min(2, H - ys) // stripe rows actually drawn
-    val ov = math.max(0, math.min(y0 + h, ys + rs) - math.max(y0, ys))
-    val sa = (W * rs).toLong            // stripe area
-    val rv = (w * (h - ov)).toLong      // rectangle visible area
-    val bg = NPix - sa - rv
-    Seq(
-      (bg, q(1, 256), q(2, 256), q(3, 256)),
-      (rv, q(4, 256), q(5, 256), q(6, 256)),
-      (sa, q(11, 256), q(12, 256), q(13, 256)))
-  }
-
   /** Exact region census of the 4-fill drawing. Paint order bg →
     * rect2 → rect1 → stripe, so: stripe = full rows; rect1 visible =
     * area minus its stripe y-overlap (stripe is full-width); rect2
@@ -220,11 +196,6 @@ object ImageGen {
       (rv2, q(15, 256), q(16, 256), q(17, 256)),
       (sa, q(11, 256), q(12, 256), q(13, 256)))
   }
-
-  /** Closed-form integer features of the 3-fill drawing — MUST equal
-    * `Multimodal.imageIntFeatures(decode(draw(...)))` (spec-pinned). */
-  def featuresOf(key: Long, base: Long, shift: Int): Seq[(Int, Long)] =
-    census(regions(key, base, shift))
 
   /** Closed-form integer features of the 4-fill drawing — MUST equal
     * `Multimodal.imageIntFeatures(decode(draw2(...)))` (spec-pinned). */

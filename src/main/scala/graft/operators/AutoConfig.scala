@@ -61,8 +61,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the frontier inputs are the audited q180/q175 plans
   * unchanged (one signature + one truth pass shared across bandings;
-  * ~3 corpus scans for 9 IVF configs); the selection itself is a
-  * 4-to-9-row TakeOrdered — plan-time state, never data-scale.
+  * ~3 corpus scans for 9 IVF configs); the selection itself is an
+  * unpartitioned window over 4 to 9 rows — plan-time state, never
+  * data-scale.
   * Reference for the surveyed semantics: the reference engine's
   * parameter blocks fix these knobs statically in config
   * (/root/reference/README.md:82-103); the frontier tables + argmin
@@ -88,9 +89,9 @@ object AutoConfig {
   private[graft] val CandidateBudgetMax = 1000000L
 
   /** The relational argmin over any frontier frame carrying
-    * (config, candidates, recall_ppm, pref). Total order documented
-    * in the object Scaladoc; LIMIT 1 compiles to TakeOrderedAndProject
-    * over the ≤|grid|-row frontier — driver state is one row.
+    * (config, candidates, recall_ppm, pref): the one row whose
+    * [[selectedFlag]] is set. Total order documented in the object
+    * Scaladoc and written once, in [[selectedFlag]].
     *
     * FRESHNESS CONTRACT (round-13 verdict #4): the frontier MUST be
     * measured on (a deterministic sample of) the corpus the selection
@@ -106,19 +107,13 @@ object AutoConfig {
     * fingerprint or re-measure-on-read), not a cached table.
     * AutoConfigSpec's freshness test demonstrates the inversion. */
   private[graft] def selectConfig(frontier: DataFrame, floorPpm: Long,
-      budget: Long): DataFrame = {
-    val qual = frontier.withColumn("qual",
-      (col("recall_ppm") >= floorPpm && col("candidates") <= budget)
-        .cast("int"))
-    qual.orderBy(col("qual").desc,
-        when(col("qual") === 1, col("candidates")).otherwise(lit(0L)).asc,
-        col("recall_ppm").desc, col("candidates").asc,
-        col("pref").asc, col("config").asc)
-      .limit(1)
+      budget: Long): DataFrame =
+    // the flag is a column first: a window cannot sit inside a filter
+    frontier.withColumn("selected", selectedFlag(floorPpm, budget))
+      .filter(col("selected") === 1L)
       .select(col("config"), col("candidates"), col("recall_ppm"),
         lit(floorPpm).as("floor_ppm"), lit(budget).as("budget_max"),
-        col("qual").cast("long").as("meets_floor"))
-  }
+        qualifies(floorPpm, budget).cast("long").as("meets_floor"))
 
   /** The q180 frontier with its margin tie-break attached. */
   private[graft] def bandingChoice(docs: DataFrame): DataFrame =
@@ -217,16 +212,18 @@ object AutoConfig {
     * one by two orders of magnitude. */
   private[graft] val FamilyRecallFloorPpm = 900000L
 
+  /** A frontier row meets the recall floor within the budget. */
+  private def qualifies(floorPpm: Long, budget: Long): Column =
+    col("recall_ppm") >= floorPpm && col("candidates") <= budget
+
   /** The q192 total order as a SELECTED flag over an already-built
-    * frontier frame (config, candidates, recall_ppm, pref) — q197
-    * gates the WHOLE frontier plus both selection scenarios in one
-    * output, so the argmin is replayed as a rank-1 window rather than
-    * a LIMIT 1. The window is unpartitioned BY DESIGN: the frontier
-    * is ≤ a handful of family rows (plan-time state, never
-    * data-scale), same driver posture as selectConfig's TakeOrdered. */
+    * frontier frame (config, candidates, recall_ppm, pref): 1 on the
+    * rank-1 row. [[selectConfig]] keeps that row; q197 gates the
+    * WHOLE frontier plus both selection scenarios in one output. The
+    * window is unpartitioned BY DESIGN: the frontier is ≤ 9 rows
+    * (plan-time state, never data-scale). */
   private[graft] def selectedFlag(floorPpm: Long, budget: Long): Column = {
-    val qual = (col("recall_ppm") >= floorPpm &&
-      col("candidates") <= budget).cast("int")
+    val qual = qualifies(floorPpm, budget).cast("int")
     val w = Window.orderBy(qual.desc,
       when(qual === 1, col("candidates")).otherwise(lit(0L)).asc,
       col("recall_ppm").desc, col("candidates").asc,
@@ -271,19 +268,17 @@ object AutoConfig {
         .crossJoin(cand.agg(count(lit(1)).as("candidates")))
         .withColumn("config", lit(config))
         .withColumn("pref", lit(pref.toLong))
-    // r15 (guide §2.6): the three family chains (candidate pass →
-    // checkpoint → verify → CC walk → census) are independent and
-    // deterministic over the shared CHECKPOINTED corpus — run them
-    // from driver threads; inParallel preserves row order.
-    Tables.inParallel[DataFrame](Seq(
-      () => {
+    // the three family chains (candidate pass → cut → verify → CC
+    // walk → census) fork over the shared cut corpus
+    Tables.inParallel("AutoConfig.dedupFamilyFrontier", Seq(
+      "exact" -> { () =>
         val exCand = Dedup.jaccardCandidates(corpus)
           .cut("AutoConfig.dedupFamilyFrontier: exact candidates")
         row("exact", "exact", 0, exCand,
           MinHashLSH.verify(corpus, exCand, "doc_id", "text", 3, 0.5)
             .select(col("doc_a"), col("doc_b")))
       },
-      () => {
+      "minhash" -> { () =>
         val mhCand = MinHashLSH.candidatePairs(
           MinHashLSH.bandBuckets(corpus, "doc_id", "text", 64, 16, 3))
           .cut("AutoConfig.dedupFamilyFrontier: minhash candidates")
@@ -291,7 +286,7 @@ object AutoConfig {
           MinHashLSH.verify(corpus, mhCand, "doc_id", "text", 3, 0.5)
             .select(col("doc_a"), col("doc_b")))
       },
-      () => {
+      "simhash128" -> { () =>
         val shCand = Dedup.simhashPairsWide(corpus)
           .cut("AutoConfig.dedupFamilyFrontier: simhash candidates")
         row("simhash128", "sim128_h3", 2, shCand,
@@ -330,9 +325,9 @@ object AutoConfig {
       case "exact" => Dedup.dedupKeep(d)
       case "b16r4" => Dedup.dedupKeepLsh(d, 16)
       case _ =>
-        // widen (r14): the other two branches widen inside their
-        // dedupKeep bodies; the fingerprint pass here needs it too
-        val drop = Dedup.simhashPairsWide(Dedup.widen(d))
+        // the other two branches spread inside their dedupKeep
+        // bodies; the fingerprint pass here needs it too
+        val drop = Dedup.simhashPairsWide(Tables.spread(d, col("doc_id")))
           .filter(col("hamming") <= 3)
           .select(col("doc_b").as("doc_id")).distinct()
         d.join(drop, Seq("doc_id"), "left_anti")
@@ -412,8 +407,8 @@ object AutoConfig {
     val cfg = sel.getString(0)
     val fam = sel.getString(1)
     val radius = sel.getLong(2)
-    // widen (r14): parallelize the full-corpus fingerprint pass
-    val wd = Dedup.widen(d)
+    // spread: parallelize the full-corpus fingerprint pass
+    val wd = Tables.spread(d, col("doc_id"))
     val pairs =
       if (fam == "sim64") Dedup.simhashPairs(wd) else Dedup.simhashPairsWide(wd)
     val drop = pairs.filter(col("hamming") <= radius)
@@ -722,13 +717,12 @@ object AutoConfig {
     //    from the measured q180/q175 tables. EXACT-gated: the oracle
     //    replays both frontier derivations and the same total order. --
     "q192_autoconfig" -> { (s, dir) =>
-      // r15 (guide §2.6): the two family frontiers touch disjoint
-      // tables and are deterministic — build them concurrently
-      val Seq(mh, ivf) = Tables.inParallel[DataFrame](Seq(
-        () => bandingChoice(Tables.load(s, dir, "documents"))
-          .select(lit("minhash_banding").as("family"), col("*")),
-        () => ivfChoice(Tables.load(s, dir, "embeddings"))
-          .select(lit("ivf").as("family"), col("*"))))
+      // the two family frontiers read disjoint tables
+      val Seq(mh, ivf) = Tables.inParallel("AutoConfig.q192_autoconfig", Seq(
+        "minhash_banding" -> { () => bandingChoice(Tables.load(s, dir, "documents"))
+          .select(lit("minhash_banding").as("family"), col("*")) },
+        "ivf" -> { () => ivfChoice(Tables.load(s, dir, "embeddings"))
+          .select(lit("ivf").as("family"), col("*")) }))
       mh.unionByName(ivf)
     },
 
@@ -834,12 +828,12 @@ object AutoConfig {
     //    selection legs. --
     "q204_persisted_frontier" -> { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      // r15 (guide §2.6): the full and slice frontier measurements are
-      // independent deterministic chains — build them concurrently
-      val Seq(fresh, stale) = Tables.inParallel[DataFrame](Seq(
-        () => stampedIvfFrontier(e).cut("AutoConfig.q204_persisted_frontier: full frontier"),
-        () => stampedIvfFrontier(e.filter(col("vec_id") % 8 === 0))
-          .cut("AutoConfig.q204_persisted_frontier: slice frontier")))
+      // the full and the slice frontier are measured side by side
+      val Seq(fresh, stale) = Tables.inParallel("AutoConfig.q204_persisted_frontier", Seq(
+        "full frontier" -> { () => stampedIvfFrontier(e)
+          .cut("AutoConfig.q204_persisted_frontier: full frontier") },
+        "slice frontier" -> { () => stampedIvfFrontier(e.filter(col("vec_id") % 8 === 0))
+          .cut("AutoConfig.q204_persisted_frontier: slice frontier") }))
       // r15: ONE serving-corpus fingerprint scan shared by both
       // checks (was one per check), and the stale scenario's
       // re-measure branch reads the already-checkpointed fresh

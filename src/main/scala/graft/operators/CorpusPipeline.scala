@@ -495,18 +495,14 @@ object CorpusPipeline {
     * below checkpoints, which collapses the visible plan to the
     * materialized RDD scan). */
   private[graft] def buildPipeline(s: SparkSession, dir: String,
-      spec: String = specJson,
-      docsOverride: Option[DataFrame] = None,
-      embOverride: Option[DataFrame] = None): (DataFrame, Seq[DataFrame]) = {
+      spec: String = specJson): (DataFrame, Seq[DataFrame]) = {
     val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
     val blocks = PipelineSpec.fromJson(spec)
     val out = DagCompiler.runPipeline(
       blocks("Main"), registry(persisted),
       data = Map(
-        // overrides feed other frames through the identical compiled
-        // DAG (gate queries never pass them)
-        "documents" -> docsOverride.getOrElse(Tables.load(s, dir, "documents")),
-        "embeddings" -> embOverride.getOrElse(Tables.load(s, dir, "embeddings"))),
+        "documents" -> Tables.load(s, dir, "documents"),
+        "embeddings" -> Tables.load(s, dir, "embeddings")),
       params = Map.empty, spark = Some(s)).asInstanceOf[DataFrame]
     (out, persisted.toSeq)
   }

@@ -124,26 +124,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Widen narrow inputs before compute-heavy map stages: a single
-    * small parquet file arrives as ONE partition and would serialize
-    * the shingle work. Gated on the actual partition count so a
-    * real-scale source (already wide) pays NO unconditional shuffle
-    * (round-1 verdict minor #4). */
-  private[operators] def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // file count is the planner's own lower bound on scan parallelism
-    // and reading it never converts the plan to an RDD (round-2
-    // verdict minor #4: df.rdd.getNumPartitions materialized the RDD
-    // lineage just to read a number); a real-scale source has >=
-    // cores files and pays NO shuffle here
-    val files = df.inputFiles.length
-    // files == 0 means a non-file-backed plan (in-memory frame, post-
-    // transform view) whose partitioning we can't read without
-    // materializing — leave it alone rather than force a full shuffle
-    // (round-4 advice #4)
-    if (files == 0 || files >= target) df else df.repartition(target)
-  }
-
   /** Exact J ≥ 0.5 near-dup pairs over any documents-shaped frame
     * (needs `doc_id`, `text`) — the composable form q44/q53 and the
     * q93 pipeline share. */
@@ -170,7 +150,7 @@ object Dedup {
   }
 
   private val ngramJaccard: Q = { (s, dir) =>
-    jaccardPairs(widen(Tables.load(s, dir, "documents")))
+    jaccardPairs(Tables.spread(Tables.load(s, dir, "documents"), col("doc_id")))
   }
 
   /** Dedup materialization over any documents-shaped frame: drop every
@@ -179,7 +159,8 @@ object Dedup {
     * 4-column gate projection; the q93 pipeline chains it after
     * cleaning (text stays aboard for the downstream stages). */
   def dedupKeep(d: DataFrame): DataFrame = {
-    val drop = jaccardPairs(widen(d)).select(col("doc_b").as("doc_id")).distinct()
+    val drop = jaccardPairs(Tables.spread(d, col("doc_id")))
+      .select(col("doc_b").as("doc_id")).distinct()
     d.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -195,7 +176,7 @@ object Dedup {
     * collisions only, never a corpus-wide gram self-join. */
   def dedupKeepLsh(d: DataFrame, bands: Int): DataFrame = {
     val drop = graft.dedup.MinHashLSH
-      .nearDupPairs(widen(d), numHashes = 64, bands = bands,
+      .nearDupPairs(d, numHashes = 64, bands = bands,
         shingleN = 3, threshold = 0.5)
       .select(col("doc_b").as("doc_id")).distinct()
     d.join(drop, Seq("doc_id"), "left_anti")
@@ -257,9 +238,9 @@ object Dedup {
     // -- wide-simhash near-dup pairs (EXACT-gated by the splitmix64
     //    replay; DedupSpec pins completeness vs 128-bit brute force) --
     "q79_simhash_wide" -> { (s, dir) =>
-      // widen (r14): the single-split scan would serialize the
+      // spread: the single-split scan would serialize the
       // tokenize+fingerprint pass on one core
-      simhashPairsWide(widen(Tables.load(s, dir, "documents")))
+      simhashPairsWide(Tables.spread(Tables.load(s, dir, "documents"), col("doc_id")))
         .filter(col("hamming") <= 3)
     },
 
@@ -268,8 +249,8 @@ object Dedup {
     //    exact verify; DedupSpec additionally pins equality with the
     //    exact Jaccard query's output) --
     "q45_minhash_lsh" -> { (s, dir) =>
-      // widen (r14): parallelize the signature pass (see q79)
-      MinHashLSH.nearDupPairs(widen(Tables.load(s, dir, "documents")),
+      // nearDupPairs spreads the single-split scan itself
+      MinHashLSH.nearDupPairs(Tables.load(s, dir, "documents"),
         numHashes = 64, bands = 16, shingleN = 3, threshold = 0.5)
     },
 
@@ -277,8 +258,8 @@ object Dedup {
     //    verified by Hamming distance (complete for distance ≤ 3 by
     //    pigeonhole over 4 chunks); EXACT-gated like q79 --
     "q46_simhash_pairs" -> { (s, dir) =>
-      // widen (r14): parallelize the fingerprint pass (see q79)
-      simhashPairs(widen(Tables.load(s, dir, "documents")))
+      // spread: parallelize the fingerprint pass (see q79)
+      simhashPairs(Tables.spread(Tables.load(s, dir, "documents"), col("doc_id")))
         .filter(col("hamming") <= 3)
     },
 
@@ -403,7 +384,7 @@ object Dedup {
   private[graft] val BandGrid = Seq(32, 16, 8, 4)
 
   private[graft] def minhashFrontier(d: DataFrame): DataFrame = {
-    val wide = widen(d)
+    val wide = Tables.spread(d, col("doc_id"))
     val toks = wide.select(col("doc_id"),
         graft.functions.Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -416,10 +397,9 @@ object Dedup {
     val truth = jaccardPairs(wide).select(col("doc_a"), col("doc_b"))
       .cut("Dedup.minhashFrontier: truth pairs")
     val tc = truth.count() // scalar: |truth| (the recall denominator)
-    // r15 (guide §2.6): the four banding chains are independent,
-    // deterministic passes over the shared CHECKPOINTED signatures —
-    // run them from driver threads (order preserved)
-    val rows = Tables.inParallel(BandGrid.map { bands => () => {
+    // the four banding chains fork over the shared cut signatures
+    val rows = Tables.inParallel("Dedup.minhashFrontier",
+        BandGrid.map { bands => s"b${bands}r${64 / bands}" -> { () =>
       val r = 64 / bands
       val bandCols = (0 until bands).map(b =>
         graft.functions.SplitMix64.mixFold(slice(col("sig"), b * r + 1, r), b))
@@ -465,17 +445,16 @@ object Dedup {
     * per radius. Both truth and candidate sides grow with the corpus,
     * so the flag join is hinted off broadcast. */
   private[graft] def simhashFrontier(d: DataFrame): DataFrame = {
-    val wide = widen(d)
+    val wide = Tables.spread(d, col("doc_id"))
     val truth = jaccardPairs(wide).select(col("doc_a"), col("doc_b"))
       .withColumn("it", lit(1)).cut("Dedup.simhashFrontier: truth pairs")
     val tc = truth.count() // scalar: |truth| (the recall denominator)
     val fams = Seq("sim64" -> simhashPairs(wide),
       "sim128" -> simhashPairsWide(wide))
-    // r15 (guide §2.6): the two fingerprint families' candidate +
-    // flag passes are independent and deterministic over the shared
-    // CHECKPOINTED truth — run them from driver threads (order
-    // preserved)
-    val rows = Tables.inParallel(fams.map { case (fam, pairs) => () => {
+    // the two fingerprint families' candidate + flag passes fork over
+    // the shared cut truth
+    val rows = Tables.inParallel("Dedup.simhashFrontier",
+        fams.map { case (fam, pairs) => fam -> { () =>
       val flagged = pairs
         .join(truth.hint("shuffle_merge"), Seq("doc_a", "doc_b"), "left")
         .select(col("hamming"), coalesce(col("it"), lit(0)).as("it"))
@@ -654,9 +633,9 @@ object Dedup {
     import graft.streaming.DocStreams
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
     val corpus = d.filter(h < "aaaaaaaa")
-    val day1 = widen(d.filter(h >= "aaaaaaaa" && h < "dddddddd"))
-    val day2 = widen(d.filter(h >= "dddddddd"))
-    val idx = DocStreams.buildIndex(widen(corpus))
+    val day1 = Tables.spread(d.filter(h >= "aaaaaaaa" && h < "dddddddd"), col("doc_id"))
+    val day2 = Tables.spread(d.filter(h >= "dddddddd"), col("doc_id"))
+    val idx = DocStreams.buildIndex(Tables.spread(corpus, col("doc_id")))
     val f1 = DocStreams.flagBatch(day1, idx).cut("Dedup.indexMaintenance: day-1 flags")
     val survivors = day1.join(
       f1.filter(col("is_dup") === 0L).select(col("doc_id"))
@@ -679,10 +658,11 @@ object Dedup {
     * checkpointed by the CC loop already. Invariant (spec-pinned):
     * Σ multiplicity = |corpus|. */
   private[graft] def dedupUpweight(d: DataFrame): DataFrame = {
-    // widen, like dedupKeep: a narrow-file input would otherwise
+    // spread, like dedupKeep: a narrow-file input would otherwise
     // serialize the gram/pair stage (round-8 advice #4)
     val labels = graft.dedup.ConnectedComponents
-      .clusterLabels(jaccardPairs(widen(d))).cut("Dedup.dedupUpweight: cluster labels")
+      .clusterLabels(jaccardPairs(Tables.spread(d, col("doc_id"))))
+      .cut("Dedup.dedupUpweight: cluster labels")
     val csize = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("m"))
     val reps = labels.filter(col("doc_id") === col("cluster_id"))
       .join(csize.hint("shuffle_merge"), "cluster_id")
@@ -710,9 +690,11 @@ object Dedup {
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
     val corpus = d.filter(h < "cccccccc")
     val inc = d.filter(h >= "cccccccc")
-    val cb = MinHashLSH.bandBuckets(widen(corpus), "doc_id", "text", 64, 16, 3)
+    val cb = MinHashLSH.bandBuckets(Tables.spread(corpus, col("doc_id")),
+        "doc_id", "text", 64, 16, 3)
       .select(col("band"), col("bucket"), col("doc_id").as("corp_id"))
-    val ib = MinHashLSH.bandBuckets(widen(inc), "doc_id", "text", 64, 16, 3)
+    val ib = MinHashLSH.bandBuckets(Tables.spread(inc, col("doc_id")),
+        "doc_id", "text", 64, 16, 3)
       .select(col("band"), col("bucket"), col("doc_id").as("inc_id"))
     val cand = ib.hint("shuffle_merge")
       .join(cb.hint("shuffle_merge"), Seq("band", "bucket"))

@@ -82,18 +82,17 @@ object DedupQuality {
     val junk = transform(sequence(lit(1L), col("k")),
       i => concat(lit("x"), col("vid").cast("string"), lit("_"),
         i.cast("string")))
-    // widen (r14 optimization): the construction is map-side over the
-    // single-split documents scan, so the frame (and the
-    // cuts consumers take of it) would otherwise carry ONE
-    // partition — serializing every family's shingle/signature/
-    // fingerprint pass in q193/q197/q201 on one core. Dedup.widen is
-    // gated on the scan's file count: a no-op at real scale and on
-    // the spec's in-memory frames.
-    Dedup.widen(v.select(col("vid").as("doc_id"),
+    // spread: the construction is map-side over the single-split
+    // documents scan, so the frame (and the cuts consumers take of
+    // it) would otherwise carry ONE partition — serializing every
+    // family's shingle/signature/fingerprint pass in q193/q197/q201
+    // on one core. A no-op at real scale and on the spec's in-memory
+    // frames.
+    Tables.spread(v.select(col("vid").as("doc_id"),
       when(col("j") === 0, concat_ws(" ", col("t")))
         .otherwise(concat_ws(" ",
           concat(slice(col("t"), lit(1), (col("n") - col("k")).cast("int")),
-            junk))).as("text")))
+            junk))).as("text")), col("doc_id"))
   }
 
   /** One family's quality row from its pair set: CC-cluster the
@@ -154,15 +153,12 @@ object DedupQuality {
       .select(col("doc_a"), col("doc_b"))
     val simhash = Dedup.simhashPairsWide(corpus)
       .filter(col("hamming") <= 3).select(col("doc_a"), col("doc_b"))
-    // r15 (guide §2.6): the three family stacks (candidates → verify →
-    // CC walk → census) are independent, deterministic chains of small
-    // stages over the shared CHECKPOINTED corpus — run them from
-    // driver threads; output order is preserved (inParallel keeps
-    // input order), results unchanged by scheduling.
-    Tables.inParallel[DataFrame](Seq(
-      () => familyRow("exact", corpus, exact),
-      () => familyRow("minhash", corpus, minhash),
-      () => familyRow("simhash128", corpus, simhash)))
+    // the three family stacks (candidates → verify → CC walk →
+    // census) fork over the shared cut corpus
+    Tables.inParallel("DedupQuality.qualityTable", Seq(
+      "exact" -> { () => familyRow("exact", corpus, exact) },
+      "minhash" -> { () => familyRow("minhash", corpus, minhash) },
+      "simhash128" -> { () => familyRow("simhash128", corpus, simhash) }))
       .reduce(_.unionByName(_))
   }
 

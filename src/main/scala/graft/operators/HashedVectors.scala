@@ -159,21 +159,16 @@ object HashedVectors {
     //    rule are q94b's verbatim (Centroids94 prefix, argmax-cosine
     //    assignment, top-6 probe cells, round-6 re-rank). --
     "q151_hashed_vector_ivf" -> { (s, dir) =>
-      val e0 = denseVectors(Tables.load(s, dir, "documents"))
+      // spread before the cut: AQE coalesces the tiny dense-vector
+      // aggregate to very few partitions and the cut would freeze
+      // that, so the per-row 64-cosine assignment + candidate join
+      // would run nearly serial. The spread's explicit partition count
+      // is not coalesced, so the cut carries one partition per core.
+      val e = Tables.spread(denseVectors(Tables.load(s, dir, "documents")),
+          col("vec_id"))
         .cut("HashedVectors.q151_hashed_vector_ivf: dense vectors")
-      // spread (r15): AQE coalesces the tiny dense-vector aggregate to
-      // very few partitions and the checkpoint freezes that, so the
-      // per-row 64-cosine assignment + candidate join ran nearly
-      // serial. The frame is already materialized (checkpointed), so
-      // reading its partition count is free — the inputFiles gate
-      // cannot see a non-file-backed frame (files == 0). Keyed
-      // deterministic repartition; no-op when the corpus already
-      // carries >= cores partitions.
-      val target = s.sparkContext.defaultParallelism
-      val e = if (e0.rdd.getNumPartitions >= target) e0
-        else e0.repartition(target, col("vec_id"))
       Similarity.knnJoinQuery(e,
-        Centroids94.table.take(Similarity.adaptiveCells(e0.count())))
+        Centroids94.table.take(Similarity.adaptiveCells(e.count())))
     },
   )
 

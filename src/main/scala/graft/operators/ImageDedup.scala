@@ -195,15 +195,10 @@ object ImageDedup {
     * independently by both engines rather than written once and read
     * twice. Scale shape: the draw+decode is map-side over the
     * documents scan (one row per doc, no shuffle added); everything
-    * downstream is the audited q156 kernel. */
-  private[graft] def scaledImages(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[Media] =
-    scaledImagesFrom(graft.Tables.load(s, dir, "documents"))
-
-  /** The scaled corpus over any documents-shaped frame (needs
-    * `doc_id`) — the q176 compiled pipeline's `image_neardups` node
-    * binds the DAG's loaded table here instead of re-reading the
-    * directory. */
+    * downstream is the audited q156 kernel. Takes any
+    * documents-shaped frame (needs `doc_id`): the q176 compiled
+    * pipeline's `image_neardups` node binds the DAG's loaded table
+    * here instead of re-reading the directory. */
   private[graft] def scaledImagesFrom(docs: DataFrame)
       : org.apache.spark.sql.Dataset[Media] = {
     val s = docs.sparkSession

@@ -55,7 +55,6 @@ object KMeansTrain {
 
   /** q129 constants: M subspaces of PqSub dims each (M·PqSub = Dim),
     * PqK codes per subspace, PqIters Lloyd rounds. */
-  private[graft] val PqM = 4
   private[graft] val PqSub = 16
   private[graft] val PqK = 8
   private[graft] val PqIters = 2
@@ -292,15 +291,12 @@ object KMeansTrain {
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
       .withColumn("code",
         (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
-    // r15 (guide §2.6 overlap independent jobs): the three M-trainings
-    // are independent, deterministic chains of SMALL sequential stages
-    // (each round is a broadcast join + groupBy over the shared
-    // persisted coordinates) — run them from driver threads so one
-    // training's round tail back-fills the cores the others leave
-    // idle. qv0 is already materialized (the truth checkpoint above
-    // scanned it), so the futures never race its caching. Results are
-    // per-M deterministic and unchanged by scheduling.
-    val parts = graft.Tables.inParallel(PqMGrid.map { m => () => {
+    // the three M-trainings (each round a broadcast join + groupBy
+    // over the shared persisted coordinates) fork; qv0 is already
+    // materialized (the truth cut above scanned it), so the branches
+    // never race its caching
+    val parts = graft.Tables.inParallel("KMeansTrain.pqFrontierDetail",
+        PqMGrid.map { m => s"m$m" -> { () =>
       val subDim = Dim / m
       // re-KEY the shared coordinates for this M: a projection over
       // the persisted table, never a second explode

@@ -796,12 +796,11 @@ object Similarity {
       frontierRow(all.filter(col("pr") <= np).drop("pr"), bf, nq, label,
         Seq("ncells" -> ncells.toLong, "nprobe" -> np.toLong))
     val npA = adaptiveNProbe(cellsA)
-    // r15 (guide §2.6): the two codebooks' assignment + candidate
-    // chains are independent and deterministic — build concurrently
-    val Seq(fAll, aAll) = Tables.inParallel[DataFrame](Seq(
-      () => { val (a, q2) = ranked(Centroids86.table)
+    // the two codebooks' assignment + candidate chains fork
+    val Seq(fAll, aAll) = Tables.inParallel("Similarity.recallFrontier", Seq(
+      "ivf16" -> { () => val (a, q2) = ranked(Centroids86.table)
         candAll(a, q2, FrontierProbes.max) },
-      () => { val (a, q2) = ranked(Centroids94.table.take(cellsA))
+      "ivfA" -> { () => val (a, q2) = ranked(Centroids94.table.take(cellsA))
         candAll(a, q2, math.max(FrontierProbes.max, npA)) }))
     val rows =
       FrontierProbes.map(p => cfgRow(s"ivf16_p$p", fAll, 16, p)) ++
@@ -870,12 +869,10 @@ object Similarity {
           Seq("nplanes" -> planes.length.toLong, "probe_depth" -> d.toLong))
       }
     }
-    // r15 (guide §2.6): the two plane families are independent and
-    // deterministic — build their bucket + candidate chains
-    // concurrently (order preserved)
-    Tables.inParallel(Seq(
-      () => family("lsh4", Planes),
-      () => family("lsh8", Planes177)))
+    // the two plane families' bucket + candidate chains fork
+    Tables.inParallel("Similarity.lshFrontier", Seq(
+      "lsh4" -> { () => family("lsh4", Planes) },
+      "lsh8" -> { () => family("lsh8", Planes177) }))
       .flatten.reduce(_.unionByName(_))
   }
 

@@ -4,9 +4,9 @@ import graft.Cut._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The one materialization primitive: labelled jobs, the caller's job
-  * description restored, rows unchanged, and no other checkpoint call
-  * in the program. */
+/** The one materialization primitive and the one fork: labelled jobs,
+  * the caller's job description restored, rows unchanged, and no other
+  * checkpoint call, thread pool or scan-width probe in the program. */
 class CutSpec extends SparkSpec {
   private def description: String =
     spark.sparkContext.getLocalProperty(Cut.Description)
@@ -48,15 +48,86 @@ class CutSpec extends SparkSpec {
     } finally spark.sparkContext.setJobDescription(initial)
   }
 
-  test("no label is left on Tables.inParallel's pooled threads") {
-    val seen = Tables.inParallel((0 until 8).map { i => () =>
-      val before = description
-      frame.cut(s"CutSpec: branch $i")
-      (before, description)
-    })
-    seen.foreach { case (before, after) => assert(after === before) }
-    assert(!Tables.inParallel(Seq.fill(8)(() => description))
-      .exists(d => d != null && d.startsWith("CutSpec")))
+  /** `body`'s value and the properties of every job it started, in
+    * start order. Listener events arrive asynchronously but in order
+    * on one queue, so a marked sentinel job run after `body` flushes
+    * them. */
+  private def jobsOf[A](body: => A): (A, Seq[java.util.Properties]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties()))
+    }
+    val marker = java.util.UUID.randomUUID().toString
+    def flushed = seen.stream().anyMatch(p => p.getProperty(Cut.Description) == marker)
+    spark.sparkContext.addSparkListener(listener)
+    val previous = description
+    try {
+      val v = body
+      spark.sparkContext.setJobDescription(marker)
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(flushed, "listener events did not arrive")
+      import scala.jdk.CollectionConverters._
+      (v, seen.asScala.toSeq.filterNot(_.getProperty(Cut.Description) == marker))
+    } finally {
+      spark.sparkContext.setJobDescription(previous)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.inParallel: branch jobs carry its label, cuts keep theirs, the caller's stays") {
+    val initial = description
+    try {
+      spark.sparkContext.setJobDescription("caller")
+      val ((after, callerAfter), jobs) = jobsOf {
+        val r = Tables.inParallel("CutSpec.fanout",
+          Seq("a", "b").map { b => b -> { () =>
+            frame.groupBy(col("k")).count().collect()
+            frame.cut(s"CutSpec: cut in $b")
+            description
+          } })
+        (r, description)
+      }
+      // a cut restores the branch's label, not the caller's
+      assert(after === Seq("CutSpec.fanout: a", "CutSpec.fanout: b"))
+      val labels = jobs.map(_.getProperty(Cut.Description)).toSet
+      assert(labels === Set("CutSpec.fanout: a", "CutSpec.fanout: b",
+        "CutSpec: cut in a", "CutSpec: cut in b"))
+      assert(callerAfter === "caller")
+    } finally spark.sparkContext.setJobDescription(initial)
+  }
+
+  test("Tables.inParallel: the caller's job group reaches branch jobs, call after call") {
+    val sc = spark.sparkContext
+    try for (group <- Seq("CutSpec-group-1", "CutSpec-group-2")) {
+      sc.setJobGroup(group, "fan-out under a job group")
+      val (_, jobs) = jobsOf(Tables.inParallel("CutSpec.groups",
+        (0 until 4).map(i => s"b$i" -> { () => frame.count() })))
+      assert(jobs.nonEmpty)
+      val groups = jobs.map(_.getProperty("spark.jobGroup.id"))
+      assert(groups.forall(_ == group), groups)
+    } finally sc.clearJobGroup()
+  }
+
+  test("Tables.inParallel: input order, a branch's own exception, no thread outlives the call") {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    def branch[A](name: String)(f: => A): (String, () => A) =
+      name -> { () => threads.add(Thread.currentThread); f }
+    // later branches finish first; results still come back in input order
+    assert(Tables.inParallel("CutSpec.order", (0 until 4).map(i =>
+      branch(s"b$i") { Thread.sleep((4 - i) * 50L); i })) === (0 until 4))
+    class BranchFailure extends RuntimeException("branch failed")
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    intercept[BranchFailure](Tables.inParallel("CutSpec.failure", Seq(
+      branch("slow") { Thread.sleep(300); slowDone.set(true); 0 },
+      branch("fails") { throw new BranchFailure })))
+    // the call waited for the slow branch before it rethrew
+    assert(slowDone.get)
+    import scala.jdk.CollectionConverters._
+    assert(threads.size === 6)
+    assert(threads.asScala.forall(!_.isAlive), threads.asScala.map(_.getName))
   }
 
   test("a cut returns the input's rows") {
@@ -80,5 +151,21 @@ class CutSpec extends SparkSpec {
       if needles.exists(line.contains)
     } yield s"$f:${i + 1}: $line"
     assert(calls.isEmpty, calls.mkString("\n"))
+  }
+
+  test("no fork or scan-width probe in src/main outside Tables.scala") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("Tables.scala")), files)
+    // spelled from parts so this file does not match itself
+    val needles = Seq("scala" + ".concurrent", "Execution" + "Context",
+      "." + "inputFiles")
+    val hits = for {
+      f <- files if !f.endsWith("Tables.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if needles.exists(line.contains)
+    } yield s"$f:${i + 1}: $line"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

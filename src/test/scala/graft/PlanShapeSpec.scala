@@ -1207,4 +1207,34 @@ class PlanShapeSpec extends SparkSpec {
       // just require two HashAggregates and one shuffle exchange
       (count(p, "HashAggregate") >= 2 && p.contains("Exchange")), p)
   }
+
+  test("Tables.spread: a one-file frame is hash-keyed on the column, one split per core") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    val target = spark.sparkContext.defaultParallelism
+    val docs = Tables.load(spark, sf0001, "documents")
+    assert(docs.inputFiles.length === 1 && target > 1)
+    val out = Tables.spread(docs, org.apache.spark.sql.functions.col("doc_id"))
+    val keys = out.queryExecution.optimizedPlan.collect {
+      case r: RepartitionByExpression =>
+        (r.partitionExpressions.collect { case a: AttributeReference => a.name },
+          r.optNumPartitions)
+    }
+    assert(keys === Seq((Seq("doc_id"), Some(target))), out.queryExecution.optimizedPlan)
+    assert(out.rdd.getNumPartitions === target)
+  }
+
+  test("Tables.spread: a frame that is not file-backed comes back unchanged") {
+    val df = spark.range(0, 100, 1, 1).toDF()
+    assert(Tables.spread(df, org.apache.spark.sql.functions.col("id")) eq df)
+  }
+
+  test("Tables.spread: a frame with at least one file per core comes back unchanged") {
+    val target = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graftspread").resolve("t").toString
+    spark.range(0, 100, 1, target).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    assert(df.inputFiles.length >= target)
+    assert(Tables.spread(df, org.apache.spark.sql.functions.col("id")) eq df)
+  }
 }

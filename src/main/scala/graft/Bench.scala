@@ -1,5 +1,7 @@
 package graft
 
+import graft.run.RunObservability
+import graft.run.RunObservability.StageRecord
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
@@ -41,6 +43,17 @@ object Bench {
       pins: Map[String, Double]): Seq[String] =
     best.collect { case (n, t) if t >= 0 && pins.get(n).exists(t > _) => n }
 
+  /** One BENCH_STAGES.json entry: a timed pass's completed stage. */
+  private[graft] def stageJson(pass: Int, r: StageRecord): String = {
+    import SparkEntry.jsonString
+    s"""{"pass":$pass,"query":${jsonString(r.query)},"label":${jsonString(r.label)},""" +
+      s""""stage":${r.stageId},"name":${jsonString(r.name)},"wall_ms":${r.wallMs},""" +
+      s""""task_ms":${r.taskMs},"tasks":${r.tasks},""" +
+      s""""shuffle_read_bytes":${r.shuffleReadBytes},""" +
+      s""""shuffle_write_bytes":${r.shuffleWriteBytes},"spill_bytes":${r.spillBytes},""" +
+      s""""records_read":${r.recordsRead},"records_written":${r.recordsWritten}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -59,22 +72,19 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
 
-    def execute(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      catch {
-        case NonFatal(e) =>
+    // the one profiler, silent: Bench keeps its stage records
+    val progress = RunObservability.attachProgress(spark, _ => ())
+
+    // one sweep over `names`; a failed query reads -1
+    def execute(names: Seq[String]): Seq[(String, Double)] =
+      SparkEntry.sweep(spark, names, SparkEntry.queries(_)(spark, sfDir)) { (_, df) =>
+        df.write.mode("overwrite").format("noop").save()
+      }.map {
+        case (name, Right(sec)) => name -> sec
+        case (name, Left(e)) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
+          name -> -1.0
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // queries that persist intermediates (q44 family) are scoped to
-      // their own action: drop the cache so no cached relation
-      // outlives its query and later queries aren't cross-subsidized
-      spark.sharedState.cacheManager.clearCache()
-      sec
-    }
 
     // warmup: JIT + codegen + parquet footer caches. q44 warms the
     // dedup family's codegen (WordNGrams/PrefixRarest kernels + the
@@ -82,9 +92,9 @@ object Bench {
     // ~2 s of JIT that no other query amortizes, which left
     // best-of-2 with a single clean sample (round-6 A/B: passes of
     // 5.67/4.12/3.77 without this warmup, flat ~3.8-4.2 with it).
-    execute("q01_agg")
-    execute("q04_join_multi_broadcast")
-    execute("q44_ngram_jaccard")
+    // Its stage records are dropped.
+    execute(Seq("q01_agg", "q04_join_multi_broadcast", "q44_ngram_jaccard"))
+    progress.drain(spark.sparkContext)
 
     // optional arg: comma-separated query-name filter (local iteration)
     val names = args.headOption match {
@@ -94,12 +104,13 @@ object Bench {
 
     def fmt(d: Double): String = "%.6f".format(d)
 
-    // interleaved passes: each is one sweep over the whole suite
-    val raw: Seq[(Double, Double, Seq[(String, Double)])] =
+    // interleaved passes: each is one sweep over the whole suite,
+    // kept with the stage records of its queries
+    val raw: Seq[(Double, Double, Seq[(String, Double)], Seq[StageRecord])] =
       (1 to passes).map { _ =>
         val l0 = loadAvg
-        val times = names.map(n => n -> execute(n))
-        (l0, loadAvg, times)
+        val times = execute(names)
+        (l0, loadAvg, times, progress.drain(spark.sparkContext))
       }
     val best = names.map { n =>
       val ts = raw.flatMap(_._3.collect { case (`n`, t) if t >= 0 => t })
@@ -107,13 +118,13 @@ object Bench {
     }
     val qs = best.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val passJson = raw.map { case (l0, l1, times) =>
+    val passJson = raw.map { case (l0, l1, times, _) =>
       val ts = times.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       s"""{"load_start":${fmt(l0)},"load_end":${fmt(l1)},"queries":$ts}"""
     }.mkString("[", ",", "]")
     val loadsJson = raw
-      .map { case (l0, l1, _) => s"[${fmt(l0)},${fmt(l1)}]" }
+      .map { case (l0, l1, _, _) => s"[${fmt(l0)},${fmt(l1)}]" }
       .mkString("[", ",", "]")
     val total = best.map(_._2).filter(_ >= 0).sum
     // Pinned-threshold self-audit (round-5 verdict #1): compare each
@@ -154,10 +165,17 @@ object Bench {
     //      bulky passes/queries maps, plus the result-file pointer)
     //      prints LAST, so even a tail-truncated capture ends with
     //      one complete, parseable JSON object.
+    // The timed passes' stage records go to BENCH_STAGES.json beside
+    // the results file, one object per completed stage.
     try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (line + "\n").getBytes("UTF-8"))
+      val out = java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_RESULT.json"))
+      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+      val stages = raw.zipWithIndex.flatMap { case ((_, _, _, records), p) =>
+        records.map(stageJson(p + 1, _))
+      }.mkString("[\n", ",\n", "\n]\n")
+      java.nio.file.Files.write(out.toAbsolutePath.resolveSibling("BENCH_STAGES.json"),
+        stages.getBytes("UTF-8"))
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] result file write failed: ${e.getMessage}")
     }

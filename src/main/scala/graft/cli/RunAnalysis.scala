@@ -7,7 +7,7 @@ import graft.registry.AnalysisRegistry
 import graft.run.RunObservability
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** The `cosmap run <config.json>` entry point
   * (/root/reference/src/cosmap/entrypoint.py:46-60 →
@@ -37,23 +37,16 @@ object RunAnalysis {
     val analysisName = runConfig.get("base-analysis").map(_.toString)
       .getOrElse(throw new IllegalArgumentException(
         "run config missing 'base-analysis'"))
-    val reg = new AnalysisRegistry(Paths.get(registryDir))
-    val dir = reg.locate(analysisName)
-    val defaults =
-      if (Files.exists(dir.resolve("parameters.json")))
-        Files.readString(dir.resolve("parameters.json"))
-      else "{}"
-    val transformations = Files.readString(dir.resolve("transformations.json"))
+    val (defaults, transformations) =
+      new AnalysisRegistry(Paths.get(registryDir)).load(analysisName)
+    val cfg = AnalysisRunner.effectiveConfig(runConfig, defaults)
+    val sampling = AnalysisRunner.parseSampling(cfg)
 
     val progress = RunObservability.attachProgress(spark)
     try {
       val catalog = spark.read.parquet(catalogPath)
-      val out = AnalysisRunner.runParsed(spark, runConfig,
-        ConfigTree.parse(defaults), transformations, registry, catalog,
-        plugins = graft.pipeline.PluginManager.empty)
-      val expected = AnalysisRunner.parseSampling(
-        AnalysisRunner.effectiveConfig(runConfig, ConfigTree.parse(defaults)))
-        .nSamples
+      val out = AnalysisRunner.runParsed(spark, cfg, sampling, transformations,
+        registry, catalog, plugins = graft.pipeline.PluginManager.empty)
       val n = runConfig.get("output").map(_.toString) match {
         case Some(path) =>
           val fmt = ConfigTree.getPath(runConfig, "output_parameters.write_format")
@@ -61,8 +54,8 @@ object RunAnalysis {
           val written = Observation()
           Sinks.write(out.observe(written, count(lit(1)).as("rows")), path, fmt)
           RunObservability.checkCount(
-            written.get("rows").asInstanceOf[Long], expected)
-        case None => RunObservability.expectCount(out, expected)
+            written.get("rows").asInstanceOf[Long], sampling.nSamples)
+        case None => RunObservability.expectCount(out, sampling.nSamples)
       }
       (out, n)
     } finally spark.sparkContext.removeSparkListener(progress)
@@ -101,21 +94,9 @@ object StandardTransforms {
         .withColumn("distances_arcsec", col("sep_deg") * 3600.0)
     },
     "compute_result" -> graft.pipeline.Transform { args =>
-      val catalog = args("catalog").asInstanceOf[DataFrame]
-      val samples = args("samples").asInstanceOf[DataFrame]
-      val minRadiusArcsec =
-        ConfigTree.parseQuantityDeg(args("min_radius")) * 3600.0
-      val agg = catalog
-        .filter(col("distances_arcsec") > minRadiusArcsec)
-        .groupBy(col("sample_id"))
-        .agg(count(lit(1)).as("n"),
-          // milli-arcsec quantization matches quickstartAggregate
-          sum(round(col("distances_arcsec"), 3).cast("decimal(28,3)"))
-            .cast("double").as("inv"))
-      samples.select(col("sample_id"), col("ra"), col("dec"))
-        .join(agg, Seq("sample_id"), "left")
-        .select(col("sample_id"), col("ra"), col("dec"),
-          coalesce(col("n"), lit(0L)).as("n"),
-          coalesce(col("inv"), lit(0.0)).as("inv"))
+      graft.operators.CosmapDomain.quickstartAggregate(
+        args("catalog").asInstanceOf[DataFrame],
+        args("samples").asInstanceOf[DataFrame],
+        ConfigTree.parseQuantityDeg(args("min_radius")) * 3600.0)
     })
 }

@@ -167,14 +167,14 @@ object BpeTrainer {
       .select(col("step"), col("pair"), col("merged"), col("cnt"))
   }
 
-  /** Per-source segmentation stats after the k learned merges: word/
+  /** Per-source segmentation stats after the [[Merges]] learned merges: word/
     * symbol/char totals and symbols-per-char in integer ppm. The
     * corpus-scale occurrence stream joins the VOCABULARY-sized
     * segmentation on the token key — the standard inverted-index
     * family shape (vocab side hinted off broadcast: it grows with the
     * corpus). */
-  private[graft] def segmentStats(d: DataFrame, k: Int = Merges): DataFrame = {
-    val (_, seqs) = train(d, k)
+  private[graft] def segmentStats(d: DataFrame): DataFrame = {
+    val (_, seqs) = train(d)
     val occ = d.select(col("source"),
         explode(Text.tokens(col("text"))).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$"))
@@ -201,8 +201,8 @@ object BpeTrainer {
     * frame (k+1 w-keyed merge joins at VOCABULARY scale), then a
     * single corpus-scale join + one conditional aggregate feed every
     * frontier row (never one corpus pass per k). */
-  private[graft] def bpeFrontier(d: DataFrame, k: Int = Merges): DataFrame = {
-    val (_, trajectory) = trainTrajectory(d, k)
+  private[graft] def bpeFrontier(d: DataFrame): DataFrame = {
+    val (_, trajectory) = trainTrajectory(d)
     // (w, nchar, nseg0..nsegk): the trajectory folded to one
     // vocabulary-sized frame
     val vocab = trajectory.zipWithIndex.map { case (s, i) =>
@@ -212,10 +212,10 @@ object BpeTrainer {
     val occ = d.select(explode(Text.tokens(col("text"))).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$"))
     val aggs = count(lit(1)).as("n_words") +: sum(col("nchar")).as("n_chars") +:
-      (0 to k).map(i => sum(col(s"nseg$i")).as(s"sym$i"))
+      (0 to Merges).map(i => sum(col(s"nseg$i")).as(s"sym$i"))
     val one = occ.join(vocab.hint("shuffle_merge"), "w")
       .agg(aggs.head, aggs.tail: _*).cut("BpeTrainer.bpeFrontier: segment counts")
-    (0 to k).map { i =>
+    (0 to Merges).map { i =>
       one.select(lit(i.toLong).as("merges"), col("n_words"),
         col(s"sym$i").as("n_symbols"), col("n_chars"),
         expr(s"(1000000L * sym$i) div n_chars").as("compression_ppm"))

@@ -35,13 +35,15 @@ object CosmapDomain {
   /** orders → pseudo-catalog: ra ∈ [0,360) and dec ∈ [-60,60) on an
     * exact 0.1° lattice (integer-derived doubles — identical in any
     * engine). */
-  private def derivedCatalog(s: SparkSession, dir: String): DataFrame =
+  private[graft] def derivedCatalog(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "orders").select(
       col("o_orderkey").as("object_id"),
       ((col("o_orderkey") % 3600).cast("double") / 10.0).as("ra"),
       ((col("o_custkey") % 1200).cast("double") / 10.0 - 60.0).as("dec"))
 
-  private def derivedSamples(s: SparkSession, dir: String): DataFrame =
+  /** The q31/q68 sample cones. Both derived inputs are shared with
+    * ConeJoinSpec's boundary-margin probe. */
+  private[graft] def derivedSamples(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "region").select(
       col("r_regionkey").cast("long").as("sample_id"),
       (col("r_regionkey").cast("double") * 60.0 + 30.0).as("ra"),
@@ -166,12 +168,6 @@ object CosmapDomain {
       col("l_orderkey").as("object_id"),
       (lit(31.0) + (col("l_orderkey") % 7000).cast("double") / 1000.0).as("ra"),
       (lit(-11.0) + (col("l_partkey") % 7000).cast("double") / 1000.0).as("dec"))
-
-  /** The q31/q68 derived inputs, exposed for the same margin probe. */
-  private[graft] def derivedCatalogFor(s: SparkSession, dir: String): DataFrame =
-    derivedCatalog(s, dir)
-  private[graft] def derivedSamplesFor(s: SparkSession, dir: String): DataFrame =
-    derivedSamples(s, dir)
 
   /** q68: per-sample angular centroid of cone contents via the typed
     * CentroidAgg UDAF (partial+merge aggregation; buffer is 4 doubles

@@ -750,7 +750,7 @@ object Dedup {
   /** CTE chain computing per-occurrence token hashes: (doc_id, i, h)
     * with h = strHash(token i), over relation `src`. Distinct tokens
     * are hashed once. */
-  private def tokenHashCtes(src: String = "documents"): String =
+  private def tokenHashCtes(src: String): String =
     s"""tok AS (
        |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM $src),
        |pos AS (

@@ -39,10 +39,11 @@ import org.apache.spark.sql.functions._
 object RepeatedSpans {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Default window width (tokens) — the gate configuration. Lee et
-    * al. use 50 BPE tokens at web scale (pass w = 50 there); 8
-    * whitespace tokens keeps the synthetic gate corpus non-degenerate
-    * (its docs are a few hundred tokens). The oracles replay W = 8. */
+  /** Window width (tokens). Lee et al. use 50 BPE tokens at web
+    * scale; 8 whitespace tokens keeps the synthetic gate corpus
+    * non-degenerate (its docs are a few hundred tokens). The oracles
+    * replay W = 8; only RepeatedSpansSpec's randomized reference check
+    * passes [[repeatedSpans]] another width. */
   val W = 8
 
   /** Marked repeated spans per document: (doc_id, span_start,
@@ -97,14 +98,14 @@ object RepeatedSpans {
   /** Cross-source containment matrix: (source_a, source_b,
     * shared_grams, total_a, containment_ppm) for every ordered pair
     * with shared_grams > 0. Composable form. */
-  def sourceOverlap(d: DataFrame, n: Int = W): DataFrame = {
+  def sourceOverlap(d: DataFrame): DataFrame = {
     // distinct (source, gram): the per-doc distinct kernel shrinks the
     // explode before the global distinct's shuffle; persisted — three
     // plan references (both self-join sides + the totals), and the
     // parquet-size estimate would otherwise BROADCAST a corpus-
     // vocabulary-sized side (the q44 estimate-vs-reality lesson)
     val sg = d.select(col("source"),
-        explode(Text.wordNGrams(col("text"), n)).as("g"))
+        explode(Text.wordNGrams(col("text"), W)).as("g"))
       .distinct().persist()
     val tot = sg.groupBy(col("source")).agg(count(lit(1)).as("total_a"))
     // per-gram source list is <= |sources| rows a side: the self-join
@@ -133,8 +134,8 @@ object RepeatedSpans {
     * doc-keyed like the token table, so the anti-join is the SAME
     * doc-keyed shuffle family as the final groupBy — no new join
     * geometry; the interval predicate rides the equi-key. */
-  def scrubSpans(d: DataFrame, w: Int = W): DataFrame = {
-    val spans = repeatedSpans(d, w)
+  def scrubSpans(d: DataFrame): DataFrame = {
+    val spans = repeatedSpans(d)
       .select(col("doc_id"), col("span_start"), col("span_end"))
     val toks = d.select(col("doc_id"),
         posexplode(Text.tokens(col("text"))))
@@ -164,8 +165,8 @@ object RepeatedSpans {
     * unchanged. Note the reassembly normalizes whitespace (tokens
     * re-joined with single spaces) — identically on both engines, so
     * the composed oracle replays it. Fully-marked docs vanish. */
-  private[graft] def scrubKeep(d: DataFrame, w: Int = W): DataFrame =
-    scrubSpans(d, w)
+  private[graft] def scrubKeep(d: DataFrame): DataFrame =
+    scrubSpans(d)
       .select(col("doc_id"), col("text_clean").as("text"))
       .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
 

@@ -305,7 +305,7 @@ object Similarity {
       // spread (r15): the embeddings corpus is ONE parquet file — the
       // per-row 64-cosine assignment and the candidate join otherwise
       // run on a single core (the r14 media single-split lesson, found
-      // on the vector family via the q94b KnnProfile decomposition)
+      // on the vector family by round 15's stage-by-stage q94b timing)
       knnJoinQuery(Tables.spread(e, col("vec_id")),
         Centroids94.table.take(adaptiveCells(e.count())))
     },
@@ -636,7 +636,7 @@ object Similarity {
     // IsNotNull(cell)/IsNotNull(qcell) null-filters push below these
     // projections and RE-EVALUATE the whole ncells-cosine array per
     // row beneath the filter AND again in the projection (the guide
-    // §4.4 duplicated-evaluation problem, Scala flavor — KnnProfile
+    // §4.4 duplicated-evaluation problem, Scala flavor — round 15
     // measured the composed q94b join at 2.3 s vs 0.67 s for the
     // materialized sum of its parts at sf0.1/64 cells). The cut also
     // stops the planner broadcasting the expensive assignment subtree.

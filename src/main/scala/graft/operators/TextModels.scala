@@ -226,9 +226,9 @@ object TextModels {
 
   private[graft] val LoTopK = 10
 
-  /** Per-source top-k distinctive tokens by informative-Dirichlet
+  /** Per-source top-[[LoTopK]] distinctive tokens by informative-Dirichlet
     * log-odds z-score (uniform prior α=0.01/word, α0=0.01·V). */
-  private[graft] def logOddsTop(d: DataFrame, topK: Int = LoTopK): DataFrame = {
+  private[graft] def logOddsTop(d: DataFrame): DataFrame = {
     val occ = d.select(col("source"), explode(Text.tokens(col("text"))).as("w"))
     val ysw = occ.groupBy(col("source"), col("w")).agg(count(lit(1)).as("y_sw"))
     val yw = occ.groupBy(col("w")).agg(count(lit(1)).as("y_w"))
@@ -260,7 +260,7 @@ object TextModels {
     val win = Window.partitionBy(col("source"))
       .orderBy(col("z_milli").desc, col("token"))
     scored.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= LoTopK)
   }
 
   // ---- q112 stupid backoff ------------------------------------------

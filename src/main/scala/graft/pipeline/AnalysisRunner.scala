@@ -41,14 +41,7 @@ object AnalysisRunner {
   }
 
   final case class SamplingParams(bounds: SkyBounds, shape: SampleShape,
-                                  nSamples: Long, seed: Long) {
-    /** Circle radius, or the rectangle's circumradius (the tightest
-      * cone containing the footprint) for shape-agnostic consumers. */
-    def radiusDeg: Double = shape match {
-      case SampleShape.Circle(r) => r
-      case SampleShape.Rect(w, h) => math.hypot(w, h) / 2.0
-    }
-  }
+                                  nSamples: Long, seed: Long)
 
   /** A quantity list in degrees: `{"value": [...], "units": u}`, a
     * bare list of quantities, or one quantity (a one-element list).
@@ -142,19 +135,21 @@ object AnalysisRunner {
   def run(spark: SparkSession, runConfigJson: String,
           analysisDefaultsJson: String, transformationsJson: String,
           registry: TransformRegistry, catalog: DataFrame,
-          plugins: PluginManager = PluginManager.empty): DataFrame =
-    runParsed(spark, ConfigTree.parse(runConfigJson),
-      ConfigTree.parse(analysisDefaultsJson), transformationsJson,
-      registry, catalog, plugins)
+          plugins: PluginManager = PluginManager.empty): DataFrame = {
+    val cfg = effectiveConfig(ConfigTree.parse(runConfigJson),
+      ConfigTree.parse(analysisDefaultsJson))
+    runParsed(spark, cfg, parseSampling(cfg),
+      ConfigTree.parse(transformationsJson), registry, catalog, plugins)
+  }
 
   /** Tree-based entry (JSON and TOML configs both land here — see
-    * ConfigTree.parseFile). */
-  def runParsed(spark: SparkSession, runConfig: Tree,
-                analysisDefaults: Tree, transformationsJson: String,
-                registry: TransformRegistry, catalog: DataFrame,
-                plugins: PluginManager): DataFrame = {
-    val cfg = effectiveConfig(runConfig, analysisDefaults)
-    val blocks = PipelineSpec.fromJson(transformationsJson)
+    * ConfigTree.parseFile): `cfg` is the run's [[effectiveConfig]],
+    * `sampling` its [[parseSampling]], `transformations` the parsed
+    * transformations.json. */
+  def runParsed(spark: SparkSession, cfg: Tree, sampling: SamplingParams,
+                transformations: Tree, registry: TransformRegistry,
+                catalog: DataFrame, plugins: PluginManager): DataFrame = {
+    val blocks = PipelineSpec.fromTree(transformations)
 
     // Setup block: driver-side pre-pass → parameter splice
     val params = blocks.get("Setup") match {
@@ -166,9 +161,8 @@ object AnalysisRunner {
     // initialize_sampler hook sees the full post-Setup parameter
     // block, like the reference passes sampling + analysis params
     // (plugins.py:26-37)
-    val sampling = plugins.get(PluginSlots.InitializeSampler)
-      .map(f => f(parseSampling(cfg), params))
-      .getOrElse(parseSampling(cfg))
+    val drawn = plugins.get(PluginSlots.InitializeSampler)
+      .fold(sampling)(f => f(sampling, params))
 
     val main = blocks.getOrElse("Main",
       throw DagCompiler.PipelineError("transformations must define a Main block"))
@@ -180,20 +174,20 @@ object AnalysisRunner {
     // compiler's job — SURVEY.md §4#2)
     val demanded = main.flatMap(_.neededData).toSet
     val samples = plugins.get(PluginSlots.GenerateSamples)
-      .map(f => f(spark, sampling))
-      .getOrElse(sampling.shape match {
+      .map(f => f(spark, drawn))
+      .getOrElse(drawn.shape match {
         case SampleShape.Circle(r) =>
-          SphereSampler.uniformCircles(spark, sampling.nSamples,
-            sampling.bounds, r, sampling.seed)
+          SphereSampler.uniformCircles(spark, drawn.nSamples,
+            drawn.bounds, r, drawn.seed)
         case SampleShape.Rect(w, h) =>
-          SphereSampler.uniformRects(spark, sampling.nSamples,
-            sampling.bounds, w, h, sampling.seed)
+          SphereSampler.uniformRects(spark, drawn.nSamples,
+            drawn.bounds, w, h, drawn.seed)
       })
     val data = Map.newBuilder[String, Any]
     if (demanded.contains("samples")) data += ("samples" -> samples)
     if (demanded.contains("catalog")) {
       val joined = plugins.get(PluginSlots.GenerateTasks)
-        .map(f => f(catalog, samples, sampling))
+        .map(f => f(catalog, samples, drawn))
         .getOrElse(SkyJoin.bandJoin(catalog, samples))
       data += ("catalog" -> joined)
     }

@@ -119,26 +119,23 @@ object DagCompiler {
     optional ++ needed ++ dataArgs ++ depArgs ++ extras
   }
 
-  /** Execute a block in topological order; returns every node's
-    * output keyed by name, in execution order. */
-  def runBlock(specs: Seq[TransformSpec], registry: TransformRegistry,
-               data: Map[String, Any], params: Tree,
-               extras: Map[String, Any] = Map.empty,
-               spark: Option[org.apache.spark.sql.SparkSession] = None)
-      : (Seq[TransformSpec], Map[String, Any]) = {
-    val ordered = topoSort(specs)
-    checkSpecImpl(specs, registry)
-    var produced = Map.empty[String, Any]
-    ordered.foreach { s =>
+  /** Execute a block's nodes, already in topological order; returns
+    * every node's output keyed by name. */
+  private def runBlock(ordered: Seq[TransformSpec], registry: TransformRegistry,
+                       data: Map[String, Any], params: Tree,
+                       extras: Map[String, Any],
+                       spark: Option[org.apache.spark.sql.SparkSession])
+      : Map[String, Any] = {
+    checkSpecImpl(ordered, registry)
+    ordered.foldLeft(Map.empty[String, Any]) { (produced, s) =>
       val args = bindArgs(s, produced, data, params, extras)
       val impl = s.op match {
         case Some(opSpec) => BuiltinOps.compile(opSpec, spark.getOrElse(
           throw PipelineError(s"${s.name}: builtin op requires a SparkSession")))
         case None => registry.get(s.name).get
       }
-      produced += (s.name -> impl(args))
+      produced + (s.name -> impl(args))
     }
-    (ordered, produced)
   }
 
   /** Run a full Main-block pipeline to its single output. */
@@ -148,8 +145,7 @@ object DagCompiler {
                   spark: Option[org.apache.spark.sql.SparkSession] = None): Any = {
     val ordered = topoSort(specs)
     validateOutput(ordered)
-    val (_, produced) = runBlock(specs, registry, data, params, extras, spark)
-    produced(ordered.last.name)
+    runBlock(ordered, registry, data, params, extras, spark)(ordered.last.name)
   }
 
   /** Driver-side Setup pre-pass: run the block, harvest sink nodes
@@ -160,7 +156,8 @@ object DagCompiler {
                data: Map[String, Any], params: Tree,
                analysisKey: String = "analysis_parameters",
                spark: Option[org.apache.spark.sql.SparkSession] = None): Tree = {
-    val (ordered, produced) = runBlock(specs, registry, data, params, Map.empty, spark)
+    val ordered = topoSort(specs)
+    val produced = runBlock(ordered, registry, data, params, Map.empty, spark)
     val hasDownstream = specs.flatMap(_.dependencies.keys).toSet
     val sinks = ordered.filter(s => s.isOutput || !hasDownstream.contains(s.name))
     sinks.foldLeft(params) { (tree, s) =>

@@ -30,7 +30,11 @@ object PipelineSpec {
   /** Parse a transformations.json-shaped document:
     * { "Main": { nodeName: {spec...}, ... }, "Setup": {...} } */
   def fromJson(json: String): Map[String, Seq[TransformSpec]] =
-    ConfigTree.parse(json).map {
+    fromTree(ConfigTree.parse(json))
+
+  /** [[fromJson]] over an already parsed document. */
+  def fromTree(tree: Tree): Map[String, Seq[TransformSpec]] =
+    tree.map {
       case (block, nodes: Map[_, _]) =>
         block -> nodes.asInstanceOf[Tree].map {
           case (name, spec: Map[_, _]) => parseNode(name, spec.asInstanceOf[Tree])

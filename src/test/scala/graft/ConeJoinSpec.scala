@@ -189,10 +189,10 @@ class ConeJoinSpec extends SparkSpec {
         s"$dir q33 min-sep filter margin ${m33.getDouble(1)} too thin (arcsec)")
 
       // q31/q68: same probe on the derived lattice geometry
-      val padded = CosmapDomain.derivedSamplesFor(spark, dir)
+      val padded = CosmapDomain.derivedSamples(spark, dir)
         .withColumn("radius_deg", col("radius_deg") * 1.5)
       val m31 = SkyJoin.bandJoin(
-          CosmapDomain.derivedCatalogFor(spark, dir), padded, bandDeg = 5.0)
+          CosmapDomain.derivedCatalog(spark, dir), padded, bandDeg = 5.0)
         .agg(min(abs(col("sep_deg") - lit(19.97)))).head.getDouble(0)
       assert(m31 > 1e-9, s"$dir q31 join-boundary margin $m31 too thin")
     }

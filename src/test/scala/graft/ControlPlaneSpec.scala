@@ -300,4 +300,29 @@ class ControlPlaneSpec extends SparkSpec {
       assert(logs.exists(_.contains("stage")))
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  test("progress listener keeps one record per completed stage, named by job group and description") {
+    val sc = spark.sparkContext
+    val l = RunObservability.attachProgress(spark, _ => ())
+    try {
+      l.drain(sc)
+      sc.setJobGroup("ControlPlaneSpec.query", "ControlPlaneSpec: returnflag counts")
+      try Tables.load(spark, sf0001, "lineitem").groupBy("l_returnflag").count().collect()
+      finally sc.clearJobGroup()
+      val records = l.drain(sc)
+      assert(records.nonEmpty)
+      assert(records.forall(r => r.query == "ControlPlaneSpec.query" &&
+        r.label == "ControlPlaneSpec: returnflag counts"), records)
+      assert(records.forall(r => r.tasks > 0 && r.wallMs >= 0 && r.taskMs >= 0 &&
+        r.name.nonEmpty))
+      // the scan stage reads lineitem and writes the shuffle; the
+      // aggregate stage reads it back
+      val map = records.find(_.shuffleWriteBytes > 0)
+      assert(map.exists(_.recordsRead > 0), records)
+      assert(records.exists(_.shuffleReadBytes > 0), records)
+      assert(records.map(_.stageId).distinct.size === records.size)
+      // drained records are handed out once
+      assert(l.drain(sc).isEmpty)
+    } finally sc.removeSparkListener(l)
+  }
 }

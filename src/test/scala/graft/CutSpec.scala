@@ -1,12 +1,15 @@
 package graft
 
 import graft.Cut._
+import graft.run.RunObservability
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The one materialization primitive and the one fork: labelled jobs,
-  * the caller's job description restored, rows unchanged, and no other
-  * checkpoint call, thread pool or scan-width probe in the program. */
+/** The one materialization primitive, the one fork and the one query
+  * sweep: labelled jobs, the caller's job description restored, rows
+  * unchanged, each query's jobs in its own job group, and no other
+  * checkpoint call, thread pool, scan-width probe, job-group or
+  * cache-release call in the program. */
 class CutSpec extends SparkSpec {
   private def description: String =
     spark.sparkContext.getLocalProperty(Cut.Description)
@@ -130,6 +133,58 @@ class CutSpec extends SparkSpec {
     assert(threads.asScala.forall(!_.isAlive), threads.asScala.map(_.getName))
   }
 
+  private val Group = "spark.jobGroup.id"
+
+  test("SparkEntry.sweep: cut, branch and final jobs carry the query's group; its stages are recorded") {
+    val sc = spark.sparkContext
+    val progress = RunObservability.attachProgress(spark, _ => ())
+    try {
+      progress.drain(sc)
+      val (outcomes, jobs) = jobsOf(SparkEntry.sweep(spark, Seq("CutSpec.query"), { _ =>
+        val shared = frame.cut("CutSpec.query: shared")
+        Tables.inParallel("CutSpec.query", Seq("a", "b").map { b =>
+          b -> { () => shared.groupBy(col("k")).count().collect() }
+        })
+        shared.groupBy(col("k")).count()
+      })((_, df) => df.collect()))
+      assert(outcomes.map { case (n, o) => n -> o.isRight } === Seq("CutSpec.query" -> true))
+      val groups = jobs.map(_.getProperty(Group))
+      assert(groups.nonEmpty && groups.forall(_ == "CutSpec.query"), groups)
+      assert(jobs.map(_.getProperty(Cut.Description)).toSet === Set("CutSpec.query: shared",
+        "CutSpec.query: a", "CutSpec.query: b", "CutSpec.query"))
+      val records = progress.drain(sc).filter(_.query == "CutSpec.query")
+      val labels = records.map(_.label).toSet
+      assert(labels("CutSpec.query: shared") && labels("CutSpec.query: a"), labels)
+      assert(records.exists(_.shuffleWriteBytes > 0), records)
+    } finally sc.removeSparkListener(progress)
+  }
+
+  test("SparkEntry.sweep: a failure is returned, the next query keeps its own group, nothing outlives it") {
+    val sc = spark.sparkContext
+    class QueryFailure extends RuntimeException("query failed")
+    var emptyAtNext = false
+    val (outcomes, jobs) = jobsOf(SparkEntry.sweep(spark,
+      Seq("CutSpec.fails", "CutSpec.next"), {
+        case "CutSpec.fails" =>
+          frame.persist().count()
+          throw new QueryFailure
+        case _ =>
+          emptyAtNext = spark.sharedState.cacheManager.isEmpty
+          val counts = frame.groupBy(col("k")).count().persist()
+          counts.count()
+          counts
+      })((_, df) => df.collect()))
+    assert(outcomes.map(_._1) === Seq("CutSpec.fails", "CutSpec.next"))
+    assert(outcomes.head._2.fold(_.isInstanceOf[QueryFailure], _ => false))
+    assert(outcomes(1)._2.isRight)
+    val groups = jobs.map(_.getProperty(Group))
+    assert(groups.contains("CutSpec.fails") && groups.contains("CutSpec.next"), groups)
+    assert(groups.dropWhile(_ == "CutSpec.fails").forall(_ == "CutSpec.next"), groups)
+    assert(sc.getLocalProperty(Group) === null)
+    assert(emptyAtNext)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("a cut returns the input's rows") {
     val in = frame.groupBy(col("k")).agg(sum(col("id")).as("s"))
     val out = in.cut("CutSpec: rows")
@@ -167,5 +222,27 @@ class CutSpec extends SparkSpec {
       if needles.exists(line.contains)
     } yield s"$f:${i + 1}: $line"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no job-group or cache-release call in src/main outside SparkEntry.sweep") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val entry = files.find(_.endsWith("SparkEntry.scala"))
+    assert(entry.nonEmpty, files)
+    val sweep = java.nio.file.Files.readAllLines(entry.get).asScala.toSeq
+    val start = sweep.indexWhere(_.contains("def sweep("))
+    val end = sweep.indexWhere(_.contains(" def "), start + 1)
+    assert(start >= 0 && end > start)
+    // spelled from parts so this file does not match itself
+    val needles = Seq("set" + "JobGroup", "clear" + "JobGroup", "clear" + "Cache")
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if needles.exists(line.contains)
+      if !(entry.contains(f) && i > start && i < end)
+    } yield s"$f:${i + 1}: $line"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(needles.forall(n => sweep.slice(start, end).exists(_.contains(n))))
   }
 }

@@ -47,7 +47,7 @@ object Bench {
   private[graft] def stageJson(pass: Int, r: StageRecord): String = {
     import SparkEntry.jsonString
     s"""{"pass":$pass,"query":${jsonString(r.query)},"label":${jsonString(r.label)},""" +
-      s""""stage":${r.stageId},"name":${jsonString(r.name)},"wall_ms":${r.wallMs},""" +
+      s""""stage":${r.stageId},"wall_ms":${r.wallMs},""" +
       s""""task_ms":${r.taskMs},"tasks":${r.tasks},""" +
       s""""shuffle_read_bytes":${r.shuffleReadBytes},""" +
       s""""shuffle_write_bytes":${r.shuffleWriteBytes},"spill_bytes":${r.spillBytes},""" +

@@ -38,13 +38,14 @@ object ConnectedComponents {
     // without the cut both branches recompute the whole upstream plan
     // (for q69 that is the entire prefix-filtered Jaccard join)
     val p = pairs.cut("ConnectedComponents.clusterLabels: pairs")
-    // symmetric edge list
+    // symmetric edge list, cut: every round joins it on dst against
+    // the labels, a shuffle on both sides, so it needs no partitioning
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
-      .persist()
+      .cut("ConnectedComponents.clusterLabels: edges")
     // the cut truncates the logical plan each round —
-    // self-joining an unpersisted iterate doubles the plan tree per
+    // self-joining an uncut iterate doubles the plan tree per
     // round (exponential analysis blowup; OOMs the driver around
     // round 6). At cluster scale swap for reliable checkpoint() with
     // a checkpoint dir; the algorithm is unchanged.
@@ -103,7 +104,6 @@ object ConnectedComponents {
       converged = changed == 0
       round += 1
     }
-    edges.unpersist()
     if (!converged) {
       throw new IllegalStateException(
         s"ConnectedComponents did not converge within $maxRounds rounds — " +

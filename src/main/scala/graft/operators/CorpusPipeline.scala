@@ -27,11 +27,15 @@ import org.apache.spark.sql.functions.col
   * Scale notes: the one NEW wrinkle vs the standalone queries is that
   * `text` rides the q90 shard shuffle (the chunk stage consumes it
   * next; one shuffle moving text once beats a skinny pack plus a
-  * second join shuffle to re-attach it), and the cleaned frame is
-  * persisted because the dedup stage's plan-time hot-gram collect and
-  * the main action both read it. PlanShapeSpec pins the composed
-  * shapes: rates broadcast, chunk explode map-side above the single
-  * Window, no cartesian anywhere.
+  * second join shuffle to re-attach it). Each stage that later stages
+  * read more than once ends in a node cut labelled
+  * `CorpusPipeline.registry: <node>` (the cleaned frame, say, is read
+  * by the dedup stage's plan-time hot-gram collect and by the main
+  * action), and the pipeline's output is cut once as `pipeline
+  * output`; nothing is cached, so nothing outlives the query but cut
+  * blocks. PlanShapeSpec pins the composed shapes across those cuts:
+  * rates broadcast, chunk explode map-side above the single Window,
+  * no cartesian anywhere.
   */
 object CorpusPipeline {
   type Q = (SparkSession, String) => DataFrame
@@ -393,57 +397,52 @@ object CorpusPipeline {
     args("df").asInstanceOf[DataFrame]
 
   /** The dynamic-code half of the DAG: each heavy stage is the shared
-    * composable operator. Two stage outputs are persisted (CLAUDE.md
-    * rule: cache inputs referenced more than once; MEMORY_AND_DISK,
-    * spills rather than OOMs): `clean` is read by the dedup stage's
-    * plan-time hot-gram collect AND the main action; `dedup_keep` is
-    * read TWICE by temperatureKeep (the per-language rate aggregate
-    * and the main join) — without the persist the whole candidate +
-    * verify + anti-join chain would execute once per reference. The
-    * registry records what it persisted so the query can release the
-    * stage caches once the pipeline's result is materialized (round-5
-    * advice: they otherwise stay resident for the session). */
-  private def registry(persisted: scala.collection.mutable.Buffer[DataFrame]) = {
-    def cached(f: DataFrame): DataFrame = { persisted += f.persist(); f }
+    * composable operator. A stage whose output the next stages read
+    * more than once is a `node`: its output is cut once, labelled
+    * `CorpusPipeline.registry: <node>`, so the stage record splits the
+    * spine by node and no stage plan re-executes per reference. */
+  private val registry = {
+    def node(name: String)(f: Map[String, Any] => DataFrame) =
+      name -> Transform(a => f(a).cut(s"CorpusPipeline.registry: $name"))
     TransformRegistry(
-      // scrub output is persisted too (q104): the clean stage's plan
-      // references its input ~6 times (base/bigram/contamination/
-      // canonical legs) — without the cache the whole span-scrub
-      // subtree would re-execute per leg
-      "scrub" -> Transform(a => cached(RepeatedSpans.scrubKeep(in(a)))),
-      "clean" -> Transform(a => cached(TextAnalysis.cleanKeep(in(a)))),
-      "dedup_keep" -> Transform(a => cached(Dedup.dedupKeep(in(a)))),
-      // q143 stages: head_keep's output feeds the SemDeDup restrict
-      // AND the anti-join base (plus the surprisal checkpoint reads
-      // its input once more); semdedup_keep's is read twice by
-      // temperatureKeep (rate aggregate + main join) — both persist
-      "head_keep" -> Transform(a => cached(Curation.headKeep(in(a)))),
-      "semdedup_keep" -> Transform(a => cached(Similarity.semDedupKeepDocs(
-        in(a), a("emb").asInstanceOf[DataFrame], threshold = 0.4))),
+      // scrub (q104): the clean stage's plan references its input ~6
+      // times (base/bigram/contamination/canonical legs)
+      node("scrub")(a => RepeatedSpans.scrubKeep(in(a))),
+      // clean: read by the dedup stage's plan-time hot-gram collect
+      // AND the main action
+      node("clean")(a => TextAnalysis.cleanKeep(in(a))),
+      // dedup_keep, semdedup_keep, classifier_keep: each read twice by
+      // temperatureKeep (the per-language rate aggregate and the main
+      // join) — uncut, the whole candidate + verify + anti-join chain
+      // would execute once per reference
+      node("dedup_keep")(a => Dedup.dedupKeep(in(a))),
+      // q143: head_keep's output feeds the SemDeDup restrict AND the
+      // anti-join base (plus the surprisal cut reads its input once more)
+      node("head_keep")(a => Curation.headKeep(in(a))),
+      node("semdedup_keep")(a => Similarity.semDedupKeepDocs(
+        in(a), a("emb").asInstanceOf[DataFrame], threshold = 0.4)),
       // q153 stages: train_quality's output IS the model — a ≤(B+1)-
       // row weight table passed between DAG nodes like any frame
       // (training runs its K bounded epochs at pipeline-build time,
-      // the dedup hot-gram precedent); classifier_keep's output is
-      // read twice by temperatureKeep → persisted
+      // the dedup hot-gram precedent)
       "train_quality" -> Transform(a => Perceptron.trainPocket(in(a))),
       // q163: the sampled sibling — per-epoch work is sample-sized
       "train_quality_sampled" ->
         Transform(a => Perceptron.trainPocketSampled(in(a))),
-      "classifier_keep" -> Transform(a => cached(Perceptron.classifierKeep(
-        in(a), a("weights").asInstanceOf[DataFrame]))),
+      node("classifier_keep")(a => Perceptron.classifierKeep(
+        in(a), a("weights").asInstanceOf[DataFrame])),
       // q194 nodes: auto_banding measures the q180 frontier on the
-      // 1-in-2 calibration sample of the raw corpus (frontier
-      // checkpoints run at DAG-build time — the hot-gram /
-      // train_quality precedent); dedup_keep_lsh collects the ONE
-      // selection row and instantiates the LSH dedup at the chosen
-      // banding. Its output feeds the scrub stage, whose span plan
-      // references its input several times → persisted.
+      // 1-in-2 calibration sample of the raw corpus (frontier cuts run
+      // at DAG-build time — the hot-gram / train_quality precedent);
+      // dedup_keep_lsh collects the ONE selection row and instantiates
+      // the LSH dedup at the chosen banding. Its output feeds the scrub
+      // stage, whose span plan references its input several times.
       "auto_banding" ->
         Transform(a => AutoConfig.sampledBandingChoice(in(a))),
-      "dedup_keep_lsh" -> Transform(a => {
+      node("dedup_keep_lsh") { a =>
         val cfg = a("sel").asInstanceOf[DataFrame].head.getString(0)
-        cached(Dedup.dedupKeepLsh(in(a), AutoConfig.bandsOf(cfg)))
-      }),
+        Dedup.dedupKeepLsh(in(a), AutoConfig.bandsOf(cfg))
+      },
       "temperature_mix" -> Transform(a => Mixing.temperatureKeep(in(a))),
       "shard_pack" -> Transform(a => Mixing.shardPack(in(a))),
       // q176 multimodal nodes: the text manifest runs on the SCRUBBED
@@ -489,37 +488,20 @@ object CorpusPipeline {
           a("census").asInstanceOf[DataFrame])))
   }
 
-  /** The compiled (UN-materialized) pipeline plus the stage frames the
-    * registry persisted while building it — exposed so PlanShapeSpec
-    * can audit the composed Catalyst plan (the shipped query function
-    * below checkpoints, which collapses the visible plan to the
-    * materialized RDD scan). */
-  private[graft] def buildPipeline(s: SparkSession, dir: String,
-      spec: String = specJson): (DataFrame, Seq[DataFrame]) = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val blocks = PipelineSpec.fromJson(spec)
+  /** Compile `spec` over the documents and embeddings tables and cut
+    * its output ONCE: the query function runs every stage, so Bench
+    * times the full pipeline execution, and the caller's action reads
+    * the cut blocks. Plan guards audit the node cuts and this final
+    * cut through PlanShapeSpec's `shipped`. */
+  private def materialized(s: SparkSession, dir: String, spec: String)
+      : DataFrame = {
     val out = DagCompiler.runPipeline(
-      blocks("Main"), registry(persisted),
+      PipelineSpec.fromJson(spec)("Main"), registry,
       data = Map(
         "documents" -> Tables.load(s, dir, "documents"),
         "embeddings" -> Tables.load(s, dir, "embeddings")),
       params = Map.empty, spark = Some(s)).asInstanceOf[DataFrame]
-    (out, persisted.toSeq)
-  }
-
-  /** Materialize ONCE (an eager cut — also truncates the lineage
-    * so downstream actions never re-enter the stage plans), then
-    * release the stage caches: cached blocks no longer outlive the
-    * query, and the caller's action reads the checkpointed blocks,
-    * which the ContextCleaner reclaims when the frame goes out of
-    * scope. The checkpoint runs inside the query function, so Bench
-    * still times the full pipeline execution. */
-  private def materialized(s: SparkSession, dir: String, spec: String)
-      : DataFrame = {
-    val (out, persisted) = buildPipeline(s, dir, spec)
-    val result = out.cut("CorpusPipeline.materialized: pipeline output")
-    persisted.foreach(_.unpersist(false))
-    result
+    out.cut("CorpusPipeline.materialized: pipeline output")
   }
 
   val queries: Map[String, Q] = Map(
@@ -734,14 +716,14 @@ object CorpusPipeline {
     // The scrub/clean CTEs are MATERIALIZED: DuckDB inlines CTEs by
     // default, so each downstream reference would re-evaluate the
     // whole upstream chain (the clean fragment alone reads its input
-    // 3×) — the same duplication the engine's stage persist avoids.
+    // 3×) — the same duplication the engine's node cuts avoid.
     // v3: scrub → clean → CCNet head-keep → SemDeDup → mix → pack →
     // chunk. Each fragment is the stage's own generated SQL scoped to
     // the previous CTE (the q93/q104 playbook). scrubbed/cleaned/
     // headkept/embsub are MATERIALIZED — each is referenced by at
     // least two downstream legs, and DuckDB's default CTE inlining
     // would re-evaluate the whole upstream chain per reference (the
-    // same duplication the engine's stage persists avoid). The
+    // same duplication the engine's node cuts avoid). The
     // SemDeDup fragment runs on embsub = embeddings ∩ surviving docs,
     // so its count(*) cell ladder sees the pipeline's state exactly
     // as the engine's restricted frame does; docs outside embeddings

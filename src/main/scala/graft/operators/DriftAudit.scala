@@ -96,7 +96,8 @@ object DriftAudit {
     * transcendental — never an order-dependent double sum.
     *
     * Scale shape: the per-(source, token) count table is one keyed
-    * groupBy (persisted — three plan references); the pair join is
+    * groupBy, cut (three plan references, each an aggregate or a
+    * broadcast join that re-shuffles anyway); the pair join is
     * token-keyed with per-key fan-out ≤ |sources| by construction
     * (the q98 argument); the |sources|-row totals and entropy dims
     * broadcast. Output is the |sources|² matrix. */
@@ -104,7 +105,7 @@ object DriftAudit {
     import graft.functions.Text
     val cs = d.select(col("source"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-      .persist()
+      .cut("DriftAudit.divergenceMatrix: source token counts")
     val ts = cs.groupBy(col("source")).agg(sum(col("c")).as("t"))
     val hs = cs.join(broadcast(ts), "source")
       .selectExpr("source",

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cut._
 import graft.Tables
 import graft.functions.{NGrams, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -100,13 +101,15 @@ object RepeatedSpans {
     * with shared_grams > 0. Composable form. */
   def sourceOverlap(d: DataFrame): DataFrame = {
     // distinct (source, gram): the per-doc distinct kernel shrinks the
-    // explode before the global distinct's shuffle; persisted — three
-    // plan references (both self-join sides + the totals), and the
-    // parquet-size estimate would otherwise BROADCAST a corpus-
-    // vocabulary-sized side (the q44 estimate-vs-reality lesson)
+    // explode before the global distinct's shuffle; cut — three plan
+    // references (both self-join sides + the totals), each of which
+    // shuffles or aggregates anyway, so the cut's lost partitioning
+    // costs nothing; the self-join stays hinted, since a size
+    // estimate could otherwise BROADCAST a corpus-vocabulary-sized
+    // side (the q44 estimate-vs-reality lesson)
     val sg = d.select(col("source"),
         explode(Text.wordNGrams(col("text"), W)).as("g"))
-      .distinct().persist()
+      .distinct().cut("RepeatedSpans.sourceOverlap: source grams")
     val tot = sg.groupBy(col("source")).agg(count(lit(1)).as("total_a"))
     // per-gram source list is <= |sources| rows a side: the self-join
     // is gram-keyed and |sources|²-bounded per key by construction

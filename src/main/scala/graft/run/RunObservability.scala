@@ -31,7 +31,7 @@ object RunObservability {
     * read/written count scan input plus shuffle reads, and shuffle
     * writes plus sink output. */
   final case class StageRecord(query: String, label: String, stageId: Int,
-      name: String, wallMs: Long, taskMs: Long, tasks: Int,
+      wallMs: Long, taskMs: Long, tasks: Int,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
       recordsRead: Long, recordsWritten: Long)
 
@@ -59,7 +59,7 @@ object RunObservability {
       log(s"[graft.progress] stage ${i.stageId} done: ${i.numTasks} tasks")
       val (query, label) = Option(submitted.remove(i.stageId)).getOrElse(("", ""))
       val m = i.taskMetrics
-      records.add(StageRecord(query, label, i.stageId, i.name,
+      records.add(StageRecord(query, label, i.stageId,
         (for (a <- i.submissionTime; b <- i.completionTime) yield b - a).getOrElse(0L),
         m.executorRunTime, i.numTasks,
         m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,

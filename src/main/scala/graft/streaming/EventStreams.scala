@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -155,13 +155,13 @@ object EventStreams {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        val n = batch.count()
-        batch.write.mode("append").parquet(outDir)
+        // the write counts its own rows: one pass, nothing cached
+        val written = Observation()
+        batch.observe(written, count(lit(1)).as("rows"))
+          .write.mode("append").parquet(outDir)
         // per-chunk progress observability (analysis.py:156-159)
-        Console.err.println(s"[graft.streaming] batch $batchId flushed $n rows")
-        batch.unpersist()
-        ()
+        Console.err.println(
+          s"[graft.streaming] batch $batchId flushed ${written.get("rows")} rows")
       }
       .start()
 }

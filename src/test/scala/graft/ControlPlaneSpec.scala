@@ -313,8 +313,7 @@ class ControlPlaneSpec extends SparkSpec {
       assert(records.nonEmpty)
       assert(records.forall(r => r.query == "ControlPlaneSpec.query" &&
         r.label == "ControlPlaneSpec: returnflag counts"), records)
-      assert(records.forall(r => r.tasks > 0 && r.wallMs >= 0 && r.taskMs >= 0 &&
-        r.name.nonEmpty))
+      assert(records.forall(r => r.tasks > 0 && r.wallMs >= 0 && r.taskMs >= 0))
       // the scan stage reads lineitem and writes the shuffle; the
       // aggregate stage reads it back
       val map = records.find(_.shuffleWriteBytes > 0)

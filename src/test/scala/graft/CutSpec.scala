@@ -3,6 +3,13 @@ package graft
 import graft.Cut._
 import graft.run.RunObservability
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+  TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** The one materialization primitive, the one fork and the one query
@@ -191,6 +198,70 @@ class CutSpec extends SparkSpec {
     assert(out.schema === in.schema)
     assert(out.collect().sortBy(_.getLong(0)).toSeq ===
       in.collect().sortBy(_.getLong(0)).toSeq)
+  }
+
+  /** Every node of `plan`, into adaptive plans and query stages. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case p => p.children.flatMap(nodes)
+  })
+
+  test("under AQE a cut drops a keyed frame's partitioning; a persisted copy keeps it") {
+    // the measured reason a keyed table read again across loop rounds
+    // or micro-batches stays persisted rather than cut
+    val keyed = frame.repartition(col("k"))
+    def selfJoin(t: DataFrame): Seq[SparkPlan] = {
+      val j = t.as("a").hint("shuffle_merge").join(t.as("b"), "k")
+      j.collect()
+      nodes(j.queryExecution.executedPlan)
+    }
+    val cut = keyed.cut("CutSpec: keyed")
+    assert(cut.queryExecution.executedPlan.outputPartitioning === UnknownPartitioning(0))
+    val overCut = selfJoin(cut)
+    assert(overCut.exists(_.isInstanceOf[ShuffleExchangeExec]), overCut.head)
+    val persisted = keyed.persist()
+    try {
+      val overCache = selfJoin(persisted)
+      assert(overCache.exists(_.isInstanceOf[TableCacheQueryStageExec]), overCache.head)
+      assert(!overCache.exists(_.isInstanceOf[ShuffleExchangeExec]), overCache.head)
+    } finally persisted.unpersist()
+  }
+
+  test("q98 and q121 read their cut table only through a broadcast or an exchange on other keys") {
+    // why RepeatedSpans' sg and DriftAudit's cs may be cuts: no read
+    // rides the (source, key) partitioning a persisted copy would keep
+    def exchangesAboveReads(plan: SparkPlan, above: Option[SparkPlan]): Seq[Option[SparkPlan]] =
+      plan match {
+        case a: AdaptiveSparkPlanExec => exchangesAboveReads(a.executedPlan, above)
+        case _: RDDScanExec => Seq(above)
+        case e: Exchange => e.children.flatMap(exchangesAboveReads(_, Some(e)))
+        case p => p.children.flatMap(exchangesAboveReads(_, above))
+      }
+    for ((q, key) <- Seq("q98_source_overlap" -> Set("source", "g"),
+        "q121_source_divergence" -> Set("source", "w"))) {
+      val plan = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
+      val reads = exchangesAboveReads(plan, None)
+      assert(reads.size >= 3, s"$q\n$plan")
+      reads.foreach {
+        case Some(_: BroadcastExchangeExec) =>
+        case Some(e: ShuffleExchangeExec) =>
+          val on = e.outputPartitioning match {
+            case h: HashPartitioning => h.references.map(_.name).toSet
+            case _ => Set.empty[String]
+          }
+          assert(!key.subsetOf(on), s"$q\n$plan")
+        case other => fail(s"$q: a read of the cut under $other\n$plan")
+      }
+    }
+  }
+
+  test("q98's and q121's single-use tables are cut: an action over them leaves no cache behind") {
+    spark.catalog.clearCache()
+    val d = Tables.load(spark, sf0001, "documents")
+    operators.RepeatedSpans.sourceOverlap(d).collect()
+    operators.DriftAudit.divergenceMatrix(d).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("no checkpoint call in src/main outside Cut.scala") {

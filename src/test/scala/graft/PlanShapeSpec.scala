@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExplainUtils, FormattedMode,
   QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graftbridge.{ExecutionEnd, awaitListeners}
 import graft.Cut._
 
 /** Physical-plan regression guards: the shapes PLANS.md documents
@@ -17,29 +20,26 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf0001).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
 
-  /** `body`'s value and every action it runs, as (action name,
-    * QueryExecution), in run order. Listener events arrive
-    * asynchronously but in order on one queue, so a marked sentinel
-    * action run after `body` flushes them. */
-  private def actions[A](body: => A): (A, Seq[(String, QueryExecution)]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  /** `body`'s value and every action it ran, in start order: the
+    * action's name (`localCheckpoint` for a cut), its job description
+    * (a cut's label) and its QueryExecution. */
+  private def actions[A](body: => A): (A, Seq[(String, String, QueryExecution)]) = {
+    val labels = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, QueryExecution)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => labels.put(s.executionId, s.description)
+        case ExecutionEnd(id, name, qe) => ended.add((id, name, qe))
+        case _ =>
+      }
     }
-    val marker = java.util.UUID.randomUUID().toString
-    def flushed = seen.stream().anyMatch(_._2.logical.toString.contains(marker))
-    spark.listenerManager.register(listener)
-    val value = try {
-      val v = body
-      spark.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!flushed && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(flushed, "listener events did not arrive")
-      v
-    } finally spark.listenerManager.unregister(listener)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val value = try { val v = body; awaitListeners(sc); v }
+      finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    (value, seen.asScala.toSeq.filterNot(_._2.logical.toString.contains(marker)))
+    (value, ended.asScala.toSeq.sortBy(_._1).map { case (id, name, qe) =>
+      (name, labels.get(id), qe) })
   }
 
   /** The plan `explain` prints before `plan` runs. An executed
@@ -54,16 +54,21 @@ class PlanShapeSpec extends SparkSpec {
     sb.append("\n").toString
   }
 
-  /** The plans a shipped builder runs: every cut's segment (its
-    * initial physical plan, in run order) and the returned frame's.
-    * A cut reports its segment as a `localCheckpoint` action. */
-  private case class Shipped(cuts: Seq[String], result: String) {
-    def all: String = (cuts :+ result).mkString("\n")
+  /** The plans a shipped builder runs: every cut's segment (its label
+    * and initial physical plan, in run order) and the returned
+    * frame's. A cut reports its segment as a `localCheckpoint` action. */
+  private case class Shipped(cuts: Seq[(String, String)], result: String) {
+    def all: String = (cuts.map(_._2) :+ result).mkString("\n")
+    /** The segment of the one cut labelled `label`. */
+    def cut(label: String): String = cuts.filter(_._1 == label) match {
+      case Seq((_, p)) => p
+      case found => fail(s"${found.size} cuts labelled $label among ${cuts.map(_._1)}")
+    }
   }
   private def shipped(build: => DataFrame): Shipped = {
     val (out, run) = actions(build)
     Shipped(run.collect {
-      case ("localCheckpoint", qe) => initialPlan(qe.executedPlan)
+      case ("localCheckpoint", label, qe) => label -> initialPlan(qe.executedPlan)
     }, out.queryExecution.explainString(FormattedMode))
   }
 
@@ -141,7 +146,7 @@ class PlanShapeSpec extends SparkSpec {
     spark.catalog.clearCache()
     val plans = actions {
       quickstart.execute(quickstart.config(200, Some(quickstart.outPath())))
-    }._2.map(_._2.executedPlan.toString)
+    }._2.map(_._3.executedPlan.toString)
     assert(plans.exists(_.contains("InsertIntoHadoopFsRelation")), plans)
     plans.foreach(plan => assert(!plan.contains("InMemoryTableScan") &&
       !plan.contains("TableCacheQueryStage"), plan))
@@ -275,13 +280,29 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Generate"), p) // the explode
   }
 
+  /** A compiled pipeline as its query function ships it: the node
+    * cuts (`CorpusPipeline.registry: <node>`), the operators' own cuts
+    * and the final `pipeline output` cut, which holds the mix → pack →
+    * chunk tail. */
+  private def pipeline(q: String): Shipped =
+    shipped(SparkEntry.queries(q)(spark, sf0001))
+
+  /** Chunking stays a map-side explode ABOVE the pack window in the
+    * `pipeline output` cut: the formatted tree prints root-first, so
+    * the chunk Generate must appear before the Window with no Exchange
+    * between them (the map-only stage acquired no shuffle by being
+    * composed). */
+  private def assertChunkMapSide(s: Shipped): Unit = {
+    val out = s.cut("CorpusPipeline.materialized: pipeline output")
+    val gi = out.indexOf("Generate")
+    val wi = out.indexOf("Window")
+    assert(gi >= 0 && wi > gi, out)
+    assert(!out.substring(gi, wi).contains("Exchange"), out)
+  }
+
   test("q93: composed corpus-prep pipeline keeps each stage's shape") {
-    // audit the compiled pipeline BEFORE the query function's eager
-    // localCheckpoint collapses the visible plan to the RDD scan
-    val (out, persisted) = graft.operators.CorpusPipeline.buildPipeline(spark, sf0001)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    persisted.foreach(_.unpersist(false))
+    val s = pipeline("q93_corpus_prep_pipeline")
+    val p = s.all
     // nothing in the composition may degrade to an all-pairs plan
     assert(!p.contains("CartesianProduct"), p)
     // the temperature rate dim still broadcasts (no shuffle join of a
@@ -289,14 +310,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
     // shard/pack remains the single Window in the chain, keyed by shard
     assert(p.contains("hashpartitioning(shard"), p)
-    // chunking stays a map-side explode ABOVE the pack window: the
-    // formatted tree prints root-first, so the chunk Generate must
-    // appear before the Window with no Exchange between them (the
-    // map-only stage acquired no shuffle by being composed)
-    val gi = p.indexOf("Generate")
-    val wi = p.indexOf("Window")
-    assert(gi >= 0 && wi > gi, p)
-    assert(!p.substring(gi, wi).contains("Exchange"), p)
+    assertChunkMapSide(s)
   }
 
   test("q97: repeated-span marking is join-light — semi-join on the gram key, no pair join, no broadcast of the window table") {
@@ -317,14 +331,17 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q98: source overlap self-join shuffles on the gram key; only the totals dim broadcasts") {
-    val p = executedPlan("q98_source_overlap")
+    val s = shipped(SparkEntry.queries("q98_source_overlap")(spark, sf0001))
+    val p = s.result
     assert(!p.contains("CartesianProduct"), p)
     // the vocabulary-sized self-join must NOT broadcast either side
     assert(p.contains("SortMergeJoin"), p)
     // exactly one broadcast join: the |sources|-row totals dim
     assert(count(p, "BroadcastHashJoin") <= 1, p)
-    // sg is persisted: three plan references, one computation
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"), p)
+    // sg is cut: three plan references, one computation — the gram
+    // explode runs in exactly one shipped cut and not in the result
+    assert(s.cuts.count(c => tree(c._2).contains("Generate")) === 1, s.all)
+    assert(!tree(s.result).contains("Generate"), s.result)
   }
 
   test("q99: span scrub anti-joins on the doc key — no broadcast of the scale-growing span table") {
@@ -338,57 +355,45 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q104: scrub-first composed pipeline keeps the q93 shapes — no cartesian, rates broadcast, single shard window") {
-    val (out, persisted) = graft.operators.CorpusPipeline.buildPipeline(
-      spark, sf0001, graft.operators.CorpusPipeline.specJsonV2)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    persisted.foreach(_.unpersist(false))
+    val s = pipeline("q104_corpus_prep_scrubbed")
+    val p = s.all
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin"), p)          // temperature rate dim
     assert(p.contains("hashpartitioning(shard"), p)     // the one pack window
-    val gi = p.indexOf("Generate")
-    val wi = p.indexOf("Window")
-    assert(gi >= 0 && wi > gi, p)
-    assert(!p.substring(gi, wi).contains("Exchange"), p) // chunk stays map-side
+    assertChunkMapSide(s)
   }
 
   test("q194: v8 auto-tuned pipeline — the compiled plan uses the SELECTED banding's explode and no other's") {
-    import graft.operators.{AutoConfig, CorpusPipeline, Dedup}
+    import graft.operators.{AutoConfig, Dedup}
     // the selection the auto_banding node will make at this corpus —
     // computed through the same seam the DAG node uses (v8's dedup
     // stage is FIRST, so the calibration runs on the raw corpus)
     val docs = Tables.load(spark, sf0001, "documents")
     val sel = AutoConfig.sampledBandingChoice(docs).head.getString(0)
     val chosen = AutoConfig.bandsOf(sel)
-    val (out, persisted) = CorpusPipeline.buildPipeline(
-      spark, sf0001, CorpusPipeline.specJsonV8)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    persisted.foreach(_.unpersist(false))
+    val s = pipeline("q194_autotuned_pipeline")
     // the banding explode is built from 64/bands-wide signature
     // slices; the LAST band's slice (offset (b-1)·r+1, width r) is a
     // unique structural marker per banding — the chosen one must be
-    // in the compiled dedup plan, every other banding absent
+    // in the dedup node's plan, every other banding absent (the
+    // auto_banding calibration's own cuts hold every banding)
+    val dedup = s.cut("CorpusPipeline.registry: dedup_keep_lsh")
     def marker(bands: Int) = { val r = 64 / bands; s", ${(bands - 1) * r + 1}, $r)" }
-    assert(p.contains(marker(chosen)), s"selected $sel not in plan")
+    assert(dedup.contains(marker(chosen)), s"selected $sel not in plan")
     Dedup.BandGrid.filter(_ != chosen).foreach { b =>
-      assert(!p.contains(marker(b)), s"unselected banding b$b in plan")
+      assert(!dedup.contains(marker(b)), s"unselected banding b$b in plan")
     }
     // the q93-family composed shapes hold for the new spine too
+    val p = s.all
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin"), p)          // temperature rate dim
     assert(p.contains("hashpartitioning(shard"), p)     // the one pack window
-    val gi = p.indexOf("Generate")
-    val wi = p.indexOf("Window")
-    assert(gi >= 0 && wi > gi, p)
+    assertChunkMapSide(s)
   }
 
   test("q143: v3 composed pipeline — no cartesian, scale joins shuffled, SemDeDup anti-join not broadcast, chunk map-side") {
-    val (out, persisted) = graft.operators.CorpusPipeline.buildPipeline(
-      spark, sf0001, graft.operators.CorpusPipeline.specJsonV3)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    persisted.foreach(_.unpersist(false))
+    val s = pipeline("q143_corpus_prep_v3")
+    val p = s.all
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin"), p)          // temperature rate dim
     assert(p.contains("hashpartitioning(shard"), p)     // the one pack window
@@ -396,28 +401,18 @@ class PlanShapeSpec extends SparkSpec {
     // stay a shuffled equi-join (the q102 posture carried into the DAG)
     assert(p.contains("SortMergeJoin LeftAnti"), p)
     assert(!p.contains("BroadcastHashJoin LeftAnti"), p)
-    // chunk explode stays map-side above the pack window
-    val gi = p.indexOf("Generate")
-    val wi = p.indexOf("Window")
-    assert(gi >= 0 && wi > gi, p)
-    assert(!p.substring(gi, wi).contains("Exchange"), p)
+    assertChunkMapSide(s)
   }
 
   test("q153: v4 composed pipeline — no cartesian, SemDeDup anti-join stays merge, chunk map-side above the one pack window") {
-    val (out, persisted) = graft.operators.CorpusPipeline.buildPipeline(
-      spark, sf0001, graft.operators.CorpusPipeline.specJsonV4)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    persisted.foreach(_.unpersist(false))
+    val s = pipeline("q153_corpus_prep_v4")
+    val p = s.all
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin"), p)          // temperature rate dim
     assert(p.contains("hashpartitioning(shard"), p)     // the one pack window
     assert(p.contains("SortMergeJoin LeftAnti"), p)     // SemDeDup drop set
     assert(!p.contains("BroadcastHashJoin LeftAnti"), p)
-    val gi = p.indexOf("Generate")
-    val wi = p.indexOf("Window")
-    assert(gi >= 0 && wi > gi, p)
-    assert(!p.substring(gi, wi).contains("Exchange"), p)
+    assertChunkMapSide(s)
   }
 
   test("q153: classifier-keep — trained weights broadcast into the features, scale-growing keep set merge-joined, threshold dims broadcast") {
@@ -606,7 +601,7 @@ class PlanShapeSpec extends SparkSpec {
     // the scorer is trainScore's last cut (the epochs' weight cuts
     // run before it)
     val p = shipped(graft.operators.Perceptron.trainScore(
-      Tables.load(spark, sf0001, "documents"))).cuts.last
+      Tables.load(spark, sf0001, "documents"))).cuts.last._2
     assert(!p.contains("CartesianProduct"), p)
     // the ≤B-row pocket weight dim broadcasts into the cached features
     assert(p.contains("BroadcastHashJoin"), p)
@@ -707,17 +702,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q121: divergence pair join is the token-keyed merge; count table computed once; dims broadcast") {
-    val p = executedPlan("q121_source_divergence")
+    val s = shipped(SparkEntry.queries("q121_source_divergence")(spark, sf0001))
+    val p = s.result
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // exactly ONE corpus-scale join: the token-keyed pair merge whose
     // per-key fan-out is <= |sources| (the q98 argument)
     assert(count(p, "SortMergeJoin") === 1, p)
-    // the (source, token) table is persisted — one aggregation job
-    // feeds all three references
-    assert(p.contains("InMemoryRelation"), p)
     // totals + entropy dims are |sources|-row broadcasts
     assert(count(p, "BroadcastHashJoin") >= 3, p)
+    // the (source, token) table is cut — one aggregation job feeds
+    // all three references: the token explode runs in exactly one
+    // shipped cut and not in the result
+    assert(s.cuts.count(c => tree(c._2).contains("Generate")) === 1, s.all)
+    assert(!tree(s.result).contains("Generate"), s.result)
   }
 
   test("q120: reweighting rides the q103 joins; windows run on the source-sized table only") {
@@ -1172,7 +1170,7 @@ class PlanShapeSpec extends SparkSpec {
   test("q186: the gap sweep is ONE user-keyed window pass + a 1-row aggregate — no joins, no per-config re-sort") {
     // the frontier's one cut is the pass; its rows are 1-row selects
     val p = shipped(graft.operators.Sessionize.sessionGapFrontier(
-      Tables.load(spark, sf0001, "events"))).cuts.head
+      Tables.load(spark, sf0001, "events"))).cuts.head._2
     // exactly one shuffle keyed by the window partitioning plus the
     // final single-partition gather for the global aggregate
     assert(keyedExchanges(p, "user_id") === 1, p)

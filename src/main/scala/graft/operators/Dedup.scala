@@ -40,7 +40,7 @@ object Dedup {
     * Hot grams are pruned structurally: a high-df gram is in almost no
     * document's rarest-half prefix. */
   /** (doc_id, grams, ng) shingle table over a documents DataFrame. */
-  private def gramTable(d: DataFrame): DataFrame =
+  private[graft] def gramTable(d: DataFrame): DataFrame =
     d.select(col("doc_id"), Text.wordNGrams(col("text"), 3).as("grams"))
       .withColumn("ng", size(col("grams")))
       .filter(col("ng") > 0)
@@ -94,14 +94,13 @@ object Dedup {
     * window row_number, whose shuffle+sort over every exploded gram
     * was the q44 family's widest stage (round-3 verdict #1). */
   def jaccardCandidates(d: DataFrame): DataFrame =
-    jaccardCandidatesWith(d, hotGramCounts(hotGramSample(d)))
+    jaccardCandidatesWith(gramTable(d), hotGramCounts(hotGramSample(d)))
 
-  /** [[jaccardCandidates]] against an explicit hot-gram df map —
+  /** [[jaccardCandidates]] over a gram table and an explicit hot-gram df map —
     * DedupSpec uses it to bound the candidate inflation the sampled
     * estimate costs vs the full-corpus scan it replaced. */
   private[graft] def jaccardCandidatesWith(
-      d: DataFrame, hot: Map[String, Long]): DataFrame = {
-    val grams = gramTable(d)
+      grams: DataFrame, hot: Map[String, Long]): DataFrame = {
     // SHUFFLE_MERGE on every join below: the map-side prefix leaves no
     // shuffle boundary before the joins, so the initial plan would
     // trust the parquet-scan size estimate — far below the true
@@ -129,10 +128,10 @@ object Dedup {
     * q93 pipeline share. */
   def jaccardPairs(d: DataFrame): DataFrame = {
       // the gram table is referenced five times across candidates +
-      // verify; a lazy persist shares one computation within the
-      // action (MEMORY_AND_DISK — spills rather than OOMs at scale)
-      val grams = gramTable(d).persist()
-      val cand = jaccardCandidates(d)
+      // verify; cut once, keyed so both verify joins ride it (no
+      // exchange when d is already spread by doc_id)
+      val grams = gramTable(d).repartition(col("doc_id")).cut("Dedup.jaccardPairs: grams")
+      val cand = jaccardCandidatesWith(grams, hotGramCounts(hotGramSample(d)))
       // exact verify on the full gram arrays, candidates only; the
       // gram-array sides shuffle rather than broadcast (see the
       // estimate-vs-reality note in jaccardCandidates — same reasoning)
@@ -308,7 +307,7 @@ object Dedup {
     // -- LSH index maintenance (round 9): the standing corpus index
     //    is MAINTAINED, not just probed — day 1's increment is
     //    flagged against it, day 1's survivors are MERGED in (union
-    //    of band buckets + gram arrays, persist swap — no rebuild,
+    //    of band buckets + gram arrays, cut as the new index — no rebuild,
     //    no corpus-wide reshuffle), and day 2's increment is flagged
     //    against the MERGED index, so a day-2 doc duplicating a
     //    day-1 survivor is caught. The ingest loop a production
@@ -626,9 +625,8 @@ object Dedup {
     * day-tagged. Scale shape: everything rides the q145 machinery
     * (band+bucket equi-joins, index sides hinted off broadcast); the
     * merge itself is an append-only union — the standing side keeps
-    * its cached partitioning, only the survivor side is new map
-    * work; both reports are cut inside the query so
-    * the index caches release before the caller's action. */
+    * its checkpoint's partitioning, only the survivor side is new map
+    * work; both reports are cut inside the query. */
   private[graft] def indexMaintenance(d: DataFrame): DataFrame = {
     import graft.streaming.DocStreams
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
@@ -641,9 +639,8 @@ object Dedup {
       f1.filter(col("is_dup") === 0L).select(col("doc_id"))
         .hint("shuffle_merge"),
       Seq("doc_id"), "left_semi")
-    val merged = DocStreams.mergeIndex(idx, survivors) // swaps out idx
+    val merged = DocStreams.mergeIndex(idx, survivors)
     val f2 = DocStreams.flagBatch(day2, merged).cut("Dedup.indexMaintenance: day-2 flags")
-    merged.unpersist()
     f1.select(lit(1L).as("day"), col("*"))
       .unionByName(f2.select(lit(2L).as("day"), col("*")))
   }

@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the 100 TB posture): the edge list is built once
   * (one orders⋈lineitem shuffle + distinct), REPARTITIONED BY src and
-  * persisted — each of the K iterations then shuffles only the
-  * node-sized rank/contribution tables (the persisted edge exchange
-  * is reused; the rank table is hinted away from broadcast because
+  * cut — each of the K iterations then shuffles only the
+  * node-sized rank/contribution tables (the cut keeps the edge
+  * table's hash partitioning, so its exchange is reused; the rank table is hinted away from broadcast because
   * nodes scale with the corpus). Each iteration = one equi-join on
   * src + one groupBy dst + one degree re-attach join, all keyed
   * shuffles — O(E) per round, K fixed.
@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * (best-of-4 5.62 s vs 4.46 s baseline, same box): the one-time
   * edge-sized annotation join costs more than the K=5 node-sized
   * joins it saves, and that trade does not flip at scale — the
-  * re-attach join is node-sized on BOTH sides (deg is persisted,
+  * re-attach join is node-sized on BOTH sides (deg is cut,
   * already hash-partitioned on node), while the annotation shuffles
   * the full edge list, and E ≈ 25·N for this bipartite trade graph
   * at every SF. REJECTED; the two-join step stands (PLANS.md).
@@ -139,18 +139,16 @@ object GraphRank {
     // every iteration reuses the exchange instead of reshuffling E
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
-      .persist()
+      .cut("GraphRank.centrality: edges by src")
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("d"))
-      .persist()
+      .cut("GraphRank.centrality: degrees")
     var ranks = deg.select(col("node"), col("d"), lit(PrUnit).as("r"))
       .cut("GraphRank.centrality: initial ranks")
     for (_ <- 1 to PrIters)
       // cut each round: lineage truncation (the CC house rule —
       // an un-cut iterate re-derives the whole chain per reference)
       ranks = step(edges, deg, ranks).cut("GraphRank.centrality: ranks")
-    edges.unpersist()
-    deg.unpersist()
     ranks.select(col("node").as("node_id"),
       (col("node") % 2 === 1).as("is_supplier"),
       col("d").as("degree"), col("r").as("rank_unit"))
@@ -161,7 +159,7 @@ object GraphRank {
     * edge join on src and the dst aggregation — rank-sized tables are
     * hinted off broadcast because nodes scale with the corpus. (The
     * degree re-attach join is node-sized on both sides — deg is
-    * persisted, hash-partitioned on node — and measured CHEAPER than
+    * cut, hash-partitioned on node — and measured CHEAPER than
     * carrying dst_d on the edge table; A/B doc above.) */
   private[graft] def step(edges: DataFrame, deg: DataFrame,
       ranks: DataFrame): DataFrame = {
@@ -176,7 +174,7 @@ object GraphRank {
 
   /** q127 full frame: (role, entity_id, score_unit, rank ≤ HitsTop).
     *
-    * Scale shape: the distinct edge list is built once and persisted
+    * Scale shape: the distinct edge list is built once and cut
     * TWICE — partitioned by customer (feeds the authority half-step's
     * hub-contribution join) and by supplier (feeds the hub
     * half-step's authority join) — so each of the K iterations
@@ -193,8 +191,8 @@ object GraphRank {
       .select(col("o_custkey").cast("long").as("c"),
         col("l_suppkey").cast("long").as("s"))
       .distinct()
-    val eByC = e0.repartition(col("c")).persist()
-    val eByS = e0.repartition(col("s")).persist()
+    val eByC = e0.repartition(col("c")).cut("GraphRank.hits: edges by customer")
+    val eByS = e0.repartition(col("s")).cut("GraphRank.hits: edges by supplier")
     var hubs = eByC.select(col("c")).distinct()
       .select(col("c"), lit(PrUnit).as("h"))
       .cut("GraphRank.hits: initial hubs")
@@ -215,8 +213,6 @@ object GraphRank {
       hubs = hr.crossJoin(broadcast(hr.agg(max(col("hr")).as("hmax"))))
         .selectExpr("c", s"(hr * $PrUnit) div hmax AS h")
     }
-    eByC.unpersist()
-    eByS.unpersist()
     val aTop = auths
       .select(lit("authority").as("role"), col("s").as("entity_id"),
         col("a").as("score_unit"))
@@ -234,7 +230,7 @@ object GraphRank {
   /** q130 full frame: (community, n_cust, n_supp, total, rank ≤
     * LpTop) — communities keyed by their seed customer id.
     *
-    * Scale shape: the q127 posture — the distinct edge list persisted
+    * Scale shape: the q127 posture — the distinct edge list cut
     * TWICE (by c and by s); each half-step is one equi-join of a
     * node-sized label table against a reused edge exchange, an
     * explicit repartition on the UPDATED side, and a count groupBy +
@@ -250,8 +246,8 @@ object GraphRank {
       .select(col("o_custkey").cast("long").as("c"),
         col("l_suppkey").cast("long").as("s"))
       .distinct()
-    val eByC = e0.repartition(col("c")).persist()
-    val eByS = e0.repartition(col("s")).persist()
+    val eByC = e0.repartition(col("c")).cut("GraphRank.labelProp: edges by customer")
+    val eByS = e0.repartition(col("s")).cut("GraphRank.labelProp: edges by supplier")
     var labC = eByC.select(col("c")).distinct()
       .select(col("c"), col("c").as("lbl"))
       .cut("GraphRank.labelProp: initial labels")
@@ -269,8 +265,6 @@ object GraphRank {
       labC = vote(eByS.join(labS.hint("shuffle_merge"), "s"), "c")
         .cut("GraphRank.labelProp: target labels")
     }
-    eByC.unpersist()
-    eByS.unpersist()
     val cc = labC.groupBy(col("lbl")).agg(count(lit(1)).as("n_cust"))
     val cs = labS.groupBy(col("lbl")).agg(count(lit(1)).as("n_supp"))
     cc.join(cs, Seq("lbl"), "full")

@@ -107,7 +107,7 @@ object ImageDedup {
     * feeds the exact-L1 verify ([[graft.functions.ArrL1]]), `arr` the
     * chunk-collision join + row-local Hamming
     * ([[graft.functions.ChunkHamming]]). ONE kernel pass per corpus;
-    * callers cut/persist. */
+    * callers cut. */
   private[graft] def fpOf(f: DataFrame, planeCoef: Seq[(Int, Int, Long)],
       center: Seq[Long]): DataFrame =
     vecOf(f).select(col("id"), col("vec"),

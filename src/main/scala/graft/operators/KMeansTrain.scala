@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   * (deterministic on both engines via the same LEFT JOIN).
   *
   * Scale shape (100 TB posture): the quantized-coordinate table is
-  * exploded ONCE, repartitioned by vec_id and persisted — every
-  * iteration reuses that exchange. Per iteration: the K·d-row
+  * exploded ONCE, repartitioned by vec_id and cut — every
+  * iteration reuses that exchange (the cut keeps its partitioning). Per iteration: the K·d-row
   * centroid table BROADCASTS into the coordinate scan (model state
   * is tiny, corpus never moves for it); the per-(vector, cluster)
   * distance groupBy and the vec-partitioned argmin window both ride
@@ -116,7 +116,7 @@ object KMeansTrain {
     val qv = e.select(col("vec_id"), posexplode(NormQuant(col("embedding"))))
       .select(col("vec_id"), col("pos"), col("col").as("q"))
       .repartition(col("vec_id"))
-      .persist()
+      .cut("KMeansTrain.train: coordinates")
     // deterministic init: the K smallest vec_ids, cluster = their
     // rank (TakeOrdered — K rows of driver state at any corpus size)
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(KmK)
@@ -128,7 +128,6 @@ object KMeansTrain {
       .cut("KMeansTrain.train: initial centroids")
     for (_ <- 1 to KmIters)
       cent = round(qv, cent).cut("KMeansTrain.train: centroids")
-    qv.unpersist()
     cent
   }
 
@@ -157,7 +156,7 @@ object KMeansTrain {
     *
     * Scale shape: identical posture to q118 with `sub` folded into
     * every key — the quantized coordinate table is exploded ONCE,
-    * vec_id-partitioned and persisted; per round the M·PqK·PqSub-row
+    * vec_id-partitioned and cut; per round the M·PqK·PqSub-row
     * codebook BROADCASTS into it, the per-(vector, subspace, code)
     * distance groupBy and the (vec_id, sub) argmin window both ride
     * the vec_id partitioning (subset-clustering — no new exchange),
@@ -168,26 +167,23 @@ object KMeansTrain {
     * a per-cell integer mean both engines state identically. */
   private[graft] def pq(e: DataFrame): DataFrame = {
     val (qv, cent) = pqModel(e)
-    val census = pqAssign(qv, cent)
+    pqAssign(qv, cent)
       .groupBy(col("sub"), col("code"))
       .agg(count(lit(1)).as("n"),
         sum(col("dist").cast("decimal(38,0)")).as("sd"))
       .select(col("sub"), col("code"), col("n"),
         expr("CAST(sd div n AS BIGINT)").as("mean_dist"))
       .cut("KMeansTrain.pq: distortion census")
-    qv.unpersist()
-    census
   }
 
-  /** The shared q129/q132 training pass: the persisted quantized
-    * coordinate table and the final checkpointed codebook. Callers
-    * own the qv.unpersist(). */
+  /** The shared q129/q132 training pass: the cut, vec_id-partitioned
+    * quantized coordinate table and the final checkpointed codebook. */
   private[graft] def pqModel(e: DataFrame): (DataFrame, DataFrame) = {
     val qv = e.select(col("vec_id"), posexplode(NormQuant(col("embedding"))))
       .select(col("vec_id"), expr(s"CAST(pos div $PqSub AS INT)").as("sub"),
         expr(s"CAST(pos % $PqSub AS INT)").as("spos"), col("col").as("q"))
       .repartition(col("vec_id"))
-      .persist()
+      .cut("KMeansTrain.pqModel: coordinates")
     // deterministic init: the PqK smallest vec_ids seed code = rank
     // in EVERY subspace (TakeOrdered — K rows of driver state)
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
@@ -205,7 +201,7 @@ object KMeansTrain {
     * panel query.
     *
     * Scale shape: the encode (pqAssign) and the per-(query, vector)
-    * distance sum BOTH ride the persisted vec_id partitioning
+    * distance sum BOTH ride the cut's vec_id partitioning
     * (subset-clustering: {vec_id} ⊆ {vec_id, sub} and {vec_id} ⊆
     * {q_id, vec_id}); model state only ever broadcasts — the 512-row
     * codebook into the encode, the M·PqK·|panel|-row LUT (128 rows,
@@ -218,9 +214,7 @@ object KMeansTrain {
     * ADC distance adds M of them. */
   private[graft] def adc(e: DataFrame): DataFrame = {
     val (qv, cent) = pqModel(e)
-    val top = adcRank(qv, cent, adcLut(qv, cent)).cut("KMeansTrain.adc: top candidates")
-    qv.unpersist()
-    top
+    adcRank(qv, cent, adcLut(qv, cent)).cut("KMeansTrain.adc: top candidates")
   }
 
   /** q187's subspace grid: M ∈ {2, 4, 8} subspaces of 64/M dims each
@@ -238,14 +232,14 @@ object KMeansTrain {
     * over the full quantized vectors — one table from memory spent to
     * retrieval bought, the m = 4 column being the shipped gate config.
     * Scale shape: the 64-dim quantized coordinates explode ONCE
-    * (persisted, vec_id-partitioned); each M re-KEYS them by
+    * (cut, vec_id-partitioned); each M re-KEYS them by
     * projection (pos div/mod — no re-explode, no new exchange) and
     * trains through the SAME pqRound/pqAssign kernels; the exact
     * truth is one panel-broadcast pass shared by every config; model
     * state only ever broadcasts. Distortion totals ride
     * DECIMAL(38,0)/HUGEINT (the q128/q129 overflow lesson). */
   private[graft] def pqFrontier(e: DataFrame): DataFrame = {
-    val (parts, truth, qv0) = pqFrontierDetail(e)
+    val (parts, truth) = pqFrontierDetail(e)
     val tc = truth.count() // |panel|·AdcTop (the recall denominator)
     val rows = parts.map { case (m, asg, top) =>
       val distAgg = asg.agg(count(lit(1)).as("na"),
@@ -260,20 +254,18 @@ object KMeansTrain {
           expr(s"(1000000L * hits) div ${math.max(tc, 1L)}L")
             .as("recall_ppm"))
     }
-    val out = rows.reduce(_.unionByName(_)).cut("KMeansTrain.pqFrontier: frontier")
-    qv0.unpersist()
-    out
+    rows.reduce(_.unionByName(_)).cut("KMeansTrain.pqFrontier: frontier")
   }
 
   /** The frontier's moving parts, exposed for the spec: per M the
     * checkpointed final assignment + ADC top-k, plus the shared exact
-    * truth and the persisted coordinate table (caller unpersists). */
+    * truth. */
   private[graft] def pqFrontierDetail(e: DataFrame)
-      : (Seq[(Int, DataFrame, DataFrame)], DataFrame, DataFrame) = {
+      : (Seq[(Int, DataFrame, DataFrame)], DataFrame) = {
     val qv0 = e.select(col("vec_id"), posexplode(NormQuant(col("embedding"))))
       .select(col("vec_id"), col("pos"), col("col").as("q"))
       .repartition(col("vec_id"))
-      .persist()
+      .cut("KMeansTrain.pqFrontierDetail: coordinates")
     // exact integer-L2 truth on the FULL quantized vectors — the
     // config-independent baseline every M is graded against (the q132
     // tie rule: (distance, vec_id), self excluded)
@@ -292,14 +284,12 @@ object KMeansTrain {
       .withColumn("code",
         (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
     // the three M-trainings (each round a broadcast join + groupBy
-    // over the shared persisted coordinates) fork; qv0 is already
-    // materialized (the truth cut above scanned it), so the branches
-    // never race its caching
+    // over the shared cut coordinates) fork
     val parts = graft.Tables.inParallel("KMeansTrain.pqFrontierDetail",
         PqMGrid.map { m => s"m$m" -> { () =>
       val subDim = Dim / m
       // re-KEY the shared coordinates for this M: a projection over
-      // the persisted table, never a second explode
+      // the cut table, never a second explode
       val qv = qv0.select(col("vec_id"),
         expr(s"CAST(pos div $subDim AS INT)").as("sub"),
         expr(s"CAST(pos % $subDim AS INT)").as("spos"), col("q"))
@@ -314,7 +304,7 @@ object KMeansTrain {
         col("code")), adcLut(qv, cent)).cut("KMeansTrain.pqFrontierDetail: top candidates")
       (m, asg, top)
     } })
-    (parts, truth, qv0)
+    (parts, truth)
   }
 
   /** Exact query-to-centroid lookup table: |panel|·M·PqK rows,

@@ -142,7 +142,7 @@ object LexicalStats {
     * undirected edge list is built by one bigram groupBy + one
     * ordered-pair groupBy (both map-side-combined keyed shuffles at
     * vocabulary scale, the q126 argument), symmetrized, repartitioned
-    * by src and persisted ONCE — each of the K iterations shuffles
+    * by src and cut ONCE — each of the K iterations shuffles
     * only node-sized rank tables (hinted off broadcast: the
     * vocabulary scales with the corpus); per-round cut
     * cuts the iterate's lineage (the CC house rule); the final top-50
@@ -171,16 +171,14 @@ object LexicalStats {
     val edges = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
       .repartition(col("src"))
-      .persist()
+      .cut("LexicalStats.textrank: edges by src")
     val wdeg = edges.groupBy(col("src").as("node"))
       .agg(sum(col("w")).as("wd"))
-      .persist()
+      .cut("LexicalStats.textrank: weighted degrees")
     var ranks = wdeg.select(col("node"), col("wd"), lit(TrUnit).as("r"))
       .cut("LexicalStats.textrank: initial ranks")
     for (_ <- 1 to TrIters)
       ranks = trStep(edges, wdeg, ranks).cut("LexicalStats.textrank: ranks")
-    edges.unpersist()
-    wdeg.unpersist()
     ranks.orderBy(col("r").desc, col("node")).limit(TrTop)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("r").desc, col("node"))).cast("long"))
@@ -190,8 +188,8 @@ object LexicalStats {
   /** One weighted damped update, un-checkpointed
     * (plan-shape-testable): rank-per-unit-weight is map-side
     * (`r div wd`), the only shuffles are the edge join on src and
-    * the dst aggregation — node-sized tables against the persisted
-    * edge partitioning. */
+    * the dst aggregation — node-sized tables against the cut edge
+    * table's partitioning. */
   private[graft] def trStep(edges: DataFrame, wdeg: DataFrame,
       ranks: DataFrame): DataFrame = {
     val contrib = edges.join(

@@ -108,14 +108,9 @@ object Motifs {
   /** The one-row butterfly census over any (c, s) edge frame. The
     * edge list is cut (eager) so the orders⋈lineitem
     * build runs ONCE for its three references (edge count + both
-    * self-join sides). A pre-partitioning cannot be carried into the
-    * self-join on this Spark: a cached AQE plan hides its output
-    * partitioning from the outer planner (InMemoryRelation wraps an
-    * AdaptiveSparkPlan) and an eager cut of an adaptive
-    * plan lands as UnknownPartitioning — both re-exchange anyway
-    * (measured, not guessed) — so the census accepts the join's own
-    * two E-sized customer-keyed exchanges: linear, keyed, the
-    * natural distributed shape. */
+    * self-join sides). The edge list is not keyed by c, so the census
+    * accepts the join's own two E-sized customer-keyed exchanges:
+    * linear, keyed, the natural distributed shape. */
   private[graft] def census(e: DataFrame, est: Boolean): DataFrame = {
     val ec = e.cut("Motifs.census: edges")
     censusPlan(ec, est).cut("Motifs.census: census")

@@ -55,14 +55,13 @@ import org.apache.spark.sql.functions._
   * Scale shape (the 100 TB posture): the feature table is built ONCE
   * — explode → repartition(doc_id) → (doc_id, y, b) distinct that
   * REUSES the doc_id partitioning (partitioning on a subset of the
-  * grouping keys already co-locates the groups), persisted, and
-  * every epoch rides it: the per-doc score groupBy and the
+  * grouping keys already co-locates the groups), cut (the cut keeps
+  * the doc_id partitioning), and every epoch rides it: the per-doc score groupBy and the
   * mistake-set semi-join add ZERO exchanges, weights and the 1-row
   * class ratio are dims that only ever BROADCAST, and the single
   * per-epoch keyed exchange is the update groupBy(b) whose map-side
   * partials compress the corpus to ≤B rows per task. Per-epoch
-  * weights are cut (the CLAUDE.md iterative-loop rule
-  * — persist does not cut the logical plan). Driver-side state is K
+  * weights are cut (the CLAUDE.md iterative-loop rule). Driver-side state is K
   * mistake-count integers — bounded. K is a constant: training is K
   * linear passes, exactly like q114/q118. At true 100 TB the only
   * change is DECIMAL(38,0) update sums (weight magnitudes here stay
@@ -80,7 +79,7 @@ object Perceptron {
 
   /** (doc_id, y, b) hashed-bigram presence features + the bias row —
     * every doc carries the bias feature, so every doc is scored even
-    * with < 2 tokens. Caller repartitions/persists. */
+    * with < 2 tokens. Caller repartitions and cuts. */
   private[graft] def features(d: DataFrame): DataFrame = {
     val y = when(col("source") === Curation.DsirTarget, 1L).otherwise(-1L)
     val grams = d.select(col("doc_id"), y.as("y"),
@@ -108,16 +107,16 @@ object Perceptron {
     grams.unionByName(bias)
   }
 
-  /** Train K epochs over the labeled frame; returns the PERSISTED
-    * feature table (caller must unpersist) and the pocket weight
-    * snapshot. The shared core of [[trainScore]] and
-    * [[trainPocket]]. */
+  /** Train K epochs over the labeled frame; returns the cut feature
+    * table and the pocket weight snapshot. The shared core of
+    * [[trainScore]] and [[trainPocket]]. */
   private def trainOn(d: DataFrame, epochs: Int): (DataFrame, DataFrame) = {
     // repartition BEFORE the distinct: the (doc_id, y, b) dedup,
     // every epoch's per-doc score groupBy and the mistake semi-join
-    // all reuse this one doc_id exchange
-    val feats = features(d.repartition(col("doc_id"))).persist()
-    feats.count()
+    // all reuse this one doc_id exchange; the outer one is free and
+    // keys the frame, so the cut keeps the partitioning
+    val feats = features(d.repartition(col("doc_id"))).repartition(col("doc_id"))
+      .cut("Perceptron.trainOn: features")
     // integer class-imbalance cost on positive updates: a 1-row dim
     val ratio = d.agg(
       sum(when(col("source") === Curation.DsirTarget, 1L).otherwise(0L))
@@ -148,7 +147,7 @@ object Perceptron {
       // materialized ≤(B+1)-row frame for free. The separate
       // mistakes.count() ran the feats⋈w score pass a SECOND time per
       // epoch (the semi-join recompute below is the first); fusing
-      // halves the per-epoch passes over the cached feature table.
+      // halves the per-epoch passes over the cut feature table.
       // The mistakes frame itself stays NOT checkpointed: the un-cut
       // frame keeps the doc_id partitioning the semi-join rides
       // (A/B'd round 9: checkpointing here was wall-neutral and loses
@@ -187,22 +186,14 @@ object Perceptron {
       .agg(sum(col("w")).as("s"))
       .select(col("doc_id"), col("y"), col("s").as("score"),
         when(col("s") > 0, 1L).otherwise(-1L).as("pred"))
-    val r = out.cut("Perceptron.trainScore: scores")
-    feats.unpersist(false)
-    r
+    out.cut("Perceptron.trainScore: scores")
   }
 
   /** Train on the labeled corpus and return only the POCKET WEIGHT
     * table (b, w) — the trained state the q153 pipeline carries
-    * between DAG nodes. Weight snapshots are cut by the
-    * train loop, so the feature cache is released before returning
-    * (nothing downstream reads it). */
+    * between DAG nodes. */
   private[graft] def trainPocket(d: DataFrame,
-      epochs: Int = Epochs): DataFrame = {
-    val (feats, pocket) = trainOn(d, epochs)
-    feats.unpersist(false)
-    pocket
-  }
+      epochs: Int = Epochs): DataFrame = trainOn(d, epochs)._2
 
   /** q163 — SAMPLED training, the 100 TB posture for the trained
     * gate: q144/q153 train over the FULL corpus features for K
@@ -367,7 +358,7 @@ object Perceptron {
     * inlines CTEs by default, and each of the ~2K references would
     * otherwise re-derive the whole upstream chain (measured: the
     * inlined form never finishes at sf0.01; the materialized form
-    * runs in seconds — the engine's persist + cut,
+    * runs in seconds — the engine's cuts,
     * mirrored). Pure integer relational algebra: bit-exact replay by
     * construction. */
   /** CTE chain (no leading WITH) training the pocket weights on the

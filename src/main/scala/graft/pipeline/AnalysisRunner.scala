@@ -78,18 +78,20 @@ object AnalysisRunner {
     val boundsVals = quantitiesDeg(sp, "region_bounds")
     if (boundsVals.length != 4) throw DagCompiler.PipelineError(
       s"region_bounds must be [raMin, decMin, raMax, decMax], got $boundsVals")
-    val shape = shapeName match {
-      case "Circle" => SampleShape.Circle(ConfigTree.parseQuantityDeg(
-        sp.getOrElse("sample_dimensions", throw DagCompiler.PipelineError(
-          "sampling_parameters.sample_dimensions missing"))))
-      case "Rectangle" =>
-        // dimensions: [width, height] (one value → square)
-        quantitiesDeg(sp, "sample_dimensions") match {
-          case Seq(s)    => SampleShape.Rect(s, s)
-          case Seq(w, h) => SampleShape.Rect(w, h)
-          case other => throw DagCompiler.PipelineError(
-            s"Rectangle sample_dimensions must be [width, height], got $other")
-        }
+    // a non-positive size would widen the region the sampler draws
+    // from past region_bounds (SphereSampler insets by it)
+    val dims = quantitiesDeg(sp, "sample_dimensions")
+    if (dims.exists(d => !(d > 0) || d.isInfinite)) throw DagCompiler.PipelineError(
+      s"sample_dimensions must be positive and finite, got $dims")
+    val shape = (shapeName, dims) match {
+      case ("Circle", Seq(r)) => SampleShape.Circle(r)
+      case ("Circle", other) => throw DagCompiler.PipelineError(
+        s"Circle sample_dimensions must be one radius, got $other")
+      // dimensions: [width, height] (one value → square)
+      case (_, Seq(s))    => SampleShape.Rect(s, s)
+      case (_, Seq(w, h)) => SampleShape.Rect(w, h)
+      case (_, other) => throw DagCompiler.PipelineError(
+        s"Rectangle sample_dimensions must be [width, height], got $other")
     }
     // n_samples and seed take the same number forms; an absent seed
     // defaults to 42, a present one of any other type is an error

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cut._
 import graft.dedup.MinHashLSH
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -8,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Streaming incremental-ingest dedup — the §2.9 form of q145: a
   * stream of arriving documents is flagged per MICRO-BATCH against a
   * pre-built static index of the standing corpus (band buckets + gram
-  * arrays, computed once and persisted). Each trigger is one "daily
+  * arrays, computed once and cut). Each trigger is one "daily
   * increment" of the batch operator: the per-doc flags depend only on
   * the doc and the STATIC corpus — never on other streamed docs — so
   * the union of micro-batch outputs equals the batch q145 report over
@@ -26,21 +27,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object DocStreams {
 
   /** The standing corpus's LSH index: (band, bucket, corp_id) +
-    * (doc_b, grams_b, ng_b), both persisted — built ONCE, probed by
-    * every micro-batch. */
-  final case class CorpusIndex(buckets: DataFrame, grams: DataFrame) {
-    def unpersist(): Unit = { buckets.unpersist(false); grams.unpersist(false) }
-  }
+    * (doc_b, grams_b, ng_b), both cut — built ONCE, probed by every
+    * micro-batch, freed once no longer referenced. */
+  final case class CorpusIndex(buckets: DataFrame, grams: DataFrame)
 
-  def buildIndex(corpus: DataFrame): CorpusIndex = {
-    val b = MinHashLSH.bandBuckets(corpus, "doc_id", "text",
+  def buildIndex(corpus: DataFrame): CorpusIndex = CorpusIndex(
+    MinHashLSH.bandBuckets(corpus, "doc_id", "text",
         numHashes = 64, bands = 16, shingleN = 3)
       .select(col("band"), col("bucket"), col("doc_id").as("corp_id"))
-      .persist()
-    val g = MinHashLSH.gramSide(corpus, "doc_id", "text", 3, "b").persist()
-    b.count(); g.count()
-    CorpusIndex(b, g)
-  }
+      .cut("DocStreams.buildIndex: band buckets"),
+    MinHashLSH.gramSide(corpus, "doc_id", "text", 3, "b")
+      .cut("DocStreams.buildIndex: grams"))
 
   /** One micro-batch flagged against the index — the q145 semantics
     * verbatim: band-collision candidates (batch×index, never a
@@ -66,29 +63,25 @@ object DocStreams {
 
   /** Merge-refresh for the standing index (round-8 verdict #2): once
     * an increment's flags are resolved, its SURVIVORS (non-dup docs)
-    * join the corpus — union of band buckets + gram arrays, persist
-    * swap. Band keys and gram arrays are per-doc DETERMINISTIC
+    * join the corpus — union of band buckets + gram arrays, cut as
+    * the new index. Band keys and gram arrays are per-doc DETERMINISTIC
     * functions (`MinHashLSH.bandBuckets`/`gramSide`), so the merged
     * index is row-identical to one rebuilt from corpus ∪ survivors
     * (DocStreamsSpec proves it) — merge is purely the cheaper path.
     * Scale shape: the union is append-only — the standing side is
-    * read from cache with its partitioning intact and only the
-    * increment-sized survivor side is new map work; NO corpus-wide
-    * reshuffle (PlanShapeSpec pins it). The old index is released
-    * after the merged one materializes (persist swap, the standard
-    * reference-data refresh). */
-  def mergeIndex(idx: CorpusIndex, survivors: DataFrame): CorpusIndex = {
-    val b = idx.buckets.unionByName(
+    * read from its checkpoint with its partitioning intact and only
+    * the increment-sized survivor side is new map work; NO
+    * corpus-wide reshuffle (PlanShapeSpec pins it). The swapped-out
+    * index is freed once the caller no longer references it. */
+  def mergeIndex(idx: CorpusIndex, survivors: DataFrame): CorpusIndex = CorpusIndex(
+    idx.buckets.unionByName(
       MinHashLSH.bandBuckets(survivors, "doc_id", "text",
           numHashes = 64, bands = 16, shingleN = 3)
         .select(col("band"), col("bucket"), col("doc_id").as("corp_id")))
-    val g = idx.grams.unionByName(
+      .cut("DocStreams.mergeIndex: band buckets"),
+    idx.grams.unionByName(
       MinHashLSH.gramSide(survivors, "doc_id", "text", 3, "b"))
-    b.persist(); g.persist()
-    b.count(); g.count()
-    idx.unpersist()
-    CorpusIndex(b, g)
-  }
+      .cut("DocStreams.mergeIndex: grams"))
 
   /** Run the stream: every trigger's docs are flagged and handed to
     * `sink` (write to the ingest ledger, alerting, ...). */
@@ -103,8 +96,8 @@ object DocStreams {
   /** Streaming QUALITY scoring (round 9) — the MODEL analog of the
     * dedup index: each micro-batch of arriving docs is scored against
     * a pre-trained pocket weight table
-    * (graft.operators.Perceptron.trainPocket output, persisted by the
-    * caller; refresh = retrain + swap, like [[mergeIndex]]). Per-doc
+    * (graft.operators.Perceptron.trainPocket output, cut by its
+    * training loop; refresh = retrain + swap, like [[mergeIndex]]). Per-doc
     * scores depend only on the doc and the STATIC weights, so the
     * union of micro-batch outputs ≡ the batch
     * `Perceptron.scoreDocs` over the same docs BY CONSTRUCTION

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * media arrive as micro-batches of raw payloads, are DECODED in the
   * trigger (the real javax.imageio / javax.sound path — the same
   * map-side work the batch gates run), fingerprinted, and flagged
-  * against the STANDING library's persisted chunk index + feature
+  * against the STANDING library's cut chunk index + feature
   * table. Per-increment flags depend only on the arriving row and
   * the static index, so the union of micro-batch outputs ≡ the batch
   * report over the same rows BY CONSTRUCTION — MediaStreamsSpec
@@ -22,28 +22,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * trigger's novel rows (chunks and features are per-id independent,
   * so appended ≡ rebuilt trivially — no analog of the q154 gram-merge
   * subtlety exists here). 100 TB posture: the standing index is the
-  * persisted artifact; per-trigger work is batch-sized decode + one
+  * cut artifact; per-trigger work is batch-sized decode + one
   * chunk-keyed probe join against it. */
 object MediaStreams {
 
-  /** The standing library's persisted state: the per-id fingerprint
+  /** The standing library's cut state: the per-id fingerprint
     * frame (id, vec, arr) — feature vector + chunk array in one row
     * (the r14 array-form kernel carrier; ImageDedup.fpOf). */
   final case class MediaIndex(fp: DataFrame,
       planeCoef: Seq[(Int, Int, Long)], center: Seq[Long],
-      l1Max: Long) {
-    def unpersist(): Unit = fp.unpersist(false)
-  }
+      l1Max: Long)
 
-  /** Build (and persist) the standing index from a feature table —
-    * the modality is fixed by its kernel literals, exactly as in the
+  /** Build (and cut) the standing index from a feature table — the
+    * modality is fixed by its kernel literals, exactly as in the
     * batch gates. */
   def buildIndex(features: DataFrame, planeCoef: Seq[(Int, Int, Long)],
-      center: Seq[Long], l1Max: Long): MediaIndex = {
-    val fp = ImageDedup.fpOf(features, planeCoef, center).persist()
-    fp.count()
-    MediaIndex(fp, planeCoef, center, l1Max)
-  }
+      center: Seq[Long], l1Max: Long): MediaIndex =
+    MediaIndex(ImageDedup.fpOf(features, planeCoef, center)
+      .cut("MediaStreams.buildIndex: fingerprints"), planeCoef, center, l1Max)
 
   /** Flag ONE micro-batch of media feature rows against the standing
     * index — the per-trigger unit (exposed for the spec). */

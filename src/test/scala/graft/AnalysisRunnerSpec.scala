@@ -146,6 +146,30 @@ class AnalysisRunnerSpec extends SparkSpec {
     }
   }
 
+  test("sample_dimensions: a size <= 0, non-finite or malformed is a PipelineError") {
+    def shapeOf(shape: String, radiusJson: String) = AnalysisRunner.parseSampling(
+      AnalysisRunner.effectiveConfig(
+        ConfigTree.parse(runConfig.replace(
+          """{"value": 2, "units": "arcmin"}""", radiusJson)),
+        ConfigTree.parse(analysisDefaults.replace("\"Circle\"", s"\"$shape\"")))).shape
+    assert(shapeOf("Circle", """{"value": 2, "units": "arcmin"}""") ===
+      AnalysisRunner.SampleShape.Circle(2.0 / 60.0))
+    assert(shapeOf("Rectangle", """{"value": [4, 2], "units": "arcmin"}""") ===
+      AnalysisRunner.SampleShape.Rect(4.0 / 60.0, 2.0 / 60.0))
+    // a negative radius would widen the sampled frame past region_bounds
+    for ((shape, bad) <- Seq(
+        "Circle" -> """{"value": -2, "units": "arcmin"}""",
+        "Circle" -> """{"value": 0, "units": "arcmin"}""",
+        "Circle" -> """{"value": 1e999, "units": "arcmin"}""",
+        "Circle" -> """{"value": "two", "units": "arcmin"}""",
+        "Circle" -> """{"value": [2, 3], "units": "arcmin"}""",
+        "Rectangle" -> """{"value": [4, -2], "units": "arcmin"}""",
+        "Rectangle" -> """{"value": [0, 2], "units": "arcmin"}""")) {
+      val e = intercept[DagCompiler.PipelineError](shapeOf(shape, bad))
+      assert(e.getMessage.contains("sample_dimensions"), s"$shape $bad: ${e.getMessage}")
+    }
+  }
+
   test("run config overrides analysis defaults right-biased") {
     val cfg = AnalysisRunner.effectiveConfig(
       ConfigTree.parse(runConfig), ConfigTree.parse(analysisDefaults))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.pipeline.{BuiltinOps, DagCompiler, PipelineSpec, TransformRegistry}
 import org.apache.spark.sql.DataFrame
 
@@ -185,7 +186,7 @@ class BuiltinOpsSpec extends SparkSpec {
   test("q153's classifier stage gates by trained score — ~top half kept, never a no-op — and the model is bounded") {
     import org.apache.spark.sql.functions._
     val d = Tables.load(spark, sf0001, "documents")
-    val w = operators.Perceptron.trainPocket(d).persist()
+    val w = operators.Perceptron.trainPocket(d)
     val nw = w.count()
     // the trained state passed between DAG nodes is a bounded dim:
     // at most one row per hash bucket + the bias bucket
@@ -194,7 +195,8 @@ class BuiltinOpsSpec extends SparkSpec {
       operators.Curation.headKeep(
         operators.TextAnalysis.cleanKeep(
           operators.RepeatedSpans.scrubKeep(d))),
-      Tables.load(spark, sf0001, "embeddings"), threshold = 0.4).persist()
+      Tables.load(spark, sf0001, "embeddings"), threshold = 0.4)
+      .cut("BuiltinOpsSpec: semantic survivors")
     val kept = operators.Perceptron.classifierKeep(sem, w)
     val (ns, nk) = (sem.count(), kept.count())
     // top-half at bin granularity: at least half, strictly fewer than
@@ -204,7 +206,7 @@ class BuiltinOpsSpec extends SparkSpec {
     // kept docs are the TOP of the score order: every kept doc scores
     // >= every dropped doc, up to one bin's width of slack — verify
     // via the raw scores
-    val scores = operators.Perceptron.scoreDocs(sem, w).persist()
+    val scores = operators.Perceptron.scoreDocs(sem, w).cut("BuiltinOpsSpec: scores")
     val minKept = scores.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
       .agg(min(col("score"))).head.getLong(0)
     val maxDropped = scores.join(kept.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -214,7 +216,6 @@ class BuiltinOpsSpec extends SparkSpec {
       operators.Perceptron.ScoreBins, 1L)
     assert(minKept >= maxDropped - binW + 1,
       s"kept-min $minKept below dropped-max $maxDropped beyond bin slack $binW")
-    scores.unpersist(); sem.unpersist(); w.unpersist()
   }
 
   test("q143's two new stages each drop documents (not no-op insertions)") {
@@ -222,8 +223,8 @@ class BuiltinOpsSpec extends SparkSpec {
     val d = Tables.load(spark, sf0001, "documents")
     val emb = Tables.load(spark, sf0001, "embeddings")
     val cleaned = operators.TextAnalysis.cleanKeep(
-      operators.RepeatedSpans.scrubKeep(d)).persist()
-    val headed = operators.Curation.headKeep(cleaned).persist()
+      operators.RepeatedSpans.scrubKeep(d)).cut("BuiltinOpsSpec: cleaned")
+    val headed = operators.Curation.headKeep(cleaned).cut("BuiltinOpsSpec: headed")
     val sem = operators.Similarity.semDedupKeepDocs(headed, emb, 0.4)
     val (nc, nh, ns) = (cleaned.count(), headed.count(), sem.count())
     // terciles: head ≈ a third of the scored docs, never more than half
@@ -241,7 +242,6 @@ class BuiltinOpsSpec extends SparkSpec {
     assert(oddDocs.count() > 0)
     assert(oddDocs.join(semHalf, Seq("doc_id"), "left_anti").count() === 0,
       "a doc without an embedding was dropped by the semantic stage")
-    cleaned.unpersist(); headed.unpersist()
   }
 
   test("q104 scrub stage changes the corpus the clean stage sees (not a no-op insertion)") {

@@ -4,10 +4,9 @@ import graft.Cut._
 import graft.run.RunObservability
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
-  TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
   ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
@@ -15,8 +14,8 @@ import org.apache.spark.sql.functions._
 /** The one materialization primitive, the one fork and the one query
   * sweep: labelled jobs, the caller's job description restored, rows
   * unchanged, each query's jobs in its own job group, and no other
-  * checkpoint call, thread pool, scan-width probe, job-group or
-  * cache-release call in the program. */
+  * checkpoint call, cache call, thread pool, scan-width probe,
+  * job-group or cache-release call in the program. */
 class CutSpec extends SparkSpec {
   private def description: String =
     spark.sparkContext.getLocalProperty(Cut.Description)
@@ -173,14 +172,17 @@ class CutSpec extends SparkSpec {
     val (outcomes, jobs) = jobsOf(SparkEntry.sweep(spark,
       Seq("CutSpec.fails", "CutSpec.next"), {
         case "CutSpec.fails" =>
-          frame.persist().count()
+          frame.createOrReplaceTempView("cutspec_fails")
+          spark.catalog.cacheTable("cutspec_fails")
+          spark.table("cutspec_fails").count()
           throw new QueryFailure
         case _ =>
           emptyAtNext = spark.sharedState.cacheManager.isEmpty
-          val counts = frame.groupBy(col("k")).count().persist()
-          counts.count()
-          counts
+          frame.groupBy(col("k")).count().createOrReplaceTempView("cutspec_next")
+          spark.catalog.cacheTable("cutspec_next")
+          spark.table("cutspec_next")
       })((_, df) => df.collect()))
+    Seq("cutspec_fails", "cutspec_next").foreach(spark.catalog.dropTempView)
     assert(outcomes.map(_._1) === Seq("CutSpec.fails", "CutSpec.next"))
     assert(outcomes.head._2.fold(_.isInstanceOf[QueryFailure], _ => false))
     assert(outcomes(1)._2.isRight)
@@ -207,25 +209,46 @@ class CutSpec extends SparkSpec {
     case p => p.children.flatMap(nodes)
   })
 
-  test("under AQE a cut drops a keyed frame's partitioning; a persisted copy keeps it") {
-    // the measured reason a keyed table read again across loop rounds
-    // or micro-batches stays persisted rather than cut
-    val keyed = frame.repartition(col("k"))
-    def selfJoin(t: DataFrame): Seq[SparkPlan] = {
-      val j = t.as("a").hint("shuffle_merge").join(t.as("b"), "k")
+  test("a keyed cut's shuffle-merge self-join plans no ShuffleExchangeExec; a join shuffles only the other side") {
+    // a cut keeps the hash partitioning a persisted copy would keep, so
+    // a keyed table read again across loop rounds or micro-batches is cut
+    val keyed = frame.repartition(col("k")).cut("CutSpec: keyed")
+    def planOf(j: DataFrame): Seq[SparkPlan] = {
       j.collect()
       nodes(j.queryExecution.executedPlan)
     }
-    val cut = keyed.cut("CutSpec: keyed")
-    assert(cut.queryExecution.executedPlan.outputPartitioning === UnknownPartitioning(0))
-    val overCut = selfJoin(cut)
-    assert(overCut.exists(_.isInstanceOf[ShuffleExchangeExec]), overCut.head)
-    val persisted = keyed.persist()
-    try {
-      val overCache = selfJoin(persisted)
-      assert(overCache.exists(_.isInstanceOf[TableCacheQueryStageExec]), overCache.head)
-      assert(!overCache.exists(_.isInstanceOf[ShuffleExchangeExec]), overCache.head)
-    } finally persisted.unpersist()
+    val self = planOf(keyed.as("a").hint("shuffle_merge").join(keyed.as("b"), "k"))
+    assert(!self.exists(_.isInstanceOf[ShuffleExchangeExec]), self.head)
+    val other = spark.range(0, 20).select((col("id") % 7).as("k"), col("id").as("o"))
+    val joined = planOf(keyed.join(other.hint("shuffle_merge"), "k"))
+    val shuffles = joined.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, joined.head)
+    assert(!shuffles.head.exists(_.isInstanceOf[RDDScanExec]), joined.head)
+    val counted = planOf(keyed.groupBy(col("k")).count())
+    assert(!counted.exists(_.isInstanceOf[ShuffleExchangeExec]), counted.head)
+  }
+
+  test("a keyed cut keeps the frame's rows with AQE on and off, at 1 and 7 partitions") {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> conf.get(k))
+    try for (aqe <- Seq(true, false); n <- Seq(1, 7)) {
+      conf.set(keys(0), aqe.toString)
+      conf.set(keys(1), n.toLong)
+      val keyed = frame.repartition(col("k"))
+      val cut = keyed.cut(s"CutSpec: keyed, AQE $aqe, $n partitions")
+      assert(cut.collect().sortBy(_.getLong(0)).toSeq ===
+        keyed.collect().sortBy(_.getLong(0)).toSeq, s"AQE $aqe, $n partitions")
+      // Spark plans a one-partition repartition as SinglePartition,
+      // which satisfies every distribution HashPartitioning(k, 1) would
+      if (aqe) cut.queryExecution.executedPlan.outputPartitioning match {
+        case SinglePartition if n == 1 =>
+        case h: HashPartitioning =>
+          assert(h.numPartitions === n)
+          assert(h.references.map(_.name).toSet === Set("k"))
+        case p => fail(s"AQE, $n partitions: $p")
+      }
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }
 
   test("q98 and q121 read their cut table only through a broadcast or an exchange on other keys") {
@@ -264,17 +287,19 @@ class CutSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("no checkpoint call in src/main outside Cut.scala") {
+  test("no checkpoint call outside Cut.scala and no cache call in src") {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.endsWith("Cut.scala")), files)
     // spelled from parts so this file does not match itself
-    val needles = Seq("localCheckpoint", "checkpoint").map(m => s".$m(")
+    val checkpoints = Seq("localCheckpoint", "checkpoint").map(m => s".$m(")
+    val caches = Seq("." + "persist(", "." + "cache()", "un" + "persist(")
     val calls = for {
-      f <- files if !f.endsWith("Cut.scala")
+      f <- files
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if needles.exists(line.contains)
+      if caches.exists(line.contains) ||
+        (!f.endsWith("Cut.scala") && checkpoints.exists(line.contains))
     } yield s"$f:${i + 1}: $line"
     assert(calls.isEmpty, calls.mkString("\n"))
   }

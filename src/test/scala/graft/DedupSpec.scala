@@ -136,9 +136,9 @@ class DedupSpec extends SparkSpec {
     // Pin the inflation at the scale the claim lives at: sf0.1, <=1.5x.
     val d = Tables.load(spark, "/root/testdata/sf0.1", "documents")
     val sampledN = Dedup.jaccardCandidatesWith(
-      d, Dedup.hotGramCounts(Dedup.hotGramSample(d))).count()
+      Dedup.gramTable(d), Dedup.hotGramCounts(Dedup.hotGramSample(d))).count()
     val fullN = Dedup.jaccardCandidatesWith(
-      d, Dedup.hotGramCounts(
+      Dedup.gramTable(d), Dedup.hotGramCounts(
         d.select(col("doc_id"), Text.wordNGrams(col("text"), 3).as("grams"))
           .withColumn("ng", size(col("grams"))).filter(col("ng") > 0)))
       .count()

@@ -47,7 +47,6 @@ class DocStreamsSpec extends SparkSpec {
       })
     q.processAllAvailable()
     q.stop()
-    idx.unpersist()
 
     assert(got.toSet === want, "streamed flags diverged from batch q145")
     assert(want.exists(_._5 == 1L), "corpus should contain cross-split dups")
@@ -69,7 +68,7 @@ class DocStreamsSpec extends SparkSpec {
     assert(survivors.count() > 0 && survivors.count() < day1.count(),
       "split must produce both dups and survivors for the merge to matter")
 
-    val merged = DocStreams.mergeIndex(idx, survivors) // releases idx
+    val merged = DocStreams.mergeIndex(idx, survivors)
     val rebuilt = DocStreams.buildIndex(corpus.unionByName(survivors))
     // band keys and gram arrays are per-doc deterministic ⇒ the merged
     // index must be ROW-IDENTICAL to a from-scratch rebuild
@@ -91,13 +90,11 @@ class DocStreamsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSet
     assert(viaMerged === viaRebuilt)
-    merged.unpersist(); rebuilt.unpersist()
   }
 
   test("streaming quality scoring ≡ batch scoreDocs, across micro-batch boundaries") {
     val d = Tables.load(spark, sf0001, "documents")
-    val w = graft.operators.Perceptron.trainPocket(d).persist()
-    w.count()
+    val w = graft.operators.Perceptron.trainPocket(d)
     val docs = d.select(col("doc_id"), col("text"))
     val want = graft.operators.Perceptron.scoreDocs(docs, w).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -122,7 +119,6 @@ class DocStreamsSpec extends SparkSpec {
       })
     q.processAllAvailable()
     q.stop()
-    w.unpersist()
 
     assert(got.toSet === want, "streamed scores diverged from batch scoreDocs")
     assert(got.size === ids.length, "every streamed doc must be scored once")
@@ -133,7 +129,7 @@ class DocStreamsSpec extends SparkSpec {
   test("q154 gate output: day-2 catches a dup of a day-1 SURVIVOR — the merge is load-bearing") {
     val out = graft.operators.Dedup.indexMaintenance(
       Tables.load(spark, sf0001, "documents").select(col("doc_id"), col("text")))
-      .persist()
+      .cut("DocStreamsSpec: q154 report")
     // day-1 rows flagged against the standing corpus only
     assert(out.filter(col("day") === 1L).count() > 0)
     // at least one day-2 dup's best match is a day-1 doc (md5 in the
@@ -142,6 +138,5 @@ class DocStreamsSpec extends SparkSpec {
       .filter(substring(md5(col("best_match_id").cast("string")), 1, 8)
         .between("aaaaaaaa", "dddddddc"))
     assert(d2day1.count() > 0, "no day-2 dup matched a day-1 survivor")
-    out.unpersist()
   }
 }

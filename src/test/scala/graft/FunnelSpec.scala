@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import graft.Cut._
 import graft.operators.Sessionize
 
 /** Semantic pins for the q135 ordered funnel: strict-after ordering,
@@ -110,12 +111,11 @@ class FunnelSpec extends SparkSpec {
   test("q150: every cohort's day-0 retention is exactly 1000000 ppm on the real log") {
     import org.apache.spark.sql.functions._
     val m = Sessionize.retentionCohorts(
-      Tables.load(spark, sf0001, "events")).persist()
+      Tables.load(spark, sf0001, "events")).cut("FunnelSpec: q150 matrix")
     assert(m.filter(col("day_offset") === 0)
       .filter(col("retention_ppm") =!= 1000000L).count() === 0)
     // retention never exceeds day 0 and the matrix is non-trivial
     assert(m.filter(col("n_active") > col("cohort_size")).count() === 0)
     assert(m.filter(col("day_offset") > 0).count() > 0)
-    m.unpersist()
   }
 }

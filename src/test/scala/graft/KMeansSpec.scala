@@ -244,7 +244,7 @@ class KMeansSpec extends SparkSpec {
 
     // the shared exact truth IS the brute-force integer-L2 top-10
     // (driver replay over normQuant'd vectors, the q132 tie rule)
-    val (parts, truth, qv0) = KMeansTrain.pqFrontierDetail(real)
+    val (parts, truth) = KMeansTrain.pqFrontierDetail(real)
     val vecs = real.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), SignProjectKernel.normQuant(
         new GenericArrayData(r.getSeq[Float](1).toArray)))).toSeq
@@ -265,7 +265,6 @@ class KMeansSpec extends SparkSpec {
     val q132 = KMeansTrain.queries("q132_pq_adc_topk")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(m4top === q132)
-    qv0.unpersist()
   }
 
   test("q118: clusters that lose every member carry their previous centroid") {

@@ -55,7 +55,6 @@ class MediaStreamsSpec extends SparkSpec {
       })
     q.processAllAvailable()
     q.stop()
-    idx.unpersist()
 
     assert(batches >= 2, s"expected >= 2 triggers, saw $batches")
     assert(got.toSet === want, "streamed media flags diverged from batch q178")

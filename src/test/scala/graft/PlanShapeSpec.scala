@@ -154,7 +154,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q44: shingles via the codegen'd kernel; candidate join is an equi-join") {
-    val p = executedPlan("q44_ngram_jaccard")
+    // every segment: the shingles run in the gram table's cut
+    val p = shipped(SparkEntry.queries("q44_ngram_jaccard")(spark, sf0001)).all
     // the custom WordNGrams expression, not interpreted HOF lambdas
     assert(p.toLowerCase.contains("wordngrams"), p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
@@ -547,25 +548,17 @@ class PlanShapeSpec extends SparkSpec {
     val idx = graft.streaming.DocStreams.buildIndex(d.filter(h < "aaaaaaaa"))
     val survivors = d.filter(h >= "aaaaaaaa" && h < "dddddddd")
       .cut("PlanShapeSpec: survivors")
-    // the merge is a persist swap: audit the plans the merged index
-    // is cached from
-    val merged = graft.streaming.DocStreams.mergeIndex(idx, survivors)
-    def cachedPlan(df: DataFrame): String = initialPlan(
-      df.queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          r.cacheBuilder.cachedPlan
-      }.get)
-    val pb = cachedPlan(merged.buckets)
-    val pg = cachedPlan(merged.grams)
-    // union over the CACHED standing side + map-side survivor keys:
-    // the merge repartitions nothing — no Exchange anywhere
+    // the merge cuts the merged index: audit the plans of its two cuts
+    val merged = shipped(graft.streaming.DocStreams.mergeIndex(idx, survivors).buckets)
+    val pb = merged.cut("DocStreams.mergeIndex: band buckets")
+    val pg = merged.cut("DocStreams.mergeIndex: grams")
+    // union over the standing side's checkpoint + map-side survivor
+    // keys: the merge repartitions nothing — no Exchange anywhere
     assert(count(pb, "Union") >= 1, pb)
-    assert(pb.contains("InMemoryTableScan") ||
-      pb.contains("TableCacheQueryStage"), pb)
+    assert(count(pb, "Scan ExistingRDD") === 2, pb)
     assert(count(pb, "Exchange") === 0, pb)
     assert(count(pg, "Union") >= 1, pg)
     assert(count(pg, "Exchange") === 0, pg)
-    merged.unpersist()
   }
 
   test("q150: retention rides ONE user-keyed merge join; the day-0 census broadcasts back") {
@@ -603,18 +596,16 @@ class PlanShapeSpec extends SparkSpec {
     val p = shipped(graft.operators.Perceptron.trainScore(
       Tables.load(spark, sf0001, "documents"))).cuts.last._2
     assert(!p.contains("CartesianProduct"), p)
-    // the ≤B-row pocket weight dim broadcasts into the cached features
+    // the ≤B-row pocket weight dim broadcasts into the cut features
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)
-    // feature table read from cache; the per-doc score groupBy reuses
-    // its doc_id partitioning — the tree ABOVE the cached relation
-    // (the scorer itself) contains no shuffle exchange at all (the
-    // only hashpartitioning(doc_id) in the plan is the cache's own
-    // one-time repartition, printed inside the InMemoryRelation)
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"), p)
-    val scorer = p.linesIterator
-      .takeWhile(l => !l.contains("InMemoryRelation")).mkString("\n")
-    assert(!scorer.contains("+- Exchange"), scorer)
+    // feature table read from its checkpoint; the per-doc score
+    // groupBy reuses the cut's doc_id partitioning — the tree ABOVE
+    // the checkpoint scan (the scorer itself) contains no shuffle
+    // exchange at all (the features' one-time repartition ran in
+    // their own cut)
+    assert(p.contains("Scan ExistingRDD"), p)
+    assert(count(p, "(?<!Broadcast)Exchange") === 0, p)
   }
 
   test("q100: BM25 is inverted-index joins — term/df dims broadcast, corpus side shuffles, nothing all-pairs") {
@@ -730,13 +721,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(count(p, "Window \\(") === 2, p)
   }
 
-  test("q118: a Lloyd round broadcasts only the codebook; assignment rides the persisted vec_id partitioning") {
+  test("q118: a Lloyd round broadcasts only the codebook; assignment rides the cut's vec_id partitioning") {
     import org.apache.spark.sql.functions.{broadcast, col, lit, posexplode, row_number}
     val e = Tables.load(spark, sf0001, "embeddings")
     val qv = e.select(col("vec_id"),
         posexplode(graft.functions.NormQuant(col("embedding"))))
       .select(col("vec_id"), col("pos"), col("col").as("q"))
-      .repartition(col("vec_id")).persist()
+      .repartition(col("vec_id")).cut("PlanShapeSpec q118: coordinates")
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(8)
       .withColumn("cluster", (row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
@@ -747,14 +738,13 @@ class PlanShapeSpec extends SparkSpec {
     val p = graft.operators.KMeansTrain.round(qv, cent)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    qv.unpersist()
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // the ONLY broadcast is the K·d codebook into the coordinate scan
     assert(count(p, "BroadcastHashJoin") === 1, p)
     // per-vector argmin is a rank-pushdown window, no global sort
     assert(count(p, "WindowGroupLimit") === 1, p)
-    // assignment re-attach is a shuffled merge riding the persisted
+    // assignment re-attach is a shuffled merge riding the cut's
     // vec_id partitioning; the update + carry shuffle by (cluster,pos)
     assert(count(p, "SortMergeJoin Inner") === 1, p)
     assert(count(p, "SortMergeJoin LeftOuter") === 1, p)
@@ -773,7 +763,7 @@ class PlanShapeSpec extends SparkSpec {
         posexplode(graft.functions.NormQuant(col("embedding"))))
       .selectExpr("vec_id", "CAST(pos div 16 AS INT) AS sub",
         "CAST(pos % 16 AS INT) AS spos", "col AS q")
-      .repartition(col("vec_id")).persist()
+      .repartition(col("vec_id")).cut("PlanShapeSpec q129: coordinates")
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(8)
       .withColumn("code", (row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
@@ -784,7 +774,6 @@ class PlanShapeSpec extends SparkSpec {
     val p = graft.operators.KMeansTrain.pqRound(qv, cent)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    qv.unpersist()
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // the ONLY broadcast is the M·K·dsub codebook into the scan
@@ -806,7 +795,7 @@ class PlanShapeSpec extends SparkSpec {
         posexplode(graft.functions.NormQuant(col("embedding"))))
       .selectExpr("vec_id", "CAST(pos div 16 AS INT) AS sub",
         "CAST(pos % 16 AS INT) AS spos", "col AS q")
-      .repartition(col("vec_id")).persist()
+      .repartition(col("vec_id")).cut("PlanShapeSpec q132: coordinates")
     val ids = e.select(col("vec_id")).orderBy(col("vec_id")).limit(8)
       .withColumn("code", (row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
@@ -818,7 +807,6 @@ class PlanShapeSpec extends SparkSpec {
     val p = graft.operators.KMeansTrain.adcRank(qv, cent, lut)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    qv.unpersist()
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     // exactly two broadcasts: the codebook into the encode, the
@@ -830,7 +818,7 @@ class PlanShapeSpec extends SparkSpec {
     // so only ≤ top-k rows per input partition ever shuffle, + final)
     assert(count(p, "WindowGroupLimit") === 3, p)
     // the encode groupBy, the (q_id, vec_id) distance sum and the
-    // argmin window all ride the persisted vec_id partitioning —
+    // argmin window all ride the cut vec_id partitioning —
     // the ONLY new exchange is the 4-partition q_id rank window
     assert(keyedExchanges(p, "q_id") === 1, p)
     assert(!p.contains("SortMergeJoin"), p)
@@ -947,15 +935,14 @@ class PlanShapeSpec extends SparkSpec {
       .filter(col("w") >= 3)
     val edges = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .repartition(col("src")).persist()
+      .repartition(col("src")).cut("PlanShapeSpec q136: edges")
     val wdeg = edges.groupBy(col("src").as("node"))
-      .agg(ssum(col("w")).as("wd")).persist()
+      .agg(ssum(col("w")).as("wd")).cut("PlanShapeSpec q136: weighted degrees")
     val ranks = wdeg.select(col("node"), col("wd"), lit(1000000L).as("r"))
       .cut("PlanShapeSpec q136: initial ranks")
     val p = graft.operators.LexicalStats.trStep(edges, wdeg, ranks)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    edges.unpersist(); wdeg.unpersist()
     assert(!p.contains("CartesianProduct"), p)
     // vocabulary scales with the corpus: nothing may broadcast
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

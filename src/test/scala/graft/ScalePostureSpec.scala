@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.dedup.MinHashLSH
 import graft.operators.{Dedup, Similarity, Workloads}
 import org.apache.spark.sql.DataFrame
@@ -16,10 +17,8 @@ class ScalePostureSpec extends SparkSpec {
     * an all-pairs one. */
   private def growth(replicate: Int => DataFrame)(
       candidates: DataFrame => DataFrame): Growth = {
-    val counts = Seq(1, 2, 4).map { k =>
-      val input = replicate(k).cache()
-      try candidates(input).count() finally input.unpersist()
-    }
+    val counts = Seq(1, 2, 4).map(k =>
+      candidates(replicate(k).cut(s"ScalePostureSpec: $k replicas")).count())
     Growth(counts)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Cut._
 import graft.functions.{NGrams, Text}
 import org.apache.spark.sql.functions._
 
@@ -243,7 +244,7 @@ class TextAnalysisSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val d = Tables.load(spark, sf0001, "documents")
     val m = graft.operators.TextAnalysis.queries(
-      "q152_langid_eval")(spark, sf0001).persist()
+      "q152_langid_eval")(spark, sf0001).cut("TextAnalysisSpec: q152 matrix")
     assert(m.agg(sum("n_docs")).head.getLong(0) === d.count())
     // every cell ≤ its row/column total; ppm shares within [0, 1e6]
     assert(m.filter(col("n_docs") > col("n_gold") ||
@@ -253,13 +254,12 @@ class TextAnalysisSpec extends SparkSpec {
     // the classifier must NOT recover them (only en/und predictions)
     assert(m.select("pred_lang").distinct().collect()
       .map(_.getString(0)).toSet === Set("en", "und"))
-    m.unpersist()
   }
 
   test("q148: AND of the six flags is EXACTLY the q80 keep set, doc for doc") {
     import org.apache.spark.sql.functions._
     val d = Tables.load(spark, sf0001, "documents")
-    val flags = graft.operators.TextAnalysis.cleanFlags(d).persist()
+    val flags = graft.operators.TextAnalysis.cleanFlags(d).cut("TextAnalysisSpec: q148 flags")
     val all = graft.operators.TextAnalysis.CleanFilters
       .map(col).reduce(_ && _)
     val fromFlags = flags.filter(all).select("doc_id")
@@ -267,7 +267,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fromFlags.join(kept, Seq("doc_id"), "left_anti").count() === 0)
     assert(kept.join(fromFlags, Seq("doc_id"), "left_anti").count() === 0)
     assert(kept.count() > 0)
-    flags.unpersist()
   }
 
   test("q148: attribution counts are internally consistent") {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Cut._
 import graft.functions.SplitMix64Kernel
 import graft.multimodal.{ImageGen, Media, Multimodal}
 import org.apache.spark.sql.SparkSession
@@ -89,8 +90,7 @@ object GenVideoFixture {
     mediaDs.select(col("id"), col("payload"))
       .coalesce(1).sort(col("id"))
       .write.mode("overwrite").parquet(s"$out/video.parquet")
-    val feats = Multimodal.videoIntFeatures(mediaDs).toDF()
-    feats.cache()
+    val feats = Multimodal.videoIntFeatures(mediaDs).toDF().cut("GenVideoFixture: features")
     feats.coalesce(1).sort(col("id"), col("d"))
       .write.mode("overwrite").parquet(s"$out/video_features.parquet")
     val n = spark.read.parquet(s"$out/video.parquet").count()

@@ -55,14 +55,14 @@ import org.apache.spark.sql.functions._
   * Scale shape (the 100 TB posture): the feature table is built ONCE
   * — explode → repartition(doc_id) → (doc_id, y, b) distinct that
   * REUSES the doc_id partitioning (partitioning on a subset of the
-  * grouping keys already co-locates the groups), cut (the cut keeps
-  * the doc_id partitioning), and every epoch rides it: the per-doc score groupBy and the
+  * grouping keys already co-locates the groups), cut keyed by doc_id,
+  * and every epoch rides it: the per-doc score groupBy and the
   * mistake-set semi-join add ZERO exchanges, weights and the 1-row
   * class ratio are dims that only ever BROADCAST, and the single
   * per-epoch keyed exchange is the update groupBy(b) whose map-side
   * partials compress the corpus to ≤B rows per task. Per-epoch
-  * weights are cut (the CLAUDE.md iterative-loop rule). Driver-side state is K
-  * mistake-count integers — bounded. K is a constant: training is K
+  * weights are cut (the CLAUDE.md iterative-loop rule). Driver-side
+  * state is K mistake-count integers — bounded. K is a constant: training is K
   * linear passes, exactly like q114/q118. At true 100 TB the only
   * change is DECIMAL(38,0) update sums (weight magnitudes here stay
   * far below 2^60 at any gate scale).

@@ -1,5 +1,6 @@
 package graft
 
+import graft.config.ConfigTree.jsonString
 import graft.run.RunObservability
 import graft.run.RunObservability.StageRecord
 import org.apache.spark.sql.SparkSession
@@ -45,7 +46,6 @@ object Bench {
 
   /** One BENCH_STAGES.json entry: a timed pass's completed stage. */
   private[graft] def stageJson(pass: Int, r: StageRecord): String = {
-    import SparkEntry.jsonString
     s"""{"pass":$pass,"query":${jsonString(r.query)},"label":${jsonString(r.label)},""" +
       s""""stage":${r.stageId},"wall_ms":${r.wallMs},""" +
       s""""task_ms":${r.taskMs},"tasks":${r.tasks},""" +
@@ -53,6 +53,13 @@ object Bench {
       s""""shuffle_write_bytes":${r.shuffleWriteBytes},"spill_bytes":${r.spillBytes},""" +
       s""""records_read":${r.recordsRead},"records_written":${r.recordsWritten}}"""
   }
+
+  /** `d` with 6 decimals and a `.` point whatever the JVM's locale. */
+  private def fmt(d: Double): String = "%.6f".formatLocal(java.util.Locale.ROOT, d)
+
+  /** Query seconds as one JSON object, `{"<query>":<seconds>,...}`. */
+  private[graft] def timesJson(times: Seq[(String, Double)]): String =
+    times.map { case (k, v) => jsonString(k) + ":" + fmt(v) }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -102,8 +109,6 @@ object Bench {
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
 
-    def fmt(d: Double): String = "%.6f".format(d)
-
     // interleaved passes: each is one sweep over the whole suite,
     // kept with the stage records of its queries
     val raw: Seq[(Double, Double, Seq[(String, Double)], Seq[StageRecord])] =
@@ -116,12 +121,9 @@ object Bench {
       val ts = raw.flatMap(_._3.collect { case (`n`, t) if t >= 0 => t })
       n -> (if (ts.isEmpty) -1.0 else ts.min)
     }
-    val qs = best.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val qs = timesJson(best)
     val passJson = raw.map { case (l0, l1, times, _) =>
-      val ts = times.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"load_start":${fmt(l0)},"load_end":${fmt(l1)},"queries":$ts}"""
+      s"""{"load_start":${fmt(l0)},"load_end":${fmt(l1)},"queries":${timesJson(times)}}"""
     }.mkString("[", ",", "]")
     val loadsJson = raw
       .map { case (l0, l1, _, _) => s"[${fmt(l0)},${fmt(l1)}]" }

@@ -80,10 +80,9 @@ object SparkEntry {
     * jobs included: `Tables.inParallel` threads inherit it), so
     * [[graft.run.RunObservability.ChunkProgressListener]]'s stage
     * records name their query; `build` plus `action` are timed; a
-    * non-fatal failure is returned, not thrown; and the job group and
-    * the session cache are released in a `finally`, so a failed
-    * query's cached frames never reach the next query. Returns each
-    * name with its seconds or its failure. */
+    * non-fatal failure is returned, not thrown; and the job group is
+    * released in a `finally`. Returns each name with its seconds or
+    * its failure. */
   def sweep(spark: SparkSession, names: Seq[String], build: String => DataFrame)
       (action: (String, DataFrame) => Unit): Seq[(String, Either[Throwable, Double])] = {
     val sc = spark.sparkContext
@@ -94,23 +93,7 @@ object SparkEntry {
         action(name, build(name))
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case NonFatal(e) => Left(e) }
-      finally {
-        sc.clearJobGroup()
-        spark.sharedState.cacheManager.clearCache()
-      })
+      finally sc.clearJobGroup())
     }
   }
-
-  /** `s` as a JSON string literal: quote, backslash and every control
-    * character (< 0x20) escaped, so a tab or CR in a query's SQL or a
-    * stage name never breaks a reader's json.load. */
-  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

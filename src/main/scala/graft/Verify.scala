@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.config.ConfigTree.jsonString
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
@@ -32,7 +33,7 @@ object Verify {
       case _ =>
     }
     val json = SparkEntry.oracleSql.filter { case (name, _) => runs(name) }
-      .map { case (k, v) => s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}" }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

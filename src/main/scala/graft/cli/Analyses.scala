@@ -17,9 +17,7 @@ import java.nio.file.Paths
   */
 object Analyses {
   def main(args: Array[String]): Unit = {
-    val registryDir = sys.env.getOrElse("GRAFT_REGISTRY",
-      sys.props("user.home") + "/.graft/analyses")
-    val reg = new AnalysisRegistry(Paths.get(registryDir))
+    val reg = new AnalysisRegistry(Paths.get(AnalysisRegistry.defaultDir(sys.env)))
     args.toList match {
       case "install" :: dir :: rest =>
         val name = reg.install(Paths.get(dir), rest.headOption)

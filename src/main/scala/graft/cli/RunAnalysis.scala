@@ -16,6 +16,7 @@ import java.nio.file.Paths
   * cone join, compiled DAG, append sink, progress + count accounting.
   *
   * Usage: RunAnalysis <runConfig.json> <catalogParquet> [registryDir]
+  * (registryDir defaults to $GRAFT_REGISTRY, else ~/.graft/analyses)
   * The run config's "output" key names the sink path; "write_format"
   * under output_parameters picks the writer (csv default).
   */
@@ -65,7 +66,7 @@ object RunAnalysis {
     require(args.length >= 2,
       "usage: RunAnalysis <runConfig.json> <catalogParquet> [registryDir]")
     val registryDir = if (args.length > 2) args(2)
-      else sys.props("user.home") + "/.graft/analyses"
+      else AnalysisRegistry.defaultDir(sys.env)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .appName("graft-run")

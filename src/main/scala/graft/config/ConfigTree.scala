@@ -31,6 +31,19 @@ object ConfigTree {
     case other => throw new IllegalArgumentException(s"config root must be an object, got $other")
   }
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped, so a tab or CR in a query's SQL, a stage
+    * name or an analysis name never breaks a reader's json.load. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Parse a config file by extension — `.json` or `.toml`, like the
     * reference's run_analysis dispatch
     * (/root/reference/src/cosmap/api/cmds.py:21-29). Both routes

@@ -20,12 +20,12 @@ import org.apache.spark.sql.types._
   * (the 374s→4s q44 lesson, see NGrams.scala).
   *
   * Determinism contract: the dot products accumulate left-to-right in
-  * double, matching DuckDB's `list_sum(list_transform(list_zip(...)))`
-  * oracle replay; plane entries are 3-decimal quantized so both
-  * engines parse identical doubles, and SemanticClusterSpec checks the
-  * corpus-wide minimum |dot| margin (~1e-6, observed) is orders of
-  * magnitude above any float summation-order noise (~1e-13), so the
-  * sign bits are bit-stable across engines.
+  * double, matching the oracle's [[VectorExprs.dotSql]] replay; plane
+  * entries are 3-decimal quantized so both engines parse identical
+  * doubles, and SemanticClusterSpec checks the corpus-wide minimum
+  * |dot| margin (~1e-6, observed) is orders of magnitude above any
+  * float summation-order noise (~1e-13), so the sign bits are
+  * bit-stable across engines.
   */
 case class SignBands(child: Expression, planes: Array[Double],
     bands: Int, bits: Int) extends UnaryExpression {

@@ -47,6 +47,18 @@ object Sphere {
     degrees(asin(least(lit(1.0), sqrt(h))) * 2)
   }
 
+  /** SQL for [[angularSepDeg]] with the same operands in the same
+    * order, so DuckDB evaluates the kernel's IEEE expression tree. The
+    * arguments are column references. */
+  def angularSepSql(ra1: String, dec1: String, ra2: String, dec2: String): String = {
+    val sinDLat = s"sin(radians($dec2 - $dec1) / 2)"
+    val sinDLon = s"sin(radians($ra2 - $ra1) / 2)"
+    s"""degrees(asin(least(1.0, sqrt(
+       |      $sinDLat * $sinDLat
+       |      + cos(radians($dec1)) * cos(radians($dec2))
+       |        * $sinDLon * $sinDLon))) * 2)""".stripMargin
+  }
+
   /** Minimal absolute RA difference in degrees, wraparound-safe:
     * |Δra| mapped into [0, 180]. */
   def raDelta(ra1: Column, ra2: Column): Column =

@@ -217,15 +217,33 @@ object SplitMix64 {
       s"i -> CAST(unicode(($strExpr)[i:i]) AS HUGEINT))), " +
       s"(acc, cp) -> (acc * 31 + cp) % $M64)"
 
+  /** The salt term salt·Golden (wrapping) as an unsigned SQL literal. */
+  def saltTermSql(salt: Long): String =
+    java.lang.Long.toUnsignedString(saltTerm(salt))
+
   /** The salt fold: (x + salt·Golden) mod 2^64, as SQL. */
   def saltedSql(x: String, salt: Long): String =
-    s"((($x) + ${java.lang.Long.toUnsignedString(saltTerm(salt))}) % $M64)"
+    s"((($x) + ${saltTermSql(salt)}) % $M64)"
+
+  /** The salt fold with the term as SQL: (x + term) mod 2^64. `term`
+    * is a HUGEINT in [0, 2^64) that may vary by row: a salt column
+    * times `saltTermSql(1)`, a [[saltTableSql]], or a [[saltTermSql]]. */
+  def saltedRowSql(x: String, term: String): String = s"($x + $term) % $M64"
+
+  /** A k-hash family's salt table as SQL: row j of column `row`, for
+    * j < `rows`, gets the term of salt `salt + j`. */
+  def saltTableSql(row: String, salt: Long, rows: Int): String =
+    (0 until rows).map(j => s"WHEN $j THEN ${saltTermSql(salt + j)}")
+      .mkString(s"CASE $row ", " ", " END")
+
+  /** A mix value in [0, 2^64) re-signed as the JVM's long. */
+  def signedSql(x: String): String =
+    s"CASE WHEN $x >= 9223372036854775808 THEN $x - $M64 ELSE $x END"
 
   /** SQL for `uniform(idExpr, salt)` — idExpr must be a non-negative
     * integral SQL expression. */
   def uniformSql(idExpr: String, salt: Long): String = {
-    val z3 = mixSql(s"CAST($idExpr AS HUGEINT) + " +
-      java.lang.Long.toUnsignedString(saltTerm(salt)))
+    val z3 = mixSql(s"CAST($idExpr AS HUGEINT) + ${saltTermSql(salt)}")
     s"((($z3) >> 11) / 9007199254740992.0)"
   }
 

@@ -95,4 +95,28 @@ object VectorExprs {
   def cosineFast(a: Column, b: Column): Column =
     graftbridge.toColumn(CosineSimilarity(
       graftbridge.toExpression(a), graftbridge.toExpression(b)))
+
+  // ---- DuckDB replay (code-generated oracle SQL) -------------------
+  //
+  // `list_sum` over the element products adds left to right in double,
+  // as the kernel's loop does, so every oracle that states a cosine or
+  // a plane's dot product through these gets the kernel's IEEE result.
+
+  /** SQL for the dot product of two numeric lists. */
+  def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
+
+  private def sumSqSql(a: String): String =
+    s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+  /** SQL for [[cosineFast]]: dot / (sqrt(na) * sqrt(nb)), the kernel's
+    * operation shape. */
+  def cosineSql(a: String, b: String): String =
+    s"(${dotSql(a, b)} / (sqrt(${sumSqSql(a)}) * sqrt(${sumSqSql(b)})))"
+
+  /** A constant vector (a codeword, a hyperplane) as a list literal of
+    * 3-decimal values — the quantization both engines parse to the same
+    * doubles — with a `.` decimal point whatever the JVM's locale. */
+  def listSql(v: Seq[Double]): String =
+    v.map(x => "%.3f".formatLocal(java.util.Locale.ROOT, x)).mkString("[", ", ", "]")
 }

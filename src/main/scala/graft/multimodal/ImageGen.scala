@@ -218,8 +218,7 @@ object ImageGen {
     * mix column `mc` must be a short column reference (one mix per
     * CTE column, the mixSql contract). */
   private[multimodal] def modSql(mc: String, mod: Int): String =
-    s"(((CASE WHEN $mc >= 9223372036854775808 THEN $mc - " +
-      s"18446744073709551616 ELSE $mc END % $mod) + $mod) % $mod)"
+    s"(((${SplitMix64.signedSql(mc)} % $mod) + $mod) % $mod)"
 
   private[multimodal] def mixCol(salt: Long): String =
     SplitMix64.mixSql(s"(base + key*131 + $salt)")

@@ -346,13 +346,7 @@ object ApproxAggs {
     * `<p>sh(j, h)` MATERIALIZED — shared by oracle188 (p = "") and the
     * q202 auto-sized eval oracle (p = "ac", where the Bloom chain's
     * CTE names would otherwise collide in the same WITH block). */
-  private[operators] def cmsHashCtes(p: String): String = {
-    import graft.functions.SplitMix64Kernel
-    val m64 = "18446744073709551616"
-    def saltLit(j: Int): String = java.lang.Long.toUnsignedString(
-      (CmSalt + j) * SplitMix64Kernel.Golden)
-    val saltCase = (0 until CmDepth)
-      .map(j => s"WHEN $j THEN ${saltLit(j)}").mkString(" ")
+  private[operators] def cmsHashCtes(p: String): String =
     s"""${p}tok AS (
        |  SELECT string_split_regex(text, '\\s+') AS t FROM documents),
        |${p}pos AS (
@@ -364,11 +358,14 @@ object ApproxAggs {
        |${p}occ AS MATERIALIZED (
        |  SELECT ${p}dh.th FROM ${p}wt JOIN ${p}dh USING (w)),
        |${p}sj AS (
-       |  SELECT j, (th + CASE j $saltCase END) % $m64 AS x
+       |  SELECT j, $cmsSaltedSql AS x
        |  FROM ${p}occ, (SELECT unnest(range($CmDepth)) AS j) js),
        |${p}sh AS MATERIALIZED (
        |  SELECT j, ${SplitMix64.mixSql("x")} AS h FROM ${p}sj)""".stripMargin
-  }
+
+  /** Row j's salted token hash: th folded with the CMS salt CmSalt + j. */
+  private def cmsSaltedSql: String =
+    SplitMix64.saltedRowSql("th", SplitMix64.saltTableSql("j", CmSalt, CmDepth))
 
   /** Gated per-width CMS probe-estimate legs for the q202 auto-sized
     * eval oracle: the bucket census and the probe rows for a width
@@ -452,13 +449,7 @@ object ApproxAggs {
   }
 
   private def oracle95: String = {
-    import graft.functions.{SplitMix64, SplitMix64Kernel}
-    val m64 = "18446744073709551616"
-    // per-row salt term (saltBase + j)·φ as an unsigned literal
-    def saltLit(j: Int): String = java.lang.Long.toUnsignedString(
-      (CmSalt + j) * SplitMix64Kernel.Golden)
-    val saltCase = (0 until CmDepth)
-      .map(j => s"WHEN $j THEN ${saltLit(j)}").mkString(" ")
+    import graft.functions.SplitMix64Kernel
     // probe (token, row, bucket) constants from the SAME Scala kernel
     val probeStructs = CmProbes.zipWithIndex.flatMap { case (t, pi) =>
       val th = SplitMix64Kernel.strHash(
@@ -487,7 +478,7 @@ object ApproxAggs {
        |dh AS (SELECT w, ${SplitMix64.mixSql("p")} AS th FROM dp),
        |occ AS (SELECT wt.lang, dh.th FROM wt JOIN dh USING (w)),
        |sj AS (
-       |  SELECT lang, j, (th + CASE j $saltCase END) % $m64 AS x
+       |  SELECT lang, j, $cmsSaltedSql AS x
        |  FROM occ, (SELECT unnest(range($CmDepth)) AS j) js),
        |sh AS (SELECT lang, j, ${SplitMix64.mixSql("x")} AS h FROM sj),
        |c AS (

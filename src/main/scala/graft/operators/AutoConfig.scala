@@ -980,7 +980,6 @@ object AutoConfig {
     * windows over the 3-row frontier — the same total order as
     * [[selectedFlag]]. */
   private def oracle197: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     def selFlag(label: String, floorPpm: Long): String = {
       val feas = s"recall_ppm >= $floorPpm AND candidates <= $CandidateBudgetMax"
       s"""CAST(CASE WHEN row_number() OVER (ORDER BY
@@ -992,8 +991,8 @@ object AutoConfig {
     s"""WITH RECURSIVE ${familyFrontierCtes("documents")}
        |SELECT family, config, candidates, n_docs, planted_pairs,
        |  recovered_pairs, correct_pairs, precision_ppm, recall_ppm,
-       |  ${sub(selFlag("strict", FamilyRecallFloorPpm))},
-       |  ${sub(selFlag("relaxed", 0L))}
+       |  ${nestSql(selFlag("strict", FamilyRecallFloorPpm))},
+       |  ${nestSql(selFlag("relaxed", 0L))}
        |FROM scored""".stripMargin
   }
 
@@ -1004,7 +1003,6 @@ object AutoConfig {
     * oracle197 (over `documents`) and oracle201 (over the mod-2
     * calibration slice). Splice directly after WITH RECURSIVE. */
   private def familyFrontierCtes(src: String): String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     val rows = Seq(("ex", "exact", "exact", 0, "excand"),
         ("mh", "minhash", "b16r4", 1, "mhcand"),
         ("sh", "simhash128", "sim128_h3", 2, "shcand"))
@@ -1017,19 +1015,19 @@ object AutoConfig {
     s"""${DedupQuality.variantCtes(DedupQuality.SepDen, src)},
        |excand AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(Dedup.prefixCandSqlOver("variants"))})),
+       |  ${nestSql(Dedup.prefixCandSqlOver("variants"))})),
        |mhcand AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(Dedup.minhashCandSqlOver("variants"))})),
+       |  ${nestSql(Dedup.minhashCandSqlOver("variants"))})),
        |shcand AS MATERIALIZED (
        |  SELECT doc_a, doc_b, hamming FROM (
-       |  ${sub(Dedup.simhashWideCandSqlOver("variants"))})),
+       |  ${nestSql(Dedup.simhashWideCandSqlOver("variants"))})),
        |expairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(DedupQuality.exactPairsSqlOver("variants"))})),
+       |  ${nestSql(DedupQuality.exactPairsSqlOver("variants"))})),
        |mhpairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(Dedup.minhashPairsSqlOver("variants"))})),
+       |  ${nestSql(Dedup.minhashPairsSqlOver("variants"))})),
        |shpairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM shcand WHERE hamming <= 3),
        |${DedupQuality.ccWalkCtes("ex", "expairs")},
@@ -1058,7 +1056,6 @@ object AutoConfig {
     * reach the anti-join, the lshDropCtesOver gating pattern applied
     * across families. */
   private def oracle201: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     val gated = Seq(("exdrop", "exact"), ("mhdrop", "b16r4"),
       ("shdrop", "sim128_h3")).map { case (leg, cfg) =>
       s"""  SELECT doc_id FROM $leg
@@ -1075,13 +1072,13 @@ object AutoConfig {
        |),
        |exdrop AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |  ${sub(DedupQuality.exactPairsSqlOver("documents"))})),
+       |  ${nestSql(DedupQuality.exactPairsSqlOver("documents"))})),
        |mhdrop AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |  ${sub(Dedup.minhashPairsSqlOver("documents"))})),
+       |  ${nestSql(Dedup.minhashPairsSqlOver("documents"))})),
        |shdrop AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |  ${sub(Dedup.simhashWidePairsSqlOver("documents"))})),
+       |  ${nestSql(Dedup.simhashWidePairsSqlOver("documents"))})),
        |dropset AS MATERIALIZED (
        |${gated.mkString("\n  UNION ALL\n")}
        |)
@@ -1236,7 +1233,6 @@ object AutoConfig {
     * as a scalar accept — only the SELECTED family's chunk join
     * reaches the anti-join. */
   private def oracle203: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     val feas = s"precision_ppm >= $RadiusPrecisionFloorPpm" +
       s" AND candidates <= $CandidateBudgetMax"
     val gated = Seq(("d64", "sim64"), ("d128", "sim128")).map {
@@ -1248,7 +1244,7 @@ object AutoConfig {
        |  SELECT doc_id, text FROM documents
        |  WHERE doc_id % ${CalibSampleMod} = 0),
        |fr AS MATERIALIZED (
-       |  ${sub(Dedup.simhashFrontierSqlOver("calib"))}),
+       |  ${nestSql(Dedup.simhashFrontierSqlOver("calib"))}),
        |sel AS MATERIALIZED (
        |  SELECT config, family, radius FROM fr
        |  ORDER BY (CASE WHEN $feas THEN 1 ELSE 0 END) DESC,
@@ -1256,11 +1252,11 @@ object AutoConfig {
        |  LIMIT 1),
        |d64 AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |  ${sub(Dedup.simhash64CandSqlOver("documents"))}) c
+       |  ${nestSql(Dedup.simhash64CandSqlOver("documents"))}) c
        |  WHERE hamming <= (SELECT radius FROM sel)),
        |d128 AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |  ${sub(Dedup.simhashWideCandSqlOver("documents"))}) c
+       |  ${nestSql(Dedup.simhashWideCandSqlOver("documents"))}) c
        |  WHERE hamming <= (SELECT radius FROM sel)),
        |dropset AS MATERIALIZED (
        |${gated.mkString("\n  UNION ALL\n")}
@@ -1280,7 +1276,6 @@ object AutoConfig {
     * persisted-vs-remeasured dispatch is replayed, not assumed. */
   private def oracle204: String = {
     import graft.functions.SplitMix64
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     def fpCtes(p: String, src: String): String =
       s"""${p}k AS (SELECT CAST(vec_id AS VARCHAR) AS key FROM $src),
          |${p}p AS (SELECT ${SplitMix64.polyHashSql("key")} AS p FROM ${p}k),
@@ -1295,9 +1290,9 @@ object AutoConfig {
     s"""WITH eslice AS MATERIALIZED (
        |  SELECT * FROM embeddings WHERE vec_id % 8 = 0),
        |fr_full AS MATERIALIZED (SELECT * FROM (
-       |  ${sub(Similarity.ivfFrontierSqlOver("embeddings"))})),
+       |  ${nestSql(Similarity.ivfFrontierSqlOver("embeddings"))})),
        |fr_slice AS MATERIALIZED (SELECT * FROM (
-       |  ${sub(Similarity.ivfFrontierSqlOver("eslice"))})),
+       |  ${nestSql(Similarity.ivfFrontierSqlOver("eslice"))})),
        |${fpCtes("ff", "embeddings")},
        |${fpCtes("fs", "eslice")},
        |mt AS (SELECT CASE WHEN f.n = s.n AND f.x = s.x THEN 1 ELSE 0 END

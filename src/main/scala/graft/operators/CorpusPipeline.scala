@@ -617,11 +617,11 @@ object CorpusPipeline {
   /** The scrub-survivor text manifest CTE (`text_up(id,
     * multiplicity)`) — the q176/q183 pipelines' text branch: CC labels
     * over the SCRUBBED text, cluster multiplicities on canonicals. */
-  private def textUpCte(sub: String => String): String =
+  private def textUpCte: String =
     s"""text_up AS MATERIALIZED (
        |  WITH RECURSIVE scrubbed AS MATERIALIZED (
-       |  ${sub(RepeatedSpans.scrubSql("documents"))}),
-       |  ${sub(Dedup.ccLabelCtesOver("scrubbed"))}
+       |  ${nestSql(RepeatedSpans.scrubSql("documents"))}),
+       |  ${nestSql(Dedup.ccLabelCtesOver("scrubbed"))}
        |  SELECT l.doc_id AS id, CAST(m AS BIGINT) AS multiplicity
        |  FROM labels l
        |  JOIN (SELECT cluster_id, count(*) AS m FROM labels
@@ -633,20 +633,19 @@ object CorpusPipeline {
        |)""".stripMargin
 
   private def oracle176: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
-    s"""WITH ${textUpCte(sub)},
+    s"""WITH $textUpCte,
        |img_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.ImageGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.ImageGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
                 ImageDedup.Center, ImageDedup.L1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(
+       |  ${nestSql(ImageDedup.manifestSqlOver(
                 "SELECT doc_id AS id FROM documents"))}
        |),
        |src AS (SELECT doc_id AS id, source FROM documents),
        |census AS MATERIALIZED (
-       |  ${sub(CrossModal.censusSql("text_up", "text", "id"))}
+       |  ${nestSql(CrossModal.censusSql("text_up", "text", "id"))}
        |  UNION ALL
-       |  ${sub(CrossModal.censusSql("img_man", "image", "id"))}),
+       |  ${nestSql(CrossModal.censusSql("img_man", "image", "id"))}),
        |$mixTailSql""".stripMargin
   }
 
@@ -654,36 +653,35 @@ object CorpusPipeline {
     * audio/video manifests, four census fragments, the same
     * temperature tail — the quad pipeline replayed stage for stage. */
   private def oracle183: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     val idsSel = "SELECT doc_id AS id FROM documents"
-    s"""WITH ${textUpCte(sub)},
+    s"""WITH $textUpCte,
        |img_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.ImageGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.ImageGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
                 ImageDedup.Center, ImageDedup.L1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |aud_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.AudioGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(AudioDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.AudioGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(AudioDedup.PlaneCoef,
                 AudioDedup.Center, AudioDedup.ScaledL1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |vid_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.VideoGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(VideoDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.VideoGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(VideoDedup.PlaneCoef,
                 VideoDedup.Center, VideoDedup.ScaledL1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |src AS (SELECT doc_id AS id, source FROM documents),
        |census AS MATERIALIZED (
-       |  ${sub(CrossModal.censusSql("text_up", "text", "id"))}
+       |  ${nestSql(CrossModal.censusSql("text_up", "text", "id"))}
        |  UNION ALL
-       |  ${sub(CrossModal.censusSql("img_man", "image", "id"))}
+       |  ${nestSql(CrossModal.censusSql("img_man", "image", "id"))}
        |  UNION ALL
-       |  ${sub(CrossModal.censusSql("aud_man", "audio", "id"))}
+       |  ${nestSql(CrossModal.censusSql("aud_man", "audio", "id"))}
        |  UNION ALL
-       |  ${sub(CrossModal.censusSql("vid_man", "video", "id"))}),
+       |  ${nestSql(CrossModal.censusSql("vid_man", "video", "id"))}),
        |$mixTailSql""".stripMargin
   }
 
@@ -799,17 +797,16 @@ object CorpusPipeline {
     // honest replay of a plan-time choice). deduped/scrubbed/cleaned
     // MATERIALIZED (multi-read).
     "q194_autotuned_pipeline" -> {
-      def sub(q: String): String = q.linesIterator.mkString("\n  ")
       s"""WITH dsample AS MATERIALIZED (
          |  SELECT doc_id, lang, text FROM documents
          |  WHERE doc_id % ${AutoConfig.CalibSampleMod} = 0),
          |sel AS MATERIALIZED (
-         |  ${sub(AutoConfig.bandingChoiceSqlOver("dsample"))}
+         |  ${nestSql(AutoConfig.bandingChoiceSqlOver("dsample"))}
          |),
          |deduped AS MATERIALIZED (
          |  SELECT doc_id, lang, text FROM documents
          |  WHERE doc_id NOT IN (SELECT doc_id FROM (
-         |  WITH ${sub(Dedup.lshDropCtesOver("documents"))}
+         |  WITH ${nestSql(Dedup.lshDropCtesOver("documents"))}
          |  SELECT doc_id FROM dropset
          |))),
          |scrubbed AS MATERIALIZED (

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.domain.{SkyBounds, SphereSampler}
+import graft.functions.Sphere
 import graft.plans.SkyJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -219,17 +220,13 @@ object CosmapDomain {
        |  $QuickstartRadiusDeg AS radius_deg
        |FROM smp""".stripMargin
 
+  /** The band join's haversine, catalog object `c` against sample `s`,
+    * as [[Sphere.angularSepSql]] states it. */
+  private def sepSql: String = Sphere.angularSepSql("c.ra", "c.dec", "s.ra", "s.dec")
+
   /** Full quickstart replay: sampler CTE + the identical haversine
-    * join (operand order mirrored from Sphere.angularSepDeg so both
-    * engines evaluate the same IEEE expression tree) + decimal-summed
-    * aggregate with empty samples preserved. */
-  private def oracle33: String = {
-    val sep =
-      """degrees(asin(least(1.0, sqrt(
-        |      sin(radians(s.dec - c.dec) / 2) * sin(radians(s.dec - c.dec) / 2)
-        |      + cos(radians(c.dec)) * cos(radians(s.dec))
-        |        * sin(radians(s.ra - c.ra) / 2) * sin(radians(s.ra - c.ra) / 2)))) * 2)"""
-        .stripMargin
+    * join + decimal-summed aggregate with empty samples preserved. */
+  private def oracle33: String =
     s"""WITH smp AS (
        |${samplerSql(1000, QuickstartBounds, QuickstartRadiusDeg, 42L)}),
        |cat AS (
@@ -238,9 +235,9 @@ object CosmapDomain {
        |         -11.0 + (l_partkey % 7000) / 1000.0 AS dec
        |  FROM lineitem),
        |matched AS (
-       |  SELECT s.sample_id, $sep AS sep_deg
+       |  SELECT s.sample_id, $sepSql AS sep_deg
        |  FROM cat c, smp s
-       |  WHERE $sep <= $QuickstartRadiusDeg),
+       |  WHERE $sepSql <= $QuickstartRadiusDeg),
        |agg AS (
        |  SELECT sample_id, count(*) AS n,
        |    CAST(sum(CAST(round(sep_deg * 3600.0, 3) AS DECIMAL(28,3))) AS DOUBLE) AS inv
@@ -250,7 +247,6 @@ object CosmapDomain {
        |SELECT s.sample_id, s.ra, round(s.dec, 6) AS dec,
        |  coalesce(a.n, 0) AS n, coalesce(a.inv, 0.0) AS inv
        |FROM smp s LEFT JOIN agg a USING (sample_id)""".stripMargin
-  }
 
   val oracles: Map[String, String] = Map(
     "q32_sampler" -> oracle32,
@@ -278,7 +274,7 @@ object CosmapDomain {
         |GROUP BY s.sample_id""".stripMargin,
 
     "q31_cone_join_agg" ->
-      """WITH cat AS (
+      s"""WITH cat AS (
         |  SELECT o_orderkey AS object_id,
         |         (o_orderkey % 3600) / 10.0 AS ra,
         |         (o_custkey % 1200) / 10.0 - 60.0 AS dec
@@ -291,22 +287,14 @@ object CosmapDomain {
         |  FROM region)
         |SELECT s.sample_id,
         |  count(*) AS n_objects,
-        |  CAST(sum(CAST(
-        |    degrees(2 * asin(least(1.0, sqrt(
-        |      sin(radians(c.dec - s.dec) / 2) * sin(radians(c.dec - s.dec) / 2)
-        |      + cos(radians(s.dec)) * cos(radians(c.dec))
-        |        * sin(radians(c.ra - s.ra) / 2) * sin(radians(c.ra - s.ra) / 2)))))
+        |  CAST(sum(CAST($sepSql
         |    AS DECIMAL(18,6))) AS DOUBLE) AS sum_sep
         |FROM cat c, smp s
-        |WHERE degrees(2 * asin(least(1.0, sqrt(
-        |        sin(radians(c.dec - s.dec) / 2) * sin(radians(c.dec - s.dec) / 2)
-        |        + cos(radians(s.dec)) * cos(radians(c.dec))
-        |          * sin(radians(c.ra - s.ra) / 2) * sin(radians(c.ra - s.ra) / 2)))))
-        |      <= s.radius_deg
+        |WHERE $sepSql <= s.radius_deg
         |GROUP BY s.sample_id""".stripMargin,
 
     "q68_cone_centroid" ->
-      """WITH cat AS (
+      s"""WITH cat AS (
         |  SELECT o_orderkey AS object_id,
         |         (o_orderkey % 3600) / 10.0 AS ra,
         |         (o_custkey % 1200) / 10.0 - 60.0 AS dec
@@ -320,11 +308,7 @@ object CosmapDomain {
         |joined AS (
         |  SELECT s.sample_id, c.ra, c.dec
         |  FROM cat c, smp s
-        |  WHERE degrees(2 * asin(least(1.0, sqrt(
-        |          sin(radians(c.dec - s.dec) / 2) * sin(radians(c.dec - s.dec) / 2)
-        |          + cos(radians(s.dec)) * cos(radians(c.dec))
-        |            * sin(radians(c.ra - s.ra) / 2) * sin(radians(c.ra - s.ra) / 2)))))
-        |        <= s.radius_deg),
+        |  WHERE $sepSql <= s.radius_deg),
         |sums AS (
         |  SELECT sample_id,
         |    sum(cos(radians(dec)) * cos(radians(ra))) AS x,

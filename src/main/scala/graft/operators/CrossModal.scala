@@ -186,22 +186,21 @@ object CrossModal {
     * locally scoped, so the four recursive chains coexist without
     * prefixing), then the same per-source censuses and union. */
   private def oracle167: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     s"""WITH text_up AS MATERIALIZED (
-       |  ${sub(Dedup.oracles("q149_dedup_upweight"))}
+       |  ${nestSql(Dedup.oracles("q149_dedup_upweight"))}
        |),
        |img_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.ImageGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.ImageGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
                 ImageDedup.Center, ImageDedup.L1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(
+       |  ${nestSql(ImageDedup.manifestSqlOver(
                 "SELECT doc_id AS id FROM documents"))}
        |),
        |aud_man AS MATERIALIZED (
-       |  ${sub(AudioDedup.oracles("q162_audio_dedup_manifest"))}
+       |  ${nestSql(AudioDedup.oracles("q162_audio_dedup_manifest"))}
        |),
        |vid_man AS MATERIALIZED (
-       |  ${sub(VideoDedup.oracles("q166_video_dedup_manifest"))}
+       |  ${nestSql(VideoDedup.oracles("q166_video_dedup_manifest"))}
        |),
        |src AS (SELECT doc_id AS id, source FROM documents),
        |tcen AS (
@@ -266,38 +265,37 @@ object CrossModal {
     * video derive their features in closed form (no fixture read),
     * each nested as a scoped subquery, then four per-source censuses. */
   private def oracle167b: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     val idsSel = "SELECT doc_id AS id FROM documents"
     s"""WITH text_up AS MATERIALIZED (
-       |  ${sub(Dedup.oracles("q149_dedup_upweight"))}
+       |  ${nestSql(Dedup.oracles("q149_dedup_upweight"))}
        |),
        |img_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.ImageGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.ImageGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(ImageDedup.PlaneCoef,
                 ImageDedup.Center, ImageDedup.L1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |aud_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.AudioGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(AudioDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.AudioGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(AudioDedup.PlaneCoef,
                 AudioDedup.Center, AudioDedup.ScaledL1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |vid_man AS MATERIALIZED (
-       |  WITH RECURSIVE ${sub(graft.multimodal.VideoGen.featureSql)},
-       |  ${sub(ImageDedup.signLshChainSql(VideoDedup.PlaneCoef,
+       |  WITH RECURSIVE ${nestSql(graft.multimodal.VideoGen.featureSql)},
+       |  ${nestSql(ImageDedup.signLshChainSql(VideoDedup.PlaneCoef,
                 VideoDedup.Center, VideoDedup.ScaledL1Max))},
-       |  ${sub(ImageDedup.manifestSqlOver(idsSel))}
+       |  ${nestSql(ImageDedup.manifestSqlOver(idsSel))}
        |),
        |src AS (SELECT doc_id AS id, source FROM documents),
        |tcen AS (
-       |  ${sub(censusSql("text_up", "text", "doc_id"))}),
+       |  ${nestSql(censusSql("text_up", "text", "doc_id"))}),
        |icen AS (
-       |  ${sub(censusSql("img_man", "image", "id"))}),
+       |  ${nestSql(censusSql("img_man", "image", "id"))}),
        |acen AS (
-       |  ${sub(censusSql("aud_man", "audio", "id"))}),
+       |  ${nestSql(censusSql("aud_man", "audio", "id"))}),
        |vcen AS (
-       |  ${sub(censusSql("vid_man", "video", "id"))})
+       |  ${nestSql(censusSql("vid_man", "video", "id"))})
        |SELECT * FROM tcen UNION ALL SELECT * FROM icen
        |UNION ALL SELECT * FROM acen UNION ALL SELECT * FROM vcen""".stripMargin
   }

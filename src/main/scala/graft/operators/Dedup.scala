@@ -740,9 +740,7 @@ object Dedup {
   // layered through CTE columns because one inlined mix() repeats its
   // argument ~100×.
 
-  import graft.functions.SplitMix64.{mixSql, polyHashSql}
-  private val M64 = "18446744073709551616"
-  private val GoldenU = java.lang.Long.toUnsignedString(0x9E3779B97F4A7C15L)
+  import graft.functions.SplitMix64.{mixSql, polyHashSql, saltTermSql, saltedRowSql}
 
   /** CTE chain computing per-occurrence token hashes: (doc_id, i, h)
     * with h = strHash(token i), over relation `src`. Distinct tokens
@@ -824,7 +822,7 @@ object Dedup {
       radiusFiltered: Boolean): String =
     s"""WITH ${tokenHashCtes(src)},
        |lanes AS (SELECT doc_id, h AS h0,
-       |  ${mixSql(s"(h + $GoldenU) % $M64")} AS h1 FROM th),
+       |  ${mixSql(saltedRowSql("h", saltTermSql(1)))} AS h1 FROM th),
        |${fpCtes("lanes", "0")},
        |${fpCtes("lanes", "1")},
        |fp AS (
@@ -864,7 +862,7 @@ object Dedup {
        |  SELECT DISTINCT doc_id, ${mixSql("xor(s2, h3)")} AS sh FROM sh2),
        |salted AS (
        |  SELECT doc_id, k,
-       |    ${mixSql(s"(sh + CAST(k AS HUGEINT) * $GoldenU) % $M64")} AS hk
+       |    ${mixSql(saltedRowSql("sh", s"CAST(k AS HUGEINT) * ${saltTermSql(1)}"))} AS hk
        |  FROM sh3, (SELECT unnest(range(64)) AS k) ks),
        |mins AS (SELECT doc_id, k, min(hk) AS m FROM salted GROUP BY doc_id, k),
        |sigs AS MATERIALIZED (
@@ -1073,7 +1071,7 @@ object Dedup {
     }
     s"""WITH ${tokenHashCtes(src)},
        |lanes AS (SELECT doc_id, h AS h0,
-       |  ${mixSql(s"(h + $GoldenU) % $M64")} AS h1 FROM th),
+       |  ${mixSql(saltedRowSql("h", saltTermSql(1)))} AS h1 FROM th),
        |${fpCtes("lanes", "0")},
        |${fpCtes("lanes", "1")},
        |c64 AS (

@@ -245,20 +245,19 @@ object DedupQuality {
     * The family pair chains are nested as scoped subqueries (their
     * internal tok/sig names would clash across families). */
   private def oracle193: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
     def labCte(p: String): String = labCteSql(p)
     val rows = Seq("ex" -> "exact", "mh" -> "minhash", "sh" -> "simhash128")
       .map { case (p, f) => censusSql(p, f) }
     s"""WITH RECURSIVE ${variantCtes(SepDen)},
        |expairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(exactPairsSqlOver("variants"))})),
+       |  ${nestSql(exactPairsSqlOver("variants"))})),
        |mhpairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(minhashPairsSqlOver("variants"))})),
+       |  ${nestSql(minhashPairsSqlOver("variants"))})),
        |shpairs AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (
-       |  ${sub(simhashWidePairsSqlOver("variants"))})),
+       |  ${nestSql(simhashWidePairsSqlOver("variants"))})),
        |${ccWalkCtes("ex", "expairs")},
        |${ccWalkCtes("mh", "mhpairs")},
        |${ccWalkCtes("sh", "shpairs")},

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Cut._
 import graft.Tables
 import graft.functions.{SignBands, VectorExprs, Vectors}
+import graft.functions.VectorExprs.{cosineSql, dotSql, listSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -876,6 +877,25 @@ object Similarity {
       .flatten.reduce(_.unionByName(_))
   }
 
+  /** The sign-LSH bucket of vector `v` over `planes`: bit i set iff
+    * the dot product with plane i is ≥ 0 (the [[SignBands]] bit). */
+  private def bucketBitsSql(v: String, planes: Seq[Seq[Double]]): String =
+    planes.zipWithIndex.map { case (p, i) =>
+      s"(CASE WHEN ${dotSql(v, listSql(p))} >= 0 THEN ${1 << i} ELSE 0 END)"
+    }.mkString(" + ")
+
+  /** A codebook as `UNNEST`-able `struct_pack(cid, <field>)` rows. */
+  private def codebookStructsSql(cents: Seq[Seq[Double]], field: String): String =
+    cents.zipWithIndex
+      .map { case (c, i) => s"struct_pack(cid := $i, $field := ${listSql(c)})" }
+      .mkString(",\n    ")
+
+  /** The list of `embedding`'s cosines with every codeword, in codebook
+    * order — argmax'd, or sliced to the adaptive prefix, at use sites. */
+  private[operators] def codebookCosinesSql(cents: Seq[Seq[Double]]): String =
+    cents.map(c => cosineSql("embedding", listSql(c)))
+      .mkString("[\n      ", ",\n      ", "]")
+
   /** q83's DuckDB oracle is CODE-GENERATED from the same quantized
     * plane constants the Spark expression uses (the oracle replays
     * the full composed algorithm: band keys → Hamming-1 probe
@@ -884,28 +904,14 @@ object Similarity {
     * is ≥ ~1e-6 (asserted by SemanticClusterSpec) while any summation
     * -order float noise is ~1e-13. */
   private def oracle83: String = {
-    def dotSql(plane: Seq[Double]): String = {
-      val lst = plane.map(v => f"$v%.3f").mkString("[", ", ", "]")
-      "list_sum(list_transform(list_zip(embedding, " + lst +
-        "), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    }
     val keyCols = (0 until Bands83).map { l =>
-      val bits = (0 until Bits83).map { j =>
-        s"(CASE WHEN ${dotSql(Planes83(l * Bits83 + j))} >= 0 THEN ${1 << j} ELSE 0 END)"
-      }.mkString(" + ")
+      val bits = bucketBitsSql("embedding", Planes83.slice(l * Bits83, (l + 1) * Bits83))
       s"($bits) AS k$l"
     }.mkString(",\n    ")
     val bandStructs = (0 until Bands83)
       .map(l => s"struct_pack(i := $l, k := k$l)").mkString(", ")
     val probeList = ("band_key" +: (0 until Bits83)
       .map(j => s"xor(band_key, ${1 << j})")).mkString(", ")
-    val cosSql =
-      """list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(ea.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(eb.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
     s"""WITH RECURSIVE keys AS (
        |  SELECT vec_id,
        |    $keyCols
@@ -926,7 +932,7 @@ object Similarity {
        |  SELECT vec_a, vec_b FROM cand
        |  JOIN embeddings ea ON ea.vec_id = cand.vec_a
        |  JOIN embeddings eb ON eb.vec_id = cand.vec_b
-       |  WHERE round($cosSql, 6) >= 0.4),
+       |  WHERE round(${cosineSql("ea.embedding", "eb.embedding")}, 6) >= 0.4),
        |edges AS (
        |  SELECT vec_a AS src, vec_b AS dst FROM pairs
        |  UNION SELECT vec_b, vec_a FROM pairs),
@@ -948,10 +954,8 @@ object Similarity {
     * vectors their own id. Sign-bit stability is the q83 argument
     * (SemanticClusterSpec asserts the PlanesA margin tri-scale). */
   private def oracle87: String = {
-    val pairsSub = adaptivePairsSqlOver("embeddings", "0.9")
-      .linesIterator.mkString("\n  ")
     s"""WITH RECURSIVE pairs AS MATERIALIZED (
-       |  $pairsSub
+       |  ${nestSql(adaptivePairsSqlOver("embeddings", "0.9"))}
        |),
        |edges AS (
        |  SELECT vec_a AS src, vec_b AS dst FROM pairs
@@ -974,29 +978,18 @@ object Similarity {
     * replay the scale path over its planted variant corpus. */
   private[operators] def adaptivePairsSqlOver(src: String,
       thresholdSql: String): String = {
-    def dotSql(plane: Seq[Double]): String = {
-      val lst = plane.map(v => f"$v%.3f").mkString("[", ", ", "]")
-      "list_sum(list_transform(list_zip(embedding, " + lst +
-        "), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    }
     // ceil(log2(c)) + 4 clamped to [8, 24], as integer comparisons
     val ladder = (5 to 19).map(k => s"WHEN c <= ${1L << k} THEN ${k + 4}")
       .mkString(" ")
     val keyCols = (0 until BandsA).map { l =>
       val bits = (0 until MaxBitsA).map { j =>
-        s"(CASE WHEN $j < b AND ${dotSql(PlanesA(l * MaxBitsA + j))} >= 0 THEN ${1L << j} ELSE 0 END)"
+        val dot = dotSql("embedding", listSql(PlanesA(l * MaxBitsA + j)))
+        s"(CASE WHEN $j < b AND $dot >= 0 THEN ${1L << j} ELSE 0 END)"
       }.mkString(" + ")
       s"CAST($bits AS BIGINT) AS k$l"
     }.mkString(",\n    ")
     val bandStructs = (0 until BandsA)
       .map(l => s"struct_pack(i := $l, k := k$l)").mkString(", ")
-    val cosSql =
-      """list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(ea.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(eb.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
     s"""WITH nb AS (
        |  SELECT CASE WHEN c <= 16 THEN 8 $ladder ELSE 24 END AS b
        |  FROM (SELECT count(*) AS c FROM $src)),
@@ -1020,7 +1013,7 @@ object Similarity {
        |SELECT vec_a, vec_b FROM cand
        |JOIN $src ea ON ea.vec_id = cand.vec_a
        |JOIN $src eb ON eb.vec_id = cand.vec_b
-       |WHERE round($cosSql, 6) >= $thresholdSql""".stripMargin
+       |WHERE round(${cosineSql("ea.embedding", "eb.embedding")}, 6) >= $thresholdSql""".stripMargin
   }
 
   /** q86's oracle replays the whole IVF path from the same 3-decimal
@@ -1031,34 +1024,21 @@ object Similarity {
     * SimilaritySpec asserts the argmax and probe-rank margins are
     * orders of magnitude wider. */
   private def oracle86: String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val cents = Centroids86.table
-    val centStructs = cents.zipWithIndex
-      .map { case (c, i) => s"struct_pack(cid := $i, c := ${lst(c)})" }
-      .mkString(",\n    ")
-    val simList = cents.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
        |cents AS (
        |  SELECT u.cid AS cid, u.c AS c
-       |  FROM UNNEST([$centStructs]) AS t(u)),
+       |  FROM UNNEST([${codebookStructsSql(Centroids86.table, "c")}]) AS t(u)),
        |probes AS (
        |  SELECT cid FROM cents, q
-       |  ORDER BY ${cosE("q_emb", "c")} DESC, cid
+       |  ORDER BY ${cosineSql("q_emb", "c")} DESC, cid
        |  LIMIT 4),
        |assigned AS (
        |  SELECT vec_id, label, embedding,
        |    CAST(list_position(l, list_max(l)) - 1 AS INTEGER) AS cell
-       |  FROM (SELECT vec_id, label, embedding, $simList AS l
+       |  FROM (SELECT vec_id, label, embedding, ${codebookCosinesSql(Centroids86.table)} AS l
        |        FROM embeddings))
        |SELECT a.vec_id, a.label,
-       |  round(${cosE("a.embedding", "q_emb")}, 6) AS cos_sim
+       |  round(${cosineSql("a.embedding", "q_emb")}, 6) AS cos_sim
        |FROM assigned a, q
        |WHERE a.vec_id <> 0 AND a.cell IN (SELECT cid FROM probes)
        |ORDER BY cos_sim DESC, a.vec_id
@@ -1070,32 +1050,19 @@ object Similarity {
     * independent derivation of the engine's per-row struct-sort), and
     * the round-6 re-rank + per-query top-5 window. */
   private def oracle94: String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val cents = Centroids86.table
-    val centStructs = cents.zipWithIndex
-      .map { case (c, i) => s"struct_pack(cid := $i, c := ${lst(c)})" }
-      .mkString(",\n    ")
-    val simList = cents.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     s"""WITH cents AS (
        |  SELECT u.cid AS cid, u.c AS c
-       |  FROM UNNEST([$centStructs]) AS t(u)),
+       |  FROM UNNEST([${codebookStructsSql(Centroids86.table, "c")}]) AS t(u)),
        |assigned AS (
        |  SELECT vec_id, label, embedding,
        |    CAST(list_position(l, list_max(l)) - 1 AS INTEGER) AS cell
-       |  FROM (SELECT vec_id, label, embedding, $simList AS l
+       |  FROM (SELECT vec_id, label, embedding, ${codebookCosinesSql(Centroids86.table)} AS l
        |        FROM embeddings)),
        |queries AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
        |  WHERE vec_id % 50 = 0),
        |qsims AS (
-       |  SELECT q_id, q_emb, cid, ${cosE("q_emb", "c")} AS qc
+       |  SELECT q_id, q_emb, cid, ${cosineSql("q_emb", "c")} AS qc
        |  FROM queries, cents),
        |qcells AS (
        |  SELECT q_id, q_emb, cid FROM (
@@ -1105,7 +1072,7 @@ object Similarity {
        |  WHERE pr <= 6),
        |cand AS (
        |  SELECT p.q_id, a.vec_id, a.label,
-       |    round(${cosE("a.embedding", "p.q_emb")}, 6) AS cos_sim
+       |    round(${cosineSql("a.embedding", "p.q_emb")}, 6) AS cos_sim
        |  FROM qcells p JOIN assigned a
        |    ON a.cell = p.cid AND a.vec_id <> p.q_id)
        |SELECT q_id, vec_id, label, cos_sim, CAST(rank AS BIGINT) AS rank
@@ -1120,15 +1087,8 @@ object Similarity {
     * nested-WITH scoping), the brute-force side one query-sample ×
     * corpus window, integer intersection. */
   private def oracle169: String = {
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val ivfSub = oracle94.linesIterator.mkString("\n  ")
     s"""WITH ivf AS MATERIALIZED (
-       |  $ivfSub
+       |  ${nestSql(oracle94)}
        |),
        |queries AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
@@ -1137,7 +1097,7 @@ object Similarity {
        |  SELECT q_id, vec_id FROM (
        |    SELECT q.q_id, e.vec_id,
        |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY round(${cosE("e.embedding", "q.q_emb")}, 6) DESC,
+       |        ORDER BY round(${cosineSql("e.embedding", "q.q_emb")}, 6) DESC,
        |                 e.vec_id) AS rank
        |    FROM queries q JOIN embeddings e ON e.vec_id <> q.q_id)
        |  WHERE rank <= 5),
@@ -1183,19 +1143,6 @@ object Similarity {
   }
 
   private def ivfFrontierSqlPartsOver(src: String): (String, String) = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    def centStructs(cents: Seq[Seq[Double]]) = cents.zipWithIndex
-      .map { case (c, i) => s"struct_pack(cid := $i, ce := ${lst(c)})" }
-      .mkString(",\n    ")
-    def simList(cents: Seq[Seq[Double]]) =
-      cents.map(c => cosE("embedding", lst(c)))
-        .mkString("[\n      ", ",\n      ", "]")
     // per-config chain: candidates from the codebook's shared ranked
     // CTEs at this config's probe budget, then the count + top-5-hit
     // scalar row (cand MATERIALIZED: two scalar-subquery reads)
@@ -1203,7 +1150,7 @@ object Similarity {
         ncellsSql: String, npSql: String): String =
       s"""${p}cand AS MATERIALIZED (
          |  SELECT r.q_id, a.vec_id,
-         |    round(${cosE("a.embedding", "r.q_emb")}, 6) AS cos_sim
+         |    round(${cosineSql("a.embedding", "r.q_emb")}, 6) AS cos_sim
          |  FROM $rankCte r JOIN $assignCte a
          |    ON a.cell = r.cid AND a.vec_id <> r.q_id
          |  WHERE r.pr <= ($npSql)),
@@ -1237,7 +1184,7 @@ object Similarity {
        |  SELECT q_id, vec_id FROM (
        |    SELECT q.q_id, e.vec_id,
        |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY round(${cosE("e.embedding", "q.q_emb")}, 6) DESC,
+       |        ORDER BY round(${cosineSql("e.embedding", "q.q_emb")}, 6) DESC,
        |                 e.vec_id) AS rank
        |    FROM queries q JOIN $src e ON e.vec_id <> q.q_id)
        |  WHERE rank <= 5),
@@ -1248,30 +1195,30 @@ object Similarity {
        |  FROM $src),
        |fcents AS (
        |  SELECT u.cid AS cid, u.ce AS ce
-       |  FROM UNNEST([${centStructs(Centroids86.table)}]) AS t(u)),
+       |  FROM UNNEST([${codebookStructsSql(Centroids86.table, "ce")}]) AS t(u)),
        |acents AS (
        |  SELECT u.cid AS cid, u.ce AS ce
-       |  FROM UNNEST([${centStructs(Centroids94.table)}]) AS t(u)),
+       |  FROM UNNEST([${codebookStructsSql(Centroids94.table, "ce")}]) AS t(u)),
        |fassigned AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    CAST(list_position(l, list_max(l)) - 1 AS INTEGER) AS cell
-       |  FROM (SELECT vec_id, embedding, ${simList(Centroids86.table)} AS l
+       |  FROM (SELECT vec_id, embedding, ${codebookCosinesSql(Centroids86.table)} AS l
        |        FROM $src)),
        |aassigned AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    CAST(list_position(lc, list_max(lc)) - 1 AS INTEGER) AS cell
        |  FROM (SELECT vec_id, embedding,
-       |          (${simList(Centroids94.table)})[1:ncells] AS lc
+       |          (${codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM $src, cc)),
        |fqrank AS MATERIALIZED (
        |  SELECT q_id, q_emb, cid,
        |    row_number() OVER (PARTITION BY q_id ORDER BY qc DESC, cid) AS pr
-       |  FROM (SELECT q_id, q_emb, cid, ${cosE("q_emb", "ce")} AS qc
+       |  FROM (SELECT q_id, q_emb, cid, ${cosineSql("q_emb", "ce")} AS qc
        |        FROM queries, fcents)),
        |aqrank AS MATERIALIZED (
        |  SELECT q_id, q_emb, cid,
        |    row_number() OVER (PARTITION BY q_id ORDER BY qc DESC, cid) AS pr
-       |  FROM (SELECT q_id, q_emb, cid, ${cosE("q_emb", "ce")} AS qc
+       |  FROM (SELECT q_id, q_emb, cid, ${cosineSql("q_emb", "ce")} AS qc
        |        FROM queries, acents, cc WHERE cid < ncells)),
        |${(fixedCfgs ++ adaptCfgs).mkString(",\n")}""".stripMargin ->
       s"""SELECT config, ncells, nprobe, candidates, sum_hits,
@@ -1285,24 +1232,13 @@ object Similarity {
     * neighborhoods as literal XOR-mask lists, shared bf truth, and
     * the same per-config row shape as oracle175. */
   private def oracle177: String = {
-    def lst(p: Seq[Double]) = p.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    def bucketBits(v: String, planes: Seq[Seq[Double]]) =
-      planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN ${dotE(v, lst(p))} >= 0 THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
     def cfg(p: String, label: String, bCte: String, qCte: String,
         nplanes: Int, depth: Int): String = {
       val probeList = hammingMasks(nplanes, depth)
         .map(m => s"xor(bucket, $m)").mkString(", ")
       s"""${p}cand AS MATERIALIZED (
          |  SELECT r.q_id, a.vec_id,
-         |    round(${cosE("a.embedding", "r.q_emb")}, 6) AS cos_sim
+         |    round(${cosineSql("a.embedding", "r.q_emb")}, 6) AS cos_sim
          |  FROM (SELECT q_id, q_emb, unnest([$probeList]) AS probe
          |        FROM $qCte) r
          |  JOIN $bCte a ON a.bucket = r.probe AND a.vec_id <> r.q_id),
@@ -1331,23 +1267,23 @@ object Similarity {
        |  SELECT q_id, vec_id FROM (
        |    SELECT q.q_id, e.vec_id,
        |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY round(${cosE("e.embedding", "q.q_emb")}, 6) DESC,
+       |        ORDER BY round(${cosineSql("e.embedding", "q.q_emb")}, 6) DESC,
        |                 e.vec_id) AS rank
        |    FROM queries q JOIN embeddings e ON e.vec_id <> q.q_id)
        |  WHERE rank <= 5),
        |b4 AS MATERIALIZED (
        |  SELECT vec_id, embedding,
-       |    (${bucketBits("embedding", Planes)}) AS bucket
+       |    (${bucketBitsSql("embedding", Planes)}) AS bucket
        |  FROM embeddings),
        |q4 AS MATERIALIZED (
-       |  SELECT q_id, q_emb, (${bucketBits("q_emb", Planes)}) AS bucket
+       |  SELECT q_id, q_emb, (${bucketBitsSql("q_emb", Planes)}) AS bucket
        |  FROM queries),
        |b8 AS MATERIALIZED (
        |  SELECT vec_id, embedding,
-       |    (${bucketBits("embedding", Planes177)}) AS bucket
+       |    (${bucketBitsSql("embedding", Planes177)}) AS bucket
        |  FROM embeddings),
        |q8 AS MATERIALIZED (
-       |  SELECT q_id, q_emb, (${bucketBits("q_emb", Planes177)}) AS bucket
+       |  SELECT q_id, q_emb, (${bucketBitsSql("q_emb", Planes177)}) AS bucket
        |  FROM queries),
        |${cfgs.mkString(",\n")}
        |SELECT config, nplanes, probe_depth, candidates, sum_hits,
@@ -1365,19 +1301,6 @@ object Similarity {
     * for q94c. */
   private[operators] def oracle94Adaptive(nprobeSql: String,
       src: String = "embeddings", pre: String = ""): String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val cents = Centroids94.table
-    val centStructs = cents.zipWithIndex
-      .map { case (c, i) => s"struct_pack(cid := $i, ce := ${lst(c)})" }
-      .mkString(",\n    ")
-    val simList = cents.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     s"""WITH ${pre}cc AS (
        |  SELECT CASE WHEN count(*) <= 512 THEN 16
        |              WHEN count(*) <= 1024 THEN 32
@@ -1385,17 +1308,17 @@ object Similarity {
        |  FROM $src),
        |cents AS (
        |  SELECT u.cid AS cid, u.ce AS ce
-       |  FROM UNNEST([$centStructs]) AS t(u)),
+       |  FROM UNNEST([${codebookStructsSql(Centroids94.table, "ce")}]) AS t(u)),
        |assigned AS (
        |  SELECT vec_id, label, embedding,
        |    CAST(list_position(lc, list_max(lc)) - 1 AS INTEGER) AS cell
-       |  FROM (SELECT vec_id, label, embedding, ($simList)[1:ncells] AS lc
+       |  FROM (SELECT vec_id, label, embedding, (${codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM $src, cc)),
        |queries AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb FROM $src
        |  WHERE vec_id % 50 = 0),
        |qsims AS (
-       |  SELECT q_id, q_emb, cid, ${cosE("q_emb", "ce")} AS qc
+       |  SELECT q_id, q_emb, cid, ${cosineSql("q_emb", "ce")} AS qc
        |  FROM queries, cents, cc WHERE cid < ncells),
        |qcells AS (
        |  SELECT q_id, q_emb, cid FROM (
@@ -1405,7 +1328,7 @@ object Similarity {
        |  WHERE pr <= ($nprobeSql)),
        |cand AS (
        |  SELECT p.q_id, a.vec_id, a.label,
-       |    round(${cosE("a.embedding", "p.q_emb")}, 6) AS cos_sim
+       |    round(${cosineSql("a.embedding", "p.q_emb")}, 6) AS cos_sim
        |  FROM qcells p JOIN assigned a
        |    ON a.cell = p.cid AND a.vec_id <> p.q_id)
        |SELECT q_id, vec_id, label, cos_sim, CAST(rank AS BIGINT) AS rank
@@ -1431,15 +1354,6 @@ object Similarity {
     * fragment, so cell model and removals replay identically wherever
     * the stage runs. */
   private def semDedupCtesSql(src: String, threshold: String): String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val simList = Centroids94.table.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     s"""cc AS (
        |  SELECT CASE WHEN count(*) <= 512 THEN 16
        |              WHEN count(*) <= 1024 THEN 32
@@ -1448,13 +1362,13 @@ object Similarity {
        |assigned AS (
        |  SELECT vec_id, embedding,
        |    CAST(list_position(lc, list_max(lc)) - 1 AS BIGINT) AS cell
-       |  FROM (SELECT vec_id, embedding, ($simList)[1:ncells] AS lc
+       |  FROM (SELECT vec_id, embedding, (${codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM $src, cc)),
        |removed AS (
        |  SELECT DISTINCT b.vec_id
        |  FROM assigned a JOIN assigned b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE round(${cosE("a.embedding", "b.embedding")}, 6) >= $threshold)""".stripMargin
+       |  WHERE round(${cosineSql("a.embedding", "b.embedding")}, 6) >= $threshold)""".stripMargin
   }
 
   /** [[semDedupRemoved]]'s oracle over relation `src` — the q143
@@ -1474,15 +1388,6 @@ object Similarity {
     * within-cell train×test containment scan and the per-train-vector
     * hit stats — pure relational algebra over the round-6 cosine. */
   private def oracle113: String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val simList = Centroids94.table.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     s"""WITH cc AS (
        |  SELECT CASE WHEN count(*) <= 512 THEN 16
        |              WHEN count(*) <= 1024 THEN 32
@@ -1496,14 +1401,14 @@ object Similarity {
        |         WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) < 'e6666666'
        |           THEN 'val'
        |         ELSE 'test' END AS grp
-       |  FROM (SELECT vec_id, embedding, ($simList)[1:ncells] AS lc
+       |  FROM (SELECT vec_id, embedding, (${codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM embeddings, cc)),
        |hits AS (
        |  SELECT t.vec_id, count(*) AS n_test_hits,
-       |    max(round(${cosE("t.embedding", "b.embedding")}, 6)) AS mx
+       |    max(round(${cosineSql("t.embedding", "b.embedding")}, 6)) AS mx
        |  FROM assigned t JOIN assigned b
        |    ON t.cell = b.cell AND t.grp = 'train' AND b.grp = 'test'
-       |  WHERE round(${cosE("t.embedding", "b.embedding")}, 6) >= 0.4
+       |  WHERE round(${cosineSql("t.embedding", "b.embedding")}, 6) >= 0.4
        |  GROUP BY t.vec_id)
        |SELECT t.vec_id, t.cell,
        |  CAST(coalesce(n_test_hits, 0) AS BIGINT) AS n_test_hits,
@@ -1518,15 +1423,6 @@ object Similarity {
     * draw replayed bit-exactly, one shard window with K leads, and
     * the per-slot UNION — pure relational algebra. */
   private def oracle116: String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val simList = Centroids94.table.map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
     val uSql = graft.functions.SplitMix64.uniformSql("vec_id", NegSalt)
     val leads = (1 to NegK).map(j =>
       s"lead(vec_id, $j) OVER w AS n$j, lead(cell, $j) OVER w AS c$j")
@@ -1543,7 +1439,7 @@ object Similarity {
        |assigned AS (
        |  SELECT vec_id, embedding,
        |    CAST(list_position(lc, list_max(lc)) - 1 AS BIGINT) AS cell
-       |  FROM (SELECT vec_id, embedding, ($simList)[1:ncells] AS lc
+       |  FROM (SELECT vec_id, embedding, (${codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM embeddings, cc)),
        |sh AS (
        |  SELECT vec_id, cell, u,
@@ -1560,25 +1456,15 @@ object Similarity {
     * query's Hamming-1 probe set, exact-cosine re-rank — the oracle83
     * bucket machinery composed with the q47 top-10 select. */
   private def oracle49: String = {
-    def lst(p: Seq[Double]) = p.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    def dotE(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(a: String) =
-      s"list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    def cosE(a: String, b: String) =
-      s"(${dotE(a, b)} / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-    val bucketBits = Planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN ${dotE("embedding", lst(p))} >= 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
     val probeList = ("qbucket" +: Planes.indices
       .map(i => s"xor(qbucket, ${1 << i})")).mkString(", ")
     s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
        |keys AS (
-       |  SELECT vec_id, label, embedding, ($bucketBits) AS bucket
+       |  SELECT vec_id, label, embedding, (${bucketBitsSql("embedding", Planes)}) AS bucket
        |  FROM embeddings),
        |qb AS (SELECT bucket AS qbucket FROM keys WHERE vec_id = 0),
        |probes AS (SELECT unnest([$probeList]) AS probe FROM qb)
-       |SELECT k.vec_id, k.label, round(${cosE("k.embedding", "q_emb")}, 6) AS cos_sim
+       |SELECT k.vec_id, k.label, round(${cosineSql("k.embedding", "q_emb")}, 6) AS cos_sim
        |FROM keys k, q
        |WHERE k.vec_id <> 0 AND k.bucket IN (SELECT probe FROM probes)
        |ORDER BY cos_sim DESC, k.vec_id
@@ -1600,30 +1486,18 @@ object Similarity {
     "q116_inbatch_negatives" -> oracle116,
     "q49_ann_lsh" -> oracle49,
     "q47_cosine_topk" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
+      s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id, label,
-        |  round(
-        |    list_sum(list_transform(list_zip(embedding, q_emb),
-        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(q_emb,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cos_sim
+        |  round(${cosineSql("embedding", "q_emb")}, 6) AS cos_sim
         |FROM embeddings, q
         |WHERE vec_id <> 0
         |ORDER BY cos_sim DESC, vec_id
         |LIMIT 10""".stripMargin,
 
     "q82_embedding_clusters" ->
-      """WITH RECURSIVE p AS (
+      s"""WITH RECURSIVE p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    round(
-        |      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cos_sim
+        |    round(${cosineSql("a.embedding", "b.embedding")}, 6) AS cos_sim
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
         |pairs AS (SELECT vec_a, vec_b FROM p WHERE cos_sim >= 0.4),
         |edges AS (
@@ -1638,15 +1512,9 @@ object Similarity {
         |FROM walk GROUP BY vec_id""".stripMargin,
 
     "q48_embedding_neardup" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |    round(
-        |      list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(a.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cos_sim
+        |    round(${cosineSql("a.embedding", "b.embedding")}, 6) AS cos_sim
         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
         |SELECT vec_a, vec_b, cos_sim FROM p WHERE cos_sim >= 0.4""".stripMargin,
   )

@@ -538,43 +538,16 @@ object TextAnalysis {
     * corpus gram occurrence declared a hit iff all k of its positions
     * join — integer arithmetic end to end, so the engine's false
     * positives replay exactly. */
-  private def oracle96: String = {
-    import graft.functions.{SplitMix64, SplitMix64Kernel}
-    val m64 = "18446744073709551616"
-    def saltLit(j: Int): String = java.lang.Long.toUnsignedString(
-      (BloomSalt + j) * SplitMix64Kernel.Golden)
-    val saltCase = (0 until BloomK)
-      .map(j => s"WHEN $j THEN ${saltLit(j)}").mkString(" ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
-       |g0 AS (
-       |  SELECT doc_id, t,
-       |    unnest(generate_series(1, greatest(len(t) - 4, 0))) AS i
-       |  FROM tok),
-       |occ AS (
-       |  SELECT doc_id, i,
-       |    t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4] AS g
-       |  FROM g0),
-       |dg AS (SELECT DISTINCT g FROM occ),
-       |dp AS (SELECT g, ${SplitMix64.polyHashSql("g")} AS p FROM dg),
-       |dh AS (SELECT g, ${SplitMix64.mixSql("p")} AS th FROM dp),
-       |js AS (SELECT unnest(range($BloomK)) AS j),
-       |bx AS (
-       |  SELECT DISTINCT dh.th FROM occ JOIN dh USING (g)
-       |  WHERE occ.doc_id % 97 = 0),
-       |bs AS (SELECT (th + CASE j $saltCase END) % $m64 AS x FROM bx CROSS JOIN js),
-       |bpos AS (SELECT DISTINCT ${SplitMix64.mixSql("x")} % $BloomBits AS pos FROM bs),
-       |cx AS (
-       |  SELECT occ.doc_id, occ.i, j, (dh.th + CASE j $saltCase END) % $m64 AS x
-       |  FROM occ JOIN dh USING (g) CROSS JOIN js
-       |  WHERE occ.doc_id % 97 <> 0),
-       |cp AS (SELECT doc_id, i, ${SplitMix64.mixSql("x")} % $BloomBits AS pos FROM cx),
+  private def oracle96: String =
+    s"""WITH ${bloomHashCtes("")},
+       |bpos AS (SELECT DISTINCT h % $BloomBits AS pos FROM bmix),
        |hit AS (
-       |  SELECT doc_id, i FROM cp JOIN bpos USING (pos)
+       |  SELECT doc_id, i FROM
+       |    (SELECT doc_id, i, h % $BloomBits AS pos FROM cmix) cp
+       |  JOIN bpos USING (pos)
        |  GROUP BY doc_id, i HAVING count(*) = $BloomK)
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bloom_hits
        |FROM hit GROUP BY doc_id""".stripMargin
-  }
 
   /** q190's filter-size grid (powers of two; 131072 is the q96 gate
     * config). The grid BRACKETS the distinct benchmark-gram counts
@@ -623,15 +596,12 @@ object TextAnalysis {
     * split at doc_id % 97, k salted splitmix64 mixes per distinct
     * gram), name-PREFIXED, ending at `<p>bmix(h)` (benchmark inserts)
     * and `<p>cmix(doc_id, i, h)` (corpus probes), both MATERIALIZED —
-    * shared by oracle190 (p = "") and the q202 auto-sized eval oracle
-    * (p = "ab", beside the CMS chain in the same WITH block). */
+    * shared by oracle96 and oracle190 (p = "") and the q202 auto-sized
+    * eval oracle (p = "ab", beside the CMS chain in the same WITH
+    * block). */
   private[operators] def bloomHashCtes(p: String): String = {
-    import graft.functions.{SplitMix64, SplitMix64Kernel}
-    val m64 = "18446744073709551616"
-    def saltLit(j: Int): String = java.lang.Long.toUnsignedString(
-      (BloomSalt + j) * SplitMix64Kernel.Golden)
-    val saltCase = (0 until BloomK)
-      .map(j => s"WHEN $j THEN ${saltLit(j)}").mkString(" ")
+    import graft.functions.SplitMix64
+    val salts = SplitMix64.saltTableSql("j", BloomSalt, BloomK)
     s"""${p}tok AS (
        |  SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
        |${p}g0 AS (
@@ -649,13 +619,13 @@ object TextAnalysis {
        |${p}bx AS (
        |  SELECT DISTINCT ${p}dh.th FROM ${p}occ JOIN ${p}dh USING (g)
        |  WHERE ${p}occ.doc_id % 97 = 0),
-       |${p}bsx AS (SELECT (th + CASE j $saltCase END) % $m64 AS x
+       |${p}bsx AS (SELECT ${SplitMix64.saltedRowSql("th", salts)} AS x
        |  FROM ${p}bx CROSS JOIN ${p}js),
        |${p}bmix AS MATERIALIZED (
        |  SELECT ${SplitMix64.mixSql("x")} AS h FROM ${p}bsx),
        |${p}cx AS (
        |  SELECT ${p}occ.doc_id, ${p}occ.i, j,
-       |    (${p}dh.th + CASE j $saltCase END) % $m64 AS x
+       |    ${SplitMix64.saltedRowSql(s"${p}dh.th", salts)} AS x
        |  FROM ${p}occ JOIN ${p}dh USING (g) CROSS JOIN ${p}js
        |  WHERE ${p}occ.doc_id % 97 <> 0),
        |${p}cmix AS MATERIALIZED (

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Cut._
 import graft.Tables
 import graft.functions.VectorExprs
+import graft.functions.VectorExprs.cosineSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -243,14 +244,6 @@ object VectorQuality {
 
   // ---- generated oracle ---------------------------------------------
 
-  private def cosE(a: String, b: String): String = {
-    def dotE = s"list_sum(list_transform(list_zip($a, $b), " +
-      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    def sumsq(v: String) =
-      s"list_sum(list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    s"($dotE / (sqrt(${sumsq(a)}) * sqrt(${sumsq(b)})))"
-  }
-
   /** oracle196: the variant corpus (list slice + a zero tail —
     * float-exact), the three family pair chains (brute = the all-pairs
     * verify; signlsh = the factored q87 chain nested as a scoped
@@ -275,15 +268,6 @@ object VectorQuality {
        |    END AS embedding
        |  FROM vdef)""".stripMargin
 
-  /** The full Centroids94 cosine list over `embedding` — sliced by
-    * `[1:ncells]` at use sites (the adaptive-prefix replay). */
-  private def simListSql: String = {
-    def lst(c: Seq[Double]) = c.map(v => f"$v%.3f").mkString("[", ", ", "]")
-    Centroids94.table
-      .map(c => cosE("embedding", lst(c)))
-      .mkString("[\n      ", ",\n      ", "]")
-  }
-
   /** Label completion over the variant vectors (singletons = own
     * cluster + planted id) — shared by oracle196 and oracle199. */
   private def vecLabCte(p: String): String =
@@ -295,8 +279,6 @@ object VectorQuality {
       .stripMargin
 
   private def oracle196: String = {
-    def sub(q: String): String = q.linesIterator.mkString("\n  ")
-    val simList = simListSql
     def labCte(p: String): String = vecLabCte(p)
     val rows = Seq("vb" -> "brute", "vs" -> "signlsh", "vc" -> "cell")
       .map { case (p, f) => DedupQuality.censusSql(p, f) }
@@ -304,11 +286,11 @@ object VectorQuality {
        |bpairs AS MATERIALIZED (
        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
        |  FROM variants a JOIN variants b ON a.vec_id < b.vec_id
-       |  WHERE round(${cosE("a.embedding", "b.embedding")}, 6)
+       |  WHERE round(${cosineSql("a.embedding", "b.embedding")}, 6)
        |    >= $CosThreshold),
        |spairs AS MATERIALIZED (
        |  SELECT vec_a AS doc_a, vec_b AS doc_b FROM (
-       |  ${sub(Similarity.adaptivePairsSqlOver("variants",
+       |  ${nestSql(Similarity.adaptivePairsSqlOver("variants",
               CosThreshold.toString))})),
        |vcc AS (
        |  SELECT CASE WHEN count(*) <= 512 THEN 16
@@ -318,13 +300,13 @@ object VectorQuality {
        |vassigned AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    CAST(list_position(lc, list_max(lc)) - 1 AS INTEGER) AS cell
-       |  FROM (SELECT vec_id, embedding, ($simList)[1:ncells] AS lc
+       |  FROM (SELECT vec_id, embedding, (${Similarity.codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |        FROM variants, vcc)),
        |cpairs AS MATERIALIZED (
        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
        |  FROM vassigned a JOIN vassigned b
        |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-       |  WHERE round(${cosE("a.embedding", "b.embedding")}, 6)
+       |  WHERE round(${cosineSql("a.embedding", "b.embedding")}, 6)
        |    >= $CosThreshold),
        |${DedupQuality.ccWalkCtes("vb", "bpairs")},
        |${DedupQuality.ccWalkCtes("vs", "spairs")},
@@ -363,7 +345,7 @@ object VectorQuality {
          |  SELECT doc_a, doc_b FROM ${p}cand
          |  JOIN variants va ON va.vec_id = doc_a
          |  JOIN variants vb ON vb.vec_id = doc_b
-         |  WHERE round(${cosE("va.embedding", "vb.embedding")}, 6)
+         |  WHERE round(${cosineSql("va.embedding", "vb.embedding")}, 6)
          |    >= $CosThreshold)""".stripMargin
     s"""WITH RECURSIVE $vecVariantCtes,
        |vcc AS (
@@ -372,7 +354,7 @@ object VectorQuality {
        |              ELSE 64 END AS ncells
        |  FROM variants),
        |vsim AS (
-       |  SELECT vec_id, ($simListSql)[1:ncells] AS lc
+       |  SELECT vec_id, (${Similarity.codebookCosinesSql(Centroids94.table)})[1:ncells] AS lc
        |  FROM variants, vcc),
        |vrows AS (
        |  SELECT vec_id, lc, unnest(generate_series(1, len(lc))) AS i

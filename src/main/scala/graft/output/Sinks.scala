@@ -50,7 +50,7 @@ object Sinks {
 
   /** Route column subsets of one result to different sinks — each
     * route is an independent projection + write (one job per sink,
-    * shared upstream plan; cache upstream first if it is expensive). */
+    * shared upstream plan; `cut` it first if it is expensive). */
   def multiSink(df: DataFrame,
                 routes: Map[String, (Seq[String], String, String)]): Unit =
     routes.foreach { case (_, (cols, path, format)) =>

@@ -1,7 +1,7 @@
 package graft.registry
 
 import graft.config.ConfigTree
-import graft.config.ConfigTree.Tree
+import graft.config.ConfigTree.{Tree, jsonString}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -37,9 +37,8 @@ final class AnalysisRegistry(root: Path) {
 
   private def writeRegistry(reg: Map[String, String]): Unit = {
     Files.createDirectories(root)
-    val json = reg.map { case (k, v) =>
-      "\"" + k + "\": \"" + v.replace("\\", "\\\\") + "\""
-    }.mkString("{", ", ", "}")
+    val json = reg.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ", ", "}")
     Files.writeString(registryFile, json)
   }
 
@@ -105,4 +104,11 @@ final class AnalysisRegistry(root: Path) {
     (overlay("parameters.json", baseDefaults),
       overlay("transformations.json", baseTransforms))
   }
+}
+
+object AnalysisRegistry {
+  /** The registry directory of the CLI mains: `GRAFT_REGISTRY` in
+    * `env`, else `~/.graft/analyses`. */
+  def defaultDir(env: Map[String, String]): String =
+    env.getOrElse("GRAFT_REGISTRY", sys.props("user.home") + "/.graft/analyses")
 }

@@ -38,6 +38,19 @@ class BenchAuditSpec extends AnyFunSuite {
     assert(Bench.suspects(Seq("q44" -> 23.97), Map.empty) === Seq.empty)
   }
 
+  test("the bench's JSON times keep a '.' decimal point under a comma-decimal locale") {
+    import java.util.Locale
+    val (saved, savedFormat) = (Locale.getDefault, Locale.getDefault(Locale.Category.FORMAT))
+    try {
+      Locale.setDefault(Locale.GERMANY)
+      val json = Bench.timesJson(Seq("q01_agg" -> 1.234567, "q03" -> -1.0))
+      assert(graft.config.ConfigTree.parse(json) === Map("q01_agg" -> 1.234567, "q03" -> -1.0))
+    } finally {
+      Locale.setDefault(saved)
+      Locale.setDefault(Locale.Category.FORMAT, savedFormat)
+    }
+  }
+
   test("every runMain named in the docs resolves to an object with a main under src/") {
     def read(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
     val docs = Seq("README.md", "USAGE.md", "CLAUDE.md",

@@ -55,6 +55,27 @@ class ControlPlaneSpec extends SparkSpec {
     assert(transforms.contains("Main")) // untouched by variant
   }
 
+  test("registry: a quote or backslash in a name leaves list, locate and later installs working") {
+    val reg = new AnalysisRegistry(Files.createTempDirectory("graft_reg3"))
+    val quoted = mkAnalysis("""{"Main": {}}""", Some("""{"name": "we\"ird"}"""))
+    val slashed = mkAnalysis("""{"Main": {}}""", Some("""{"name": "back\\slash"}"""))
+    val plain = mkAnalysis("""{"Main": {}}""", Some("""{"name": "plain"}"""))
+    assert(reg.install(quoted) === "we\"ird")
+    assert(reg.install(slashed) === "back\\slash")
+    assert(reg.install(plain) === "plain")
+    assert(reg.list() === Seq("back\\slash", "plain", "we\"ird"))
+    assert(reg.locate("we\"ird") === quoted.toAbsolutePath)
+    assert(reg.locate("back\\slash") === slashed.toAbsolutePath)
+    assert(reg.locate("plain") === plain.toAbsolutePath)
+  }
+
+  test("registry: the CLI default directory is GRAFT_REGISTRY, else ~/.graft/analyses") {
+    assert(AnalysisRegistry.defaultDir(Map("GRAFT_REGISTRY" -> "/srv/analyses")) ===
+      "/srv/analyses")
+    assert(AnalysisRegistry.defaultDir(Map.empty) ===
+      sys.props("user.home") + "/.graft/analyses")
+  }
+
   private val samplesOnlyTransforms =
     """{"Main": {
       |  "count_samples": {

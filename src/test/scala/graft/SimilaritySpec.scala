@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Vectors
+import graft.functions.{VectorExprs, Vectors}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
@@ -14,6 +14,18 @@ class SimilaritySpec extends SparkSpec {
     val got = df.head().getDouble(0)
     val want = 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))
     assert(math.abs(got - want) < 1e-12)
+  }
+
+  test("VectorExprs.listSql keeps a '.' decimal point under a comma-decimal locale") {
+    import java.util.Locale
+    val (saved, savedFormat) = (Locale.getDefault, Locale.getDefault(Locale.Category.FORMAT))
+    try {
+      Locale.setDefault(Locale.GERMANY)
+      assert(VectorExprs.listSql(Seq(-0.171, 0.048, 1.0)) === "[-0.171, 0.048, 1.000]")
+    } finally {
+      Locale.setDefault(saved)
+      Locale.setDefault(Locale.Category.FORMAT, savedFormat)
+    }
   }
 
   test("brute-force top-10 is ordered and bounded") {
